@@ -39,11 +39,12 @@ trait ConditionalPut {
 }
 
 /** Write-temp + atomic-rename manifest — the single commit primitive
-  * behind every exactly-once story in this package ([[StreamingMerge]]'s
-  * snapshot repoint, [[WarehouseLoad.batchIdempotent]]'s batch commit):
-  * readers resolve the manifest first, so any number of data/metadata
-  * files can be staged invisibly and made visible in ONE atomic rename
-  * — the poor-man's transaction log Delta/Iceberg formalize.
+  * behind every exactly-once story in this package (the commit log's
+  * exclusive version publish, [[createExclusive]], and its hint and
+  * zone-map manifests): readers resolve the manifest first, so any
+  * number of data/metadata files can be staged invisibly and made
+  * visible in ONE atomic rename — the poor-man's transaction log
+  * Delta/Iceberg formalize.
   *
   * `FileSystem.rename` refuses existing destinations (silently!);
   * `FileContext` supports the atomic-overwrite rename a repoint needs.

@@ -17,14 +17,18 @@ import org.apache.spark.sql.functions._
   *  - key only in updates → new open version (first insert)
   *  - key absent from updates → untouched
   *
+  * [[merge]] is the [[delta]] upserted into the dimension on
+  * `(key, effective_from)` — the upsert [[StreamingMerge]] commits.
+  *
   * Plan shape: TWO joins of the open slice against the update batch —
-  * a left join (open → updates) deciding close-or-keep, and an anti-ish
-  * left join (updates → open) emitting new versions. An update batch is
-  * typically orders of magnitude smaller than the dimension, so both
-  * joins broadcast the batch and the dimension is never shuffled; closed
-  * history rows are a pass-through union (no join at all). Re-applying
-  * the same batch is a no-op (idempotent merges), because "changed" is
-  * value-based, not presence-based.
+  * an inner join (open → updates) finding the versions to close, and an
+  * anti-ish left join (updates → open) emitting new versions — plus, in
+  * [[merge]], one anti join of the dimension against the closed keys.
+  * An update batch is typically orders of magnitude smaller than the
+  * dimension, so every join broadcasts the batch-sized side and the
+  * dimension is never shuffled. Re-applying the same batch is a no-op
+  * (an empty delta), because "changed" is value-based, not
+  * presence-based.
   */
 object ScdMerge {
   val EffectiveFrom = "effective_from"
@@ -42,35 +46,43 @@ object ScdMerge {
   def merge(current: DataFrame, updates: DataFrame, keyCols: Seq[String],
             trackedCols: Seq[String],
             batchTs: java.sql.Timestamp): DataFrame = {
+    val d = delta(current, updates, keyCols, trackedCols, batchTs)
+    val versionKey = (keyCols :+ EffectiveFrom).map(col)
+    current.join(graft.queries.Hints.broadcastIfSmall(
+        d.filter(!col(IsCurrent)).select(versionKey: _*)),
+        keyCols :+ EffectiveFrom, "left_anti")
+      .select(current.columns.map(col): _*)
+      .unionByName(d)
+  }
+
+  /** Only the rows a merge changes: the open versions it closes
+    * (`effective_to = batchTs`, `is_current = false`) plus the new open
+    * versions. Re-applying the same updates yields an empty delta. */
+  def delta(current: DataFrame, updates: DataFrame, keyCols: Seq[String],
+            trackedCols: Seq[String],
+            batchTs: java.sql.Timestamp): DataFrame = {
     val dimCols = current.columns.toSeq
-    // `_u_present` marks join hits explicitly — tracked columns may
-    // legitimately hold nulls, so value-nullness cannot signal presence.
     // Batches are normally orders of magnitude smaller than the
     // dimension, but the hint is size-guarded all the same: an
     // anomalously large backfill batch falls back to a shuffle join
     // instead of an executor OOM.
     val u = graft.queries.Hints.broadcastIfSmall(updates.select(
-      keyCols.map(col) ++ trackedCols.map(c => col(c).as(s"_u_$c"))
-        :+ lit(true).as("_u_present"): _*))
+      keyCols.map(col) ++ trackedCols.map(c => col(c).as(s"_u_$c")): _*))
 
-    val history = current.filter(!col(IsCurrent))
     val open = current.filter(col(IsCurrent))
 
-    // Close-or-keep: left join open slice → updates.
-    val openMerged = open.join(u, keyCols, "left")
-    val changed = col("_u_present") && anyDiff(trackedCols)
-    val revisedOpen = openMerged.select(
-      dimCols.map {
-        case EffectiveTo =>
-          when(changed, lit(batchTs)).otherwise(col(EffectiveTo))
-            .as(EffectiveTo)
-        case IsCurrent =>
-          when(changed, lit(false)).otherwise(col(IsCurrent)).as(IsCurrent)
+    // Closed versions: open rows whose tracked values the batch changes.
+    val closed = open.join(u, keyCols).filter(anyDiff(trackedCols))
+      .select(dimCols.map {
+        case EffectiveTo => lit(batchTs).as(EffectiveTo)
+        case IsCurrent => lit(false).as(IsCurrent)
         case c => col(c)
       }: _*)
 
     // New versions: updates that are brand-new keys or differ from the
     // open version. Left join updates → open, then value-compare.
+    // `_u_present` marks join hits explicitly — tracked columns may
+    // legitimately hold nulls, so value-nullness cannot signal presence.
     val openForCompare = open.select(
       keyCols.map(col) ++ trackedCols.map(c => col(c).as(s"_u_$c"))
         :+ lit(true).as("_u_present"): _*)
@@ -86,7 +98,7 @@ object ScdMerge {
           case c => col(c)
         }: _*)
 
-    history.unionByName(revisedOpen).unionByName(newVersions)
+    closed.unionByName(newVersions)
   }
 
   /** Initial SCD snapshot from a plain (key + tracked) table. */

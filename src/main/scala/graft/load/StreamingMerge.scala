@@ -11,35 +11,23 @@ import org.apache.spark.sql.types.StructType
   * checkpoint's file log makes each staged file participate in exactly
   * one merge, even across restarts).
   *
-  * Snapshot storage is versioned-directory + manifest: each merge
-  * writes a full new snapshot under `dim/v=<epoch>` and then atomically
-  * repoints `dim/_LATEST` (write-temp + rename). Readers resolve the
-  * manifest first, so they never observe a half-written snapshot —
-  * the poor-man's table format (the same commit shape Delta/Iceberg
-  * formalize with a transaction log).
+  * The dimension is a commit-log table: batches under
+  * `dimDir/warehouse`, log under `dimDir/history` (read it with
+  * [[WarehouseLoad.readWarehouse]]). Each epoch reads the committed
+  * head, computes the SCD-2 delta ([[ScdMerge.delta]]: the versions
+  * it closes plus the new versions) and commits it as one MERGE keyed
+  * on `keyCols :+ effective_from` ([[WarehouseLoad.mergeCommitted]]);
+  * an empty table takes the first epoch's rows as its schema. An epoch
+  * replayed after a crash finds nothing to change against a head that
+  * already holds it — an empty delta, a no-op — and one replayed from
+  * before its commit re-derives the same delta, whose content-derived
+  * batch ids overwrite the crashed attempt's orphans.
   *
   * `batchTs` stamps versions from the batch id, keeping effective
   * timestamps deterministic and replayable; production callers pass
   * wall-clock or event-derived timestamps.
   */
 object StreamingMerge {
-  private val Manifest = "_LATEST"
-
-  def snapshot(spark: SparkSession, dimDir: String): Option[DataFrame] =
-    AtomicManifest.read(spark, dimDir, Manifest)
-      .map(v => spark.read.parquet(s"$dimDir/$v"))
-
-  /** Write the new snapshot, then atomically repoint. The version IS
-    * the batch id (`v=<batchId>`), so a batch replayed after a crash
-    * between the snapshot write and the repoint overwrites the SAME
-    * orphaned dir (deterministically, from the still-committed previous
-    * snapshot) and repoints — exactly-one observable merge per batch
-    * (StreamingMergeSpec's kill/resume case). */
-  private[load] def commit(spark: SparkSession, dimDir: String, df: DataFrame,
-                           version: String): Unit = {
-    df.write.mode("overwrite").parquet(s"$dimDir/$version")
-    AtomicManifest.write(spark, dimDir, Manifest, version)
-  }
 
   /** Start the continuous merge over JSON update files in `stagingDir`.
     * Drains everything currently staged (Trigger.AvailableNow) and
@@ -49,21 +37,25 @@ object StreamingMerge {
                  updateSchema: StructType, dimDir: String,
                  checkpointDir: String, keyCols: Seq[String],
                  trackedCols: Seq[String],
-                 batchTs: Long => java.sql.Timestamp): StreamingQuery =
+                 batchTs: Long => java.sql.Timestamp): StreamingQuery = {
+    val (wh, hist) = (s"$dimDir/warehouse", s"$dimDir/history")
     spark.readStream.schema(updateSchema).json(stagingDir)
       .writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (!batch.isEmpty) {
           val ts = batchTs(batchId)
-          val merged = snapshot(spark, dimDir) match {
+          val delta = WarehouseLoad.readWarehouse(spark, wh, hist) match {
             case Some(current) =>
-              ScdMerge.merge(current, batch, keyCols, trackedCols, ts)
+              ScdMerge.delta(current, batch, keyCols, trackedCols, ts)
             case None => ScdMerge.init(batch, ts)
           }
-          commit(spark, dimDir, merged, f"v=$batchId%08d")
+          WarehouseLoad.mergeCommitted(spark, wh, hist, delta,
+            keyCols :+ ScdMerge.EffectiveFrom)
         }
+        ()
       }
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .start()
+  }
 }

@@ -1,7 +1,6 @@
 package graft.load
 
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{ByteType, DateType, DoubleType, FloatType,
   IntegerType, LongType, ShortType, StringType, StructField, StructType,
   TimestampType}
@@ -13,15 +12,13 @@ import graft.schema.SchemaAlign
   * the declared DDL, coerced, and appended exactly once to the warehouse
   * table.
   *
-  *  - [[batch]]: one-shot COPY of everything currently staged.
-  *  - [[batchIdempotent]]: COPY with load history under an ATOMIC batch
-  *    commit — crash anywhere and re-run; no row ever doubles.
+  *  - [[batchIdempotent]]: the one file-load path — COPY with load
+  *    history under an ATOMIC batch commit into the versioned commit
+  *    log. Re-running it loads only unseen files (Snowpipe's per-file
+  *    exactly-once); crash anywhere and re-run, no row ever doubles.
   *  - [[batchQuarantine]]: `ON_ERROR = CONTINUE` + error table.
-  *  - [[continuous]]: Structured Streaming file source with a checkpoint
-  *    — the checkpoint's seen-files log IS Snowpipe's load history, so
-  *    re-runs (Trigger.AvailableNow) load only unseen files, giving the
-  *    per-file exactly-once semantics of `auto_ingest` pipes. Restart
-  *    with the same checkpoint after a crash and no row is doubled.
+  *  - the other commit-log writers: merge, takedown, compaction,
+  *    vacuum, restore and the streamed epoch commit.
   *
   * Failure policy: `strict = true` mirrors COPY's default
   * `ON_ERROR` (refuse the batch when any value fails coercion OR fails
@@ -143,41 +140,12 @@ object WarehouseLoad {
     * the staging root spells the same key set — a bounded arrival
     * partition fed by one producer, the Snowpipe stage shape. Under
     * it, the key set may be pinned from ANY file, which is what lets
-    * the idempotent leg infer from a bounded sample of the FRESH files
-    * ([[idempotentBatch]]) instead of this full-root pass; this
-    * full-root form remains for the one-shot [[batch]] and the
-    * quarantine/continuous legs, with `samplingRatio` < 1 as the
-    * at-scale knob (rows sampled, all files still opened). */
-  private def stagedSchema(spark: SparkSession, stagingDir: String,
-                           samplingRatio: Double = 1.0): StructType =
-    spark.read
-      .option("primitivesAsString", "true")
-      .option("samplingRatio", samplingRatio.toString)
-      .json(stagingDir).schema
-
-  /** One-shot load of the staged JSON into the parquet warehouse table.
-    *
-    * `partitionCols` hive-partitions the warehouse table (the Snowflake
-    * micro-partition analog): downstream queries filtering on those
-    * columns prune whole directories at the file-listing level before a
-    * single byte is scanned — the difference between touching 1/n-th of
-    * a 100 TB table and all of it. */
-  def batch(spark: SparkSession, stagingDir: String, target: StructType,
-            warehouseDir: String, strict: Boolean = false,
-            partitionCols: Seq[String] = Nil): Unit = {
-    val schema = stagedSchema(spark, stagingDir)
-    require(!schema.fieldNames.contains(CorruptCol),
-      s"staged data may not carry a '$CorruptCol' column")
-    val raw = spark.read
-      .schema(schema.add(CorruptCol, StringType))
-      .option("columnNameOfCorruptRecord", CorruptCol)
-      .json(stagingDir)
-    rethrowStrict {
-      align(raw, target, strict)
-        .write.mode("append").partitionBy(partitionCols: _*)
-        .parquet(warehouseDir)
-    }
-  }
+    * the loads infer from a bounded sample of the fresh files
+    * ([[freshSchema]]). This full-root pass is only [[freshSchema]]'s
+    * fallback, for a sample that yields no keys. */
+  private def stagedSchema(spark: SparkSession,
+                           stagingDir: String): StructType =
+    spark.read.option("primitivesAsString", "true").json(stagingDir).schema
 
   // ------------------------------------------------------------------
   // Idempotent batch load: atomic batch commit + load history
@@ -660,8 +628,8 @@ object WarehouseLoad {
   /** The committed warehouse relation: the union of the committed batch
     * data dirs. One scan root per committed batch — bounded by the
     * number of LOADS, not files (a million-file staging wave is still
-    * one root); fold old batches with [[Compaction]] when the load
-    * count itself grows large. `None` before the first commit.
+    * one root); fold old batches with [[compactCommitted]] when the
+    * load count itself grows large. `None` before the first commit.
     *
     * The relation is ZONE-PRUNE-AWARE: reading registers the table
     * with [[graft.plans.ZonePrune]], so a plain `.filter` over this
@@ -1253,6 +1221,19 @@ object WarehouseLoad {
       StructType(Seq(StructField("file", StringType)))))
   }
 
+  /** The id a rewrite (merge, takedown, DV takedown) gives batch `id`:
+    * a fixed-length hash of the old id under two xxhash64 seeds, then
+    * the rewrite's `suffix`. Deterministic, so a crash retry overwrites
+    * its own orphans; fixed-length, so however often a batch is
+    * rewritten its id (and intent file name) stays far below the
+    * 255-byte file-name limit. */
+  private def rewriteId(id: String, suffix: String): String = {
+    import org.apache.spark.sql.catalyst.expressions.XxHash64Function
+    val s = org.apache.spark.unsafe.types.UTF8String.fromString(id)
+    def h(seed: Long) = XxHash64Function.hash(s, StringType, seed)
+    f"${h(42L)}%016x${h(43L)}%016x$suffix"
+  }
+
   /** Batch load with COPY's per-file load-history dedup: every staged
     * file loads at most once across re-runs — the batch analog of
     * Snowpipe's load history (the reference records loaded files and
@@ -1289,8 +1270,8 @@ object WarehouseLoad {
     * operational contract at warehouse scale is a BOUNDED staging root —
     * point this at the current arrival partition (e.g. `stage/d=today`)
     * and archive drained partitions, exactly how Snowpipe stages are
-    * drained. The steady-state alternative with no rescan at all is the
-    * checkpointed [[continuous]] leg.
+    * drained. A small fresh set (the steady trickle) reads its own paths
+    * directly and rescans nothing ([[idempotentBatch]]).
     *
     * COVERAGE GUARD: the write's own job observes (CollectMetrics — no
     * extra scan) the set of file-path hashes that actually contributed
@@ -1380,10 +1361,10 @@ object WarehouseLoad {
         val (toWrite, zobs, zcols) = observeZones(
           applyChecks(spark, historyDir, align(observed, target, strict)))
         rethrowCheck { rethrowStrict {
-          // `partitionCols` hive-partitions EVERY committed batch dir
-          // (the batch() semantic on the atomic path): downstream
-          // partition-predicate scans prune whole directories under
-          // every batch root before a byte is read — at warehouse
+          // `partitionCols` hive-partitions EVERY committed batch dir:
+          // downstream partition-predicate scans prune whole
+          // directories under every batch root before a byte is read
+          // — at warehouse
           // scale the difference between 1/n-th of the table and all
           // of it. Compaction/takedown preserve the layout.
           withLoadSplitTuning(spark, freshFiles.map(_._2).sum) { tuned =>
@@ -2846,14 +2827,14 @@ object WarehouseLoad {
   }
 
   /** Delete-by-key on the committed batch warehouse — the
-    * right-to-be-forgotten mutation for the MAIN table ([[Takedown]]
-    * covers manifest-snapshot dims). Batch-granular: ONE probe job
+    * right-to-be-forgotten mutation. Batch-granular: ONE probe job
     * (union of committed batch scans, broadcast semi-join on the
     * bounded key list, per-batch hit counts) finds the batches that
     * contain a hit; only THOSE are rewritten — each under a NEW
-    * deterministic id (`<id>-td<keyhash>`), because historical
-    * versions still reference the old dirs and snapshot isolation
-    * must hold. Untouched batches keep their dirs byte-identical. The
+    * deterministic id ([[rewriteId]], suffix `-td<keyhash>`), because
+    * historical versions still reference the old dirs and snapshot
+    * isolation must hold. Untouched batches keep their dirs
+    * byte-identical. The
     * new batch list commits as one version — a REWRITE, so a
     * [[changes]] window spanning it throws [[RewriteException]]
     * instead of misrepresenting deletions as appends. Idempotent: zero
@@ -3016,7 +2997,7 @@ object WarehouseLoad {
       byBatch.get(id) match {
         case None => id
         case Some(fileHits) =>
-          val nid = id + suffix
+          val nid = rewriteId(id, suffix)
           publishIntent(spark, historyDir, nid)
           val rootP = new org.apache.hadoop.fs.Path(s"$warehouseDir/b$id")
           val bfs = rootP.getFileSystem(conf)
@@ -3218,7 +3199,7 @@ object WarehouseLoad {
     val newIds = committed.map { id =>
       if (!hitsByBatch.contains(id)) id
       else {
-        val nid = id + suffix
+        val nid = rewriteId(id, suffix)
         publishIntent(spark, historyDir, nid)
         // FILE-GRANULAR rewrite (r16, VERDICT r15 #4): only files the
         // probe saw hits in are decoded and rewritten; every other
@@ -3367,7 +3348,9 @@ object WarehouseLoad {
     * IDEMPOTENT RE-APPLY: the merge id is content-derived from the
     * source rows; a head already carrying it (crash-retry, or the same
     * CDC batch delivered twice) no-ops with zero version churn. After
-    * a compaction folds the marker away, a re-apply is still
+    * a compaction, or a later rewrite of every batch that carried it
+    * ([[rewriteId]] keeps only the newest rewriter's suffix), folds the
+    * marker away, a re-apply is still
     * CONTENT-idempotent: matched rows already equal the source, the
     * insert keys all match — the table converges to the same rows.
     *
@@ -3675,7 +3658,7 @@ object WarehouseLoad {
           .withColumn("__c",
             explode(array_repeat(lit(1), col("__n").cast("int"))))
           .drop("__n", "__c")
-        val uid = id + "-" + tag + "-u"
+        val uid = rewriteId(id, s"-$tag-u")
         writeAppendBatch(uid, updDf)
         Some(id -> uid)
       }
@@ -3683,7 +3666,7 @@ object WarehouseLoad {
     val newIds = committed.map { id =>
       if (!hitsByBatch.contains(id)) id
       else {
-        val nid = id + "-" + tag
+        val nid = rewriteId(id, s"-$tag")
         publishIntent(spark, historyDir, nid)
         eligible.get(id) match {
           case Some(mergedDv) =>
@@ -4139,27 +4122,5 @@ object WarehouseLoad {
       .join(broadcast(snapshot.select(col("file").as(FileCol))),
         Seq(FileCol), "left_semi")
     Some((raw, schema.fieldNames.toIndexedSeq))
-  }
-
-  /** Continuous auto-ingest: checkpointed streaming file source over the
-    * staging dir. `Trigger.AvailableNow` drains everything currently
-    * staged then stops — call again later and only new files load.
-    * Exactly-once across mid-batch crashes: the file-source checkpoint
-    * AND the parquet sink's `_spark_metadata` log pair up, so a batch
-    * killed between the sink commit and the checkpoint commit replays
-    * without duplicating its files (StreamingSpec's kill/resume case). */
-  def continuous(spark: SparkSession, stagingDir: String,
-                 target: StructType, warehouseDir: String,
-                 checkpointDir: String): StreamingQuery = {
-    val raw = spark.readStream.schema(stagedSchema(spark, stagingDir))
-      .json(stagingDir)
-    val aligned = SchemaAlign(raw, target)
-    aligned.writeStream
-      .format("parquet")
-      .option("path", warehouseDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
   }
 }

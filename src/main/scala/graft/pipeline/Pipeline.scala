@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.StructType
 import graft.load.WarehouseLoad
 import graft.sources.CsvSource
@@ -14,37 +14,30 @@ import graft.transform.Transcode
   * reference quirks in SURVEY.md §2.11). The crawl-then-run race in the
   * reference's repo Lambda (§2.11 #3) is structurally impossible here:
   * stages are sequential function calls.
+  *
+  * The load leg is the commit-log COPY
+  * ([[WarehouseLoad.batchIdempotent]]): re-invoking it over the same
+  * staging dir loads only unseen files (Snowpipe load history).
   */
 object Pipeline {
   final case class Config(
     landingDir: String,
     stagingDir: String,
     warehouseDir: String,
-    checkpointDir: String,
+    historyDir: String,
     target: StructType,
     catalogTable: String = "landing",
     strict: Boolean = false)
 
-  /** Batch run: crawl → transcode → load. Returns the warehouse frame. */
+  /** crawl → transcode → load. Returns the committed warehouse table. */
   def run(spark: SparkSession, cfg: Config): DataFrame = {
     val inferred = CsvSource.infer(spark, cfg.landingDir, cfg.catalogTable)
     val df = CsvSource.read(spark, cfg.landingDir, inferred)
     Transcode.toJson(df, cfg.stagingDir)
-    WarehouseLoad.batch(spark, cfg.stagingDir, cfg.target,
-      cfg.warehouseDir, cfg.strict)
-    spark.read.parquet(cfg.warehouseDir)
-  }
-
-  /** Continuous run: same stages, but the load leg is the checkpointed
-    * streaming query — re-invocations only ingest unseen staged files
-    * (Snowpipe load-history semantics). */
-  def runContinuous(spark: SparkSession, cfg: Config): DataFrame = {
-    val inferred = CsvSource.infer(spark, cfg.landingDir, cfg.catalogTable)
-    val df = CsvSource.read(spark, cfg.landingDir, inferred)
-    Transcode.toJson(df, cfg.stagingDir)
-    val q = WarehouseLoad.continuous(spark, cfg.stagingDir, cfg.target,
-      cfg.warehouseDir, cfg.checkpointDir)
-    q.awaitTermination()
-    spark.read.parquet(cfg.warehouseDir)
+    WarehouseLoad.batchIdempotent(spark, cfg.stagingDir, cfg.target,
+      cfg.warehouseDir, cfg.historyDir, cfg.strict)
+    WarehouseLoad.readWarehouse(spark, cfg.warehouseDir, cfg.historyDir)
+      .getOrElse(spark.createDataFrame(
+        java.util.Collections.emptyList[Row](), cfg.target))
   }
 }

@@ -780,35 +780,35 @@ object Dedup {
       AND h IN (SELECT h FROM h WHERE doc_id < 400)"""
 
   // ---------------------------------------------------------------- d12
-  // Takedown applied end-to-end: commit the corpus as a versioned
-  // warehouse snapshot, serve a deterministic opt-out key list through
-  // the real Takedown operator (load/Takedown.scala: size-guarded
-  // broadcast anti-join → full snapshot rewrite → atomic manifest
-  // repoint), re-serve the same list (idempotence: the second apply
-  // must remove 0 rows and commit no new version), then return the
-  // committed survivors read back through the manifest. The oracle
-  // replays corpus-minus-list in SQL, so the whole delete path — not
-  // just the anti-join — sits under the correctness gate.
+  // Takedown applied end-to-end on the corpus: stage it as one JSON
+  // wave, COPY it into a commit-log warehouse (batchIdempotent), serve
+  // a deterministic opt-out key list through takedownCommitted
+  // (size-guarded broadcast probe → rewrite of the hit batches → one
+  // CAS-committed version), re-serve the same list (idempotence: the
+  // second apply must remove 0 rows and commit no new version), then
+  // return the committed survivors. The oracle replays
+  // corpus-minus-list in SQL, so the whole delete path — not just the
+  // anti-join — sits under the correctness gate.
   val d12: Q = (s, d) => {
-    val dim = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-      "graft-takedown-" + d.replaceAll("[^A-Za-z0-9.]", "_")).toString
-    val dimPath = new org.apache.hadoop.fs.Path(dim)
-    val fs = dimPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    // Wipe the previous invocation's warehouse (bench runs each query
-    // three times): the query demonstrates the full lifecycle each run.
-    fs.delete(dimPath, true)
+    import graft.load.WarehouseLoad
+    val root = Fixtures.scratchRoot(s, "corpustakedown", d)
+    val (staging, wh, hist) =
+      (s"$root/stage", s"$root/warehouse", s"$root/history")
     val docs = Tables.documents(s, d)
       .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
-    graft.load.Takedown.init(s, dim, docs)
+    Fixtures.stageJsonWave(s, root, staging, "corpus.json", docs)
+    WarehouseLoad.batchIdempotent(s, staging, docs.schema, wh, hist)
     val optOut = Tables.documents(s, d)
       .filter(col("doc_id") % 37 === 0).select(col("doc_id"))
-    graft.load.Takedown(s, dim, optOut, Seq("doc_id"), "00000001")
-    val again = graft.load.Takedown(s, dim, optOut, Seq("doc_id"), "00000002")
+    WarehouseLoad.takedownCommitted(s, wh, hist, optOut, Seq("doc_id"))
+    val head = WarehouseLoad.currentVersion(s, hist)
+    val again =
+      WarehouseLoad.takedownCommitted(s, wh, hist, optOut, Seq("doc_id"))
     require(again == 0L,
       s"takedown not idempotent: second apply removed $again rows")
-    require(!fs.exists(new org.apache.hadoop.fs.Path(dim, "v=00000002")),
+    require(WarehouseLoad.currentVersion(s, hist) == head,
       "idempotent re-apply must not commit a new version")
-    graft.load.StreamingMerge.snapshot(s, dim).get
+    WarehouseLoad.readWarehouse(s, wh, hist).get
   }
 
   val d12Sql: String = """

@@ -7,9 +7,9 @@ import graft.sources.Tables
 
 /** Oracle-gated warehouse-load lifecycle queries — the load modes whose
   * semantics only show up through side effects get the same treatment
-  * d12 gives `Takedown`: build a deterministic fixture from the source
-  * tables, run the real load, and return a summary the DuckDB oracle
-  * reproduces in closed form from the same tables.
+  * d12 gives the corpus takedown: build a deterministic fixture from
+  * the source tables, run the real load, and return a summary the
+  * DuckDB oracle reproduces in closed form from the same tables.
   */
 object Load {
   type Q = (SparkSession, String) => DataFrame
@@ -258,7 +258,7 @@ object Load {
   // ---------------------------------------------------------------- q82
   // Delete-by-key takedown on the committed batch warehouse (the
   // right-to-be-forgotten mutation the reference's COPY-append model
-  // has no analog for; dims get it via d12/Takedown — this is the MAIN
+  // has no analog for; d12 serves it on the corpus, this is the MAIN
   // table): stage `orders` in two waves (parity, two batches so batch
   // granularity is observable), takedown o_orderkey % 7 == 0, and
   // report the full contract in one row — rows before (time travel to
@@ -1435,14 +1435,13 @@ object Load {
       source, Seq("o_orderkey"))
     val head = WarehouseLoad.currentVersion(s, hist)
     val after = WarehouseLoad.committedBatches(s, hist)
-    // ZERO data files rewritten: a hit batch's replacement (the
-    // "-<tag>" id, never the "-u" append sibling) carries every file
+    // ZERO data files rewritten: a hit batch's replacement (a new id,
+    // never the "-u" append sibling) carries every file
     // byte-identically; an unhit batch keeps its id untouched
+    val added = after.filterNot(before.contains).filterNot(_.endsWith("-u"))
     val carried = head == preHead + 1 &&
       before.zip(statesBefore).forall { case (ob, st0) =>
-        after.contains(ob) ||
-          after.find(a => a.startsWith(ob + "-") && !a.endsWith("-u"))
-            .exists(na => dirState(na) == st0)
+        after.contains(ob) || added.exists(na => dirState(na) == st0)
       }
     val rel = WarehouseLoad.readWarehouse(s, wh, hist).get
     val agg = rel.agg(count(lit(1)).as("n"),

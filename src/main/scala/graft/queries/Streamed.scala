@@ -880,8 +880,7 @@ object Streamed {
   // FAISS add-after-train. foreachBatch is the right sink because the
   // write is a partitioned-table append (no streaming parquet-sink
   // state needed); exactly-once comes from the checkpoint + the
-  // append's micro-batch granularity, the same contract
-  // WarehouseLoad.continuous pins for the warehouse leg.
+  // append's micro-batch granularity.
   // Oracle: s16's SQL — once the stream drains, the merged index must
   // serve the probe identically to the batch merge (and to a full
   // frozen rebuild, s16's contract), transitively proving

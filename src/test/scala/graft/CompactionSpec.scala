@@ -1,20 +1,8 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.load.Compaction
 
 class CompactionSpec extends SparkSpec {
-
-  test("pack is first-fit-decreasing with outsized files isolated") {
-    val bins = Compaction.pack(
-      Seq("a" -> 60L, "b" -> 50L, "c" -> 40L, "d" -> 30L, "e" -> 200L),
-      targetBytes = 100L)
-    // e (200 > target) alone; 60+40, 50+30 pack pairwise
-    assert(bins.length == 3, bins.toString)
-    assert(bins.exists(_ == Seq("e")))
-    assert(bins.exists(b => b.toSet == Set("a", "c")))
-    assert(bins.exists(b => b.toSet == Set("b", "d")))
-  }
 
   test("Z-ordered compaction folds committed batches into a two-dim skippable layout") {
     import graft.load.WarehouseLoad
@@ -104,24 +92,5 @@ class CompactionSpec extends SparkSpec {
       assert(overlapping(0, 15, "ymn", "ymx") <= slices.length / 2,
         s"p=$p: y band must skip most row slices")
     }
-  }
-
-  test("compact shrinks a many-small-files table and preserves the data") {
-    val dir = tmpDir("graft-compact-")
-    // 20 single-row files — the streaming-ingest landing pattern
-    (0 until 20).foreach { i =>
-      spark.range(i, i + 1).select(col("id"), (col("id") * 2).as("v"))
-        .coalesce(1).write.mode("append").parquet(dir)
-    }
-    val before = spark.read.parquet(dir)
-    val beforeRows = before.orderBy("id").collect().map(_.toSeq).toSeq
-    val (nBefore, nAfter) = Compaction.compact(spark, dir,
-      targetBytes = 10L * 1024 * 1024)
-    assert(nBefore >= 20, s"expected >=20 input files, got $nBefore")
-    assert(nAfter == 1, s"expected 1 compacted file, got $nAfter")
-    val after = spark.read.parquet(dir)
-    assert(after.orderBy("id").collect().map(_.toSeq).toSeq == beforeRows)
-    // idempotent: a second pass is a metadata no-op
-    assert(Compaction.compact(spark, dir, 10L * 1024 * 1024) == (1, 1))
   }
 }

@@ -7,110 +7,96 @@ import scala.jdk.CollectionConverters._
 import graft.pipeline.Pipeline
 import graft.schema.Schemas
 
-/** Reference-parity end-to-end test (SURVEY.md §5 #2): drop the
-  * reference's customers.csv into a landing dir, run the pipeline,
-  * assert the observable contract of glue_job.py + the Snowpipe COPY —
-  * 847 typed rows, lower-case columns, 343 null middlenames, timestamp
-  * ModifiedDate. Plus §5 #4: a continuous re-run ingests nothing new.
+/** Reference-parity end-to-end test (SURVEY.md §5 #2): drop a
+  * customers CSV with every feature of the reference's export
+  * (FIXTURES.md §1) into a landing dir, run the pipeline, and assert
+  * the observable contract of glue_job.py + the Snowpipe COPY — typed
+  * rows, lower-case columns, null middlenames, timestamp ModifiedDate.
+  * Plus §5 #4: re-running the load leg ingests nothing new.
   */
 class PipelineSpec extends SparkSpec {
-  private val refCsv = Paths.get("/root/reference/data/customers.csv")
+  import graft.load.WarehouseLoad
+
+  /** The reference export's shape in eight rows: CamelCase header plus
+    * `rowguid`, empty `MiddleName` (three rows), a backslash in
+    * `SalesPerson`, base64 with `+`, `/` and `=`, braced GUIDs, `FALSE`
+    * NameStyle and `yyyy-MM-dd HH:mm:ss` dates. */
+  private val customersCsv: String = {
+    val header = "CustomerID,NameStyle,Title,FirstName,MiddleName," +
+      "LastName,Suffix,CompanyName,SalesPerson,EmailAddress,Phone," +
+      "PasswordHash,PasswordSalt,rowguid,ModifiedDate"
+    val people = Seq(
+      (1L, "Mr.", "Orlando", "N.", "Gee", ""),
+      (2L, "Mr.", "Keith", "", "Harris", ""),
+      (3L, "Ms.", "Donna", "F.", "Carreras", ""),
+      (4L, "Ms.", "Janet", "M.", "Gates", ""),
+      (5L, "Mr.", "Lucy", "", "Harrington", "Jr."),
+      (6L, "Ms.", "Rosmarie", "J.", "Carroll", ""),
+      (7L, "Mr.", "Dominic", "P.", "Gash", ""),
+      (29485L, "Sr.", "Kathleen", "", "Garza", ""))
+    val rows = people.map { case (id, title, first, middle, last, sfx) =>
+      Seq(id.toString, "FALSE", title, first, middle, last, sfx,
+        "A Bike Store", s"adventure-works\\pamela$id",
+        s"${first.toLowerCase}$id@adventure-works.com", s"245-555-01$id",
+        s"L/Rlwxzp4w7RWmEgXX+/A7cXaePEPcp+KwQhl2fJL7w$id=", s"1KjX+/$id=",
+        f"{3F5AE95E-B87D-4AED-95B4-C3797AFCB7$id%02d}",
+        s"2005-08-0${1 + id % 9} 00:00:00").mkString(",")
+    }
+    (header +: rows).mkString("", "\n", "\n")
+  }
 
   private def mkCfg(): Pipeline.Config = {
     val landing = tmpDir("graft-landing-")
-    Files.createSymbolicLink(
-      Paths.get(landing, "customers.csv"), refCsv)
+    Files.writeString(Paths.get(landing, "customers.csv"), customersCsv)
     Pipeline.Config(
       landingDir = landing,
       stagingDir = tmpDir("graft-staging-") + "/json",
       warehouseDir = tmpDir("graft-wh-") + "/customers",
-      checkpointDir = tmpDir("graft-ckpt-") + "/cp",
+      historyDir = tmpDir("graft-hist-") + "/customers",
       target = Schemas.customers,
       catalogTable = "customers_landing")
   }
 
   test("batch pipeline: CSV → JSON → typed warehouse parity") {
-    assume(Files.exists(refCsv))
     val wh = Pipeline.run(spark, mkCfg())
-    assert(wh.count() == 847)
+    assert(wh.count() == 8)
     assert(wh.columns.toSeq == Schemas.customers.fieldNames.toSeq)
     assert(wh.schema("modifieddate").dataType ==
       org.apache.spark.sql.types.TimestampType)
     assert(wh.schema("customerid").dataType ==
       org.apache.spark.sql.types.LongType)
-    assert(wh.where(wh("middlename").isNull).count() == 343)
-    assert(wh.where(wh("namestyle") === false).count() == 847)
+    assert(wh.schema("namestyle").dataType ==
+      org.apache.spark.sql.types.BooleanType)
+    assert(wh.where(wh("middlename").isNull).count() == 3)
+    assert(wh.where(wh("namestyle") === false).count() == 8)
+    // values the CSV → JSON → COPY legs must carry through verbatim
+    val kathleen = wh.where(wh("customerid") === 29485L).head()
+    assert(kathleen.getAs[String]("salesperson") ==
+      "adventure-works\\pamela29485")
+    assert(kathleen.getAs[String]("passwordsalt") == "1KjX+/29485=")
+    assert(kathleen.getAs[String]("rowguid") ==
+      "{3F5AE95E-B87D-4AED-95B4-C3797AFCB729485}")
+    assert(kathleen.getAs[java.sql.Timestamp]("modifieddate") ==
+      java.sql.Timestamp.valueOf("2005-08-02 00:00:00"))
     // catalog registration (the "crawler" leg)
     assert(spark.catalog.tableExists("customers_landing"))
   }
 
-  test("continuous load is exactly-once across re-runs (load history)") {
-    assume(Files.exists(refCsv))
+  test("re-running the load leg over the same staging adds nothing (load history)") {
     val cfg = mkCfg()
-    val first = Pipeline.runContinuous(spark, cfg)
-    assert(first.count() == 847)
-    // Re-running the *streaming load leg* over the same staging dir with
-    // the same checkpoint must add nothing (Snowpipe load-history
-    // analog). Note: re-running the full pipeline would re-transcode and
-    // overwrite staging with new file names — the reference's documented
-    // duplicate-on-rerun quirk (SURVEY.md §7.3 #3), not an engine bug.
-    val q = graft.load.WarehouseLoad.continuous(spark, cfg.stagingDir,
-      cfg.target, cfg.warehouseDir, cfg.checkpointDir)
-    q.awaitTermination()
-    assert(spark.read.parquet(cfg.warehouseDir).count() == 847)
-  }
-
-  test("continuous load: mid-batch kill before checkpoint commit replays without duplicates") {
-    // VERDICT r11 #5: the streaming load's crash window is between the
-    // parquet sink's batch commit (_spark_metadata) and the
-    // checkpoint's commit marker. Tear the checkpoint commit off and
-    // restart: the batch replays, the sink's own log recognizes the
-    // already-committed batch id, and no file's rows double.
-    val staging = tmpDir("graft-killstage-")
-    val wh = tmpDir("graft-killwh-") + "/t"
-    val cp = tmpDir("graft-killckpt-") + "/cp"
-    Files.writeString(Paths.get(staging, "f1.json"),
-      """{"CustomerID": "1", "FirstName": "a"}""" + "\n" +
-      """{"CustomerID": "2", "FirstName": "b"}""" + "\n")
-    graft.load.WarehouseLoad.continuous(spark, staging, Schemas.customers,
-      wh, cp).awaitTermination()
-    assert(spark.read.parquet(wh).count() == 2)
-    val commit0 = Paths.get(cp, "commits", "0")
-    assert(Files.exists(commit0), "checkpoint layout changed")
-    Files.delete(commit0)
-    // the local fs keeps a checksum sibling; an orphaned .crc would
-    // make the replay's atomic rename fail spuriously
-    Files.deleteIfExists(Paths.get(cp, "commits", ".0.crc"))
-    graft.load.WarehouseLoad.continuous(spark, staging, Schemas.customers,
-      wh, cp).awaitTermination()
-    assert(spark.read.parquet(wh).count() == 2,
-      "replayed batch duplicated rows past the sink's commit log")
-    // and the stream still makes progress afterwards
-    Files.writeString(Paths.get(staging, "f2.json"),
-      """{"CustomerID": "3", "FirstName": "c"}""" + "\n")
-    graft.load.WarehouseLoad.continuous(spark, staging, Schemas.customers,
-      wh, cp).awaitTermination()
-    assert(spark.read.parquet(wh).count() == 3)
-  }
-
-  test("partitioned warehouse load prunes partitions at the scan") {
-    val staging = tmpDir("graft-partstage-")
-    Files.writeString(Paths.get(staging, "batch.json"),
-      Seq("""{"CustomerID": "1", "Title": "Mr.", "FirstName": "a"}""",
-          """{"CustomerID": "2", "Title": "Ms.", "FirstName": "b"}""",
-          """{"CustomerID": "3", "Title": "Mr.", "FirstName": "c"}""")
-        .mkString("", "\n", "\n"))
-    val wh = tmpDir("graft-partwh-") + "/t"
-    graft.load.WarehouseLoad.batch(spark, staging, Schemas.customers, wh,
-      partitionCols = Seq("title"))
-    // hive-style partition dirs exist…
-    assert(Files.exists(Paths.get(wh, "title=Mr.")))
-    // …and a filter on the partition column prunes to one of them
-    val df = spark.read.parquet(wh).where(org.apache.spark.sql.functions
-      .col("title") === "Ms.")
-    assert(df.count() == 1)
-    val scan = df.queryExecution.executedPlan.toString
-    assert(scan.contains("PartitionFilters: [isnotnull(title"), scan.take(1500))
+    assert(Pipeline.run(spark, cfg).count() == 8)
+    val head = WarehouseLoad.currentVersion(spark, cfg.historyDir)
+    assert(head == 1L)
+    // Re-running the *load leg* over the same staging dir must add
+    // nothing (Snowpipe load-history analog). Note: re-running the full
+    // pipeline would re-transcode and overwrite staging with new file
+    // names — the reference's documented duplicate-on-rerun quirk
+    // (SURVEY.md §7.3 #3), not an engine bug.
+    WarehouseLoad.batchIdempotent(spark, cfg.stagingDir, cfg.target,
+      cfg.warehouseDir, cfg.historyDir)
+    assert(WarehouseLoad.readWarehouse(spark, cfg.warehouseDir,
+      cfg.historyDir).get.count() == 8)
+    assert(WarehouseLoad.currentVersion(spark, cfg.historyDir) == head)
   }
 
   test("ambiguous case-colliding JSON keys refuse the load") {
@@ -118,15 +104,21 @@ class PipelineSpec extends SparkSpec {
     Files.writeString(Paths.get(staging, "a.json"),
       """{"CustomerID": "1", "customerid": "2"}""" + "\n")
     val wh = tmpDir("graft-ambigwh-") + "/t"
-    // Refused a layer before SchemaAlign: case-insensitive JSON schema
-    // inference itself rejects the colliding keys (COLUMN_ALREADY_EXISTS)
-    // — the load never proceeds with ambiguous bindings, matching COPY's
-    // ambiguous-match error. (SchemaAlign.AmbiguousColumnException covers
-    // the same contract for pre-schema'd frames — SchemaAlignSpec.)
+    val hist = tmpDir("graft-ambighist-") + "/h"
+    // Refused a layer before SchemaAlign: case-insensitive schema
+    // resolution of the staged read rejects the colliding keys
+    // (COLUMN_ALREADY_EXISTS) — the load never proceeds with ambiguous
+    // bindings, matching COPY's ambiguous-match error.
+    // (SchemaAlign.AmbiguousColumnException covers the same contract
+    // for pre-schema'd frames — SchemaAlignSpec.)
     val e = intercept[org.apache.spark.sql.AnalysisException] {
-      graft.load.WarehouseLoad.batch(spark, staging, Schemas.customers, wh)
+      WarehouseLoad.batchIdempotent(spark, staging, Schemas.customers, wh,
+        hist)
     }
     assert(e.getErrorClass == "COLUMN_ALREADY_EXISTS")
+    // nothing committed
+    assert(WarehouseLoad.currentVersion(spark, hist) == 0L)
+    assert(WarehouseLoad.readWarehouse(spark, wh, hist).isEmpty)
   }
 
   test("staged files with evolving key sets load with nulls for gaps") {
@@ -136,8 +128,10 @@ class PipelineSpec extends SparkSpec {
     Files.writeString(Paths.get(staging, "v2.json"),
       """{"CustomerID": "2", "FirstName": "b", "MiddleName": "Q"}""" + "\n")
     val wh = tmpDir("graft-evowh-") + "/t"
-    graft.load.WarehouseLoad.batch(spark, staging, Schemas.customers, wh)
-    val rows = spark.read.parquet(wh)
+    val hist = tmpDir("graft-evohist-") + "/h"
+    WarehouseLoad.batchIdempotent(spark, staging, Schemas.customers, wh,
+      hist)
+    val rows = WarehouseLoad.readWarehouse(spark, wh, hist).get
       .select("customerid", "firstname", "middlename")
       .collect().sortBy(_.getLong(0))
     assert(rows.length == 2)
@@ -262,10 +256,9 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("partitioned committed batches: layout survives the lifecycle; partition predicate prunes at the scan") {
-    // The batch() hive-partitioning semantic on the ATOMIC path: every
-    // committed batch dir is partitioned, a partition predicate lands
-    // in the multi-root scan's PartitionFilters (directory pruning
-    // under every batch root — the 1/n-th-of-the-table lever at
+    // Hive partitioning on the commit log: every committed batch dir
+    // is partitioned, a partition predicate lands in the multi-root
+    // scan's PartitionFilters (directory pruning under every batch root — the 1/n-th-of-the-table lever at
     // warehouse scale), and compaction/takedown rewrites preserve the
     // layout instead of flattening it.
     import org.apache.spark.sql.execution.FormattedMode
@@ -1094,6 +1087,56 @@ class PipelineSpec extends SparkSpec {
       "half-implemented backend into a mid-commit runtime failure")
   }
 
+  test("rewrite batch ids stay fixed-length across merge and DV-takedown rounds") {
+    // Each rewrite derives its batch's new id from a fixed-length hash
+    // of the old one, so a batch rewritten round after round without a
+    // compaction keeps an id (and an intent file name) of bounded
+    // length: an id that grew by a suffix per rewrite would pass the
+    // 255-byte file-name limit within these eight rounds and fail the
+    // commit.
+    import org.apache.spark.sql.types.{LongType, StringType, StructField,
+      StructType}
+    import spark.implicits._
+    val staging = tmpDir("graft-idlenstage-")
+    val wh = tmpDir("graft-idlenwh-") + "/t"
+    val hist = tmpDir("graft-idlenhist-") + "/h"
+    val target = StructType(Seq(StructField("id", LongType),
+      StructField("v", StringType)))
+    Files.writeString(Paths.get(staging, "f1.json"),
+      (1 to 20).map(i => s"""{"id": "$i", "v": "a$i"}""")
+        .mkString("", "\n", "\n"))
+    WarehouseLoad.batchIdempotent(spark, staging, target, wh, hist)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.as[(Long, String)].collect().toSeq.sorted
+    val original = rows(WarehouseLoad.readWarehouse(spark, wh, hist).get)
+    // no compaction between rounds: odd rounds MERGE (update one key of
+    // the loaded batch, insert one), even rounds DV-take one key down
+    val maxLens = (1 to 8).map { r =>
+      val before = WarehouseLoad.currentVersion(spark, hist)
+      if (r % 2 == 1)
+        WarehouseLoad.mergeCommitted(spark, wh, hist,
+          Seq((r.toLong, s"m$r"), (100L + r, s"n$r")).toDF("id", "v"),
+          Seq("id"))
+      else
+        WarehouseLoad.takedownVectorized(spark, wh, hist,
+          Seq(10L + r).toDF("id"), Seq("id"))
+      assert(WarehouseLoad.currentVersion(spark, hist) == before + 1,
+        s"round $r must commit")
+      WarehouseLoad.committedBatches(spark, hist).map(_.length).max
+    }
+    info(s"max batch id length per round: $maxLens")
+    assert(maxLens.distinct.size == 1, s"batch ids grew: $maxLens")
+    // every rewrite is a new id: time travel still reads the load
+    assert(rows(WarehouseLoad.readWarehouseAt(spark, wh, hist, 1L).get) ==
+      original)
+    val expected = (original.filterNot { case (i, _) =>
+        Set(12L, 14L, 16L, 18L)(i) }
+      .map { case (i, v) => if (i % 2 == 1 && i <= 7) (i, s"m$i") else (i, v) }
+      ++ Seq(1, 3, 5, 7).map(r => (100L + r, s"n$r"))).sorted
+    assert(rows(WarehouseLoad.readWarehouse(spark, wh, hist).get) ==
+      expected)
+  }
+
   test("committed-warehouse MERGE: upsert edges — cardinality, empty table, checks, multi-match") {
     import graft.load.WarehouseLoad
     import org.apache.spark.sql.functions.col
@@ -1494,10 +1537,14 @@ class PipelineSpec extends SparkSpec {
     Files.writeString(Paths.get(staging, "bad.json"),
       """{"customerid": "oops", "namestyle": "FALSE"}""" + "\n")
     val wh = tmpDir("graft-badwh-") + "/t"
-    intercept[graft.load.WarehouseLoad.CoercionException] {
-      graft.load.WarehouseLoad.batch(spark, staging, Schemas.customers,
-        wh, strict = true)
+    val hist = tmpDir("graft-badhist-") + "/h"
+    intercept[WarehouseLoad.CoercionException] {
+      WarehouseLoad.batchIdempotent(spark, staging, Schemas.customers,
+        wh, hist, strict = true)
     }
+    // the refused batch committed nothing and recorded no file as loaded
+    assert(WarehouseLoad.currentVersion(spark, hist) == 0L)
+    assert(WarehouseLoad.loadedFiles(spark, hist).forall(_.isEmpty))
   }
 
   /** Stage + load one wave of customer ids; returns the staging dir. */

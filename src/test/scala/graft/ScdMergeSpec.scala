@@ -71,6 +71,31 @@ class ScdMergeSpec extends SparkSpec {
     assert(dim2.exceptAll(dim1).count() == 0)
   }
 
+  test("SCD2 delta holds exactly the rows merge changes; a re-apply's delta is empty") {
+    val t0 = ts("2026-01-01 00:00:00")
+    val t1 = ts("2026-02-01 00:00:00")
+    val t2 = ts("2026-03-01 00:00:00")
+    val dim0 = ScdMerge.init(
+      Seq((1L, "alice", "NY"), (2L, "bob", "LA")).toDF("id", "name", "city"),
+      t0)
+    val updates = Seq((1L, "alice", "BOSTON"), (2L, "bob", "LA"),
+      (3L, "carol", "SF")).toDF("id", "name", "city")
+    val key = Seq("id", ScdMerge.EffectiveFrom)
+    val dim1 = ScdMerge.merge(dim0, updates, Seq("id"),
+      Seq("name", "city"), t1)
+    val delta = ScdMerge.delta(dim0, updates, Seq("id"),
+      Seq("name", "city"), t1)
+    // delta = alice's closed NY version + alice's BOSTON + carol
+    assert(delta.count() == 3)
+    assert(delta.exceptAll(dim1).isEmpty, "every delta row is in the merge")
+    // upserting the delta into dim0 on (key, effective_from) is the merge
+    val upserted = dim0.join(delta.select(key.map(col): _*), key, "left_anti")
+      .unionByName(delta).select(dim1.columns.map(col): _*)
+    assert(upserted.exceptAll(dim1).isEmpty && dim1.exceptAll(upserted).isEmpty)
+    assert(ScdMerge.delta(dim1, updates, Seq("id"), Seq("name", "city"), t2)
+      .isEmpty)
+  }
+
   test("SCD2 merge handles null tracked values (null != value, null == null)") {
     val t0 = ts("2026-01-01 00:00:00")
     val t1 = ts("2026-02-01 00:00:00")

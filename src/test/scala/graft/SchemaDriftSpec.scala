@@ -67,8 +67,11 @@ class SchemaDriftSpec extends SparkSpec {
     assert(evolved.fields.drop(4).forall(_.nullable))
     // and the evolved DDL drives a real load: new column lands typed
     val wh = tmpDir("graft-driftwh-") + "/t"
-    graft.load.WarehouseLoad.batch(spark, staging, evolved, wh)
-    val out = spark.read.parquet(wh).collect().head
+    val hist = tmpDir("graft-drifthist-") + "/h"
+    graft.load.WarehouseLoad.batchIdempotent(spark, staging, evolved, wh,
+      hist)
+    val out = graft.load.WarehouseLoad.readWarehouse(spark, wh, hist).get
+      .collect().head
     assert(out.getAs[String]("Channel") == "web")
     assert(out.getAs[Long]("Score") == 7L)
     assert(out.isNullAt(out.fieldIndex("price"))) // permissive null-through
