@@ -25,7 +25,11 @@ import org.apache.spark.sql.types.StructType
   *
   * `batchTs` stamps versions from the batch id, keeping effective
   * timestamps deterministic and replayable; production callers pass
-  * wall-clock or event-derived timestamps.
+  * wall-clock or event-derived timestamps. Every version an epoch
+  * opens shares that timestamp, so an epoch keeps ONE update per key:
+  * the last, by staged file name and then position in the file (a
+  * MERGE source with two rows for a key would be refused, and the
+  * stream would replay the refused epoch forever).
   */
 object StreamingMerge {
 
@@ -44,10 +48,11 @@ object StreamingMerge {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (!batch.isEmpty) {
           val ts = batchTs(batchId)
+          val updates = lastPerKey(batch, keyCols)
           val delta = WarehouseLoad.readWarehouse(spark, wh, hist) match {
             case Some(current) =>
-              ScdMerge.delta(current, batch, keyCols, trackedCols, ts)
-            case None => ScdMerge.init(batch, ts)
+              ScdMerge.delta(current, updates, keyCols, trackedCols, ts)
+            case None => ScdMerge.init(updates, ts)
           }
           WarehouseLoad.mergeCommitted(spark, wh, hist, delta,
             keyCols :+ ScdMerge.EffectiveFrom)
@@ -57,5 +62,22 @@ object StreamingMerge {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .start()
+  }
+
+  /** The last row per key of an epoch: by file name, then the file
+    * split's offset, then row order inside the split. */
+  private def lastPerKey(batch: DataFrame,
+                         keyCols: Seq[String]): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions._
+    val pos = Seq("_sm_file", "_sm_block", "_sm_row")
+    val placed = batch.select(col("*"), input_file_name().as(pos(0)),
+      expr("input_file_block_start()").as(pos(1)),
+      monotonically_increasing_id().as(pos(2)))
+    val w = Window.partitionBy(keyCols.map(col): _*)
+      .orderBy(pos.map(c => col(c).desc): _*)
+    placed.withColumn("_sm_rank", row_number().over(w))
+      .filter(col("_sm_rank") === 1)
+      .drop(pos :+ "_sm_rank": _*)
   }
 }

@@ -1221,17 +1221,26 @@ object WarehouseLoad {
       StructType(Seq(StructField("file", StringType)))))
   }
 
+  /** A merge's idempotence marker as it appears in batch ids. */
+  private val MergeTag = "mg[0-9a-f]{32}".r
+
   /** The id a rewrite (merge, takedown, DV takedown) gives batch `id`:
-    * a fixed-length hash of the old id under two xxhash64 seeds, then
+    * a fixed-length hash of the old id under two xxhash64 seeds, the
+    * old id's newest merge marker (`-mg<32 hex>`) if it has one, then
     * the rewrite's `suffix`. Deterministic, so a crash retry overwrites
-    * its own orphans; fixed-length, so however often a batch is
-    * rewritten its id (and intent file name) stays far below the
-    * 255-byte file-name limit. */
+    * its own orphans; bounded (at most 104 characters), so however
+    * often a batch is rewritten its id (and intent file name) stays far
+    * below the 255-byte file-name limit. Carrying the marker keeps a
+    * takedown of a merged batch from erasing the merge's idempotence
+    * marker, so a re-delivered merge cannot re-insert rows the takedown
+    * removed. */
   private def rewriteId(id: String, suffix: String): String = {
     import org.apache.spark.sql.catalyst.expressions.XxHash64Function
     val s = org.apache.spark.unsafe.types.UTF8String.fromString(id)
     def h(seed: Long) = XxHash64Function.hash(s, StringType, seed)
-    f"${h(42L)}%016x${h(43L)}%016x$suffix"
+    val carried = MergeTag.findAllIn(id).toSeq.lastOption
+      .filterNot(suffix.contains).fold("")("-" + _)
+    f"${h(42L)}%016x${h(43L)}%016x$carried$suffix"
   }
 
   /** Batch load with COPY's per-file load-history dedup: every staged
@@ -3347,10 +3356,10 @@ object WarehouseLoad {
     *
     * IDEMPOTENT RE-APPLY: the merge id is content-derived from the
     * source rows; a head already carrying it (crash-retry, or the same
-    * CDC batch delivered twice) no-ops with zero version churn. After
-    * a compaction, or a later rewrite of every batch that carried it
-    * ([[rewriteId]] keeps only the newest rewriter's suffix), folds the
-    * marker away, a re-apply is still
+    * CDC batch delivered twice) no-ops with zero version churn.
+    * Takedowns of a batch carry its newest marker ([[rewriteId]]); after
+    * a compaction, or two later merges of every batch that carried it,
+    * fold the marker away, a re-apply is still
     * CONTENT-idempotent: matched rows already equal the source, the
     * insert keys all match — the table converges to the same rows.
     *

@@ -11,11 +11,18 @@ import org.apache.spark.sql.DataFrame
   * count from input partitioning; at scale you size output files for the
   * downstream consumer (many small files strangle any file-source
   * consumer) — `repartition` here is the only (intentional) shuffle.
+  *
+  * Null fields are written (`ignoreNullFields=false`), so every output
+  * file spells the full key set — the staging homogeneity contract the
+  * idempotent load's sampled key inference relies on. Spark's default
+  * drops them, and a column null throughout the sampled files would
+  * then load as NULL everywhere.
   */
 object Transcode {
   def toJson(df: DataFrame, outDir: String,
              numFiles: Option[Int] = None): Unit = {
     val out = numFiles.fold(df)(df.repartition(_))
-    out.write.mode("overwrite").json(outDir)
+    out.write.mode("overwrite").option("ignoreNullFields", "false")
+      .json(outDir)
   }
 }

@@ -21,19 +21,23 @@ class PipelineSpec extends SparkSpec {
     * `rowguid`, empty `MiddleName` (three rows), a backslash in
     * `SalesPerson`, base64 with `+`, `/` and `=`, braced GUIDs, `FALSE`
     * NameStyle and `yyyy-MM-dd HH:mm:ss` dates. */
-  private val customersCsv: String = {
+  private val customersCsv: String = csvOf(Seq(
+    (1L, "Mr.", "Orlando", "N.", "Gee", ""),
+    (2L, "Mr.", "Keith", "", "Harris", ""),
+    (3L, "Ms.", "Donna", "F.", "Carreras", ""),
+    (4L, "Ms.", "Janet", "M.", "Gates", ""),
+    (5L, "Mr.", "Lucy", "", "Harrington", "Jr."),
+    (6L, "Ms.", "Rosmarie", "J.", "Carroll", ""),
+    (7L, "Mr.", "Dominic", "P.", "Gash", ""),
+    (29485L, "Sr.", "Kathleen", "", "Garza", "")))
+
+  /** A customers CSV of `people` (id, title, first, middle, last,
+    * suffix), the other columns derived from the id. */
+  private def csvOf(
+      people: Seq[(Long, String, String, String, String, String)]): String = {
     val header = "CustomerID,NameStyle,Title,FirstName,MiddleName," +
       "LastName,Suffix,CompanyName,SalesPerson,EmailAddress,Phone," +
       "PasswordHash,PasswordSalt,rowguid,ModifiedDate"
-    val people = Seq(
-      (1L, "Mr.", "Orlando", "N.", "Gee", ""),
-      (2L, "Mr.", "Keith", "", "Harris", ""),
-      (3L, "Ms.", "Donna", "F.", "Carreras", ""),
-      (4L, "Ms.", "Janet", "M.", "Gates", ""),
-      (5L, "Mr.", "Lucy", "", "Harrington", "Jr."),
-      (6L, "Ms.", "Rosmarie", "J.", "Carroll", ""),
-      (7L, "Mr.", "Dominic", "P.", "Gash", ""),
-      (29485L, "Sr.", "Kathleen", "", "Garza", ""))
     val rows = people.map { case (id, title, first, middle, last, sfx) =>
       Seq(id.toString, "FALSE", title, first, middle, last, sfx,
         "A Bike Store", s"adventure-works\\pamela$id",
@@ -80,6 +84,39 @@ class PipelineSpec extends SparkSpec {
       java.sql.Timestamp.valueOf("2005-08-02 00:00:00"))
     // catalog registration (the "crawler" leg)
     assert(spark.catalog.tableExists("customers_landing"))
+  }
+
+  test("a column set only in the last of many staged files keeps its values") {
+    // Twelve landing CSVs become twelve staged JSON files, more than the
+    // load samples for its key set. Suffix is set only in the smallest
+    // CSV, whose part file is written last; every staged file must
+    // still spell the Suffix key, or the column would load as NULL.
+    // A tiny split size gives each CSV its own read task, as a wider
+    // session or larger files would; local[4] would pack them into 4.
+    val cfg = mkCfg()
+    Files.delete(Paths.get(cfg.landingDir, "customers.csv"))
+    (1 to 11).foreach { f =>
+      Files.writeString(Paths.get(cfg.landingDir, f"c$f%02d.csv"),
+        csvOf((0 until 3).map { i =>
+          (f * 10L + i, "Mr.", s"First$f$i", "", s"Last$f$i", "")
+        }))
+    }
+    Files.writeString(Paths.get(cfg.landingDir, "c12.csv"),
+      csvOf(Seq((999L, "Mr.", "Last", "Q.", "File", "III"))))
+    val SplitKey = "spark.sql.files.maxPartitionBytes"
+    val oldSplit = spark.conf.getOption(SplitKey)
+    spark.conf.set(SplitKey, "1024")
+    val wh = try Pipeline.run(spark, cfg).localCheckpoint() finally
+      oldSplit.fold(spark.conf.unset(SplitKey))(spark.conf.set(SplitKey, _))
+    val staged = Option(new java.io.File(cfg.stagingDir).listFiles())
+      .getOrElse(Array.empty[java.io.File])
+      .count(f => f.getName.startsWith("part-") && f.length > 0)
+    assert(staged > 8, s"only $staged staged files")
+    assert(wh.count() == 34)
+    val last = wh.where(wh("customerid") === 999L).head()
+    assert(last.getAs[String]("suffix") == "III")
+    assert(last.getAs[String]("middlename") == "Q.")
+    assert(wh.where(wh("suffix").isNull).count() == 33)
   }
 
   test("re-running the load leg over the same staging adds nothing (load history)") {
@@ -1087,13 +1124,13 @@ class PipelineSpec extends SparkSpec {
       "half-implemented backend into a mid-commit runtime failure")
   }
 
-  test("rewrite batch ids stay fixed-length across merge and DV-takedown rounds") {
+  test("rewrite batch ids stay bounded across merge and DV-takedown rounds") {
     // Each rewrite derives its batch's new id from a fixed-length hash
-    // of the old one, so a batch rewritten round after round without a
-    // compaction keeps an id (and an intent file name) of bounded
-    // length: an id that grew by a suffix per rewrite would pass the
-    // 255-byte file-name limit within these eight rounds and fail the
-    // commit.
+    // of the old one plus at most the old id's newest merge marker, so
+    // a batch rewritten round after round without a compaction keeps an
+    // id (and an intent file name) of bounded length: an id that grew
+    // by a suffix per rewrite would pass the 255-byte file-name limit
+    // within these eight rounds and fail the commit.
     import org.apache.spark.sql.types.{LongType, StringType, StructField,
       StructType}
     import spark.implicits._
@@ -1125,7 +1162,10 @@ class PipelineSpec extends SparkSpec {
       WarehouseLoad.committedBatches(spark, hist).map(_.length).max
     }
     info(s"max batch id length per round: $maxLens")
-    assert(maxLens.distinct.size == 1, s"batch ids grew: $maxLens")
+    // hash (32) + carried marker (35) + merge suffix (37): reached once
+    // a merge rewrites a batch an earlier merge marked, then flat
+    assert(maxLens.forall(_ <= 104), s"batch ids too long: $maxLens")
+    assert(maxLens.drop(2).distinct.size == 1, s"batch ids grew: $maxLens")
     // every rewrite is a new id: time travel still reads the load
     assert(rows(WarehouseLoad.readWarehouseAt(spark, wh, hist, 1L).get) ==
       original)
@@ -1135,6 +1175,37 @@ class PipelineSpec extends SparkSpec {
       ++ Seq(1, 3, 5, 7).map(r => (100L + r, s"n$r"))).sorted
     assert(rows(WarehouseLoad.readWarehouse(spark, wh, hist).get) ==
       expected)
+  }
+
+  test("a merge re-delivered after a takedown of its inserted row stays a no-op") {
+    // The merge only inserts, so its insert batch is the one batch
+    // whose id carries its marker. The takedown rewrites that batch;
+    // the new id keeps the marker, so the re-delivery is recognised as
+    // applied and cannot re-insert the row the takedown erased.
+    import org.apache.spark.sql.types.{LongType, StringType, StructField,
+      StructType}
+    import spark.implicits._
+    val staging = tmpDir("graft-redelstage-")
+    val wh = tmpDir("graft-redelwh-") + "/t"
+    val hist = tmpDir("graft-redelhist-") + "/h"
+    Files.writeString(Paths.get(staging, "f1.json"),
+      (1 to 5).map(i => s"""{"id": "$i", "v": "a$i"}""")
+        .mkString("", "\n", "\n"))
+    WarehouseLoad.batchIdempotent(spark, staging, StructType(Seq(
+      StructField("id", LongType), StructField("v", StringType))), wh, hist)
+    val mergeSrc = Seq((42L, "new"), (43L, "kept")).toDF("id", "v")
+    assert(WarehouseLoad.mergeCommitted(spark, wh, hist, mergeSrc,
+      Seq("id")) == (0L, 2L))
+    assert(WarehouseLoad.takedownVectorized(spark, wh, hist,
+      Seq(42L).toDF("id"), Seq("id")) == 1L)
+    val head = WarehouseLoad.currentVersion(spark, hist)
+    assert(WarehouseLoad.mergeCommitted(spark, wh, hist, mergeSrc,
+      Seq("id")) == (0L, 0L))
+    assert(WarehouseLoad.currentVersion(spark, hist) == head)
+    val rows = WarehouseLoad.readWarehouse(spark, wh, hist).get
+      .as[(Long, String)].collect().toSeq.sorted
+    assert(rows == Seq((1L, "a1"), (2L, "a2"), (3L, "a3"), (4L, "a4"),
+      (5L, "a5"), (43L, "kept")))
   }
 
   test("committed-warehouse MERGE: upsert edges — cardinality, empty table, checks, multi-match") {

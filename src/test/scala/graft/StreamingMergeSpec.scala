@@ -136,4 +136,38 @@ class StreamingMergeSpec extends SparkSpec {
     assertOneMerge()
     assert(version(dim) == 2L, "a replayed committed epoch must be a no-op")
   }
+
+  test("an epoch with several updates to one key keeps the last file's") {
+    // AvailableNow drains every staged file in one epoch; all versions it
+    // opens share one effective_from, so only the last update per key
+    // (by file name) becomes the open version — on the empty table and
+    // on a live one alike.
+    val staging = tmpDir("smerge-dup-stage-")
+    val dim = tmpDir("smerge-dup-dim-")
+    val ckpt = tmpDir("smerge-dup-ckpt-")
+    def run(): Unit = StreamingMerge.continuous(spark, staging, schema,
+      dim, ckpt, Seq("id"), Seq("name", "city"), ts).awaitTermination()
+    def current(id: Long): String = snapshot(dim)
+      .filter($"id" === id && $"is_current").select("city").as[String]
+      .collect().toSeq.mkString(",")
+
+    stage(staging, "b0.json", Seq(
+      """{"id": 1, "name": "alice", "city": "NY"}""",
+      """{"id": 2, "name": "bob", "city": "LA"}"""))
+    stage(staging, "b1.json", Seq(
+      """{"id": 1, "name": "alice", "city": "BOSTON"}"""))
+    run()
+    assert(version(dim) == 1L)
+    assert(snapshot(dim).count() == 2)
+    assert(current(1L) == "BOSTON")
+
+    stage(staging, "b2.json", Seq(
+      """{"id": 2, "name": "bob", "city": "SF"}"""))
+    stage(staging, "b3.json", Seq(
+      """{"id": 2, "name": "bob", "city": "OAKLAND"}"""))
+    run()
+    assert(version(dim) == 2L)
+    assert(snapshot(dim).filter($"id" === 2L).count() == 2)
+    assert(current(2L) == "OAKLAND")
+  }
 }
