@@ -70,14 +70,12 @@ object StreamingMerge {
                          keyCols: Seq[String]): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions._
-    val pos = Seq("_sm_file", "_sm_block", "_sm_row")
-    val placed = batch.select(col("*"), input_file_name().as(pos(0)),
-      expr("input_file_block_start()").as(pos(1)),
-      monotonically_increasing_id().as(pos(2)))
     val w = Window.partitionBy(keyCols.map(col): _*)
-      .orderBy(pos.map(c => col(c).desc): _*)
-    placed.withColumn("_sm_rank", row_number().over(w))
-      .filter(col("_sm_rank") === 1)
-      .drop(pos :+ "_sm_rank": _*)
+      .orderBy(col("_sm_f").desc, col("_sm_b").desc, col("_sm_r").desc)
+    batch.select(col("*"), input_file_name().as("_sm_f"),
+        expr("input_file_block_start()").as("_sm_b"),
+        monotonically_increasing_id().as("_sm_r"))
+      .withColumn("_sm_n", row_number().over(w)).filter(col("_sm_n") === 1)
+      .drop("_sm_f", "_sm_b", "_sm_r", "_sm_n")
   }
 }

@@ -12,11 +12,9 @@ import org.apache.spark.sql.DataFrame
   * downstream consumer (many small files strangle any file-source
   * consumer) — `repartition` here is the only (intentional) shuffle.
   *
-  * Null fields are written (`ignoreNullFields=false`), so every output
-  * file spells the full key set — the staging homogeneity contract the
-  * idempotent load's sampled key inference relies on. Spark's default
-  * drops them, and a column null throughout the sampled files would
-  * then load as NULL everywhere.
+  * Null fields are written (`ignoreNullFields=false`): every output
+  * file spells the full key set, which the idempotent load's sampled
+  * key inference relies on (the homogeneity contract).
   */
 object Transcode {
   def toJson(df: DataFrame, outDir: String,
