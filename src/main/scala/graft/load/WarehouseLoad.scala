@@ -17,8 +17,19 @@ import graft.schema.SchemaAlign
   *    log. Re-running it loads only unseen files (Snowpipe's per-file
   *    exactly-once); crash anywhere and re-run, no row ever doubles.
   *  - [[batchQuarantine]]: `ON_ERROR = CONTINUE` + error table.
-  *  - the other commit-log writers: merge, takedown, compaction,
-  *    vacuum, restore and the streamed epoch commit.
+  *  - the other commit-log writers: [[mergeCommitted]]/[[mergeCdc]],
+  *    [[takedownCommitted]]/[[takedownVectorized]] (one takedown pass),
+  *    [[compactCommitted]] (and its tiered and Z-ordered forms),
+  *    [[vacuum]], [[restoreWarehouse]] and the streamed epoch commit
+  *    ([[commitStreamedBatch]]).
+  *
+  * The writers share one rewrite skeleton of private steps, each with
+  * one implementation: [[taggedRelation]] (the batch-tagged probe),
+  * [[dvEligible]] (deletion-vector eligibility), [[writeBatch]] (a
+  * batch with fresh stats), [[carryBatch]]/[[carryStats]] (carried
+  * files and stats), [[commitRemap]] (a rewrite's one version) and
+  * [[untilConverged]] (re-running a pass a concurrent rewrite beat).
+  * Every commit goes through [[commitBatches]], the one CAS.
   *
   * Failure policy: `strict = true` mirrors COPY's default
   * `ON_ERROR` (refuse the batch when any value fails coercion OR fails
@@ -590,39 +601,58 @@ object WarehouseLoad {
         s"(${removed.size} batch(es) replaced — compaction or takedown); " +
         "the append-only change feed cannot express it: resync from " +
         s"readWarehouseAt($toVersion)")
+    // bounded by the WINDOW: a consumer draining a long outage
+    // (maxVersionsPerTrigger lag) plans from the log, no listing per
+    // recovered batch
+    taggedRelation(spark, warehouseDir, historyDir, to.filterNot(from),
+      rowIdentity = false)
+  }
+
+  private val BatchCol = "_graft_batch"
+  private val FpCol = "_graft_fp"
+  private val RiCol = "_graft_ri"
+
+  /** The committed union over `ids` with every row tagged by its batch
+    * id (`_graft_batch`) — the relation the change feed serves and the
+    * takedown/merge probes join against. With `rowIdentity` each row
+    * also carries its normalized file path (`_graft_fp`) and
+    * `_metadata.row_index` (`_graft_ri`), the identity deletion vectors
+    * hide rows by. ONE probe relation, not one per batch, when the log
+    * records file lists ([[manifestGroupRelations]]): the batch id comes
+    * from `_metadata.file_path` — a constant-size plan at any load count
+    * (the per-batch union paid a listing + footer read per committed
+    * load). Each layout/schema generation is tagged BEFORE the
+    * cross-generation union: `_metadata` never resolves through a
+    * Union. Legacy batches (no recorded file lists) keep the
+    * per-batch union, read through their own deletion vectors. The
+    * union is `allowMissingColumns`: batches straddling a
+    * SchemaDrift.evolve differ by the added nullable columns, which
+    * surface as null on the older rows. `None` when nothing is live. */
+  private def taggedRelation(spark: SparkSession, warehouseDir: String,
+      historyDir: String, ids: Seq[String],
+      rowIdentity: Boolean): Option[DataFrame] = {
     import org.apache.spark.sql.functions.{col, lit, regexp_extract}
-    val added = to.filterNot(from)
-    // log-built fast path (r14): one relation over the window's added
-    // batches, batch id from the file path — same shape as the
-    // takedown probe; bounded by the WINDOW either way, but a consumer
-    // draining a long outage (maxVersionsPerTrigger lag) stops paying
-    // a listing per recovered batch
-    manifestGroupRelations(spark, warehouseDir, historyDir, added) match {
-      case Some(None) => None
-      case Some(Some(rels)) =>
+    def withIdentity(df: DataFrame): DataFrame =
+      if (!rowIdentity) df
+      else df.withColumn(FpCol, normCol(col("_metadata.file_path")))
+        .withColumn(RiCol, col("_metadata.row_index"))
+    val tagged = manifestGroupRelations(spark, warehouseDir, historyDir,
+        ids) match {
+      case Some(rels) =>
         val p = new org.apache.hadoop.fs.Path(warehouseDir)
         val qWh = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
           .makeQualified(p).toString
-        // tag PER GROUP relation, then union: _metadata resolves only
-        // against a single file relation, never through a Union
-        Some(rels.map(_.withColumn("_graft_batch",
-            regexp_extract(col("_metadata.file_path"),
-              java.util.regex.Pattern.quote(qWh) + "/b([^/]+)/", 1)))
-          .reduce(_.unionByName(_, allowMissingColumns = true)))
+        rels.toSeq.flatten.map(r => withIdentity(r.withColumn(BatchCol,
+          regexp_extract(col("_metadata.file_path"),
+            java.util.regex.Pattern.quote(qWh) + "/b([^/]+)/", 1))))
       case None =>
-        val live = liveBatchIds(spark, warehouseDir, added)
-        if (live.isEmpty) None
-        // allowMissingColumns: a window spanning a SchemaDrift.evolve
-        // has pre- and post-evolution batches; the feed surfaces the
-        // evolved column as null on the older rows instead of throwing.
-        else Some(live.map { id =>
-            val raw = spark.read.parquet(s"$warehouseDir/b$id")
-            dvCondition(spark, warehouseDir, historyDir, Seq(id))
-              .map(raw.filter).getOrElse(raw)
-              .withColumn("_graft_batch", lit(id))
-          }
-          .reduce(_.unionByName(_, allowMissingColumns = true)))
+        liveBatchIds(spark, warehouseDir, ids).map { id =>
+          val raw = spark.read.parquet(s"$warehouseDir/b$id")
+          withIdentity(dvCondition(spark, warehouseDir, historyDir, Seq(id))
+            .map(raw.filter).getOrElse(raw).withColumn(BatchCol, lit(id)))
+        }
     }
+    tagged.reduceOption(_.unionByName(_, allowMissingColumns = true))
   }
 
   /** The committed warehouse relation: the union of the committed batch
@@ -771,20 +801,6 @@ object WarehouseLoad {
     mergeRecordedSchemas(distinct)
   }
 
-  /** Conform a set of per-batch recorded schemas to ONE read schema —
-    * the evolution-window fix (r15, VERDICT r14 #4): batches written
-    * before and after a [[graft.schema.SchemaDrift]] evolve record
-    * different schemas, and the old behavior dropped the whole table
-    * to discovery (footer-merge listing) for as long as both
-    * generations were live. Additive drift is exactly what the
-    * parquet reader already handles when HANDED the union schema — a
-    * file missing a requested nullable column reads it as null — so
-    * the merge is: union the fields by name in first-seen order;
-    * types must agree EXACTLY (a type change is not additive drift —
-    * fall back); a field absent from any batch is forced nullable
-    * (the reader fills nulls for it). `None` = schemas are not
-    * reconcilable this way; callers fall back to footer merging,
-    * so the fast path is never a correctness dependency. */
   /** The wider of two Parquet-safe-promotable types (r16, VERDICT r15
     * #3): the integral chain (byte→short→int→long), float→double, and
     * decimal precision/scale growth — promotions whose Cast is exact,
@@ -820,6 +836,20 @@ object WarehouseLoad {
     }
   }
 
+  /** Conform a set of per-batch recorded schemas to ONE read schema —
+    * the evolution-window fix (r15, VERDICT r14 #4): batches written
+    * before and after a [[graft.schema.SchemaDrift]] evolve record
+    * different schemas, and the old behavior dropped the whole table
+    * to discovery (footer-merge listing) for as long as both
+    * generations were live. Additive drift is exactly what the
+    * parquet reader already handles when HANDED the union schema — a
+    * file missing a requested nullable column reads it as null — so
+    * the merge is: union the fields by name in first-seen order;
+    * types must agree EXACTLY (a type change is not additive drift —
+    * fall back); a field absent from any batch is forced nullable
+    * (the reader fills nulls for it). `None` = schemas are not
+    * reconcilable this way; callers fall back to footer merging,
+    * so the fast path is never a correctness dependency. */
   private def mergeRecordedSchemas(jsons: Seq[String],
       widening: Boolean = false): Option[StructType] = {
     val parsed = jsons.map { j =>
@@ -1144,9 +1174,6 @@ object WarehouseLoad {
       files: Seq[String]): Unit =
     loadedFilesMemo.put((historyDir, id), files)
 
-  /** The loaded-file SET at the current head — the freshness filter of
-    * [[idempotentBatch]], assembled from the per-batch memo with one
-    * collect over ONLY the not-yet-memoized batches. */
   /** Ensure the per-batch memo covers `ids` (ONE bounded collect over
     * only the not-yet-memoized batches), then return their loaded-file
     * lists concatenated in batch order — the relation
@@ -1176,6 +1203,9 @@ object WarehouseLoad {
       loadedFilesMemo.getOrDefault((historyDir, id), Nil))
   }
 
+  /** The loaded-file SET at the current head — the freshness filter of
+    * [[idempotentBatch]], assembled from the per-batch memo with one
+    * collect over ONLY the not-yet-memoized batches. */
   private def loadedFileSet(spark: SparkSession, historyDir: String):
       Set[String] =
     loadedFileLists(spark, historyDir,
@@ -1355,78 +1385,50 @@ object WarehouseLoad {
         // empty files legitimately contribute no rows and are exempt
         val expect = freshFiles.collect { case (f, len) if len > 0 => h1(f) }
           .toSet
-        // in-flight marker BEFORE any dir write: a concurrent vacuum
-        // must not reclaim this batch's dirs between here and the
-        // commit (a retry of the same logical batch refreshes it)
-        publishIntent(spark, historyDir, id)
-
         val obs = new Observation()
         val observed = data.observe(obs,
           collect_set(xxhash64(col(FileCol))).as("seen"))
-        // zone-map stats ride the SAME write job as a second
-        // observation over the ALIGNED (as-written) values — per-batch
-        // min/max per numeric/temporal column, zero extra scans; the
-        // declared CHECK constraints fuse in as guard filters too
-        val (toWrite, zobs, zcols) = observeZones(
-          applyChecks(spark, historyDir, align(observed, target, strict)))
-        rethrowCheck { rethrowStrict {
-          // `partitionCols` hive-partitions EVERY committed batch dir:
-          // downstream partition-predicate scans prune whole
-          // directories under every batch root before a byte is read
-          // — at warehouse
-          // scale the difference between 1/n-th of the table and all
-          // of it. Compaction/takedown preserve the layout.
-          withLoadSplitTuning(spark, freshFiles.map(_._2).sum) { tuned =>
-            // when the scan was split below one-task-per-file for
-            // parse parallelism, fold the parsed rows back through ONE
-            // exchange so the batch still lands as one data file —
-            // otherwise every downstream per-file cost (manifest
-            // entries, footer stats, DV carries) multiplies by the
-            // split count (measured: q96's merge leg +60% from ~20
-            // part files per batch)
-            (if (tuned) toWrite.repartition(1) else toWrite)
-              .write.mode("overwrite").partitionBy(partitionCols: _*)
-              .parquet(s"$warehouseDir/b$id")
+        // the coverage guard runs between the data and history writes
+        def coverageGuard(): Unit = {
+          val seen = obs.get("seen").asInstanceOf[Seq[Long]].toSet
+          val missing = expect -- seen
+          if (missing.nonEmpty) {
+            // Refine before aborting: a len>0 file whose content is all
+            // blank lines legitimately contributes no rows (the JSON
+            // reader SKIPS blank lines — they are not even corrupt
+            // records), and without this check one such file would
+            // abort every retry of the batch forever. One narrow text
+            // scan, on the abort path only, semi-joined to the missing
+            // hashes.
+            import spark.implicits._
+            import org.apache.spark.sql.functions.trim
+            val missingDf = missing.toSeq.toDF("h")
+            val nonBlank = spark.read.text(stagingDir)
+              .withColumn("h",
+                xxhash64(normCol(col("_metadata.file_path"))))
+              .join(org.apache.spark.sql.functions.broadcast(missingDf),
+                Seq("h"), "left_semi")
+              .filter(trim(col("value")) =!= "")
+              .limit(1).count()
+            if (nonBlank > 0)
+              throw new CoverageException(
+                s"batch aborted (nothing committed): ${missing.size} " +
+                "staged file(s) recorded as fresh contributed no rows — " +
+                "listing vs _metadata.file_path spelling divergence; fix " +
+                "the path normalization and re-run")
           }
-        } }
-        val seen = obs.get("seen").asInstanceOf[Seq[Long]].toSet
-        val missing = expect -- seen
-        if (missing.nonEmpty) {
-          // Refine before aborting: a len>0 file whose content is all
-          // blank lines legitimately contributes no rows (the JSON
-          // reader SKIPS blank lines — they are not even corrupt
-          // records), and without this check one such file would abort
-          // every retry of the batch forever. One narrow text scan,
-          // on the abort path only, semi-joined to the missing hashes.
-          import spark.implicits._
-          import org.apache.spark.sql.functions.trim
-          val missingDf = missing.toSeq.toDF("h")
-          val nonBlank = spark.read.text(stagingDir)
-            .withColumn("h",
-              xxhash64(normCol(col("_metadata.file_path"))))
-            .join(org.apache.spark.sql.functions.broadcast(missingDf),
-              Seq("h"), "left_semi")
-            .filter(trim(col("value")) =!= "")
-            .limit(1).count()
-          if (nonBlank > 0)
-            throw new CoverageException(
-              s"batch aborted (nothing committed): ${missing.size} staged " +
-              "file(s) recorded as fresh contributed no rows — listing vs " +
-              "_metadata.file_path spelling divergence; fix the path " +
-              "normalization and re-run")
+          failpoint("data-written")
         }
-        failpoint("data-written")
-        writeHistoryList(spark, s"$historyDir/b$id", freshFiles.map(_._1))
-        val dataFiles = listBatchFiles(spark, s"$warehouseDir/b$id")
-        writeZoneMap(spark, historyDir, id, zobs, zcols,
-          Some(toWrite.schema),
-          Some(dataFiles),
-          Some(listBatchFiles(spark, s"$historyDir/b$id")),
-          // per-FILE stats (r16): footer read of the batch's own
-          // just-written files, write-side only — the file-level
-          // pruning tier readers get for free from the manifest
-          FileZones.read(spark, s"$warehouseDir/b$id", dataFiles,
-            toWrite.schema))
+        // `partitionCols` hive-partitions EVERY committed batch dir:
+        // downstream partition-predicate scans prune whole directories
+        // under every batch root before a byte is read — at warehouse
+        // scale the difference between 1/n-th of the table and all of
+        // it. Compaction/takedown preserve the layout.
+        writeBatch(spark, warehouseDir, historyDir, id,
+          align(observed, target, strict), partitionCols,
+          writeHistoryList(spark, s"$historyDir/b$id", freshFiles.map(_._1)),
+          splitBytes = freshFiles.map(_._2).sum,
+          dataWritten = coverageGuard())
         failpoint("history-written")
         // derive against the head AT COMMIT TIME (a concurrent writer
         // may have advanced it); a head already containing this id
@@ -1475,6 +1477,15 @@ object WarehouseLoad {
   final case class ColStats(zone: Option[Zone], dict: Option[Set[String]],
                             nulls: Option[Long])
 
+  /** One FILE's recorded stats inside a batch manifest (r16 — the
+    * file-level pruning tier, [[FileZones]]): row count plus per-column
+    * [[ColStats]] (interval + null count; never a dictionary — footers
+    * don't carry one). Same conservatism contract as the batch level:
+    * absent is "must scan", and the prover evaluates a file exactly
+    * like a batch. */
+  final case class FileStats(rows: Option[Long],
+                             cols: Map[String, ColStats])
+
   /** Everything a batch's `_ZONEMAP` manifest records: per-column
     * [[ColStats]], the batch row count at write time, and (r14) the
     * SCHEMA the write job produced (`#s` line, Spark schema JSON) —
@@ -1486,15 +1497,6 @@ object WarehouseLoad {
     * or a mix of schemas (a [[graft.schema.SchemaDrift]] evolution in
     * flight), fall back to footer merging — absent is never wrong,
     * only slower. */
-  /** One FILE's recorded stats inside a batch manifest (r16 — the
-    * file-level pruning tier, [[FileZones]]): row count plus per-column
-    * [[ColStats]] (interval + null count; never a dictionary — footers
-    * don't carry one). Same conservatism contract as the batch level:
-    * absent is "must scan", and the prover evaluates a file exactly
-    * like a batch. */
-  final case class FileStats(rows: Option[Long],
-                             cols: Map[String, ColStats])
-
   final case class BatchStats(cols: Map[String, ColStats],
                               rows: Option[Long],
                               schemaJson: Option[String] = None,
@@ -1710,11 +1712,6 @@ object WarehouseLoad {
     }
   }
 
-  /** Persist an [[observeZones]] result (after its write job ran) as
-    * the batch's `_ZONEMAP` manifest. All-null columns record no
-    * interval (their null count still prunes IS NOT NULL and every
-    * comparison); over-cap dictionaries and over-long strings record
-    * no dict/interval respectively — absent is always "must scan". */
   /** One recursive listing of a just-written batch dir — the WRITER's
     * own files, recorded into the manifest so readers never have to
     * list again ([[graft.plans.ManifestFileIndex]]). `(relative path,
@@ -1816,12 +1813,17 @@ object WarehouseLoad {
       .foreach(seedLoadedFiles(historyDir, nid, _))
   }
 
-  private def writeZoneMap(spark: SparkSession, historyDir: String,
-      id: String, zobs: Option[Observation],
-      zcols: Seq[StructField], schema: Option[StructType] = None,
-      files: Option[Seq[(String, Long)]] = None,
-      histFiles: Option[Seq[(String, Long)]] = None,
-      fileStats: Map[String, FileStats] = Map.empty): Unit =
+  /** Persist an [[observeZones]] result (after its write job ran) as
+    * batch `id`'s `_ZONEMAP` manifest, with the schema, both just-written
+    * file lists and per-FILE stats (r16: a footer read of the batch's own
+    * new files, write-side only — the file-level pruning tier readers get
+    * for free from the manifest). All-null columns record no interval
+    * (their null count still prunes IS NOT NULL and every comparison);
+    * over-cap dictionaries and over-long strings record no dict/interval
+    * respectively — absent is always "must scan". */
+  private def writeZoneMap(spark: SparkSession, warehouseDir: String,
+      historyDir: String, id: String, zobs: Option[Observation],
+      zcols: Seq[StructField], schema: StructType): Unit =
     zobs.foreach { o =>
       val rows = o.get("zrows__").asInstanceOf[Long]
       val entries = zcols.flatMap { f =>
@@ -1862,11 +1864,64 @@ object WarehouseLoad {
         if (st.zone.isEmpty && st.dict.isEmpty && st.nulls.isEmpty) None
         else Some(f.name -> st)
       }
-      if (entries.nonEmpty || schema.isDefined)
-        AtomicManifest.write(spark, s"$historyDir/b$id", ZoneMapFile,
-          encodeZoneMap(entries, Some(rows), schema.map(_.json),
-            files, histFiles, fileStats))
+      val dataFiles = listBatchFiles(spark, s"$warehouseDir/b$id")
+      AtomicManifest.write(spark, s"$historyDir/b$id", ZoneMapFile,
+        encodeZoneMap(entries, Some(rows), Some(schema.json),
+          Some(dataFiles), Some(listBatchFiles(spark, s"$historyDir/b$id")),
+          FileZones.read(spark, s"$warehouseDir/b$id", dataFiles, schema)))
     }
+
+  /** Write `df` as batch `id` with FRESH stats — the shared write of
+    * every writer that produces new rows (load, streamed epoch, merge's
+    * rewrites and appends). The in-flight marker goes out BEFORE any
+    * dir write (a concurrent vacuum must not reclaim the dirs before
+    * the commit; a retry of the same logical batch refreshes it). The
+    * declared CHECK constraints fuse in as guard filters, and the
+    * zone-map stats ride the SAME write job as an observation over the
+    * as-written values — zero extra scans. `dataWritten` runs after the
+    * data write (the load's coverage guard and crash seam),
+    * `writeHistory` writes the batch's history dir, and the zone map
+    * comes last because it records both dirs' file lists. A plan that
+    * still reads as streaming (an exotic source leaf the sink's
+    * flag-strip doesn't cover) commits without a zone map rather than
+    * failing the epoch; the CHECK guard composes with it, so it is
+    * enforced either way (ADVICE r14). `splitBytes` is the batch's
+    * input size for [[withLoadSplitTuning]] (0 = no tuning). */
+  private def writeBatch(spark: SparkSession, warehouseDir: String,
+      historyDir: String, id: String, df: DataFrame,
+      partitionCols: Seq[String], writeHistory: => Unit,
+      splitBytes: Long = 0L, dataWritten: => Unit = ()): Unit = {
+    publishIntent(spark, historyDir, id)
+    val checked = applyChecks(spark, historyDir, df)
+    val (toWrite, zobs, zcols) =
+      if (df.isStreaming) (checked, None, Nil) else observeZones(checked)
+    rethrowCheck { rethrowStrict {
+      withLoadSplitTuning(spark, splitBytes) { tuned =>
+        // when the scan was split below one-task-per-file for parse
+        // parallelism, fold the parsed rows back through ONE exchange
+        // so the batch still lands as one data file — otherwise every
+        // downstream per-file cost (manifest entries, footer stats, DV
+        // carries) multiplies by the split count (measured: q96's
+        // merge leg +60% from ~20 part files per batch)
+        (if (tuned) toWrite.repartition(1) else toWrite)
+          .write.mode("overwrite").partitionBy(partitionCols: _*)
+          .parquet(s"$warehouseDir/b$id")
+      }
+    } }
+    dataWritten
+    writeHistory
+    writeZoneMap(spark, warehouseDir, historyDir, id, zobs, zcols,
+      toWrite.schema)
+  }
+
+  /** The empty history of a batch with no source files (streamed
+    * epochs, merge appends): [[loadedFiles]] unions every committed
+    * batch's history relation, so the dir must exist. */
+  private def writeEmptyHistory(spark: SparkSession, historyDir: String,
+      id: String): Unit = {
+    writeHistoryList(spark, s"$historyDir/b$id", Nil)
+    seedLoadedFiles(historyDir, id, Nil)
+  }
 
   /** The streaming sink's epoch commit
     * ([[graft.streaming.CommitLogSink]]): write `df` as batch `id`
@@ -1879,30 +1934,10 @@ object WarehouseLoad {
   private[graft] def commitStreamedBatch(spark: SparkSession, df: DataFrame,
       warehouseDir: String, historyDir: String, id: String,
       partitionCols: Seq[String] = Nil): Unit = {
-    val committed = committedBatches(spark, historyDir)
-    require(!committed.contains(id), s"batch $id is already committed")
-    publishIntent(spark, historyDir, id)
-    // zone maps are optional: a plan that still reads as streaming
-    // (an exotic source leaf the sink's flag-strip doesn't cover)
-    // commits without one rather than failing the epoch. CHECK
-    // constraints are NOT optional (ADVICE r14): the filter-fused
-    // guard composes with a streaming plan, so both branches enforce.
-    val (toWrite, zobs, zcols) =
-      if (df.isStreaming) (applyChecks(spark, historyDir, df), None, Nil)
-      else observeZones(applyChecks(spark, historyDir, df))
-    rethrowCheck {
-      toWrite.write.mode("overwrite").partitionBy(partitionCols: _*)
-        .parquet(s"$warehouseDir/b$id")
-    }
-    writeHistoryList(spark, s"$historyDir/b$id", Nil)
-    seedLoadedFiles(historyDir, id, Nil)
-    val dataFiles = listBatchFiles(spark, s"$warehouseDir/b$id")
-    writeZoneMap(spark, historyDir, id, zobs, zcols,
-      if (df.isStreaming) None else Some(toWrite.schema),
-      Some(dataFiles),
-      Some(listBatchFiles(spark, s"$historyDir/b$id")),
-      FileZones.read(spark, s"$warehouseDir/b$id", dataFiles,
-        toWrite.schema))
+    require(!committedBatches(spark, historyDir).contains(id),
+      s"batch $id is already committed")
+    writeBatch(spark, warehouseDir, historyDir, id, df, partitionCols,
+      writeEmptyHistory(spark, historyDir, id))
     commitBatches(spark, historyDir,
       cur => if (cur.contains(id)) cur else cur :+ id)
     clearIntent(spark, historyDir, id)
@@ -2417,8 +2452,7 @@ object WarehouseLoad {
         val v = st.getPath.getName.stripPrefix("v").toLongOption
         st.isFile && v.exists(_ < cutoff)
       }
-      java.util.Arrays.stream(pruned).parallel()
-        .forEach(st => vfs.delete(st.getPath, false))
+      MetaPool.forEach(pruned.toSeq)(st => vfs.delete(st.getPath, false))
     }
     failpoint("versions-pruned")
     // Collect doomed-dir CANDIDATES for both roots BEFORE listing
@@ -2647,20 +2681,11 @@ object WarehouseLoad {
       partitionCols: Seq[String] = Nil,
       failpoint: String => Unit = _ => (),
       select: Seq[String] => Seq[String] = identity,
-      zorder: Option[(String, String, Int)] = None): Int = {
-    var attempt = 0
-    while (attempt < 20) {
+      zorder: Option[(String, String, Int)] = None): Int =
+    untilConverged("compaction", "nothing folded") { _ =>
       compactOnce(spark, warehouseDir, historyDir, minBatches,
-          partitionCols, failpoint, select, zorder) match {
-        case Some(n) => return n
-        case None => attempt += 1
-      }
+        partitionCols, failpoint, select, zorder)
     }
-    throw new IllegalStateException(
-      "compaction aborted 20 times: its input batches keep being " +
-      "rewritten underneath it — retire the racing rewriter, or retry " +
-      "when the table quiesces")
-  }
 
   /** One compaction attempt over `select`'s choice of the committed
     * snapshot; `Some(n)` = committed (n inputs folded; 0 = nothing to
@@ -2882,21 +2907,9 @@ object WarehouseLoad {
   private[graft] def takedownWithFailpoint(spark: SparkSession,
       warehouseDir: String, historyDir: String, keys: DataFrame,
       keyCols: Seq[String], partitionCols: Seq[String] = Nil,
-      failpoint: String => Unit = _ => ()): Long = {
-    var total = 0L
-    var attempt = 0
-    while (attempt < 20) {
-      val (removed, converged) = takedownOnce(spark, warehouseDir,
-        historyDir, keys, keyCols, partitionCols, failpoint)
-      total += removed
-      if (converged) return total
-      attempt += 1
-    }
-    throw new IllegalStateException(
-      "takedown cannot converge after 20 passes: probed batches keep " +
-      "being rewritten underneath it — retire the racing rewriter and " +
-      s"re-run (rows removed so far: $total)")
-  }
+      failpoint: String => Unit = _ => ()): Long =
+    takedown(spark, warehouseDir, historyDir, keys, keyCols, partitionCols,
+      vectorized = false, failpoint)
 
   /** DELETION-VECTOR takedown (r16 — the metadata endpoint of the
     * takedown ladder, Delta's deletion-vector design): delete-by-key
@@ -2915,198 +2928,54 @@ object WarehouseLoad {
     * pipeline. Where [[takedownCommitted]]'s cost is proportional to
     * HIT FILES (decode + rewrite), this is proportional to the HIT
     * ROWS' index list — the right tool when keys scatter across every
-    * file of a Z-ordered fold. Falls back to the physical rewrite per
-    * batch when the manifest records no file list, a hit path fails
-    * to match a recorded file, or the accumulated vector would exceed
-    * `graft.dv.maxRows` (default 10M rows/batch) or `graft.dv.maxRuns`
-    * (default 64k runs/batch — r17: vectors are RUN-LENGTH encoded
-    * ([[DvVector]]) and the plan carries O(runs) via a binary-search
-    * predicate ([[graft.functions.InLongRuns]]), so a clustered
-    * million-row GDPR sweep stays metadata-only; only a pathological
-    * every-other-row scatter falls back). Same
-    * REWRITE commit semantics as takedown (feed refuses, idempotent
-    * re-apply is a zero-churn no-op because the probe itself reads
-    * through the vector). Returns rows hidden. */
+    * file of a Z-ordered fold. A batch the vector cannot cover
+    * ([[dvEligible]]: no recorded file list, an unmatched hit path, or
+    * a vector over the `graft.dv.maxRows`/`maxRuns` caps) falls back
+    * to [[takedownCommitted]]'s file-granular rewrite, which keeps
+    * the vectors of the files it carries. Same REWRITE commit
+    * semantics as takedown (feed refuses, idempotent re-apply is a
+    * zero-churn no-op because the probe itself reads through the
+    * vector). Returns rows hidden. */
   def takedownVectorized(spark: SparkSession, warehouseDir: String,
                          historyDir: String, keys: DataFrame,
                          keyCols: Seq[String],
-                         partitionCols: Seq[String] = Nil): Long = {
+                         partitionCols: Seq[String] = Nil): Long =
+    takedown(spark, warehouseDir, historyDir, keys, keyCols, partitionCols,
+      vectorized = true, _ => ())
+
+  private def takedown(spark: SparkSession, warehouseDir: String,
+      historyDir: String, keys: DataFrame, keyCols: Seq[String],
+      partitionCols: Seq[String], vectorized: Boolean,
+      failpoint: String => Unit): Long = {
     var total = 0L
+    untilConverged("takedown", s"rows removed so far: $total") { _ =>
+      val (removed, converged) = takedownOnce(spark, warehouseDir,
+        historyDir, keys, keyCols, partitionCols, vectorized, failpoint)
+      total += removed
+      Option.when(converged)(total)
+    }
+  }
+
+  /** Run `pass` (given its 0-based index) until it reports converged —
+    * a rewrite whose probed batches a concurrent rewrite replaced
+    * re-runs over the new snapshot — and throw after 20 passes: a
+    * racing rewriter keeps replacing the inputs. `progress` names
+    * what the committed passes did. */
+  private def untilConverged[T](what: String, progress: => String)(
+      pass: Int => Option[T]): T = {
     var attempt = 0
     while (attempt < 20) {
-      val (hidden, converged) = takedownVecOnce(spark, warehouseDir,
-        historyDir, keys, keyCols, partitionCols)
-      total += hidden
-      if (converged) return total
-      attempt += 1
+      pass(attempt) match {
+        case Some(r) => return r
+        case None => attempt += 1
+      }
     }
     throw new IllegalStateException(
-      "vectorized takedown cannot converge after 20 passes: probed " +
-      "batches keep being rewritten underneath it — retire the racing " +
-      s"rewriter and re-run (rows hidden so far: $total)")
+      s"$what cannot converge after 20 passes: its input batches keep " +
+      "being rewritten underneath it — retire the racing rewriter and " +
+      s"re-run ($progress)")
   }
 
-  private def takedownVecOnce(spark: SparkSession, warehouseDir: String,
-      historyDir: String, keys: DataFrame, keyCols: Seq[String],
-      partitionCols: Seq[String]): (Long, Boolean) = {
-    import org.apache.spark.sql.functions.{bit_xor, col, collect_list,
-      lit, regexp_extract, xxhash64}
-    val committed = committedBatches(spark, historyDir)
-    val k = graft.queries.Hints.broadcastIfSmall(
-      keys.select(keyCols.map(col): _*).dropDuplicates(keyCols)
-        .localCheckpoint(true))
-    val BatchCol = "_graft_batch"
-    val FpCol = "_graft_fp"
-    val RiCol = "_graft_ri"
-    val probe = manifestGroupRelations(spark, warehouseDir, historyDir,
-        committed) match {
-      case Some(None) => return (0L, true)
-      case Some(Some(rels)) =>
-        val p = new org.apache.hadoop.fs.Path(warehouseDir)
-        val qWh = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .makeQualified(p).toString
-        rels.map(r => r.withColumn(BatchCol,
-            regexp_extract(col("_metadata.file_path"),
-              java.util.regex.Pattern.quote(qWh) + "/b([^/]+)/", 1))
-            .withColumn(FpCol, normCol(col("_metadata.file_path")))
-            .withColumn(RiCol, col("_metadata.row_index")))
-          .reduce(_.unionByName(_, allowMissingColumns = true))
-      case None =>
-        val live = liveBatchIds(spark, warehouseDir, committed)
-        if (live.isEmpty) return (0L, true)
-        live.map { id =>
-            val raw = spark.read.parquet(s"$warehouseDir/b$id")
-            dvCondition(spark, warehouseDir, historyDir, Seq(id))
-              .map(raw.filter).getOrElse(raw)
-              .withColumn(BatchCol, lit(id))
-              .withColumn(FpCol, normCol(col("_metadata.file_path")))
-              .withColumn(RiCol, col("_metadata.row_index"))
-          }
-          .reduce(_.unionByName(_, allowMissingColumns = true))
-    }
-    val hitRows = probe.join(k, keyCols, "left_semi")
-      .groupBy(BatchCol, FpCol).agg(collect_list(col(RiCol)).as("ris"))
-      .collect()
-    if (hitRows.isEmpty) return (0L, true)
-    val byBatch: Map[String, Map[String, Seq[Long]]] = hitRows
-      .groupBy(_.getString(0))
-      .map { case (b, rs) =>
-        b -> rs.map(r => r.getString(1) -> r.getSeq[Long](2)).toMap
-      }
-    val keyHash = k.agg(bit_xor(xxhash64(keyCols.map(col): _*)).as("h"))
-      .head().getLong(0)
-    val suffix = f"-dv$keyHash%016x"
-    val maxDv = spark.sparkContext.hadoopConfiguration
-      .getLong("graft.dv.maxRows", 10000000L)
-    val maxDvRuns = spark.sparkContext.hadoopConfiguration
-      .getLong("graft.dv.maxRuns", 65536L)
-    val conf = spark.sparkContext.hadoopConfiguration
-    var hidden = 0L
-    val newIds = committed.map { id =>
-      byBatch.get(id) match {
-        case None => id
-        case Some(fileHits) =>
-          val nid = rewriteId(id, suffix)
-          publishIntent(spark, historyDir, nid)
-          val rootP = new org.apache.hadoop.fs.Path(s"$warehouseDir/b$id")
-          val bfs = rootP.getFileSystem(conf)
-          val qRoot = bfs.makeQualified(rootP)
-          val st = batchStats(spark, historyDir, id)
-          val filesOpt = st.flatMap(_.files)
-          // abs hit path → recorded rel; EVERY hit must map, or the
-          // batch falls back to the physical rewrite (a spelling
-          // divergence must never leave a hit row visible)
-          val relHits: Option[Map[String, Seq[Long]]] = filesOpt.map {
-            files =>
-              val absToRel = files.map { case (rel, _) =>
-                norm(new org.apache.hadoop.fs.Path(qRoot, rel)
-                  .toUri.toString) -> rel
-              }.toMap
-              fileHits.flatMap { case (fp, ris) =>
-                absToRel.get(fp).map(_ -> ris)
-              }
-          }.filter(_.size == fileHits.size)
-          val existingDv = st.map(_.dv).getOrElse(
-            Map.empty[String, DvVector])
-          // run-length merge (r17): caps are row count AND run count
-          // — memory/manifest/plan are all O(runs), so a clustered
-          // million-row sweep stays on the metadata path while a
-          // pathological every-other-row scatter still falls back
-          val mergedOpt = relHits.map { m =>
-            (existingDv.keySet ++ m.keySet).iterator.map(rel =>
-              rel -> existingDv.getOrElse(rel, DvVector.empty)
-                .merge(m.get(rel).map(DvVector.fromRows)
-                  .getOrElse(DvVector.empty)))
-              .toMap
-          }
-          val fits = mergedOpt.exists { mg =>
-            mg.valuesIterator.map(_.cardinality).sum <= maxDv &&
-              mg.valuesIterator.map(_.runCount.toLong).sum <= maxDvRuns
-          }
-          mergedOpt match {
-            case Some(merged) if fits =>
-              // METADATA path: carry every file, merge the vector
-              filesOpt.get.foreach { case (rel, _) =>
-                carryFile(bfs, new org.apache.hadoop.fs.Path(qRoot, rel),
-                  new org.apache.hadoop.fs.Path(
-                    s"$warehouseDir/b$nid", rel), conf)
-              }
-              copyHistoryDir(spark, historyDir, id, nid)
-              st.foreach { s0 =>
-                val newFiles =
-                  listBatchFiles(spark, s"$warehouseDir/b$nid")
-                val fz = s0.schemaJson.flatMap { j =>
-                  try Some(org.apache.spark.sql.types.DataType.fromJson(j)
-                    .asInstanceOf[StructType])
-                  catch { case scala.util.control.NonFatal(_) => None }
-                }.map(sc => FileZones.read(spark, s"$warehouseDir/b$nid",
-                  newFiles, sc)).getOrElse(Map.empty)
-                AtomicManifest.write(spark, s"$historyDir/b$nid",
-                  ZoneMapFile,
-                  encodeZoneMap(s0.cols.toSeq.sortBy(_._1), s0.rows,
-                    s0.schemaJson, Some(newFiles),
-                    Some(listBatchFiles(spark, s"$historyDir/b$nid")),
-                    fz, merged))
-              }
-            case _ =>
-              // fallback: physical rewrite through the existing vector
-              val raw = spark.read.parquet(s"$warehouseDir/b$id")
-              dvCondition(spark, warehouseDir, historyDir, Seq(id))
-                .map(raw.filter).getOrElse(raw)
-                .join(k, keyCols, "left_anti")
-                .write.mode("overwrite").partitionBy(partitionCols: _*)
-                .parquet(s"$warehouseDir/b$nid")
-              copyHistoryDir(spark, historyDir, id, nid)
-              st.foreach { s0 =>
-                val newFiles =
-                  listBatchFiles(spark, s"$warehouseDir/b$nid")
-                AtomicManifest.write(spark, s"$historyDir/b$nid",
-                  ZoneMapFile,
-                  encodeZoneMap(s0.cols.toSeq.sortBy(_._1), s0.rows,
-                    s0.schemaJson, Some(newFiles),
-                    Some(listBatchFiles(spark, s"$historyDir/b$nid"))))
-              }
-          }
-          hidden += fileHits.valuesIterator.map(_.size.toLong).sum
-          nid
-      }
-    }
-    val remap = committed.zip(newIds).filter { case (a, b) => a != b }.toMap
-    var vanished = Set.empty[String]
-    commitBatches(spark, historyDir, { cur =>
-      vanished = remap.keySet -- cur.toSet
-      cur.map(i => remap.getOrElse(i, i))
-    })
-    remap.values.foreach(clearIntent(spark, historyDir, _))
-    val lost = byBatch.filter { case (b, _) => vanished(b) }
-      .valuesIterator.flatMap(_.valuesIterator.map(_.size.toLong)).sum
-    (hidden - lost, vanished.isEmpty)
-  }
-
-  /** One takedown pass; `(rowsRemoved, converged)` — `converged=false`
-    * means at least one probed batch vanished from the head before the
-    * commit (replaced by a concurrent rewrite) and the caller must
-    * re-run over the new snapshot to cover its rows. */
   /** Carry one immutable file into a rewritten batch dir WITHOUT
     * decoding it (r16, VERDICT r15 #4 — file-granular takedown): a
     * hard link where the store supports one (local fs — zero bytes
@@ -3133,186 +3002,250 @@ object WarehouseLoad {
     org.apache.hadoop.fs.FileUtil.copy(fs, src, fs, dst, false, true, conf)
   }
 
+  /** One takedown pass; `(rowsRemoved, converged)` — `converged=false`
+    * means at least one probed batch vanished from the head before the
+    * commit (replaced by a concurrent rewrite) and the caller must
+    * re-run over the new snapshot to cover its rows. With `vectorized`
+    * a [[dvEligible]] hit batch hides its hit rows ([[carryBatch]]);
+    * every other hit batch takes [[rewriteHitFiles]]. */
   private def takedownOnce(spark: SparkSession, warehouseDir: String,
-                           historyDir: String, keys: DataFrame,
-                           keyCols: Seq[String],
-                           partitionCols: Seq[String],
-                           failpoint: String => Unit): (Long, Boolean) = {
-    import org.apache.spark.sql.functions.{bit_xor, col, count, lit,
-      regexp_extract, xxhash64}
+      historyDir: String, keys: DataFrame, keyCols: Seq[String],
+      partitionCols: Seq[String], vectorized: Boolean,
+      failpoint: String => Unit): (Long, Boolean) = {
+    import org.apache.spark.sql.functions.{bit_xor, col, collect_list,
+      count, lit, xxhash64}
     val committed = committedBatches(spark, historyDir)
     val k = graft.queries.Hints.broadcastIfSmall(
       keys.select(keyCols.map(col): _*).dropDuplicates(keyCols)
         .localCheckpoint(true))
-    val BatchCol = "_graft_batch"
-    val FpCol = "_graft_fp"
-    // ONE probe relation, not one per batch: when the commit log
-    // records file lists ([[manifestRelation]]) the probe plans from
-    // the log with the batch id derived from `_metadata.file_path` —
-    // a constant-size plan at any load count (the loadedFiles lesson
-    // applied to the probe: the per-batch union paid a listing +
-    // footer read per committed load); r15 layout-mixed tables get one
-    // tagged relation per layout generation. Legacy layouts (no
-    // recorded file lists) keep the per-batch union — those reads
-    // discover per root anyway.
-    val probe = manifestGroupRelations(spark, warehouseDir, historyDir,
-        committed) match {
-      case Some(None) => return (0L, true) // no live files committed
-      case Some(Some(rels)) =>
-        val p = new org.apache.hadoop.fs.Path(warehouseDir)
-        val qWh = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .makeQualified(p).toString
-        // tag per layout-group relation BEFORE the cross-group union:
-        // _metadata never resolves through a Union (r15 review #1)
-        rels.map(r => r.withColumn(BatchCol,
-            regexp_extract(col("_metadata.file_path"),
-              java.util.regex.Pattern.quote(qWh) + "/b([^/]+)/", 1))
-            .withColumn(FpCol, normCol(col("_metadata.file_path"))))
-          .reduce(_.unionByName(_, allowMissingColumns = true))
-      case None =>
-        val live = liveBatchIds(spark, warehouseDir, committed)
-        if (live.isEmpty) return (0L, true)
-        live.map { id =>
-            val raw = spark.read.parquet(s"$warehouseDir/b$id")
-            dvCondition(spark, warehouseDir, historyDir, Seq(id))
-              .map(raw.filter).getOrElse(raw)
-              .withColumn(BatchCol, lit(id))
-              .withColumn(FpCol, normCol(col("_metadata.file_path")))
-          }
-          // allowMissingColumns: batches straddling a
-          // SchemaDrift.evolve differ by the added nullable columns;
-          // key columns are declared DDL so the semi-join below is
-          // unaffected.
-          .reduce(_.unionByName(_, allowMissingColumns = true))
+    val probe = taggedRelation(spark, warehouseDir, historyDir, committed,
+      rowIdentity = true).getOrElse(return (0L, true))
+    // per-(batch, FILE) hits (r16): the one probe pass tells which
+    // FILES inside a hit batch contain hits — rows bounded by the hit
+    // file count, never table size. Only the DV path collects the hit
+    // row indexes; the rewrite path collects one count per hit file.
+    val hitRows = probe.join(k, keyCols, "left_semi")
+      .groupBy(BatchCol, FpCol)
+      .agg(if (vectorized) collect_list(col(RiCol)) else count(lit(1)))
+      .collect().toSeq
+    if (hitRows.isEmpty) return (0L, true)
+    val byBatch = hitRows.groupBy(_.getString(0))
+    val hitsByBatch: Map[String, Long] = byBatch.map { case (b, rs) =>
+      b -> rs.map(r =>
+        if (vectorized) r.getSeq[Long](2).size.toLong else r.getLong(2)).sum
     }
-    // per-(batch, FILE) hit counts (r16): the same one probe pass now
-    // tells which FILES inside a hit batch contain hits — rows
-    // bounded by the hit file count, never table size
-    val hitRows = probe
-      .join(k, keyCols, "left_semi")
-      .groupBy(BatchCol, FpCol).agg(count(lit(1)).as("n"))
-      .collect()
-    val hitsByBatch: Map[String, Long] = hitRows
-      .groupBy(_.getString(0))
-      .map { case (b, rs) => b -> rs.map(_.getLong(2)).sum }
-    val hitFiles: Map[String, Set[String]] = hitRows
-      .groupBy(_.getString(0))
-      .map { case (b, rs) => b -> rs.map(_.getString(1)).toSet }
-    if (hitsByBatch.isEmpty) return (0L, true)
+    val eligible =
+      if (!vectorized) Map.empty[String, Map[String, DvVector]]
+      else dvEligible(spark, warehouseDir, historyDir, byBatch.map {
+        case (b, rs) => b -> rs.map(r => r.getString(1) ->
+          r.getSeq[Long](2)).toMap
+      })
     // Deterministic rewrite suffix from the key set: a crash mid-rewrite
     // leaves orphans the RETRY overwrites under the same ids (and
     // vacuum reclaims if the takedown is abandoned).
     val keyHash = k.agg(bit_xor(xxhash64(keyCols.map(col): _*)).as("h"))
       .head().getLong(0)
-    val suffix = f"-td$keyHash%016x"
-    val newIds = committed.map { id =>
-      if (!hitsByBatch.contains(id)) id
-      else {
-        val nid = rewriteId(id, suffix)
-        publishIntent(spark, historyDir, nid)
-        // FILE-GRANULAR rewrite (r16, VERDICT r15 #4): only files the
-        // probe saw hits in are decoded and rewritten; every other
-        // file of the batch carries over byte-identically (hard link
-        // on local fs, raw copy elsewhere — no decode, no shuffle).
-        // After compaction folds a table into few large multi-file
-        // roots, one takedown key stops rewriting the whole root —
-        // the difference between a minutes-SLA and an hours-SLA
-        // takedown at 100 TB. Falls back to the whole-batch rewrite
-        // when the manifest records no file list (legacy) or any hit
-        // path fails to match a recorded file (spelling divergence
-        // must never let a hit row slip through in a carried file).
-        val conf = spark.sparkContext.hadoopConfiguration
-        val rootP = new org.apache.hadoop.fs.Path(s"$warehouseDir/b$id")
-        val bfs = rootP.getFileSystem(conf)
-        val qRoot = bfs.makeQualified(rootP)
-        val hits = hitFiles.getOrElse(id, Set.empty)
-        val split = batchStats(spark, historyDir, id).flatMap(_.files)
-          .map(_.partition { case (rel, _) =>
-            hits(norm(new org.apache.hadoop.fs.Path(qRoot, rel)
-              .toUri.toString))
-          })
-        // a DV'd batch's rewrite must apply its own deletion vector —
-        // rewriting the raw files would RESURRECT hidden rows
-        val selfDv = dvCondition(spark, warehouseDir, historyDir, Seq(id))
-        def withDv(df: DataFrame): DataFrame =
-          selfDv.map(df.filter).getOrElse(df)
-        var carriedRels = Set.empty[String]
-        split match {
-          case Some((hit, carry))
-              if hit.size == hits.size && carry.nonEmpty =>
-            carriedRels = carry.map(_._1).toSet
-            withDv(spark.read.option("basePath", qRoot.toString)
-              .parquet(hit.map { case (rel, _) =>
-                new org.apache.hadoop.fs.Path(qRoot, rel).toString }: _*))
-              .join(k, keyCols, "left_anti")
-              .write.mode("overwrite").partitionBy(partitionCols: _*)
-              .parquet(s"$warehouseDir/b$nid")
-            carry.foreach { case (rel, _) =>
-              carryFile(bfs, new org.apache.hadoop.fs.Path(qRoot, rel),
-                new org.apache.hadoop.fs.Path(s"$warehouseDir/b$nid", rel),
-                conf)
-            }
-          case _ =>
-            withDv(spark.read.parquet(s"$warehouseDir/b$id"))
-              .join(k, keyCols, "left_anti")
-              .write.mode("overwrite").partitionBy(partitionCols: _*)
-              .parquet(s"$warehouseDir/b$nid")
-        }
-        // carry the file history forward: the source files stay loaded
-        copyHistoryDir(spark, historyDir, id, nid)
-        // and the zone map: removing rows only SHRINKS the true range,
-        // value set, and null count, so every carried stat remains a
-        // conservative superset (the prune triggers — interval/dict
-        // membership, nulls==0, nulls==rows — are all monotone under
-        // row removal; see [[ColStats]])
-        batchStats(spark, historyDir, id).foreach { st =>
-          // schema carries too (an anti-join preserves the relation's
-          // columns exactly); the FILE lists are re-listed from the
-          // just-rewritten dirs — the rewrite produced new files, so
-          // per-file zones are RECOMPUTED from their footers (r16)
-          val newFiles = listBatchFiles(spark, s"$warehouseDir/b$nid")
-          val fz = st.schemaJson.flatMap { j =>
-            try Some(org.apache.spark.sql.types.DataType.fromJson(j)
-              .asInstanceOf[StructType])
-            catch { case scala.util.control.NonFatal(_) => None }
-          }.map(sc => FileZones.read(spark, s"$warehouseDir/b$nid",
-            newFiles, sc)).getOrElse(Map.empty)
-          AtomicManifest.write(spark, s"$historyDir/b$nid", ZoneMapFile,
-            encodeZoneMap(st.cols.toSeq.sortBy(_._1), st.rows,
-              st.schemaJson,
-              Some(newFiles),
-              Some(listBatchFiles(spark, s"$historyDir/b$nid")), fz,
-              // CARRIED files keep their deletion vectors (same
-              // bytes, same row indexes, rel-keyed); rewritten files
-              // had theirs applied during the read
-              st.dv.filter { case (rel, _) => carriedRels(rel) }))
-        }
-        nid
+    val suffix = (if (vectorized) "-dv" else "-td") + f"$keyHash%016x"
+    val remap = committed.filter(hitsByBatch.contains).map { id =>
+      val nid = rewriteId(id, suffix)
+      publishIntent(spark, historyDir, nid)
+      eligible.get(id) match {
+        case Some(dv) =>
+          carryBatch(spark, warehouseDir, historyDir, id, nid, dv)
+        case None =>
+          rewriteHitFiles(spark, warehouseDir, historyDir, id, nid,
+            byBatch(id).map(_.getString(1)).toSet, k, keyCols,
+            partitionCols)
       }
-    }
+      id -> nid
+    }.toMap
     failpoint("rewrites-written")
-    // CAS derive: remap exactly the batches this takedown probed and
-    // rewrote; batches appended by a racing load stay as-is (the
-    // takedown operates on its snapshot — re-run it to cover them). A
-    // probed batch ABSENT from the commit-time head vanished under a
-    // concurrent rewrite: its remap cannot land (the replacing batch
-    // may still hold the hit rows) — record it so the caller re-runs.
-    val remap = committed.zip(newIds).filter { case (a, b) => a != b }.toMap
-    var vanished = Set.empty[String]
-    commitBatches(spark, historyDir, { cur =>
-      vanished = remap.keySet -- cur.toSet
-      cur.map(i => remap.getOrElse(i, i))
-    })
-    remap.values.foreach(clearIntent(spark, historyDir, _))
-    // A vanished remap's orphan dirs are NOT swept here: a concurrent
-    // IDENTICAL takedown (same keys ⇒ same deterministic rewrite id)
-    // may have committed that very dir — [[vacuum]]'s keep-set is the
-    // only authority on orphanhood, and it reclaims true orphans.
+    val (vanished, _) = commitRemap(spark, historyDir, remap)
     // Count only the rows whose removal actually committed; a vanished
     // batch's hits re-count in the pass that removes them from the
     // replacing batch.
     (hitsByBatch.filterNot { case (b, _) => vanished(b) }.values.sum,
       vanished.isEmpty)
+  }
+
+  /** DV eligibility (the [[takedownVectorized]] contract, shared by
+    * the DV merge): for each hit batch (`batch → normalized hit file
+    * path → hit row indexes`), its existing deletion vector merged with
+    * the hit rows — present only when the manifest records the batch's
+    * file list, EVERY hit path maps to a recorded file (a spelling
+    * divergence must never leave a hit row visible), and the merged
+    * vector stays within `graft.dv.maxRows` (default 10M rows/batch)
+    * and `graft.dv.maxRuns` (default 64k runs/batch). Vectors are
+    * RUN-LENGTH encoded (r17, [[DvVector]]) and the plan carries
+    * O(runs) via a binary-search predicate
+    * ([[graft.functions.InLongRuns]]), so a clustered million-row GDPR
+    * sweep stays metadata-only; only a pathological every-other-row
+    * scatter falls back. */
+  private def dvEligible(spark: SparkSession, warehouseDir: String,
+      historyDir: String, hits: Map[String, Map[String, Seq[Long]]])
+      : Map[String, Map[String, DvVector]] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val maxRows = conf.getLong("graft.dv.maxRows", 10000000L)
+    val maxRuns = conf.getLong("graft.dv.maxRuns", 65536L)
+    val whP = new org.apache.hadoop.fs.Path(warehouseDir)
+    val qWh = whP.getFileSystem(conf).makeQualified(whP)
+    hits.flatMap { case (id, fileHits) =>
+      val st = batchStats(spark, historyDir, id)
+      val qRoot = new org.apache.hadoop.fs.Path(qWh, s"b$id")
+      val relHits = st.flatMap(_.files).map { files =>
+        val absToRel = files.map { case (rel, _) =>
+          norm(new org.apache.hadoop.fs.Path(qRoot, rel).toUri.toString) ->
+            rel
+        }.toMap
+        fileHits.flatMap { case (fp, ris) => absToRel.get(fp).map(_ -> ris) }
+      }.filter(_.size == fileHits.size)
+      val existing = st.map(_.dv).getOrElse(Map.empty[String, DvVector])
+      relHits.map { m =>
+        (existing.keySet ++ m.keySet).iterator.map(rel =>
+          rel -> existing.getOrElse(rel, DvVector.empty)
+            .merge(m.get(rel).map(DvVector.fromRows)
+              .getOrElse(DvVector.empty)))
+          .toMap
+      }.filter(mg =>
+        mg.valuesIterator.map(_.cardinality).sum <= maxRows &&
+          mg.valuesIterator.map(_.runCount.toLong).sum <= maxRuns)
+        .map(id -> _)
+    }
+  }
+
+  /** Commit batch `id`'s files as `nid` WITHOUT rewriting any — the
+    * metadata path of the DV takedown and the DV merge: every recorded
+    * file carried byte-identically ([[carryFile]]), the history copied,
+    * the stats carried with the merged deletion vector `dv`. Only a
+    * [[dvEligible]] batch comes here, so its file list is recorded. */
+  private def carryBatch(spark: SparkSession, warehouseDir: String,
+      historyDir: String, id: String, nid: String,
+      dv: Map[String, DvVector]): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val rootP = new org.apache.hadoop.fs.Path(s"$warehouseDir/b$id")
+    val fs = rootP.getFileSystem(conf)
+    val qRoot = fs.makeQualified(rootP)
+    val st = batchStats(spark, historyDir, id).get
+    st.files.get.foreach { case (rel, _) =>
+      carryFile(fs, new org.apache.hadoop.fs.Path(qRoot, rel),
+        new org.apache.hadoop.fs.Path(s"$warehouseDir/b$nid", rel), conf)
+    }
+    copyHistoryDir(spark, historyDir, id, nid)
+    carryStats(spark, warehouseDir, historyDir, st, nid, dv)
+  }
+
+  /** FILE-GRANULAR takedown rewrite of batch `id` as `nid` (r16,
+    * VERDICT r15 #4): only the files the probe saw hits in (`hits`,
+    * normalized absolute paths) are decoded and rewritten without the
+    * `keys` rows; every other file carries over byte-identically
+    * ([[carryFile]] — no decode, no shuffle). After compaction folds a
+    * table into few large multi-file roots, one takedown key stops
+    * rewriting the whole root — the difference between a minutes-SLA
+    * and an hours-SLA takedown at 100 TB. Falls back to the whole-batch
+    * rewrite when the manifest records no file list (legacy), any hit
+    * path fails to match a recorded file (spelling divergence must
+    * never let a hit row slip through in a carried file), or every
+    * file has hits. */
+  private def rewriteHitFiles(spark: SparkSession, warehouseDir: String,
+      historyDir: String, id: String, nid: String, hits: Set[String],
+      keys: DataFrame, keyCols: Seq[String],
+      partitionCols: Seq[String]): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val rootP = new org.apache.hadoop.fs.Path(s"$warehouseDir/b$id")
+    val bfs = rootP.getFileSystem(conf)
+    val qRoot = bfs.makeQualified(rootP)
+    val st = batchStats(spark, historyDir, id)
+    val split = st.flatMap(_.files).map(_.partition { case (rel, _) =>
+      hits(norm(new org.apache.hadoop.fs.Path(qRoot, rel).toUri.toString))
+    })
+    // a DV'd batch's rewrite must apply its own deletion vector —
+    // rewriting the raw files would RESURRECT hidden rows
+    val selfDv = dvCondition(spark, warehouseDir, historyDir, Seq(id))
+    def rewrite(df: DataFrame): Unit =
+      selfDv.map(df.filter).getOrElse(df)
+        .join(keys, keyCols, "left_anti")
+        .write.mode("overwrite").partitionBy(partitionCols: _*)
+        .parquet(s"$warehouseDir/b$nid")
+    val carried = split match {
+      case Some((hit, carry)) if hit.size == hits.size && carry.nonEmpty =>
+        rewrite(spark.read.option("basePath", qRoot.toString)
+          .parquet(hit.map { case (rel, _) =>
+            new org.apache.hadoop.fs.Path(qRoot, rel).toString }: _*))
+        carry.foreach { case (rel, _) =>
+          carryFile(bfs, new org.apache.hadoop.fs.Path(qRoot, rel),
+            new org.apache.hadoop.fs.Path(s"$warehouseDir/b$nid", rel),
+            conf)
+        }
+        carry.map(_._1).toSet
+      case _ =>
+        rewrite(spark.read.parquet(s"$warehouseDir/b$id"))
+        Set.empty[String]
+    }
+    // carry the file history forward: the source files stay loaded
+    copyHistoryDir(spark, historyDir, id, nid)
+    // CARRIED files keep their deletion vectors (same bytes, same row
+    // indexes, rel-keyed); rewritten files had theirs applied during
+    // the read
+    st.foreach(s0 => carryStats(spark, warehouseDir, historyDir, s0, nid,
+      s0.dv.filter { case (rel, _) => carried(rel) }))
+  }
+
+  /** Record a carried batch's stats under its rewrite id `nid`: `st`'s
+    * column stats, row count and schema unchanged — removing or hiding
+    * rows only SHRINKS the true range, value set and null count, so
+    * every carried stat remains a conservative superset (the prune
+    * triggers — interval/dict membership, nulls==0, nulls==rows — are
+    * all monotone under row removal; see [[ColStats]]) — with both file
+    * lists re-listed from the new dirs, per-file zones read from the new
+    * files' footers (r16), and deletion vector `dv`. */
+  private def carryStats(spark: SparkSession, warehouseDir: String,
+      historyDir: String, st: BatchStats, nid: String,
+      dv: Map[String, DvVector]): Unit = {
+    val newFiles = listBatchFiles(spark, s"$warehouseDir/b$nid")
+    val fz = st.schemaJson.flatMap { j =>
+      try Some(org.apache.spark.sql.types.DataType.fromJson(j)
+        .asInstanceOf[StructType])
+      catch { case scala.util.control.NonFatal(_) => None }
+    }.map(sc => FileZones.read(spark, s"$warehouseDir/b$nid", newFiles, sc))
+      .getOrElse(Map.empty)
+    AtomicManifest.write(spark, s"$historyDir/b$nid", ZoneMapFile,
+      encodeZoneMap(st.cols.toSeq.sortBy(_._1), st.rows, st.schemaJson,
+        Some(newFiles), Some(listBatchFiles(spark, s"$historyDir/b$nid")),
+        fz, dv))
+  }
+
+  /** Commit a rewrite as ONE version (CAS derive over the head at
+    * commit time): each probed batch in `remap` replaced by its
+    * rewrite, followed by its `paired` sibling (merge's update-append,
+    * which lands IFF its remap lands), and `append` added at the end.
+    * Batches appended by a racing load stay as-is (the rewrite
+    * operates on its snapshot — re-run it to cover them). A probed
+    * batch ABSENT from the commit-time head vanished under a
+    * concurrent rewrite: its remap cannot land (the replacing batch may
+    * still hold the rows the rewrite changed), so it is returned for
+    * the caller to re-run over. A vanished remap's orphan dirs are NOT
+    * swept: a concurrent IDENTICAL rewrite (same deterministic ids) may
+    * have committed that very dir — [[vacuum]]'s keep-set is the only
+    * authority on orphanhood, and it reclaims true orphans. Returns
+    * (vanished batches, whether `append` landed). */
+  private def commitRemap(spark: SparkSession, historyDir: String,
+      remap: Map[String, String], paired: Map[String, String] = Map.empty,
+      append: Option[String] = None): (Set[String], Boolean) = {
+    var vanished = Set.empty[String]
+    var appended = false
+    commitBatches(spark, historyDir, { cur =>
+      val curSet = cur.toSet
+      vanished = remap.keySet -- curSet
+      val remapped = cur.flatMap(i => remap.get(i) match {
+        case Some(n) => n +: paired.get(i).filterNot(curSet).toSeq
+        case None => Seq(i)
+      })
+      appended = append.exists(a => !curSet(a))
+      remapped ++ append.filter(_ => appended)
+    })
+    (remap.values ++ paired.values ++ append)
+      .foreach(clearIntent(spark, historyDir, _))
+    (vanished, appended)
   }
 
   // ------------------------------------------------------------------
@@ -3445,19 +3378,13 @@ object WarehouseLoad {
     var updated = 0L
     var inserted = 0L
     var deleted = 0L
-    var attempt = 0
-    while (attempt < 20) {
+    untilConverged("merge",
+        s"rows updated so far: $updated, inserted: $inserted") { pass =>
       val (u, i, dd, converged) = mergeOnce(spark, warehouseDir,
-        historyDir, src, keyCols, partitionCols, tag, attempt,
-        deleteWhere)
+        historyDir, src, keyCols, partitionCols, tag, pass, deleteWhere)
       updated += u; inserted += i; deleted += dd
-      if (converged) return (updated, inserted, deleted)
-      attempt += 1
+      Option.when(converged)((updated, inserted, deleted))
     }
-    throw new IllegalStateException(
-      "merge cannot converge after 20 passes: probed batches keep being " +
-      "rewritten underneath it — retire the racing rewriter and re-run " +
-      s"(rows updated so far: $updated, inserted: $inserted)")
   }
 
   /** One merge pass; `(updated, inserted, deleted, converged)` — see
@@ -3467,44 +3394,14 @@ object WarehouseLoad {
       partitionCols: Seq[String], tag: String, pass: Int,
       deleteWhere: Option[String]): (Long, Long, Long, Boolean) = {
     import org.apache.spark.sql.functions.{array_repeat, broadcast,
-      coalesce, col, collect_list, count, explode, expr, lit, not,
-      regexp_extract, sum, when}
+      coalesce, col, collect_list, count, explode, expr, lit, not, when}
     val DelFlag = "_graft_del"
     val committed = committedBatches(spark, historyDir)
-    val BatchCol = "_graft_batch"
-    val FpCol = "_graft_fp"
-    val RiCol = "_graft_ri"
-    // the committed union, batch-tagged (takedown's probe shape: one
-    // log-built relation per layout generation, else per-batch legacy)
-    // plus the (file, row-index) identity of every row — what the
-    // DV-merge path (r17) hides matched rows by
-    val probeOpt: Option[DataFrame] =
-      manifestGroupRelations(spark, warehouseDir, historyDir,
-          committed) match {
-        case Some(None) => None
-        case Some(Some(rels)) =>
-          val p = new org.apache.hadoop.fs.Path(warehouseDir)
-          val qWh = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            .makeQualified(p).toString
-          Some(rels.map(_.withColumn(BatchCol,
-              regexp_extract(col("_metadata.file_path"),
-                java.util.regex.Pattern.quote(qWh) + "/b([^/]+)/", 1))
-              .withColumn(FpCol, normCol(col("_metadata.file_path")))
-              .withColumn(RiCol, col("_metadata.row_index")))
-            .reduce(_.unionByName(_, allowMissingColumns = true)))
-        case None =>
-          val live = liveBatchIds(spark, warehouseDir, committed)
-          if (live.isEmpty) None
-          else Some(live.map { id =>
-              val raw = spark.read.parquet(s"$warehouseDir/b$id")
-              dvCondition(spark, warehouseDir, historyDir, Seq(id))
-                .map(raw.filter).getOrElse(raw)
-                .withColumn(BatchCol, lit(id))
-                .withColumn(FpCol, normCol(col("_metadata.file_path")))
-                .withColumn(RiCol, col("_metadata.row_index"))
-            }
-            .reduce(_.unionByName(_, allowMissingColumns = true)))
-      }
+    // the committed union, batch-tagged, plus the (file, row-index)
+    // identity of every row — what the DV-merge path (r17) hides
+    // matched rows by
+    val probeOpt = taggedRelation(spark, warehouseDir, historyDir,
+      committed, rowIdentity = true)
     val tableSchema = probeOpt.map(p => StructType(
       p.schema.fields.filterNot(f =>
         f.name == BatchCol || f.name == FpCol || f.name == RiCol)))
@@ -3566,86 +3463,20 @@ object WarehouseLoad {
     if (hitsByBatch.isEmpty && nInserts == 0) return (0L, 0L, 0L, true)
 
     // DV-MERGE (r17, VERDICT r16 #1 — the zero-rewrite upsert): a hit
-    // batch whose manifest records its file list and whose merged
-    // vector fits the caps commits as files CARRIED byte-identically
-    // with the matched rows DV-hidden, and the source's values for
-    // those rows APPEND as a sibling batch — a CDC trickle against a
-    // compacted multi-GB root stops rewriting it per merge, the
-    // dominant write-amplification term r16 left. Ineligible batches
-    // (legacy manifest, path mismatch, over-cap vector, or
-    // graft.merge.dv=false) take the rewrite path below, per batch.
-    val conf = spark.sparkContext.hadoopConfiguration
-    val useDv = conf.getBoolean("graft.merge.dv", true)
-    val maxDv = conf.getLong("graft.dv.maxRows", 10000000L)
-    val maxDvRuns = conf.getLong("graft.dv.maxRuns", 65536L)
-    val whP = new org.apache.hadoop.fs.Path(warehouseDir)
-    val whFs = whP.getFileSystem(conf)
-    val qWhBase = whFs.makeQualified(whP)
+    // batch whose merged vector is [[dvEligible]] commits as files
+    // CARRIED byte-identically with the matched rows DV-hidden, and the
+    // source's values for those rows APPEND as a sibling batch — a CDC
+    // trickle against a compacted multi-GB root stops rewriting it per
+    // merge, the dominant write-amplification term r16 left.
+    // Ineligible batches take the rewrite path below, per batch.
     // (batch → file → hit row indexes) for every non-tag hit batch —
     // derived from the SAME fused collect as hitSplit (r18): the two
-    // tombstone-flag variants of a (batch, file) merge their lists,
-    // exactly the rows the old (batch, file)-keyed collect returned
+    // tombstone-flag variants of a (batch, file) merge their lists
     // (DvVector.fromRows sorts, so list order is immaterial).
-    val dvByBatch: Map[String, Map[String, Seq[Long]]] =
-      if (!useDv) Map.empty
-      else hitAgg.groupBy(_._1).map { case (b, rs) =>
-        b -> rs.groupBy(_._2).map { case (f, fr) =>
-          f -> fr.flatMap(_._4)
-        }
-      }
-    // DV-eligibility per hit batch: recorded file list, every hit
-    // path maps to a recorded file, merged vector within caps — the
-    // takedownVectorized contract
-    val eligible: Map[String, Map[String, DvVector]] =
-      dvByBatch.flatMap { case (id, fileHits) =>
-        val st = batchStats(spark, historyDir, id)
-        val filesOpt = st.flatMap(_.files)
-        val qRoot = new org.apache.hadoop.fs.Path(qWhBase, s"b$id")
-        val relHits: Option[Map[String, Seq[Long]]] = filesOpt.map {
-          files =>
-            val absToRel = files.map { case (rel, _) =>
-              norm(new org.apache.hadoop.fs.Path(qRoot, rel)
-                .toUri.toString) -> rel
-            }.toMap
-            fileHits.flatMap { case (fp, ris) =>
-              absToRel.get(fp).map(_ -> ris)
-            }
-        }.filter(_.size == fileHits.size)
-        val existingDv = st.map(_.dv).getOrElse(Map.empty[String, DvVector])
-        relHits.map { m =>
-          (existingDv.keySet ++ m.keySet).iterator.map(rel =>
-            rel -> existingDv.getOrElse(rel, DvVector.empty)
-              .merge(m.get(rel).map(DvVector.fromRows)
-                .getOrElse(DvVector.empty)))
-            .toMap
-        }.filter(mg =>
-          mg.valuesIterator.map(_.cardinality).sum <= maxDv &&
-            mg.valuesIterator.map(_.runCount.toLong).sum <= maxDvRuns)
-          .map(id -> _)
-      }
-
-    // rewrite each hit batch: matched rows take the source's non-key
-    // values (cast to the batch's own types), unmatched pass through
-    val Marker = "_graft_matched"
-    // helper: write `df` as batch `bid` with fresh stats + an empty
-    // (streamed-epoch) history — the shape of every batch this merge
-    // APPENDS (the insert batch, the per-batch update appends)
-    def writeAppendBatch(bid: String, df: DataFrame): Unit = {
-      publishIntent(spark, historyDir, bid)
-      val (toW, zo, zc) = observeZones(applyChecks(spark, historyDir, df))
-      rethrowCheck {
-        toW.write.mode("overwrite").partitionBy(partitionCols: _*)
-          .parquet(s"$warehouseDir/b$bid")
-      }
-      writeHistoryList(spark, s"$historyDir/b$bid", Nil)
-      seedLoadedFiles(historyDir, bid, Nil)
-      val dataFiles = listBatchFiles(spark, s"$warehouseDir/b$bid")
-      writeZoneMap(spark, historyDir, bid, zo, zc, Some(toW.schema),
-        Some(dataFiles),
-        Some(listBatchFiles(spark, s"$historyDir/b$bid")),
-        FileZones.read(spark, s"$warehouseDir/b$bid", dataFiles,
-          toW.schema))
-    }
+    val eligible = dvEligible(spark, warehouseDir, historyDir,
+      hitAgg.groupBy(_._1).map { case (b, rs) =>
+        b -> rs.groupBy(_._2).map { case (f, fr) => f -> fr.flatMap(_._4) }
+      })
     // per-batch UPDATE-APPEND sibling for DV-eligible batches: the
     // source's values, one copy per row the batch's vector hides
     // (multiplicity-preserving — a key hitting k rows updates k rows,
@@ -3653,6 +3484,8 @@ object WarehouseLoad {
     // remap and lands IFF the remap lands: pairing them is what keeps
     // a vanished-batch pass from leaving appended values without
     // their hides (duplicates) or hides without their values (loss).
+    // Every batch this merge APPENDS has an empty (streamed-epoch)
+    // history.
     val updIds: Map[String, String] = eligible.keys.flatMap { id =>
       // all matched rows tombstoned ⟺ this batch has zero
       // non-tombstone hits — already known driver-side from the fused
@@ -3668,125 +3501,76 @@ object WarehouseLoad {
             explode(array_repeat(lit(1), col("__n").cast("int"))))
           .drop("__n", "__c")
         val uid = rewriteId(id, s"-$tag-u")
-        writeAppendBatch(uid, updDf)
+        writeBatch(spark, warehouseDir, historyDir, uid, updDf,
+          partitionCols, writeEmptyHistory(spark, historyDir, uid))
         Some(id -> uid)
       }
     }.toMap
-    val newIds = committed.map { id =>
-      if (!hitsByBatch.contains(id)) id
-      else {
-        val nid = rewriteId(id, s"-$tag")
-        publishIntent(spark, historyDir, nid)
-        eligible.get(id) match {
-          case Some(mergedDv) =>
-            // DV path: carry every file byte-identically, write the
-            // merged vector; the batch's own (carried) stats stay a
-            // conservative SUPERSET (hiding rows only shrinks true
-            // ranges), and the updated VALUES get fresh stats in the
-            // sibling append batch — no range-understatement hazard
-            val qRoot = new org.apache.hadoop.fs.Path(qWhBase, s"b$id")
-            val st = batchStats(spark, historyDir, id)
-            st.flatMap(_.files).get.foreach { case (rel, _) =>
-              carryFile(whFs, new org.apache.hadoop.fs.Path(qRoot, rel),
-                new org.apache.hadoop.fs.Path(
-                  s"$warehouseDir/b$nid", rel), conf)
-            }
-            copyHistoryDir(spark, historyDir, id, nid)
-            st.foreach { s0 =>
-              val newFiles = listBatchFiles(spark, s"$warehouseDir/b$nid")
-              val fz = s0.schemaJson.flatMap { j =>
-                try Some(org.apache.spark.sql.types.DataType.fromJson(j)
-                  .asInstanceOf[StructType])
-                catch { case scala.util.control.NonFatal(_) => None }
-              }.map(sc => FileZones.read(spark, s"$warehouseDir/b$nid",
-                newFiles, sc)).getOrElse(Map.empty)
-              AtomicManifest.write(spark, s"$historyDir/b$nid",
-                ZoneMapFile,
-                encodeZoneMap(s0.cols.toSeq.sortBy(_._1), s0.rows,
-                  s0.schemaJson, Some(newFiles),
-                  Some(listBatchFiles(spark, s"$historyDir/b$nid")),
-                  fz, mergedDv))
-            }
-          case None =>
-            // REWRITE path: matched rows take the source's non-key
-            // values in place. A DV'd batch rewrites through its own
-            // deletion vector — raw files would resurrect hidden rows
-            val batchRaw = spark.read.parquet(s"$warehouseDir/b$id")
-            val batchDf = dvCondition(spark, warehouseDir, historyDir,
-              Seq(id)).map(batchRaw.filter).getOrElse(batchRaw)
-            val valCols = batchDf.columns.filterNot(c =>
-              keyCols.exists(_.equalsIgnoreCase(c)))
-            val srcR = s2.select((keyCols.map(col) :+
-                col(DelFlag).as("__src_del")) ++ valCols.map(c =>
-                col(c).as(s"__src_$c")): _*)
-              .withColumn(Marker, lit(true))
-            val updatedDf = batchDf
-              .join(broadcast(srcR), keyCols, "left_outer")
-              // WHEN MATCHED AND deleteWhere THEN DELETE
-              .filter(not(coalesce(col(Marker), lit(false)) &&
-                coalesce(col("__src_del"), lit(false))))
-              .select(batchDf.schema.fields.map { f =>
-                if (keyCols.exists(_.equalsIgnoreCase(f.name))) col(f.name)
-                else when(col(Marker), col(s"__src_${f.name}")
-                    .cast(f.dataType))
-                  .otherwise(col(f.name)).as(f.name)
-              }.toSeq: _*)
-            // FRESH stats (zone map, dictionaries, per-file
-            // intervals): updates can expand a column's range — the
-            // carried-forward map takedown uses would understate it,
-            // a pruning correctness bug
-            val (toWrite, zobs, zcols) =
-              observeZones(applyChecks(spark, historyDir, updatedDf))
-            rethrowCheck {
-              toWrite.write.mode("overwrite")
-                .partitionBy(partitionCols: _*)
-                .parquet(s"$warehouseDir/b$nid")
-            }
-            // source files stay loaded: carry the history forward
-            copyHistoryDir(spark, historyDir, id, nid)
-            val dataFiles = listBatchFiles(spark, s"$warehouseDir/b$nid")
-            writeZoneMap(spark, historyDir, nid, zobs, zcols,
-              Some(toWrite.schema), Some(dataFiles),
-              Some(listBatchFiles(spark, s"$historyDir/b$nid")),
-              FileZones.read(spark, s"$warehouseDir/b$nid", dataFiles,
-                toWrite.schema))
-        }
-        nid
+    val Marker = "_graft_matched"
+    val remap = committed.filter(hitsByBatch.contains).map { id =>
+      val nid = rewriteId(id, s"-$tag")
+      eligible.get(id) match {
+        case Some(mergedDv) =>
+          // DV path: the batch's own (carried) stats stay a
+          // conservative SUPERSET, and the updated VALUES get fresh
+          // stats in the sibling append batch — no range-understatement
+          // hazard
+          publishIntent(spark, historyDir, nid)
+          carryBatch(spark, warehouseDir, historyDir, id, nid, mergedDv)
+        case None =>
+          // REWRITE path: matched rows take the source's non-key
+          // values (cast to the batch's own types) in place, unmatched
+          // pass through. A DV'd batch rewrites through its own
+          // deletion vector — raw files would resurrect hidden rows
+          val batchRaw = spark.read.parquet(s"$warehouseDir/b$id")
+          val batchDf = dvCondition(spark, warehouseDir, historyDir,
+            Seq(id)).map(batchRaw.filter).getOrElse(batchRaw)
+          val valCols = batchDf.columns.filterNot(c =>
+            keyCols.exists(_.equalsIgnoreCase(c)))
+          val srcR = s2.select((keyCols.map(col) :+
+              col(DelFlag).as("__src_del")) ++ valCols.map(c =>
+              col(c).as(s"__src_$c")): _*)
+            .withColumn(Marker, lit(true))
+          val updatedDf = batchDf
+            .join(broadcast(srcR), keyCols, "left_outer")
+            // WHEN MATCHED AND deleteWhere THEN DELETE
+            .filter(not(coalesce(col(Marker), lit(false)) &&
+              coalesce(col("__src_del"), lit(false))))
+            .select(batchDf.schema.fields.map { f =>
+              if (keyCols.exists(_.equalsIgnoreCase(f.name))) col(f.name)
+              else when(col(Marker), col(s"__src_${f.name}")
+                  .cast(f.dataType))
+                .otherwise(col(f.name)).as(f.name)
+            }.toSeq: _*)
+          // FRESH stats (zone map, dictionaries, per-file intervals):
+          // updates can expand a column's range — the carried-forward
+          // map takedown uses would understate it, a pruning
+          // correctness bug. Source files stay loaded: the history
+          // carries forward.
+          writeBatch(spark, warehouseDir, historyDir, nid, updatedDf,
+            partitionCols, copyHistoryDir(spark, historyDir, id, nid))
       }
-    }
+      id -> nid
+    }.toMap
     // the insert batch (streamed-epoch shape: no source files) — id
     // is per-PASS: a re-run pass appends fresh update copies for the
     // batches that vanished last pass, and reusing the landed pass-0
     // id would overwrite a COMMITTED batch's data
     val insId = if (pass == 0) s"merge-$tag" else s"merge-$tag-p$pass"
-    if (nInserts > 0) writeAppendBatch(insId, inserts)
+    if (nInserts > 0)
+      writeBatch(spark, warehouseDir, historyDir, insId, inserts,
+        partitionCols, writeEmptyHistory(spark, historyDir, insId))
     // ONE atomic commit: still-valid remaps (each with its paired
-    // update-append) + the insert batch. A probed batch absent from
-    // the commit-time head vanished under a concurrent rewrite — its
-    // replacing batch may still hold the OLD rows, so the caller
-    // re-runs (its keys re-match and re-update); the vanished batch's
-    // update-append is dropped WITH its remap, so nothing lands twice.
-    // (a RACING IDENTICAL merge needs no special arbitration: its
-    // deterministic ids equal ours, so whichever commit wins, the
-    // loser's next pass probes its twin's batches as tag-marked — no
-    // hits, no inserts — and exits converged with nothing re-applied)
-    val remap = committed.zip(newIds).filter { case (a, b) => a != b }.toMap
-    var vanished = Set.empty[String]
-    var insLanded = false
-    commitBatches(spark, historyDir, { cur =>
-      vanished = remap.keySet -- cur.toSet
-      val curSet = cur.toSet
-      val remapped = cur.flatMap { i =>
-        val m = remap.getOrElse(i, i)
-        if (m != i) m +: updIds.get(i).filterNot(curSet).toSeq
-        else Seq(m)
-      }
-      insLanded = nInserts > 0 && !cur.contains(insId)
-      if (insLanded) remapped :+ insId else remapped
-    })
-    remap.values.foreach(clearIntent(spark, historyDir, _))
-    updIds.values.foreach(clearIntent(spark, historyDir, _))
-    if (nInserts > 0) clearIntent(spark, historyDir, insId)
+    // update-append) + the insert batch. A vanished batch's replacing
+    // batch may still hold the OLD rows, so the caller re-runs (its
+    // keys re-match and re-update); the vanished batch's update-append
+    // is dropped WITH its remap, so nothing lands twice. (a RACING
+    // IDENTICAL merge needs no special arbitration: its deterministic
+    // ids equal ours, so whichever commit wins, the loser's next pass
+    // probes its twin's batches as tag-marked — no hits, no inserts —
+    // and exits converged with nothing re-applied)
+    val (vanished, insLanded) = commitRemap(spark, historyDir, remap,
+      updIds, Option.when(nInserts > 0)(insId))
     val surv = hitSplit.filterNot { case ((b, _), _) => vanished(b) }
     (surv.collect { case ((_, false), n) => n }.sum,
       if (insLanded) nInserts else 0L,
@@ -3842,11 +3626,8 @@ object WarehouseLoad {
 
   /** Fresh sets at or below this size plan as a direct path-list read;
     * above it, the constant-size single-root + broadcast-semi-join
-    * shape (see [[idempotentBatch]]). Conf-overridable so a deployment
-    * can pick its own listing-vs-plan-size tradeoff. */
-  private def freshPathPlanMax(spark: SparkSession): Int =
-    spark.conf.getOption("graft.load.freshPathPlanMax")
-      .map(_.toInt).getOrElse(64)
+    * shape (see [[idempotentBatch]]). */
+  private val FreshPathPlanMax = 64
 
   /** The staged key-set schema for an idempotent load, inferred from a
     * BOUNDED sample of the FRESH files (VERDICT r12 #6) instead of a
@@ -4011,7 +3792,7 @@ object WarehouseLoad {
       def pathSafe = fresh.forall(f =>
         !f._1.exists(c => "*?[]{}%".indexOf(c.toInt) >= 0))
       val data =
-        if (fresh.sizeIs <= freshPathPlanMax(spark) && pathSafe) {
+        if (fresh.sizeIs <= FreshPathPlanMax && pathSafe) {
           // rename-in-flight safety: paths were just listed; a file
           // vanishing between listing and read fails the job loudly
           // (ignoreMissingFiles stays false), same as the semi-join

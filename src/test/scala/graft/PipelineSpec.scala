@@ -1461,6 +1461,90 @@ class PipelineSpec extends SparkSpec {
     assert(read().count() == 495L)
   }
 
+  test("over-cap deletion vectors fall back per batch: hidden rows stay hidden, unhit files carry, time travel intact") {
+    // A batch whose merged vector exceeds graft.dv.maxRows takes the
+    // rewrite path instead: the takedown rewrites only its hit files
+    // (the rest carry byte-identically, keeping their vectors), the
+    // merge rewrites the batch with fresh stats. Either way rows the
+    // earlier vector hid must stay hidden.
+    import graft.load.WarehouseLoad
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    val wh = tmpDir("graft-dvfbwh-") + "/t"
+    val hist = tmpDir("graft-dvfbhist-") + "/h"
+    // batch A: 4 files with disjoint key ranges; batch B: one file
+    WarehouseLoad.commitStreamedBatch(spark,
+      spark.range(400).select(col("id").as("k"), (col("id") % 7).as("v"))
+        .repartitionByRange(4, col("k")).sortWithinPartitions("k").toDF(),
+      wh, hist, "fbA")
+    WarehouseLoad.commitStreamedBatch(spark,
+      spark.range(1000, 1100).select(col("id").as("k"),
+        (col("id") % 7).as("v")).coalesce(1).toDF(), wh, hist, "fbB")
+    // A already carries a deletion vector (key 10, in its first file)
+    assert(WarehouseLoad.takedownVectorized(spark, wh, hist,
+      Seq(10L).toDF("k"), Seq("k")) == 1L)
+    val fs = new org.apache.hadoop.fs.Path(wh)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def state(dir: String) = fs.listStatus(
+        new org.apache.hadoop.fs.Path(dir))
+      .filter(_.getPath.getName.endsWith(".parquet"))
+      .map(st => (st.getPath.getName, st.getLen, st.getModificationTime))
+      .sortBy(_._1).toSeq
+    def read() = WarehouseLoad.readWarehouse(spark, wh, hist).get
+    def rows(df: org.apache.spark.sql.DataFrame) = df.select("k", "v")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    def dvRows(id: String) = WarehouseLoad.batchStats(spark, hist, id).get
+      .dv.valuesIterator.map(_.cardinality).sum
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.setLong("graft.dv.maxRows", 1L)
+    try {
+      // TAKEDOWN: key 150 would grow A's vector to 2 rows
+      val Seq(a1, b1) = WarehouseLoad.committedBatches(spark, hist)
+      val aState = state(s"$wh/b$a1")
+      val bState = state(s"$wh/b$b1")
+      assert(aState.size == 4 && dvRows(a1) == 1L)
+      val v1 = WarehouseLoad.currentVersion(spark, hist)
+      val rows1 = rows(read())
+      assert(WarehouseLoad.takedownVectorized(spark, wh, hist,
+        Seq(150L).toDF("k"), Seq("k")) == 1L)
+      assert(read().filter(col("k").isin(10L, 150L)).count() == 0L)
+      assert(read().count() == 498L)
+      val Seq(a2, b2) = WarehouseLoad.committedBatches(spark, hist)
+      assert(a2 != a1 && b2 == b1)
+      // the hit file was rewritten; the 3 unhit files carried
+      // byte-identically (same name, length, mtime), the one holding
+      // key 10 still under its vector
+      val aState2 = state(s"$wh/b$a2")
+      assert(aState2.size == 4, s"files=$aState2")
+      assert((aState2.toSet intersect aState.toSet).size == 3,
+        s"before=$aState after=$aState2")
+      assert(dvRows(a2) == 1L)
+      assert(state(s"$wh/b$b1") == bState)
+      assert(rows(WarehouseLoad.readWarehouseAt(spark, wh, hist, v1).get)
+        == rows1)
+
+      // MERGE: updating key 250 would grow A's vector to 2 rows too
+      val v2 = WarehouseLoad.currentVersion(spark, hist)
+      val rows2 = rows(read())
+      val (u, i) = WarehouseLoad.mergeCommitted(spark, wh, hist,
+        Seq((250L, 99L), (2000L, 5L)).toDF("k", "v"), Seq("k"))
+      assert((u, i) == ((1L, 1L)), s"got ($u, $i)")
+      assert(rows(read().filter(col("k").isin(250L, 2000L))) ==
+        Seq((250L, 99L), (2000L, 5L)))
+      assert(read().filter(col("k").isin(10L, 150L)).count() == 0L)
+      assert(read().count() == 499L)
+      // A was rewritten (no update-append sibling, no vector left); B,
+      // with no hits, kept its files
+      val after = WarehouseLoad.committedBatches(spark, hist)
+      assert(after.size == 3 && after(1) == b1 &&
+        !after.exists(_.endsWith("-u")), s"batches=$after")
+      assert(dvRows(after.head) == 0L)
+      assert(state(s"$wh/b$b1") == bState)
+      assert(rows(WarehouseLoad.readWarehouseAt(spark, wh, hist, v2).get)
+        == rows2)
+    } finally conf.unset("graft.dv.maxRows")
+  }
+
   test("type-widening window composes with deletion vectors and _metadata consumers") {
     // ADVICE r16 #1: the widened layout group used to union its
     // schema generations BEFORE the DV filter / `_graft_batch`
