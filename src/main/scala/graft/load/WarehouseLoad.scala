@@ -167,14 +167,18 @@ object WarehouseLoad {
     * written by a crashed attempt, a half-staged history snapshot) is
     * invisible to readers and harmlessly overwritten by the retry. */
   private[graft] def committedBatches(spark: SparkSession,
-                                      historyDir: String): Seq[String] = {
-    val head = currentVersion(spark, historyDir)
+                                      historyDir: String): Seq[String] =
+    headBatches(spark, historyDir, currentVersion(spark, historyDir))
+
+  /** The batch list of `head`, a head version the caller has just read
+    * — [[versionBatches]] without a second head probe. */
+  private def headBatches(spark: SparkSession, historyDir: String,
+                          head: Long): Seq[String] =
     if (head == 0) Nil
-    else versionBatches(spark, historyDir, head).getOrElse(
+    else readVersionList(spark, historyDir, head).getOrElse(
       throw new IllegalStateException(
         s"head version $head of $historyDir has no readable manifest — " +
         "the commit log is corrupt (vacuum never prunes the head)"))
-  }
 
   // ------------------------------------------------------------------
   // Versioned commit log: time travel + change feed
@@ -331,11 +335,7 @@ object WarehouseLoad {
     var attempt = 0
     while (attempt < 10000) {
       val head = currentVersion(spark, historyDir)
-      val committed =
-        if (head == 0) Nil
-        else versionBatches(spark, historyDir, head).getOrElse(
-          throw new IllegalStateException(
-            s"head version $head of $historyDir has no readable manifest"))
+      val committed = headBatches(spark, historyDir, head)
       val batches = derive(committed)
       if (batches == committed) return head // already committed: no-op
       require(batches.forall(b =>
@@ -2324,8 +2324,8 @@ object WarehouseLoad {
     import spark.implicits._
     val head = currentVersion(spark, historyDir)
     val rows = (1L to head).flatMap { v =>
-      versionBatches(spark, historyDir, v).map { cur =>
-        versionBatches(spark, historyDir, v - 1) match {
+      readVersionList(spark, historyDir, v).map { cur =>
+        readVersionList(spark, historyDir, v - 1) match {
           case Some(prev) =>
             val p = prev.toSet
             val added = cur.count(!p(_))
@@ -2412,10 +2412,9 @@ object WarehouseLoad {
     require(retainVersions >= 1, "retainVersions must be >= 1")
     val head = currentVersion(spark, historyDir)
     val cutoff = math.max(1L, head - retainVersions + 1)
-    val headBatches = committedBatches(spark, historyDir)
     val keep = ((cutoff to head)
-      .flatMap(v => versionBatches(spark, historyDir, v).getOrElse(Nil)) ++
-      headBatches).map("b" + _).toSet
+      .flatMap(v => readVersionList(spark, historyDir, v).getOrElse(Nil)) ++
+      committedBatches(spark, historyDir)).map("b" + _).toSet
     // Refresh the `_COMMITTED` hint to the probed head BEFORE pruning
     // version files (ADVICE r13): the hint may lag the head (crashes in
     // the publish→hint window, out-of-order overwrites by concurrent
@@ -2440,7 +2439,7 @@ object WarehouseLoad {
     // file is replaced; its content is semantically identical (the
     // reconstruction cache keys on file state, so it re-reads).
     if (cutoff <= head)
-      versionBatches(spark, historyDir, cutoff).foreach { list =>
+      readVersionList(spark, historyDir, cutoff).foreach { list =>
         val raw = AtomicManifest.read(spark, s"$historyDir/$VersionsDir",
           versionName(cutoff))
         if (raw.exists(_.linesIterator.nextOption().contains(DeltaHeader)))
@@ -2505,7 +2504,7 @@ object WarehouseLoad {
     // it (markers clear only post-commit), so `inflight` spares it.
     val head2 = currentVersion(spark, historyDir)
     val keep2 = ((math.max(1L, head2 - retainVersions + 1) to head2)
-      .flatMap(v => versionBatches(spark, historyDir, v).getOrElse(Nil)) ++
+      .flatMap(v => readVersionList(spark, historyDir, v).getOrElse(Nil)) ++
       committedBatches(spark, historyDir)).map("b" + _).toSet
     // per-orphan deletes run in PARALLEL (driver-side metadata calls;
     // sequential deletes were vacuum's dominant cost at 10k commits —

@@ -5,11 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session base: one local SparkSession per suite (lazy). */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
+  lazy val spark: SparkSession = GraftSession.builder("local[4]", 4)
     .appName(getClass.getSimpleName)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
     .config("spark.sql.warehouse.dir",
       java.nio.file.Files.createTempDirectory("graft-wh-").toString)
