@@ -30,13 +30,6 @@ import org.apache.hadoop.fs.permission.FsPermission
   * platforms without the `unix` attribute view, the call goes to
   * Hadoop's forking implementation. */
 class NioRawLocalFileSystem extends RawLocalFileSystem {
-  private var blockSize = 0L
-
-  override def initialize(uri: URI, conf: Configuration): Unit = {
-    super.initialize(uri, conf)
-    blockSize = getDefaultBlockSize(new Path(uri))
-  }
-
   override def getFileStatus(f: Path): FileStatus = {
     val file = pathToFile(f)
     // one stat, following symlinks as java.io.File and `ls -ld` on the
@@ -54,7 +47,8 @@ class NioRawLocalFileSystem extends RawLocalFileSystem {
     def name(k: String) = a.get(k).asInstanceOf[java.security.Principal].getName
     // 0x3ff = 01777: rwx for user, group and other plus the sticky bit
     new FileStatus(a.get("size").asInstanceOf[Long],
-      a.get("isDirectory") == java.lang.Boolean.TRUE, 1, blockSize,
+      a.get("isDirectory") == java.lang.Boolean.TRUE, 1,
+      getDefaultBlockSize(f),
       millis("lastModifiedTime"), millis("lastAccessTime"),
       new FsPermission((a.get("mode").asInstanceOf[Int] & 0x3ff).toShort),
       name("owner"), name("group"),

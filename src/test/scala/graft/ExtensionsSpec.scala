@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{AnalysisException, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 
 /** GraftExtensions registers every native expression for SQL use. */
 class ExtensionsSpec extends SparkSpec {
@@ -54,7 +55,19 @@ class ExtensionsSpec extends SparkSpec {
 
   test("GraftSession.attach registers functions on an existing session") {
     val s2 = spark.newSession()
+    // the base session's GraftExtensions already fill every new session's
+    // registry: drop what attach registers so only attach can restore it
+    val registry = s2.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.functionRegistry
+    val attached = Seq("graft_qdot", "graft_normalize_text",
+      "graft_shingles", "graft_phash32", "graft_milli_log10",
+      "graft_cdc_cuts").map(FunctionIdentifier(_))
+    attached.foreach(registry.dropFunction)
+    assert(attached.forall(!registry.functionExists(_)))
+    intercept[AnalysisException](
+      s2.sql("SELECT graft_normalize_text('x') AS t").collect())
     GraftSession.attach(s2)
+    assert(attached.forall(registry.functionExists))
     assert(s2.sql("SELECT graft_normalize_text(' X  y ') AS t")
       .head().getString(0) == "x y")
     assert(s2.sql(
