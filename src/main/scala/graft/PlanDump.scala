@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Dev-only: print FormattedMode plans for the queries named in
@@ -10,8 +9,7 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir =
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
+    val spark = GraftSession.builder("local[4]", 4)
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val names = sys.env.getOrElse("SPARK_GRAFT_PROBE", "").split(",").toSeq

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev-only micro-probe: time one registered query N times in a warm
   * session (SPARK_GRAFT_PROBE=name[,name...], SPARK_GRAFT_SF_DIR,
@@ -12,9 +11,7 @@ object Probe {
       .split(",").toSeq
     val n = sys.env.getOrElse("SPARK_GRAFT_PROBE_N", "4").toInt
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+    val builder = GraftSession.builder(s"local[$cpus]", cpus.toInt)
       .config("spark.ui.enabled", "false")
     // Streaming probes at 100× emit through a memory sink whose collect
     // trips the 1g default — opt IN to the unlimited override for those
@@ -90,9 +87,7 @@ object ProbeBpeK {
     val modes = sys.env.getOrElse("SPARK_GRAFT_BPEK_MODES", "broadcast,literal")
       .split(",").toSeq.map(_.trim)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -1,9 +1,9 @@
 package graft.load
 
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
-import org.apache.spark.sql.types.{ByteType, DateType, DoubleType, FloatType,
-  IntegerType, LongType, ShortType, StringType, StructField, StructType,
-  TimestampType}
+import org.apache.spark.sql.types.{ByteType, DataType, DateType, DoubleType,
+  FloatType, IntegerType, LongType, ShortType, StringType, StructField,
+  StructType, TimestampType}
 import graft.schema.SchemaAlign
 
 /** Typed warehouse load — the Snowpipe leg of the reference
@@ -29,7 +29,11 @@ import graft.schema.SchemaAlign
   * batch with fresh stats), [[carryBatch]]/[[carryStats]] (carried
   * files and stats), [[commitRemap]] (a rewrite's one version) and
   * [[untilConverged]] (re-running a pass a concurrent rewrite beat).
-  * Every commit goes through [[commitBatches]], the one CAS.
+  * Every commit goes through [[commitBatches]], the one CAS, and
+  * every committed batch records its manifest ([[BatchStats]]: schema,
+  * data and history file lists). Every committed read plans from that
+  * manifest alone ([[readBatchDirs]], [[historyFileRelation]]); a
+  * batch without one is corruption and fails the read, naming it.
   *
   * Failure policy: `strict = true` mirrors COPY's default
   * `ON_ERROR` (refuse the batch when any value fails coercion OR fails
@@ -503,20 +507,15 @@ object WarehouseLoad {
       val v = commitBatches(spark, historyDir, _ => target)
       val conf = spark.sparkContext.hadoopConfiguration
       val missing = resurrected.filter { id =>
-        def gone(root: String, rels: Seq[String]): Boolean = {
-          val p = new org.apache.hadoop.fs.Path(root)
-          val fs = p.getFileSystem(conf)
-          !fs.exists(p) || rels.exists(rel =>
-            !fs.exists(new org.apache.hadoop.fs.Path(p, rel)))
-        }
-        batchStats(spark, historyDir, id) match {
-          case None => false // legacy manifest: nothing recorded to check
-          case Some(st) =>
-            st.files.exists(fl =>
-              gone(s"$warehouseDir/b$id", fl.map(_._1))) ||
-            st.histFiles.exists(fl =>
-              gone(s"$historyDir/b$id", fl.map(_._1)))
-        }
+        def gone(root: String, files: Seq[(String, Long)]): Boolean =
+          files.exists { case (rel, _) =>
+            val p = new org.apache.hadoop.fs.Path(root, rel)
+            !p.getFileSystem(conf).exists(p)
+          }
+        // no manifest at all = vacuum reclaimed the whole history dir
+        batchStats(spark, historyDir, id).forall(st =>
+          gone(s"$warehouseDir/b$id", st.files) ||
+            gone(s"$historyDir/b$id", st.histFiles))
       }
       if (missing.nonEmpty) {
         commitBatches(spark, historyDir, _ => before)
@@ -617,42 +616,30 @@ object WarehouseLoad {
     * takedown/merge probes join against. With `rowIdentity` each row
     * also carries its normalized file path (`_graft_fp`) and
     * `_metadata.row_index` (`_graft_ri`), the identity deletion vectors
-    * hide rows by. ONE probe relation, not one per batch, when the log
-    * records file lists ([[manifestGroupRelations]]): the batch id comes
-    * from `_metadata.file_path` — a constant-size plan at any load count
-    * (the per-batch union paid a listing + footer read per committed
-    * load). Each layout/schema generation is tagged BEFORE the
+    * hide rows by. ONE probe relation, not one per batch
+    * ([[manifestGroupRelations]]): the batch id comes from
+    * `_metadata.file_path` — a constant-size plan at any load count.
+    * Each layout/schema generation is tagged BEFORE the
     * cross-generation union: `_metadata` never resolves through a
-    * Union. Legacy batches (no recorded file lists) keep the
-    * per-batch union, read through their own deletion vectors. The
-    * union is `allowMissingColumns`: batches straddling a
+    * Union. The union is `allowMissingColumns`: batches straddling a
     * SchemaDrift.evolve differ by the added nullable columns, which
     * surface as null on the older rows. `None` when nothing is live. */
   private def taggedRelation(spark: SparkSession, warehouseDir: String,
       historyDir: String, ids: Seq[String],
       rowIdentity: Boolean): Option[DataFrame] = {
-    import org.apache.spark.sql.functions.{col, lit, regexp_extract}
-    def withIdentity(df: DataFrame): DataFrame =
-      if (!rowIdentity) df
-      else df.withColumn(FpCol, normCol(col("_metadata.file_path")))
-        .withColumn(RiCol, col("_metadata.row_index"))
-    val tagged = manifestGroupRelations(spark, warehouseDir, historyDir,
-        ids) match {
-      case Some(rels) =>
-        val p = new org.apache.hadoop.fs.Path(warehouseDir)
-        val qWh = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .makeQualified(p).toString
-        rels.toSeq.flatten.map(r => withIdentity(r.withColumn(BatchCol,
+    import org.apache.spark.sql.functions.{col, regexp_extract}
+    val p = new org.apache.hadoop.fs.Path(warehouseDir)
+    val qWh = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .makeQualified(p).toString
+    manifestGroupRelations(spark, warehouseDir, historyDir, ids).map(
+      _.map { r =>
+        val tagged = r.withColumn(BatchCol,
           regexp_extract(col("_metadata.file_path"),
-            java.util.regex.Pattern.quote(qWh) + "/b([^/]+)/", 1))))
-      case None =>
-        liveBatchIds(spark, warehouseDir, ids).map { id =>
-          val raw = spark.read.parquet(s"$warehouseDir/b$id")
-          withIdentity(dvCondition(spark, warehouseDir, historyDir, Seq(id))
-            .map(raw.filter).getOrElse(raw).withColumn(BatchCol, lit(id)))
-        }
-    }
-    tagged.reduceOption(_.unionByName(_, allowMissingColumns = true))
+            java.util.regex.Pattern.quote(qWh) + "/b([^/]+)/", 1))
+        if (!rowIdentity) tagged
+        else tagged.withColumn(FpCol, normCol(col("_metadata.file_path")))
+          .withColumn(RiCol, col("_metadata.row_index"))
+      }.reduce(_.unionByName(_, allowMissingColumns = true)))
   }
 
   /** The committed warehouse relation: the union of the committed batch
@@ -670,135 +657,19 @@ object WarehouseLoad {
     readBatchDirs(spark, warehouseDir, historyDir,
       committedBatches(spark, historyDir))
 
-  /** Batch ids whose data dir holds at least one real parquet part —
-    * directly (unpartitioned batch) or under a partition subdir
-    * (hive-partitioned batch; the subdir's existence implies parts,
-    * partitioned writes create no empty partition dirs). A batch of
-    * only-empty staged files writes neither; skipping its (fileless)
-    * dir keeps schema inference on real footers. */
-  private[graft] def liveBatchIds(spark: SparkSession, warehouseDir: String,
-                                  ids: Seq[String]): Seq[String] =
-    liveBatchInfo(spark, warehouseDir, ids).map(_._1)
-
-  /** `(id, isHivePartitioned)` for each LIVE batch (see
-    * [[liveBatchIds]]), in input order. ONE listing per batch, run in
-    * PARALLEL across batches (a java parallelStream over driver-side
-    * metadata calls): the sequential form was one blocking RPC per
-    * committed load — the r14 CommitScale harness measured it as the
-    * dominant cost of `readWarehouse` construction at 10k commits.
-    * The same listing also answers the partitioned-layout probe that
-    * [[readBatchDirs]] previously paid a second per-dir listing for. */
-  private[graft] def liveBatchInfo(spark: SparkSession, warehouseDir: String,
-      ids: Seq[String]): Seq[(String, Boolean)] = {
-    import scala.jdk.CollectionConverters._
-    val conf = spark.sparkContext.hadoopConfiguration
-    val live =
-      new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-    MetaPool.forEach(ids) { id =>
-      val p = new org.apache.hadoop.fs.Path(s"$warehouseDir/b$id")
-      val fs = p.getFileSystem(conf)
-      val sts =
-        try fs.listStatus(p)
-        catch { case _: java.io.FileNotFoundException => null }
-      if (sts != null) {
-        val real = sts.filter { st =>
-          val n = st.getPath.getName
-          !n.startsWith("_") && !n.startsWith(".")
-        }
-        if (real.nonEmpty)
-          live.put(id, real.exists(st =>
-            st.isDirectory && st.getPath.getName.contains("=")))
-      }
-    }
-    ids.flatMap(id => Option(live.get(id)).map(b => id -> b.booleanValue()))
-  }
-
+  /** The committed relation over `ids`, built entirely from the commit
+    * log: every batch's manifest records its schema and its file list,
+    * so the scan is a [[graft.plans.ManifestFileIndex]] with zero
+    * filesystem listing and zero footer I/O at plan time (the
+    * Delta/Iceberg move; at 10k commits the listing-based construction
+    * measured ~20 s, CommitScale r14). `None` when no batch in `ids`
+    * holds a file. */
   private def readBatchDirs(spark: SparkSession, warehouseDir: String,
                             historyDir: String,
                             ids: Seq[String]): Option[DataFrame] = {
     graft.plans.ZonePrune.register(spark, warehouseDir, historyDir)
-    if (ids.isEmpty) return None
-    // TIER 1 (r14): every batch's manifest records its schema AND its
-    // file list — build the scan FROM THE LOG via ManifestFileIndex:
-    // zero filesystem listing, zero footer I/O at plan time (the
-    // Delta/Iceberg move; at 10k commits the listing-based
-    // construction measured ~20 s, CommitScale r14). Falls through on
-    // any legacy batch, schema disagreement, or partitioned layout.
-    manifestRelation(spark, warehouseDir, historyDir, ids) match {
-      case Some(df) => return df
-      case None => ()
-    }
-    val info = liveBatchInfo(spark, warehouseDir, ids)
-    val dirs = info.map { case (id, _) => s"$warehouseDir/b$id" }
-    // deletion vectors must hold on the DISCOVERY fallbacks too (a
-    // table with one legacy batch still reads DV'd batches filtered)
-    val dv = dvCondition(spark, warehouseDir, historyDir, info.map(_._1))
-    def dvF(df: DataFrame): DataFrame =
-      dv.map(df.filter).getOrElse(df)
-    // mergeSchema: batches loaded AFTER a SchemaDrift.evolve carry the
-    // added nullable columns; without the merged read Spark keys the
-    // scan schema off one arbitrary footer and an evolved column can
-    // silently vanish from the relation (or old rows can fail to
-    // surface it as null). Footer merging is one parallel metadata
-    // pass — bounded by file count, no data read.
-    val reader = spark.read.option("mergeSchema", "true")
-    if (dirs.isEmpty) None
-    // LEGACY hive-partitioned batch roots (no recorded file lists)
-    // refuse a single multi-path read (each root is its own
-    // partition-discovery base), so they load per root and union —
-    // still bounded by the COMMITTED LOAD count, and a partition
-    // predicate pushes through the union into every scan's
-    // PartitionFilters (directory pruning per batch root). Recorded
-    // partitioned layouts plan from the log above (manifestRelation's
-    // partitioned branch). NOTE for ZonePrune: this union is why a
-    // partitioned NON-manifest scan never reaches its file-index
-    // rewrite — these roots plan one relation each, so that fallback
-    // is all-or-nothing per root.
-    else if (dirs.sizeIs > 1 && info.exists(_._2))
-      Some(dirs.map(d => dvF(reader.parquet(d)))
-        .reduce(_.unionByName(_, allowMissingColumns = true)))
-    else knownSchema(spark, historyDir, info) match {
-      // KNOWN-SCHEMA scan (r14): every live batch recorded the schema
-      // its own write job produced, and they all agree — pass it to
-      // the scan and skip the mergeSchema footer pass entirely (a
-      // footer GET per FILE on an object store; the dominant
-      // readWarehouse construction cost at 10k roots, CommitScale
-      // r14). Any batch without the record, or any disagreement (an
-      // in-flight SchemaDrift evolution), falls back to footer
-      // merging — the fast path is never a correctness dependency.
-      case Some(schema) =>
-        Some(dvF(spark.read.schema(schema).parquet(dirs: _*)))
-      case None => Some(dvF(reader.parquet(dirs: _*)))
-    }
-  }
-
-  /** The single schema every live batch recorded, if they ALL did and
-    * ALL agree — `None` (fall back to footer merging) otherwise, and
-    * always for hive-partitioned batches (their on-disk data schema
-    * excludes the partition columns, so the recorded DataFrame schema
-    * is not the scan schema). Stats are LRU-cached; misses fetch in
-    * parallel inside [[batchStats]] callers' loops elsewhere, and here
-    * the ids were just listed, so one pass is metadata-cheap. */
-  private def knownSchema(spark: SparkSession, historyDir: String,
-      info: Seq[(String, Boolean)]): Option[StructType] = {
-    if (info.isEmpty || info.exists(_._2)) return None
-    import scala.jdk.CollectionConverters._
-    val jsons =
-      new java.util.concurrent.ConcurrentHashMap[String, String]()
-    val missing = new java.util.concurrent.atomic.AtomicBoolean(false)
-    MetaPool.forEach(info) { case (id, _) =>
-      batchStats(spark, historyDir, id).flatMap(_.schemaJson) match {
-        case Some(j) => jsons.put(id, j)
-        case None => missing.set(true)
-      }
-    }
-    if (missing.get) return None
-    // commit order + order-preserving distinct (ADVICE r15): hash-set
-    // iteration made the merged column order arbitrary, so SELECT * /
-    // positional consumers could see column order shift between this
-    // path and the manifest tier (layoutRelation, which is ordered)
-    val distinct = info.flatMap(i => Option(jsons.get(i._1))).distinct
-    mergeRecordedSchemas(distinct)
+    manifestGroupRelations(spark, warehouseDir, historyDir, ids).map(
+      _.reduce(_.unionByName(_, allowMissingColumns = true)))
   }
 
   /** The wider of two Parquet-safe-promotable types (r16, VERDICT r15
@@ -839,25 +710,17 @@ object WarehouseLoad {
   /** Conform a set of per-batch recorded schemas to ONE read schema —
     * the evolution-window fix (r15, VERDICT r14 #4): batches written
     * before and after a [[graft.schema.SchemaDrift]] evolve record
-    * different schemas, and the old behavior dropped the whole table
-    * to discovery (footer-merge listing) for as long as both
-    * generations were live. Additive drift is exactly what the
-    * parquet reader already handles when HANDED the union schema — a
-    * file missing a requested nullable column reads it as null — so
-    * the merge is: union the fields by name in first-seen order;
-    * types must agree EXACTLY (a type change is not additive drift —
-    * fall back); a field absent from any batch is forced nullable
-    * (the reader fills nulls for it). `None` = schemas are not
-    * reconcilable this way; callers fall back to footer merging,
-    * so the fast path is never a correctness dependency. */
-  private def mergeRecordedSchemas(jsons: Seq[String],
-      widening: Boolean = false): Option[StructType] = {
-    val parsed = jsons.map { j =>
-      try org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[StructType]
-      catch { case scala.util.control.NonFatal(_) => return None }
-    }
-    if (parsed.sizeIs == 1) return Some(parsed.head)
+    * different schemas. Additive drift is exactly what the parquet
+    * reader already handles when HANDED the union schema — a file
+    * missing a requested nullable column reads it as null — so the
+    * merge is: union the fields by name in first-seen order; types
+    * must agree EXACTLY, or with `widening` be Parquet-safe promotions
+    * ([[widenType]]); a field absent from any batch is forced nullable
+    * (the reader fills nulls for it). `Left` names the first field the
+    * merge cannot reconcile: (name, type so far, conflicting type). */
+  private def mergeRecordedSchemas(parsed: Seq[StructType],
+      widening: Boolean): Either[(String, DataType, DataType), StructType] = {
+    if (parsed.sizeIs == 1) return Right(parsed.head)
     val order = scala.collection.mutable.LinkedHashMap
       .empty[String, StructField]
     for (sc <- parsed; f <- sc.fields) {
@@ -865,10 +728,12 @@ object WarehouseLoad {
         case None => order(f.name) = f
         case Some(prev) =>
           val merged =
-            if (prev.dataType == f.dataType) prev.dataType
-            else if (!widening) return None
-            else widenType(prev.dataType, f.dataType).getOrElse(return None)
-          order(f.name) = prev.copy(dataType = merged,
+            if (prev.dataType == f.dataType) Some(prev.dataType)
+            else if (widening) widenType(prev.dataType, f.dataType)
+            else None
+          order(f.name) = prev.copy(
+            dataType = merged.getOrElse(
+              return Left((f.name, prev.dataType, f.dataType))),
             nullable = prev.nullable || f.nullable)
       }
     }
@@ -878,8 +743,17 @@ object WarehouseLoad {
       if (counts(f.name).sizeIs < parsed.size) f.copy(nullable = true)
       else f
     }
-    Some(StructType(merged.toSeq))
+    Right(StructType(merged.toSeq))
   }
+
+  private def parseSchema(json: String): StructType =
+    DataType.fromJson(json).asInstanceOf[StructType]
+
+  /** A committed batch whose manifest cannot be what a writer recorded. */
+  private def corrupt(historyDir: String, id: String,
+                      what: String): IllegalStateException =
+    new IllegalStateException(
+      s"batch $id of $historyDir: $what — the commit log is corrupt")
 
   /** The combined deletion-vector filter for `ids` as ONE Column over
     * the scan's `_metadata` (r16): for every (batch, file, hidden row
@@ -888,17 +762,16 @@ object WarehouseLoad {
     * cached manifest-map lookup per batch and adds NOTHING to the
     * plan. Conditions are FILE-scoped (`file_path === …`), so applying
     * the table-wide filter to any sub-relation is harmless — which is
-    * what lets two choke points ([[manifestGroupRelations]] and
-    * [[readBatchDirs]]'s fallbacks) cover every committed read:
-    * readWarehouse, time travel, change feed, compaction folds, and
-    * the takedown/merge probes all inherit it, so a hidden row can
-    * never resurrect through ANY path. Row indexes are
-    * `_metadata.row_index` positions — stable because batch files are
-    * immutable (a rewrite commits new files and drops the DV). */
+    * what lets one choke point ([[manifestGroupRelations]]) cover
+    * every committed read: readWarehouse, time travel, change feed,
+    * compaction folds, and the takedown/merge probes all inherit it,
+    * so a hidden row can never resurrect through ANY path. Row indexes
+    * are `_metadata.row_index` positions — stable because batch files
+    * are immutable (a rewrite commits new files and drops the DV). */
   private def dvCondition(spark: SparkSession, warehouseDir: String,
       historyDir: String, ids: Seq[String]): Option[Column] =
-    dvConditionFromStats(spark, warehouseDir, ids.flatMap(id =>
-      batchStats(spark, historyDir, id).map(id -> _)))
+    dvConditionFromStats(spark, warehouseDir,
+      ids.map(id => id -> manifest(spark, historyDir, id)))
 
   /** [[dvCondition]] over stats the caller already holds — no
     * manifest I/O. */
@@ -931,163 +804,118 @@ object WarehouseLoad {
     conds.reduceOption(_ && _)
   }
 
-  /** TIER-1 committed read: the scan built entirely from the commit
-    * log's recorded file lists + schema ([[graft.plans.ManifestFileIndex]]
-    * — zero listing/footer I/O at plan time), for BOTH layouts:
-    * hive-partitioned batches (r14) parse partition values from the
-    * recorded paths and the index evaluates partition filters itself.
-    * Outer `None` = the tier does not apply (a legacy batch without
-    * the records, an IRRECONCILABLE schema disagreement — additive
-    * drift conforms via [[mergeRecordedSchemas]], r15 — or a
-    * partition path the parse rejects — those fall back to the
-    * discovery paths); `Some(None)` = applies and the table has no
-    * live files; `Some(Some(df))` = the relation. */
-  private def manifestRelation(spark: SparkSession, warehouseDir: String,
-      historyDir: String, ids: Seq[String]): Option[Option[DataFrame]] =
-    manifestGroupRelations(spark, warehouseDir, historyDir, ids).map(_.map(
-      _.reduce(_.unionByName(_, allowMissingColumns = true))))
-
-  /** [[manifestRelation]] BEFORE the cross-layout union: one relation
-    * per layout generation. Consumers that derive the batch id from
-    * `_metadata.file_path` ([[changes]], the takedown probe) must tag
-    * each group relation BEFORE unioning — metadata columns do not
-    * resolve through a Union — so they take this form and union the
-    * tagged results (r15 review find #1: the grouped union broke them
-    * on layout-mixed tables). */
+  /** The committed relation over `ids` BEFORE the cross-layout union:
+    * one log-built relation per layout/schema generation, deletion
+    * vectors applied, for BOTH layouts (hive-partitioned batches parse
+    * partition values from the recorded paths and the index evaluates
+    * partition filters itself). Consumers that derive the batch id
+    * from `_metadata.file_path` ([[changes]], the takedown probe) must
+    * tag each relation BEFORE unioning — metadata columns do not
+    * resolve through a Union (r15 review find #1). `None` when no batch
+    * in `ids` holds a file. */
   private[graft] def manifestGroupRelations(spark: SparkSession,
       warehouseDir: String, historyDir: String,
-      ids: Seq[String]): Option[Option[Seq[DataFrame]]] = {
-    import scala.jdk.CollectionConverters._
-    val fetched =
-      new java.util.concurrent.ConcurrentHashMap[String, BatchStats]()
-    MetaPool.forEach(ids)(id =>
-      batchStats(spark, historyDir, id).foreach(st => fetched.put(id, st)))
-    val stats = ids.map(id => Option(fetched.get(id)))
-    if (stats.exists(s =>
-        s.isEmpty || s.get.schemaJson.isEmpty || s.get.files.isEmpty))
-      return None
-    val all = ids.zip(stats.map(_.get))
-    val live = all.filter(_._2.files.get.nonEmpty)
-    if (live.isEmpty) return Some(None)
+      ids: Seq[String]): Option[Seq[DataFrame]] = {
+    val live = ids.zip(manifests(spark, historyDir, ids))
+      .filter(_._2.files.nonEmpty)
+    if (live.isEmpty) return None
     // GROUP BY LAYOUT (r15): a table whose life spans a layout change
     // (flat loads, then hive-partitioned ones — or two partition-col
     // generations) plans one log-built relation PER layout group and
     // unions them — bounded by the number of layout GENERATIONS (1–2
-    // in practice), never the batch count. Pre-r15 any mix rejected
-    // the tier whole and fell to the per-root discovery union (one
-    // relation per batch: measured 80 s to PLAN at 1,001 mixed
-    // commits, CommitScale r15). unionByName fills the partition
-    // columns a flat generation lacks with null — the same semantics
-    // the discovery union gave the mix.
-    val grouped = {
-      val m = scala.collection.mutable.LinkedHashMap
-        .empty[Seq[String], Vector[(String, BatchStats)]]
-      for ((id, st) <- live) {
-        val lay = batchLayout(st).getOrElse(return None)
-        m(lay) = m.getOrElse(lay, Vector.empty) :+ ((id, st))
-      }
-      m.toSeq
+    // in practice), never the batch count. unionByName fills the
+    // partition columns a flat generation lacks with null.
+    val grouped = scala.collection.mutable.LinkedHashMap
+      .empty[Seq[String], Vector[(String, BatchStats)]]
+    for ((id, st) <- live) {
+      val lay = batchLayout(historyDir, id, st)
+      grouped(lay) = grouped.getOrElse(lay, Vector.empty) :+ ((id, st))
     }
-    val rels = grouped.flatMap { case (partNames, batches) =>
+    val rels = grouped.toSeq.flatMap { case (partNames, batches) =>
       layoutRelation(spark, warehouseDir, partNames, batches)
-        .getOrElse(return None)
     }
     // deletion vectors apply HERE, per generation relation (r16):
-    // every consumer of the tier — readWarehouse, time travel, the
-    // change feed, compaction folds, the takedown/merge probes —
-    // inherits the filter, so a hidden row cannot resurrect. Built
-    // from the stats THIS pass already fetched — a re-fetch was one
-    // of the redundant 100k-manifest walks CommitScale r16 measured.
-    val filtered = dvConditionFromStats(spark, warehouseDir, live) match {
+    // every consumer inherits the filter, so a hidden row cannot
+    // resurrect. Built from the stats THIS pass already fetched.
+    Some(dvConditionFromStats(spark, warehouseDir, live) match {
       case Some(c) => rels.map(_.filter(c))
       case None => rels
-    }
-    Some(Some(filtered))
+    })
   }
 
   /** One batch's hive layout: the partition-column sequence every one
-    * of its recorded file paths spells (`Nil` = flat). `None` when the
-    * batch's own files disagree or a segment has no `col=` shape —
-    * absent is never wrong, only slower (discovery fallback). */
-  private def batchLayout(st: BatchStats): Option[Seq[String]] = {
-    val seqs = st.files.get.iterator.map { case (rel, _) =>
+    * of its recorded file paths spells (`Nil` = flat). Every writer
+    * records the files of ONE `partitionBy` write, so files that
+    * disagree, or a directory without the `col=` shape, are
+    * corruption. */
+  private def batchLayout(historyDir: String, id: String,
+                          st: BatchStats): Seq[String] = {
+    val seqs = st.files.map { case (rel, _) =>
       rel.split("/").init.toSeq.map { seg =>
         val eq = seg.indexOf('=')
-        if (eq <= 0) return None
+        if (eq <= 0) throw corrupt(historyDir, id,
+          s"recorded file '$rel' sits under a non-partition directory")
         seg.substring(0, eq)
       }
-    }.toSeq.distinct
-    if (seqs.sizeIs == 1) Some(seqs.head) else None
+    }.distinct
+    if (seqs.sizeIs == 1) seqs.head
+    else throw corrupt(historyDir, id,
+      s"recorded files disagree on the partition layout: $seqs")
   }
 
   /** The log-built scan relation(s) for ONE layout group of live
     * batches (shared partition-column sequence; `Nil` = flat). Schema
     * is the group's own merged record ([[mergeRecordedSchemas]] —
-    * additive drift conforms, r15); partition values parse from the
-    * recorded paths and the index evaluates pushed partition filters
-    * itself (r14). Returns ONE relation per SCHEMA GENERATION
-    * (r17, ADVICE r16 #1): the exact path yields a single element,
-    * the type-widening path one per recorded schema — each a
+    * additive drift conforms, r15). Returns ONE relation per SCHEMA
+    * GENERATION (r17, ADVICE r16 #1): the exact path yields a single
+    * element, the type-widening path one per recorded schema — each a
     * projection over a SINGLE scan, never a Union, because every
     * downstream consumer (the DV filter, the `_graft_batch` taggers)
     * resolves `_metadata` against these and metadata columns do not
     * resolve through a Union. The caller unions AFTER filtering /
-    * tagging. `None` = something in the group resists (irreconcilable
-    * type drift, unparseable partition value, a partition column
-    * missing from the recorded schema) — callers fall back to
-    * discovery. */
+    * tagging. An unwidenable retype (string vs long) is refused with a
+    * `SparkException` naming the column and both types: no exact cast
+    * conforms it, and a silently coerced read would be wrong. */
   private def layoutRelation(spark: SparkSession, warehouseDir: String,
       partNames: Seq[String],
-      batches: Seq[(String, BatchStats)]): Option[Seq[DataFrame]] = {
-    val distinctJsons = batches.map(_._2.schemaJson.get).distinct
-    mergeRecordedSchemas(distinctJsons) match {
-      case Some(exact) =>
+      batches: Seq[(String, BatchStats)]): Seq[DataFrame] = {
+    val jsons = batches.map(_._2.schemaJson).distinct
+    val schemas = jsons.map(parseSchema)
+    mergeRecordedSchemas(schemas, widening = false) match {
+      case Right(exact) =>
         // types agree exactly (possibly additive drift): ONE log-built
         // relation with the union schema — parquet fills absent
         // nullable columns with null (the r15 drift-window path)
-        layoutScan(spark, warehouseDir, partNames, batches, exact)
-          .map(Seq(_))
-      case None =>
-        // TYPE-WIDENING window (r16, VERDICT r15 #3): an int→long or
-        // float→double retype wave used to drop the whole table to
-        // the discovery union (the measured 80 s plan-cliff class at
-        // 1,001 commits) until a compaction unified it. Parquet-safe
-        // promotions instead plan one log-built relation PER recorded
-        // schema generation — each read AT ITS OWN recorded type —
-        // cast exactly to the widened union schema:
-        // bounded by distinct-schema count (1–2 in practice), never
-        // batch count, still zero listing/footer I/O. Zone pruning
-        // still fires across the window: Catalyst pushes the user
-        // filter through this cast projection (substituting and then
-        // unwrapping the cast against the literal), so each
-        // generation's branch reaches ZonePrune as a plain Filter
-        // over its ManifestFileIndex (PlanSpec-asserted).
-        val widened = mergeRecordedSchemas(distinctJsons,
-          widening = true).getOrElse(return None)
+        Seq(layoutScan(spark, warehouseDir, partNames, batches, exact))
+      case Left(_) =>
+        // TYPE-WIDENING window (r16, VERDICT r15 #3): Parquet-safe
+        // promotions plan one log-built relation PER recorded schema
+        // generation — each read AT ITS OWN recorded type — cast
+        // exactly to the widened union schema: bounded by
+        // distinct-schema count (1–2 in practice), never batch count.
+        // Zone pruning still fires across the window: Catalyst pushes
+        // the user filter through this cast projection (substituting
+        // and then unwrapping the cast against the literal), so each
+        // generation's branch reaches ZonePrune as a plain Filter over
+        // its ManifestFileIndex (PlanSpec-asserted).
+        val widened = mergeRecordedSchemas(schemas, widening = true) match {
+          case Right(w) => w
+          case Left((name, a, b)) =>
+            throw new org.apache.spark.SparkException(
+              s"committed batches of $warehouseDir record column '$name' " +
+              s"as both ${a.simpleString} and ${b.simpleString}: no exact " +
+              "cast reconciles the two, so the table cannot be read as " +
+              "one relation")
+        }
         import org.apache.spark.sql.functions.{col, lit}
-        val groups = {
-          val m = scala.collection.mutable.LinkedHashMap
-            .empty[String, Vector[(String, BatchStats)]]
-          for (b <- batches) {
-            val j = b._2.schemaJson.get
-            m(j) = m.getOrElse(j, Vector.empty) :+ b
-          }
-          m.toSeq
-        }
-        val rels = groups.map { case (json, g) =>
-          val own =
-            try org.apache.spark.sql.types.DataType.fromJson(json)
-              .asInstanceOf[StructType]
-            catch { case scala.util.control.NonFatal(_) => return None }
-          layoutScan(spark, warehouseDir, partNames, g, own)
-            .getOrElse(return None)
-        }
         // each generation stays a SEPARATE relation (Project over one
         // scan) so `_metadata` still resolves on it — the caller
         // unions after its DV filter / batch tagging (ADVICE r16 #1:
         // unioning here made merge/takedown throw and a DV'd widened
         // table unreadable)
-        Some(rels.map { rel =>
+        jsons.zip(schemas).map { case (json, own) =>
+          val rel = layoutScan(spark, warehouseDir, partNames,
+            batches.filter(_._2.schemaJson == json), own)
           val have = rel.columns.map(c => c.toLowerCase -> c).toMap
           rel.select(widened.fields.toSeq.map { f =>
             have.get(f.name.toLowerCase) match {
@@ -1095,7 +923,7 @@ object WarehouseLoad {
               case None => lit(null).cast(f.dataType).as(f.name)
             }
           }: _*)
-        })
+        }
     }
   }
 
@@ -1104,36 +932,38 @@ object WarehouseLoad {
     * exact and widened paths of [[layoutRelation]]. */
   private def layoutScan(spark: SparkSession, warehouseDir: String,
       partNames: Seq[String], batches: Seq[(String, BatchStats)],
-      schema: StructType): Option[DataFrame] = {
+      schema: StructType): DataFrame = {
     val base = new org.apache.hadoop.fs.Path(warehouseDir)
     val qBase = base
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
       .makeQualified(base)
-    def roots[T](mk: (String, Long, org.apache.hadoop.fs.FileStatus) => T) =
+    def roots[T](mk: (String, org.apache.hadoop.fs.FileStatus) => T) =
       batches.map { case (id, st) =>
         val root = new org.apache.hadoop.fs.Path(qBase, s"b$id")
-        root -> st.files.get.map { case (rel, len) =>
-          mk(rel, len, new org.apache.hadoop.fs.FileStatus(
+        root -> st.files.map { case (rel, len) =>
+          mk(rel, new org.apache.hadoop.fs.FileStatus(
             len, false, 1, 134217728L, 0L,
             new org.apache.hadoop.fs.Path(root, rel)))
         }
       }
     if (partNames.isEmpty)
-      return Some(org.apache.spark.sql.graftshim.GraftSqlShims
-        .parquetScan(spark,
-          new graft.plans.ManifestFileIndex(roots((_, _, st) => st)),
-          schema))
+      return org.apache.spark.sql.graftshim.GraftSqlShims.parquetScan(spark,
+        new graft.plans.ManifestFileIndex(roots((_, st) => st)), schema)
     val partFields = partNames.map(n =>
-      schema.fields.find(_.name.equalsIgnoreCase(n)).getOrElse(return None))
+      schema.fields.find(_.name.equalsIgnoreCase(n)).getOrElse(
+        throw new IllegalStateException(s"partition column '$n' of " +
+          s"$warehouseDir is missing from the recorded schema " +
+          s"${schema.simpleString}")))
     val partSchema = StructType(partFields.map(f =>
       StructField(f.name, f.dataType, nullable = true)))
     val dataSchema = StructType(schema.fields.filterNot(f =>
       partFields.exists(_.name == f.name)))
-    if (dataSchema.isEmpty) return None
-    graft.plans.ManifestFileIndex.partitioned(spark,
-        roots((rel, _, st) => rel -> st), partSchema)
-      .map(idx => org.apache.spark.sql.graftshim.GraftSqlShims
-        .parquetScan(spark, idx, dataSchema, partSchema))
+    val idx = graft.plans.ManifestFileIndex.partitioned(spark,
+        roots((rel, st) => rel -> st), partSchema)
+      .getOrElse(throw new IllegalStateException(s"a recorded partition " +
+        s"path of $warehouseDir does not parse as ${partSchema.simpleString}"))
+    org.apache.spark.sql.graftshim.GraftSqlShims
+      .parquetScan(spark, idx, dataSchema, partSchema)
   }
 
   /** The committed load history — one row per loaded source file:
@@ -1211,44 +1041,30 @@ object WarehouseLoad {
     loadedFileLists(spark, historyDir,
       committedBatches(spark, historyDir)).toSet
 
-  /** One relation over the per-file history dirs of `ids`. TIER 1
-    * (r14): every commit records its history dir's file list (`#hf`
-    * lines) — and the history schema is the protocol's own constant
-    * (one `file` string column) — so the usual case plans with ZERO
-    * filesystem listing, like [[manifestRelation]]. Any legacy batch
-    * falls back to the listing-based multi-root read. `None` when
-    * `ids` is empty. */
+  /** One relation over the per-file history dirs of `ids`, planned
+    * from the log like [[readBatchDirs]]: every commit records its
+    * history dir's file list (`#hf` lines) and the history schema is
+    * the protocol's own constant (one nullable `file` string column),
+    * so the scan lists nothing and opens no footer at plan time.
+    * `None` when no batch in `ids` holds a history file. */
   private def historyFileRelation(spark: SparkSession, historyDir: String,
-      ids: Seq[String]): Option[DataFrame] =
-    if (ids.isEmpty) None
-    else historyManifestRelation(spark, historyDir, ids).orElse(
-      Some(spark.read.parquet(ids.map(id => s"$historyDir/b$id"): _*)))
-
-  private def historyManifestRelation(spark: SparkSession,
-      historyDir: String, ids: Seq[String]): Option[DataFrame] = {
-    import scala.jdk.CollectionConverters._
-    val fetched =
-      new java.util.concurrent.ConcurrentHashMap[String, BatchStats]()
-    MetaPool.forEach(ids)(id =>
-      batchStats(spark, historyDir, id).foreach(st => fetched.put(id, st)))
-    val lists = ids.map(id => Option(fetched.get(id)).flatMap(_.histFiles))
-    if (lists.exists(_.isEmpty)) return None
+      ids: Seq[String]): Option[DataFrame] = {
     val base = new org.apache.hadoop.fs.Path(historyDir)
     val qBase = base
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
       .makeQualified(base)
-    val roots = ids.zip(lists.map(_.get)).collect {
-      case (id, files) if files.nonEmpty =>
+    val roots = ids.zip(manifests(spark, historyDir, ids)).collect {
+      case (id, st) if st.histFiles.nonEmpty =>
         val root = new org.apache.hadoop.fs.Path(qBase, s"b$id")
-        root -> files.map { case (rel, len) =>
+        root -> st.histFiles.map { case (rel, len) =>
           new org.apache.hadoop.fs.FileStatus(len, false, 1, 134217728L, 0L,
             new org.apache.hadoop.fs.Path(root, rel))
         }
     }
-    if (roots.isEmpty) return None
-    Some(org.apache.spark.sql.graftshim.GraftSqlShims.parquetScan(
-      spark, new graft.plans.ManifestFileIndex(roots),
-      StructType(Seq(StructField("file", StringType)))))
+    Option.when(roots.nonEmpty)(
+      org.apache.spark.sql.graftshim.GraftSqlShims.parquetScan(
+        spark, new graft.plans.ManifestFileIndex(roots),
+        StructType(Seq(StructField("file", StringType)))))
   }
 
   /** A merge's idempotence marker as it appears in batch ids. */
@@ -1370,14 +1186,15 @@ object WarehouseLoad {
         // version walk runs only in the rare dir-exists-but-uncommitted
         // branch; a crashed attempt's own orphans (in NO version) and a
         // concurrent identical writer (converging on one id is the
-        // content-derived idempotence feature) still reuse the id.
+        // content-derived idempotence feature) still reuse the id. The
+        // head is read once for the whole walk.
         def clobbersHistory(i: String): Boolean = {
           val p = new org.apache.hadoop.fs.Path(s"$historyDir/b$i")
           p.getFileSystem(spark.sparkContext.hadoopConfiguration)
             .exists(p) && {
             val head = currentVersion(spark, historyDir)
             (1L to head).exists(v =>
-              versionBatches(spark, historyDir, v).exists(_.contains(i)))
+              readVersionList(spark, historyDir, v).exists(_.contains(i)))
           }
         }
         while (committed.contains(id) || clobbersHistory(id))
@@ -1486,22 +1303,24 @@ object WarehouseLoad {
   final case class FileStats(rows: Option[Long],
                              cols: Map[String, ColStats])
 
-  /** Everything a batch's `_ZONEMAP` manifest records: per-column
-    * [[ColStats]], the batch row count at write time, and (r14) the
-    * SCHEMA the write job produced (`#s` line, Spark schema JSON) —
-    * the Delta "schema in the log" move: when every live batch of a
-    * table records the same schema, [[readBatchDirs]] passes it to the
-    * scan and skips the mergeSchema footer pass entirely (one footer
-    * GET per FILE on an object store; the dominant readWarehouse cost
-    * at 10k commits, CommitScale r14). Batches that predate the line,
-    * or a mix of schemas (a [[graft.schema.SchemaDrift]] evolution in
-    * flight), fall back to footer merging — absent is never wrong,
-    * only slower. */
+  /** Everything a batch's `_ZONEMAP` manifest records. Every commit
+    * records three things, and readers rely on them (a committed batch
+    * without them is corruption, see [[manifest]]):
+    *  - `schemaJson`: the SCHEMA the write job produced (`#s` line,
+    *    Spark schema JSON) — the Delta "schema in the log" move, so the
+    *    scan never merges footers;
+    *  - `files`: the batch data dir's files (`#fc`/`#f` lines, relative
+    *    path → length), the log-built scan's file set
+    *    ([[graft.plans.ManifestFileIndex]]); empty when the batch wrote
+    *    no rows;
+    *  - `histFiles`: the batch history dir's files (`#hfc`/`#hf`).
+    * Column stats ([[ColStats]]) and the row count are recorded only
+    * when the write observed them — absent stats read as "must scan". */
   final case class BatchStats(cols: Map[String, ColStats],
                               rows: Option[Long],
-                              schemaJson: Option[String] = None,
-                              files: Option[Seq[(String, Long)]] = None,
-                              histFiles: Option[Seq[(String, Long)]] = None,
+                              schemaJson: String,
+                              files: Seq[(String, Long)],
+                              histFiles: Seq[(String, Long)],
                               // per-FILE stats (r16): rel path →
                               // [[FileStats]]; an absent (file, col)
                               // is "must scan"
@@ -1609,7 +1428,10 @@ object WarehouseLoad {
     *  - `S <col> <lo> <hi>` — string interval;
     *  - `#d <col> <v1> … <vk>` — distinct-value dictionary;
     *  - `#n <col> <nulls>` — per-column null count;
-    *  - `#c <rows>` — batch row count.
+    *  - `#c <rows>` — batch row count;
+    *  - `#s <schema json>`, `#fc <n>` + `#f <rel> <len>` (data files),
+    *    `#hfc <n>` + `#hf <rel> <len>` (history files) — the records
+    *    every commit writes ([[BatchStats]]).
     * The `#`-prefixed tags cannot collide with an encoded column name
     * (URL-encoding never emits a literal `#`), so old and new readers
     * parse each other's manifests — unknown lines are ignored, absent
@@ -1621,18 +1443,10 @@ object WarehouseLoad {
       "S " + enc(c) + " " + enc(lo) + " " + enc(hi)
   }
 
-  private def encodeZoneMap(entries: Seq[(String, ColStats)],
-                            rows: Option[Long],
-                            schemaJson: Option[String] = None,
-                            files: Option[Seq[(String, Long)]] = None,
-                            histFiles: Option[Seq[(String, Long)]] = None,
-                            fileStats: Map[String, FileStats] =
-                              Map.empty,
-                            dv: Map[String, DvVector] = Map.empty)
-      : String = {
-    def fileLines(tag: String, fs: Option[Seq[(String, Long)]]) =
-      fs.toSeq.flatMap(l => s"#${tag}c ${l.size}" +:
-        l.map { case (rel, len) => s"#$tag ${enc(rel)} $len" })
+  private def encodeZoneMap(st: BatchStats): String = {
+    def fileLines(tag: String, fs: Seq[(String, Long)]) =
+      s"#${tag}c ${fs.size}" +:
+        fs.map { case (rel, len) => s"#$tag ${enc(rel)} $len" }
     // per-file stats (r16): `#z <rel> <col> <lo> <hi>` numeric interval
     // (one-ulp-widened like the batch lines), `#zS` string interval,
     // `#zc <rel> <rows>` row count, `#zn <rel> <col> <nulls>` null
@@ -1641,12 +1455,11 @@ object WarehouseLoad {
     // ([[DvVector.encode]]) — chunked at 512 runs/line so no line
     // grows unbounded; a rel's lines are written (and must be read)
     // in order, each chunk's first gap relative to the previous
-    // chunk's end. Legacy `#dv <rel> <i1,i2,…>` raw-index lines are
-    // still READ (r16 manifests), never written.
-    val dvLines = dv.toSeq.sortBy(_._1).flatMap { case (rel, vec) =>
+    // chunk's end
+    val dvLines = st.dv.toSeq.sortBy(_._1).flatMap { case (rel, vec) =>
       vec.encodeChunks(512).map(c => s"#dvr ${enc(rel)} $c")
     }
-    val fzLines = fileStats.toSeq.sortBy(_._1).flatMap { case (rel, fst) =>
+    val fzLines = st.fileStats.toSeq.sortBy(_._1).flatMap { case (rel, fst) =>
       fst.rows.map(r => s"#zc ${enc(rel)} $r").toSeq ++
         fst.cols.toSeq.sortBy(_._1).flatMap { case (c, cs) =>
           cs.zone.map {
@@ -1658,58 +1471,56 @@ object WarehouseLoad {
             cs.nulls.map(n => s"#zn ${enc(rel)} ${enc(c)} $n")
         }
     }
-    val lines = rows.map(r => s"#c $r").toSeq ++
-      schemaJson.map(s => s"#s ${enc(s)}") ++
-      fileLines("f", files) ++ fileLines("hf", histFiles) ++ dvLines ++
-      fzLines ++
-      entries.flatMap { case (c, st) =>
-        st.zone.map(encodeZoneLine(c, _)).toSeq ++
-          st.dict.map(d =>
+    val lines = st.rows.map(r => s"#c $r").toSeq ++
+      Seq(s"#s ${enc(st.schemaJson)}") ++
+      fileLines("f", st.files) ++ fileLines("hf", st.histFiles) ++
+      dvLines ++ fzLines ++
+      st.cols.toSeq.sortBy(_._1).flatMap { case (c, cs) =>
+        cs.zone.map(encodeZoneLine(c, _)).toSeq ++
+          cs.dict.map(d =>
             ("#d" +: enc(c) +: d.toSeq.sorted.map(enc)).mkString(" ")) ++
-          st.nulls.map(n => s"#n ${enc(c)} $n")
+          cs.nulls.map(n => s"#n ${enc(c)} $n")
       }
     lines.mkString("\n")
   }
 
   /** Attach the zone-map observation to a batch about to be written:
-    * per-column min/max + null count (+ the bounded distinct set for
-    * strings) and the batch row count, all collected by the write job
-    * itself (CollectMetrics — zero extra scans, bounded memory: the
-    * dictionary aggregate clears itself past [[DictMax]]). */
+    * the batch row count plus per-column min/max + null count (+ the
+    * bounded distinct set for strings) of its zone-mappable columns,
+    * all collected by the write job itself (CollectMetrics — zero extra
+    * scans, bounded memory: the dictionary aggregate clears itself past
+    * [[DictMax]]). */
   private def observeZones(df: DataFrame):
-      (DataFrame, Option[Observation], Seq[StructField]) = {
+      (DataFrame, Observation, Seq[StructField]) = {
     import org.apache.spark.sql.functions.{col, count, lit, max, min}
     import org.apache.spark.sql.GraftSqlBridge.{column, expression}
     val zcols = zoneMapCols(df.schema)
-    if (zcols.isEmpty) (df, None, zcols)
-    else {
-      val zobs = new Observation()
-      val zaggs = count(lit(1)).as("zrows__") +: zcols.flatMap { f =>
-        val dict = f.dataType match {
-          case StringType => Seq(column(
+    val zobs = new Observation()
+    val zaggs = count(lit(1)).as("zrows__") +: zcols.flatMap { f =>
+      val dict = f.dataType match {
+        case StringType => Seq(column(
+          graft.functions.BoundedDistinct(
+            expression(col(f.name)), DictMax).toAggregateExpression())
+          .as(s"zdict__${f.name}"))
+        // integral columns dictionary too (r14): `shard = 3` /
+        // `year IN (…)` probes on low-NDV ints are as common as the
+        // string class and intervals cannot prune them when batches
+        // mix values. Canonical form = Spark's own integral→string
+        // cast (exact decimal), matched literal-side by ZonePrune.
+        case ByteType | ShortType | IntegerType | LongType =>
+          Seq(column(
             graft.functions.BoundedDistinct(
-              expression(col(f.name)), DictMax).toAggregateExpression())
+              expression(col(f.name).cast(StringType)), DictMax)
+              .toAggregateExpression())
             .as(s"zdict__${f.name}"))
-          // integral columns dictionary too (r14): `shard = 3` /
-          // `year IN (…)` probes on low-NDV ints are as common as the
-          // string class and intervals cannot prune them when batches
-          // mix values. Canonical form = Spark's own integral→string
-          // cast (exact decimal), matched literal-side by ZonePrune.
-          case ByteType | ShortType | IntegerType | LongType =>
-            Seq(column(
-              graft.functions.BoundedDistinct(
-                expression(col(f.name).cast(StringType)), DictMax)
-                .toAggregateExpression())
-              .as(s"zdict__${f.name}"))
-          case _ => Nil
-        }
-        Seq(
-          min(col(f.name)).as(s"zmin__${f.name}"),
-          max(col(f.name)).as(s"zmax__${f.name}"),
-          count(col(f.name)).as(s"znn__${f.name}")) ++ dict
+        case _ => Nil
       }
-      (df.observe(zobs, zaggs.head, zaggs.tail: _*), Some(zobs), zcols)
+      Seq(
+        min(col(f.name)).as(s"zmin__${f.name}"),
+        max(col(f.name)).as(s"zmax__${f.name}"),
+        count(col(f.name)).as(s"znn__${f.name}")) ++ dict
     }
+    (df.observe(zobs, zaggs.head, zaggs.tail: _*), zobs, zcols)
   }
 
   /** One recursive listing of a just-written batch dir — the WRITER's
@@ -1748,12 +1559,12 @@ object WarehouseLoad {
     * bit-compatible with the write it replaces: same dir layout, same
     * parquet schema (`optional binary file (STRING)` = the nullable
     * `file` StringType column Spark's own writer produced), snappy
-    * codec, so every reader — `spark.read.parquet` fallback, the
-    * manifest-planned [[historyManifestRelation]], [[loadedFiles]]'
-    * `_metadata.file_path` batch extraction — sees exactly what it saw
-    * before. An EMPTY list writes a zero-row file with the schema in
-    * the footer (the streamed-epoch shape), which Spark reads as the
-    * same empty one-column relation the old empty write produced. */
+    * codec. The log-built [[historyFileRelation]] is its only reader
+    * (it hands the scan that schema instead of reading the footer), so
+    * a PlanSpec differential pins the file against Spark's own
+    * `spark.read.parquet`: same rows, same nullable `file STRING`
+    * schema. An EMPTY list writes a zero-row file with the schema in
+    * the footer (the streamed-epoch shape). */
   private def writeHistoryList(spark: SparkSession, dir: String,
       files: Seq[String]): Unit = {
     import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
@@ -1822,54 +1633,53 @@ object WarehouseLoad {
     * over-cap dictionaries and over-long strings record no dict/interval
     * respectively — absent is always "must scan". */
   private def writeZoneMap(spark: SparkSession, warehouseDir: String,
-      historyDir: String, id: String, zobs: Option[Observation],
-      zcols: Seq[StructField], schema: StructType): Unit =
-    zobs.foreach { o =>
-      val rows = o.get("zrows__").asInstanceOf[Long]
-      val entries = zcols.flatMap { f =>
-        val zone =
-          (f.dataType, o.get(s"zmin__${f.name}"), o.get(s"zmax__${f.name}")) match {
-            case (StringType, lo: String, hi: String)
-                if lo.length <= ZoneStrMax && hi.length <= ZoneStrMax =>
-              Some(StrZone(lo, hi))
-            case (StringType, _, _) => None // null or over-long
-            case (dt, loAny, hiAny) =>
-              // Timestamp values truncate to whole milliseconds in the
-              // double encoding (getTime floors sub-ms precision),
-              // which a one-ulp widening cannot cover — pad temporal
-              // intervals a full millisecond outward so the recorded
-              // range never understates the true one (the superset
-              // contract).
-              val pad = dt match {
-                case TimestampType => 1.0
-                case _ => 0.0
-              }
-              for {
-                lo <- zoneVal(loAny)
-                hi <- zoneVal(hiAny)
-              } yield NumZone(lo - pad, hi + pad)
-          }
-        val dict = f.dataType match {
-          case StringType | ByteType | ShortType | IntegerType | LongType =>
-            Option(o.get(s"zdict__${f.name}"))
-              .map(_.asInstanceOf[Seq[String]].toSet)
-              .filter(d => d.nonEmpty && d.forall(_.length <= ZoneStrMax))
-          case _ => None
+      historyDir: String, id: String, o: Observation,
+      zcols: Seq[StructField], schema: StructType): Unit = {
+    val rows = o.get("zrows__").asInstanceOf[Long]
+    val entries = zcols.flatMap { f =>
+      val zone =
+        (f.dataType, o.get(s"zmin__${f.name}"), o.get(s"zmax__${f.name}")) match {
+          case (StringType, lo: String, hi: String)
+              if lo.length <= ZoneStrMax && hi.length <= ZoneStrMax =>
+            Some(StrZone(lo, hi))
+          case (StringType, _, _) => None // null or over-long
+          case (dt, loAny, hiAny) =>
+            // Timestamp values truncate to whole milliseconds in the
+            // double encoding (getTime floors sub-ms precision),
+            // which a one-ulp widening cannot cover — pad temporal
+            // intervals a full millisecond outward so the recorded
+            // range never understates the true one (the superset
+            // contract).
+            val pad = dt match {
+              case TimestampType => 1.0
+              case _ => 0.0
+            }
+            for {
+              lo <- zoneVal(loAny)
+              hi <- zoneVal(hiAny)
+            } yield NumZone(lo - pad, hi + pad)
         }
-        val nulls = o.get(s"znn__${f.name}") match {
-          case nn: java.lang.Long => Some(rows - nn.longValue())
-          case _ => None
-        }
-        val st = ColStats(zone, dict, nulls)
-        if (st.zone.isEmpty && st.dict.isEmpty && st.nulls.isEmpty) None
-        else Some(f.name -> st)
+      val dict = f.dataType match {
+        case StringType | ByteType | ShortType | IntegerType | LongType =>
+          Option(o.get(s"zdict__${f.name}"))
+            .map(_.asInstanceOf[Seq[String]].toSet)
+            .filter(d => d.nonEmpty && d.forall(_.length <= ZoneStrMax))
+        case _ => None
       }
-      val dataFiles = listBatchFiles(spark, s"$warehouseDir/b$id")
-      AtomicManifest.write(spark, s"$historyDir/b$id", ZoneMapFile,
-        encodeZoneMap(entries, Some(rows), Some(schema.json),
-          Some(dataFiles), Some(listBatchFiles(spark, s"$historyDir/b$id")),
-          FileZones.read(spark, s"$warehouseDir/b$id", dataFiles, schema)))
+      val nulls = o.get(s"znn__${f.name}") match {
+        case nn: java.lang.Long => Some(rows - nn.longValue())
+        case _ => None
+      }
+      val st = ColStats(zone, dict, nulls)
+      if (st.zone.isEmpty && st.dict.isEmpty && st.nulls.isEmpty) None
+      else Some(f.name -> st)
     }
+    val dataFiles = listBatchFiles(spark, s"$warehouseDir/b$id")
+    AtomicManifest.write(spark, s"$historyDir/b$id", ZoneMapFile,
+      encodeZoneMap(BatchStats(entries.toMap, Some(rows), schema.json,
+        dataFiles, listBatchFiles(spark, s"$historyDir/b$id"),
+        FileZones.read(spark, s"$warehouseDir/b$id", dataFiles, schema))))
+  }
 
   /** Write `df` as batch `id` with FRESH stats — the shared write of
     * every writer that produces new rows (load, streamed epoch, merge's
@@ -1881,20 +1691,16 @@ object WarehouseLoad {
     * as-written values — zero extra scans. `dataWritten` runs after the
     * data write (the load's coverage guard and crash seam),
     * `writeHistory` writes the batch's history dir, and the zone map
-    * comes last because it records both dirs' file lists. A plan that
-    * still reads as streaming (an exotic source leaf the sink's
-    * flag-strip doesn't cover) commits without a zone map rather than
-    * failing the epoch; the CHECK guard composes with it, so it is
-    * enforced either way (ADVICE r14). `splitBytes` is the batch's
-    * input size for [[withLoadSplitTuning]] (0 = no tuning). */
+    * comes last because it records both dirs' file lists.
+    * `splitBytes` is the batch's input size for [[withLoadSplitTuning]]
+    * (0 = no tuning). */
   private def writeBatch(spark: SparkSession, warehouseDir: String,
       historyDir: String, id: String, df: DataFrame,
       partitionCols: Seq[String], writeHistory: => Unit,
       splitBytes: Long = 0L, dataWritten: => Unit = ()): Unit = {
     publishIntent(spark, historyDir, id)
     val checked = applyChecks(spark, historyDir, df)
-    val (toWrite, zobs, zcols) =
-      if (df.isStreaming) (checked, None, Nil) else observeZones(checked)
+    val (toWrite, zobs, zcols) = observeZones(checked)
     rethrowCheck { rethrowStrict {
       withLoadSplitTuning(spark, splitBytes) { tuned =>
         // when the scan was split below one-task-per-file for parse
@@ -1945,9 +1751,10 @@ object WarehouseLoad {
 
   /** The batch's zone map — per-column [min, max] intervals recorded by
     * the load's OWN write job (a CollectMetrics observation — zero
-    * extra scans). `None` for batches without one (readers treat as
-    * must-scan, so stats are an optimization, never a correctness
-    * dependency). Intervals stay valid forever: batch dirs are
+    * extra scans). `None` when `id` has no manifest (no committed batch
+    * does); an absent interval reads as must-scan, so stats are an
+    * optimization, never a correctness dependency. Intervals stay
+    * valid forever: batch dirs are
     * immutable, and row-removing rewrites only ever SHRINK the true
     * range.
     *
@@ -1984,7 +1791,7 @@ object WarehouseLoad {
     * that actually scale — per-file stats entries and DV runs. */
   private def statsWeight(st: BatchStats): Long =
     1024L +
-      st.files.map(_.size.toLong * 96L).getOrElse(0L) +
+      st.files.size.toLong * 96L +
       st.fileStats.valuesIterator
         .map(f => 128L + f.cols.size.toLong * 128L).sum +
       st.dv.valuesIterator.map(v => 64L + v.runCount.toLong * 48L).sum
@@ -2006,9 +1813,11 @@ object WarehouseLoad {
     }
   }
 
-  /** The batch's full recorded stats — intervals, dictionaries, null
-    * counts, row count. Same cache and conservatism contract as
-    * [[zoneMap]] (which is now a view over this). */
+  /** The batch's full recorded manifest — schema, file lists,
+    * intervals, dictionaries, null counts, row count. Same cache and
+    * conservatism contract as [[zoneMap]] (which is a view over this).
+    * `None` when `id` has no manifest; a manifest without its schema
+    * or file lists throws. */
   def batchStats(spark: SparkSession, historyDir: String,
                  id: String): Option[BatchStats] = {
     val p = new org.apache.hadoop.fs.Path(s"$historyDir/b$id", ZoneMapFile)
@@ -2030,6 +1839,27 @@ object WarehouseLoad {
               id: String): Option[Map[String, Zone]] =
     batchStats(spark, historyDir, id).map(_.zones)
 
+  /** The manifest of COMMITTED batch `id` — every commit writes one
+    * ([[BatchStats]]), so its absence is corruption and fails loudly,
+    * naming the batch, the way [[headBatches]] fails on a missing head
+    * manifest. */
+  private[graft] def manifest(spark: SparkSession, historyDir: String,
+                              id: String): BatchStats =
+    batchStats(spark, historyDir, id).getOrElse(
+      throw corrupt(historyDir, id, "it has no _ZONEMAP manifest"))
+
+  /** [[manifest]] for each of `ids`, in order, fetched in PARALLEL
+    * (driver-side metadata calls: a 10k-batch walk spent ~20 s reading
+    * manifests one at a time, CommitScale r14). */
+  private def manifests(spark: SparkSession, historyDir: String,
+                        ids: Seq[String]): Seq[BatchStats] = {
+    val fetched =
+      new java.util.concurrent.ConcurrentHashMap[String, BatchStats]()
+    MetaPool.forEach(ids)(id =>
+      fetched.put(id, manifest(spark, historyDir, id)))
+    ids.map(fetched.get)
+  }
+
   private def dec(s: String): String = java.net.URLDecoder.decode(s, "UTF-8")
 
   private def readZoneMap(spark: SparkSession, historyDir: String,
@@ -2037,10 +1867,11 @@ object WarehouseLoad {
     AtomicManifest.read(spark, s"$historyDir/b$id", ZoneMapFile).map { txt =>
       var rows = Option.empty[Long]
       var schema = Option.empty[String]
-      // file lists: the `#fc`/`#hfc` count line marks "recorded" (an
-      // empty recorded list is meaningful — the batch wrote no parts —
-      // and distinct from a legacy manifest that recorded nothing)
-      var filesRec = false; var histRec = false
+      // file lists: the `#fc`/`#hfc` line records the list's length, so
+      // a manifest that lost file lines is caught, not read as fewer
+      // files (an empty recorded list is meaningful — the batch wrote
+      // no parts)
+      var filesCount = Option.empty[Int]; var histCount = Option.empty[Int]
       val files = Seq.newBuilder[(String, Long)]
       val hist = Seq.newBuilder[(String, Long)]
       val zones = Map.newBuilder[String, Zone]
@@ -2053,18 +1884,15 @@ object WarehouseLoad {
       val fzRows = scala.collection.mutable.LinkedHashMap
         .empty[String, Long]
       // rel → (runs so far, running exclusive end for the delta-RLE
-      // chunks); legacy raw-index `#dv` lines accumulate rows apart
-      // and merge at the end
+      // chunks)
       val dvs = scala.collection.mutable.LinkedHashMap
         .empty[String, (Vector[(Long, Long)], Long)]
-      val dvLegacy = scala.collection.mutable.LinkedHashMap
-        .empty[String, Vector[Long]]
       txt.linesIterator.foreach { line =>
         line.split(" ") match {
           case Array("#c", r) => rows = r.toLongOption
           case Array("#s", s) => schema = Some(dec(s))
-          case Array("#fc", _) => filesRec = true
-          case Array("#hfc", _) => histRec = true
+          case Array("#fc", n) => filesCount = n.toIntOption
+          case Array("#hfc", n) => histCount = n.toIntOption
           case Array("#f", rel, len) =>
             len.toLongOption.foreach(l => files += dec(rel) -> l)
           case Array("#hf", rel, len) =>
@@ -2085,10 +1913,6 @@ object WarehouseLoad {
             val (runs, newEnd) =
               DvVector.decodeInto(chunk, prevEnd, first = have.isEmpty)
             dvs(r) = (have ++ runs, newEnd)
-          case Array("#dv", rel, csv) => // legacy r16 raw indexes
-            val r = dec(rel)
-            dvLegacy(r) = dvLegacy.getOrElse(r, Vector.empty) ++
-              csv.split(",").iterator.flatMap(_.toLongOption)
           case Array("#zn", rel, c, n) =>
             n.toLongOption.foreach(v => fzNulls((dec(rel), dec(c))) = v)
           case Array("#n", c, n) =>
@@ -2123,20 +1947,21 @@ object WarehouseLoad {
         }.toMap
         rel -> FileStats(fzRows.get(rel), fcols)
       }.toMap
-      val dvMap = (dvs.keysIterator ++ dvLegacy.keysIterator)
-        .toSeq.distinct.map { r =>
-          val fromRuns = dvs.get(r).map { case (runs, _) =>
-            DvVector.fromRuns(runs)
-          }.getOrElse(DvVector.empty)
-          val fromLegacy = dvLegacy.get(r).map(DvVector.fromRows)
-            .getOrElse(DvVector.empty)
-          r -> fromRuns.merge(fromLegacy)
-        }.toMap
-      BatchStats(cols, rows, schema,
-        if (filesRec) Some(files.result()) else None,
-        if (histRec) Some(hist.result()) else None,
-        fileStats,
-        dvMap)
+      val dvMap = dvs.map { case (r, (runs, _)) =>
+        r -> DvVector.fromRuns(runs)
+      }.toMap
+      def recorded(what: String, count: Option[Int],
+                   list: Seq[(String, Long)]): Seq[(String, Long)] =
+        if (count.contains(list.size)) list
+        else throw corrupt(historyDir, id,
+          s"its manifest records ${list.size} $what line(s) against a " +
+          s"count of ${count.getOrElse("none")}")
+      BatchStats(cols, rows,
+        schema.getOrElse(throw corrupt(historyDir, id,
+          "its manifest records no schema")),
+        recorded("data file", filesCount, files.result()),
+        recorded("history file", histCount, hist.result()),
+        fileStats, dvMap)
     }
 
   /** Committed batch ids whose zone interval for `column` overlaps the
@@ -2342,9 +2167,9 @@ object WarehouseLoad {
   /** One row per batch in the committed HEAD — the DESCRIBE DETAIL
     * analog at batch granularity, from the recorded manifests alone
     * (cached metadata, no listing, no scan): `(batch, position,
-    * n_rows, n_bytes, n_files, n_stat_cols)`. Nulls where a legacy
-    * batch recorded nothing — absent stats read as unknown, never
-    * guessed. `n_rows` is the AT-WRITE count each manifest records:
+    * n_rows, n_bytes, n_files, n_stat_cols)`. `n_rows` is null where
+    * the write observed no row count — absent stats read as unknown,
+    * never guessed. `n_rows` is the AT-WRITE count each manifest records:
     * a takedown-rewritten batch carries its map forward, so the
     * figure can overstate the live count (the same superset contract
     * the pruning stats rely on) — count the relation for exactness. */
@@ -2352,20 +2177,13 @@ object WarehouseLoad {
                         historyDir: String): DataFrame = {
     import spark.implicits._
     val ids = committedBatches(spark, historyDir)
-    import scala.jdk.CollectionConverters._
-    val fetched =
-      new java.util.concurrent.ConcurrentHashMap[String, BatchStats]()
-    MetaPool.forEach(ids)(id =>
-      batchStats(spark, historyDir, id).foreach(st => fetched.put(id, st)))
-    ids.zipWithIndex.map { case (id, i) =>
-      val st = Option(fetched.get(id))
-      (id, i.toLong,
-        st.flatMap(_.rows).map(java.lang.Long.valueOf).orNull,
-        st.flatMap(_.files).map(f => java.lang.Long.valueOf(f.map(_._2).sum))
-          .orNull,
-        st.flatMap(_.files).map(f => java.lang.Long.valueOf(f.size.toLong))
-          .orNull,
-        st.map(s => s.cols.size.toLong).map(java.lang.Long.valueOf).orNull)
+    ids.zip(manifests(spark, historyDir, ids)).zipWithIndex.map {
+      case ((id, st), i) =>
+        (id, i.toLong,
+          st.rows.map(java.lang.Long.valueOf).orNull,
+          java.lang.Long.valueOf(st.files.map(_._2).sum),
+          java.lang.Long.valueOf(st.files.size.toLong),
+          java.lang.Long.valueOf(st.cols.size.toLong))
     }.toDF("batch", "position", "n_rows", "n_bytes", "n_files",
       "n_stat_cols")
   }
@@ -2606,35 +2424,27 @@ object WarehouseLoad {
     * tail, so repeated application keeps the root count bounded with
     * write amplification logarithmic in table size (the LSM
     * size-tiering argument), instead of rewriting the accumulated
-    * bulk every pass. Batches WITHOUT a recorded file list (legacy
-    * manifests) have unknown size and are conservatively left alone —
-    * fold those with the full [[compactCommitted]]. Same CAS/abort
-    * semantics as the full fold. Returns the number of batches folded
+    * bulk every pass. Same CAS/abort semantics as the full fold. Returns the number of batches folded
     * (0 = nothing small enough, no version churn). */
   def compactSmall(spark: SparkSession, warehouseDir: String,
                    historyDir: String, smallBytes: Long,
                    minBatches: Int = 2,
                    partitionCols: Seq[String] = Nil): Int =
     compactWithFailpoint(spark, warehouseDir, historyDir, minBatches,
-      partitionCols, select = ids => {
-        import scala.jdk.CollectionConverters._
-        val sizes =
-          new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-        MetaPool.forEach(ids)(id =>
-          batchBytes(spark, historyDir, id).foreach(b => sizes.put(id, b)))
-        ids.filter(id => Option(sizes.get(id)).exists(_ <= smallBytes))
-      })
+      partitionCols, select = ids =>
+        ids.zip(manifests(spark, historyDir, ids)).collect {
+          case (id, st) if st.files.map(_._2).sum <= smallBytes => id
+        })
 
   /** Salt width for a partitioned fold write: one slice per 512 MB of
     * the fold's METADATA-known input bytes, capped at 64 — so the
     * hash-to-partition-group shuffle that bounds the committer's file
     * set can never also serialize a fat partition value into a single
-    * straggler task (r15 review #3). Legacy batches without recorded
-    * sizes contribute 0 (conservatively fewer slices — correctness is
-    * unaffected, only file granularity). */
+    * straggler task (r15 review #3). */
   private def foldSlices(spark: SparkSession, historyDir: String,
                          ids: Seq[String]): Int = {
-    val bytes = ids.flatMap(id => batchBytes(spark, historyDir, id)).sum
+    val bytes = manifests(spark, historyDir, ids)
+      .map(_.files.map(_._2).sum).sum
     math.max(1L, math.min(64L, bytes / (512L << 20) + 1)).toInt
   }
 
@@ -2645,20 +2455,17 @@ object WarehouseLoad {
     * wrapping the Morton curve and destroying the per-file envelopes
     * the Z-order exists to tighten. When every input records both
     * columns' intervals, size the width to the larger max (clamped to
-    * [16, 31] so two dims stay in one long); any unknown falls back to
-    * 16 — the pre-r16 behavior, layout-degraded but never wrong. */
+    * [16, 31] so two dims stay in one long); an unrecorded interval
+    * falls back to 16 — the pre-r16 behavior, layout-degraded but
+    * never wrong. */
   private def zBitsFor(spark: SparkSession, historyDir: String,
       ids: Seq[String], a: String, b: String): Int = {
-    val his = ids.flatMap { id =>
-      batchStats(spark, historyDir, id) match {
-        case None => return 16
-        case Some(st) =>
-          Seq(a, b).map { c =>
-            st.colStats(c).flatMap(_.zone) match {
-              case Some(NumZone(_, hi)) => hi
-              case _ => return 16
-            }
-          }
+    val his = manifests(spark, historyDir, ids).flatMap { st =>
+      Seq(a, b).map { c =>
+        st.colStats(c).flatMap(_.zone) match {
+          case Some(NumZone(_, hi)) => hi
+          case _ => return 16
+        }
       }
     }
     val mx = his.max
@@ -2668,12 +2475,11 @@ object WarehouseLoad {
   }
 
   /** A batch's recorded data size in bytes — the sum of its manifest's
-    * file-list lengths. `None` for legacy batches without the record
-    * (size unknown — callers must treat as "not small"). Metadata
+    * file-list lengths; `None` when `id` has no manifest. Metadata
     * only: one cached manifest read. */
   def batchBytes(spark: SparkSession, historyDir: String,
                  id: String): Option[Long] =
-    batchStats(spark, historyDir, id).flatMap(_.files).map(_.map(_._2).sum)
+    batchStats(spark, historyDir, id).map(_.files.map(_._2).sum)
 
   private[graft] def compactWithFailpoint(spark: SparkSession,
       warehouseDir: String, historyDir: String, minBatches: Int = 2,
@@ -2697,7 +2503,7 @@ object WarehouseLoad {
       zorder: Option[(String, String, Int)] = None): Option[Int] = {
     val committed = committedBatches(spark, historyDir)
     val selected = select(committed)
-    if (selected.size < minBatches) return Some(0)
+    if (selected.isEmpty || selected.size < minBatches) return Some(0)
     val id = "compact-" + java.util.UUID.nameUUIDFromBytes(
       selected.mkString("\n").getBytes("UTF-8")).toString.take(16)
     publishIntent(spark, historyDir, id)
@@ -2750,24 +2556,8 @@ object WarehouseLoad {
     val foldHist = loadedFileLists(spark, historyDir, selected)
     writeHistoryList(spark, s"$historyDir/b$id", foldHist)
     seedLoadedFiles(historyDir, id, foldHist)
-    // the folded batch's zone map is the interval union of its inputs
-    // (a column only survives if EVERY input recorded it — a missing
-    // interval means an unknown range, and a merged map must never
-    // understate one). Metadata-only, no scan. The fold's schema is
-    // the UNION relation's own (footer-merged) schema — exact even
-    // when the inputs straddle a SchemaDrift evolution.
-    val foldFiles = listBatchFiles(spark, s"$warehouseDir/b$id")
-    mergeZoneMaps(spark, historyDir, selected, id,
-      foldRelation.map(_.schema),
-      Some(foldFiles),
-      Some(listBatchFiles(spark, s"$historyDir/b$id")),
-      // per-FILE stats of the fold's OWN files (r16): this is where
-      // the tier pays — a Z-ordered fold gives every file a tight
-      // envelope on both dims, and recording it keeps range predicates
-      // pruning k-of-n FILES after batch-root pruning went to 1 root
-      foldRelation.map(rel => FileZones.read(spark,
-          s"$warehouseDir/b$id", foldFiles, rel.schema))
-        .getOrElse(Map.empty))
+    mergeZoneMaps(spark, warehouseDir, historyDir, selected, id,
+      foldRelation.map(_.schema))
     failpoint("fold-written")
     // CAS derive: batches committed AFTER the fold's snapshot (a load
     // that raced the compaction) are NOT in the folded batch — retain
@@ -2803,60 +2593,47 @@ object WarehouseLoad {
     if (aborted) None else Some(selected.size)
   }
 
-  /** The folded batch's zone map: the per-column stat union of its
-    * inputs (a column's stat only survives if EVERY input recorded it
-    * — a missing interval/dict/count means an unknown range, and a
-    * merged map must never understate one). Intervals union, dicts
-    * union (dropped past [[DictMax]]), null counts and row counts
-    * add. Metadata-only, no scan. */
-  private def mergeZoneMaps(spark: SparkSession, historyDir: String,
-      inputs: Seq[String], id: String,
-      foldSchema: Option[StructType] = None,
-      foldFiles: Option[Seq[(String, Long)]] = None,
-      foldHist: Option[Seq[(String, Long)]] = None,
-      foldFileStats: Map[String, FileStats] = Map.empty): Unit = {
-    // parallel stats fetch (same shape as liveBatchInfo): a 10k-input
-    // fold spent ~20 s reading manifests one at a time (CommitScale r14)
-    val fetched = {
-      import scala.jdk.CollectionConverters._
-      val m = new java.util.concurrent.ConcurrentHashMap[String, BatchStats]()
-      MetaPool.forEach(inputs)(in =>
-        batchStats(spark, historyDir, in).foreach(st => m.put(in, st)))
-      m
-    }
-    val inputStats = inputs.map(in => Option(fetched.get(in)))
-    if (inputStats.nonEmpty && inputStats.forall(_.isDefined)) {
-      val stats = inputStats.map(_.get)
-      val rows =
-        if (stats.forall(_.rows.isDefined)) Some(stats.flatMap(_.rows).sum)
+  /** The folded batch's manifest. Its column stats are the per-column
+    * union of its inputs' (a column's stat only survives if EVERY input
+    * recorded it — a missing interval/dict/count means an unknown range,
+    * and a merged map must never understate one): intervals union,
+    * dicts union (dropped past [[DictMax]]), null counts and row counts
+    * add — metadata-only, no scan. Its schema is the fold relation's
+    * own (`foldSchema` — exact even when the inputs straddle a
+    * SchemaDrift evolution), or, for a fold whose inputs wrote no
+    * files, the newest input's recorded one; its file lists and
+    * per-FILE stats are the fold's own (r16: a Z-ordered fold gives
+    * every file a tight envelope on both dims, and recording it keeps
+    * range predicates pruning k-of-n FILES after batch-root pruning
+    * went to 1 root). */
+  private def mergeZoneMaps(spark: SparkSession, warehouseDir: String,
+      historyDir: String, inputs: Seq[String], id: String,
+      foldSchema: Option[StructType]): Unit = {
+    val stats = manifests(spark, historyDir, inputs)
+    val rows =
+      if (stats.forall(_.rows.isDefined)) Some(stats.flatMap(_.rows).sum)
+      else None
+    val shared = stats.map(_.cols.keySet).reduce(_ intersect _)
+    val merged = shared.toSeq.flatMap { c =>
+      val cs = stats.map(_.cols(c))
+      val zone = cs.map(_.zone)
+        .reduce((a, b) => a.zip(b).flatMap { case (x, y) => zoneUnion(x, y) })
+      val dict = cs.map(_.dict)
+        .reduce((a, b) => a.zip(b).map { case (x, y) => x ++ y })
+        .filter(_.size <= DictMax)
+      val nulls =
+        if (cs.forall(_.nulls.isDefined)) Some(cs.flatMap(_.nulls).sum)
         else None
-      val shared = stats.map(_.cols.keySet).reduce(_ intersect _)
-      val merged = shared.toSeq.sorted.flatMap { c =>
-        val cs = stats.map(_.cols(c))
-        val zone = cs.map(_.zone)
-          .reduce((a, b) => a.zip(b).flatMap { case (x, y) => zoneUnion(x, y) })
-        val dict = cs.map(_.dict)
-          .reduce((a, b) => a.zip(b).map { case (x, y) => x ++ y })
-          .filter(_.size <= DictMax)
-        val nulls =
-          if (cs.forall(_.nulls.isDefined)) Some(cs.flatMap(_.nulls).sum)
-          else None
-        val st = ColStats(zone, dict, nulls)
-        if (st.zone.isEmpty && st.dict.isEmpty && st.nulls.isEmpty) None
-        else Some(c -> st)
-      }
-      if (merged.nonEmpty || rows.isDefined || foldSchema.isDefined)
-        AtomicManifest.write(spark, s"$historyDir/b$id", ZoneMapFile,
-          encodeZoneMap(merged, rows, foldSchema.map(_.json),
-            foldFiles, foldHist, foldFileStats))
-    } else foldSchema.foreach(sc =>
-      // some input lacks stats entirely: no mergeable intervals, but
-      // the fold's schema and file list are still exactly known —
-      // record them alone so the manifest-index scan path survives
-      // the compaction
-      AtomicManifest.write(spark, s"$historyDir/b$id", ZoneMapFile,
-        encodeZoneMap(Nil, None, Some(sc.json), foldFiles, foldHist,
-          foldFileStats)))
+      val st = ColStats(zone, dict, nulls)
+      if (st.zone.isEmpty && st.dict.isEmpty && st.nulls.isEmpty) None
+      else Some(c -> st)
+    }
+    val schema = foldSchema.getOrElse(parseSchema(stats.last.schemaJson))
+    val foldFiles = listBatchFiles(spark, s"$warehouseDir/b$id")
+    AtomicManifest.write(spark, s"$historyDir/b$id", ZoneMapFile,
+      encodeZoneMap(BatchStats(merged.toMap, rows, schema.json, foldFiles,
+        listBatchFiles(spark, s"$historyDir/b$id"),
+        FileZones.read(spark, s"$warehouseDir/b$id", foldFiles, schema))))
   }
 
   /** Delete-by-key on the committed batch warehouse — the
@@ -2928,7 +2705,7 @@ object WarehouseLoad {
     * HIT FILES (decode + rewrite), this is proportional to the HIT
     * ROWS' index list — the right tool when keys scatter across every
     * file of a Z-ordered fold. A batch the vector cannot cover
-    * ([[dvEligible]]: no recorded file list, an unmatched hit path, or
+    * ([[dvEligible]]: an unmatched hit path, or
     * a vector over the `graft.dv.maxRows`/`maxRuns` caps) falls back
     * to [[takedownCommitted]]'s file-granular rewrite, which keeps
     * the vectors of the files it carries. Same REWRITE commit
@@ -3070,8 +2847,8 @@ object WarehouseLoad {
   /** DV eligibility (the [[takedownVectorized]] contract, shared by
     * the DV merge): for each hit batch (`batch → normalized hit file
     * path → hit row indexes`), its existing deletion vector merged with
-    * the hit rows — present only when the manifest records the batch's
-    * file list, EVERY hit path maps to a recorded file (a spelling
+    * the hit rows — present only when EVERY hit path maps to a
+    * recorded file (a spelling
     * divergence must never leave a hit row visible), and the merged
     * vector stays within `graft.dv.maxRows` (default 10M rows/batch)
     * and `graft.dv.maxRuns` (default 64k runs/batch). Vectors are
@@ -3089,20 +2866,18 @@ object WarehouseLoad {
     val whP = new org.apache.hadoop.fs.Path(warehouseDir)
     val qWh = whP.getFileSystem(conf).makeQualified(whP)
     hits.flatMap { case (id, fileHits) =>
-      val st = batchStats(spark, historyDir, id)
+      val st = manifest(spark, historyDir, id)
       val qRoot = new org.apache.hadoop.fs.Path(qWh, s"b$id")
-      val relHits = st.flatMap(_.files).map { files =>
-        val absToRel = files.map { case (rel, _) =>
-          norm(new org.apache.hadoop.fs.Path(qRoot, rel).toUri.toString) ->
-            rel
-        }.toMap
-        fileHits.flatMap { case (fp, ris) => absToRel.get(fp).map(_ -> ris) }
-      }.filter(_.size == fileHits.size)
-      val existing = st.map(_.dv).getOrElse(Map.empty[String, DvVector])
-      relHits.map { m =>
-        (existing.keySet ++ m.keySet).iterator.map(rel =>
-          rel -> existing.getOrElse(rel, DvVector.empty)
-            .merge(m.get(rel).map(DvVector.fromRows)
+      val absToRel = st.files.map { case (rel, _) =>
+        norm(new org.apache.hadoop.fs.Path(qRoot, rel).toUri.toString) -> rel
+      }.toMap
+      val relHits = fileHits.flatMap { case (fp, ris) =>
+        absToRel.get(fp).map(_ -> ris)
+      }
+      Option.when(relHits.size == fileHits.size) {
+        (st.dv.keySet ++ relHits.keySet).iterator.map(rel =>
+          rel -> st.dv.getOrElse(rel, DvVector.empty)
+            .merge(relHits.get(rel).map(DvVector.fromRows)
               .getOrElse(DvVector.empty)))
           .toMap
       }.filter(mg =>
@@ -3115,8 +2890,7 @@ object WarehouseLoad {
   /** Commit batch `id`'s files as `nid` WITHOUT rewriting any — the
     * metadata path of the DV takedown and the DV merge: every recorded
     * file carried byte-identically ([[carryFile]]), the history copied,
-    * the stats carried with the merged deletion vector `dv`. Only a
-    * [[dvEligible]] batch comes here, so its file list is recorded. */
+    * the stats carried with the merged deletion vector `dv`. */
   private def carryBatch(spark: SparkSession, warehouseDir: String,
       historyDir: String, id: String, nid: String,
       dv: Map[String, DvVector]): Unit = {
@@ -3124,8 +2898,8 @@ object WarehouseLoad {
     val rootP = new org.apache.hadoop.fs.Path(s"$warehouseDir/b$id")
     val fs = rootP.getFileSystem(conf)
     val qRoot = fs.makeQualified(rootP)
-    val st = batchStats(spark, historyDir, id).get
-    st.files.get.foreach { case (rel, _) =>
+    val st = manifest(spark, historyDir, id)
+    st.files.foreach { case (rel, _) =>
       carryFile(fs, new org.apache.hadoop.fs.Path(qRoot, rel),
         new org.apache.hadoop.fs.Path(s"$warehouseDir/b$nid", rel), conf)
     }
@@ -3141,10 +2915,9 @@ object WarehouseLoad {
     * table into few large multi-file roots, one takedown key stops
     * rewriting the whole root — the difference between a minutes-SLA
     * and an hours-SLA takedown at 100 TB. Falls back to the whole-batch
-    * rewrite when the manifest records no file list (legacy), any hit
-    * path fails to match a recorded file (spelling divergence must
-    * never let a hit row slip through in a carried file), or every
-    * file has hits. */
+    * rewrite when any hit path fails to match a recorded file (spelling
+    * divergence must never let a hit row slip through in a carried
+    * file), or every file has hits. */
   private def rewriteHitFiles(spark: SparkSession, warehouseDir: String,
       historyDir: String, id: String, nid: String, hits: Set[String],
       keys: DataFrame, keyCols: Seq[String],
@@ -3153,20 +2926,20 @@ object WarehouseLoad {
     val rootP = new org.apache.hadoop.fs.Path(s"$warehouseDir/b$id")
     val bfs = rootP.getFileSystem(conf)
     val qRoot = bfs.makeQualified(rootP)
-    val st = batchStats(spark, historyDir, id)
-    val split = st.flatMap(_.files).map(_.partition { case (rel, _) =>
+    val st = manifest(spark, historyDir, id)
+    val (hit, carry) = st.files.partition { case (rel, _) =>
       hits(norm(new org.apache.hadoop.fs.Path(qRoot, rel).toUri.toString))
-    })
+    }
     // a DV'd batch's rewrite must apply its own deletion vector —
     // rewriting the raw files would RESURRECT hidden rows
-    val selfDv = dvCondition(spark, warehouseDir, historyDir, Seq(id))
+    val selfDv = dvConditionFromStats(spark, warehouseDir, Seq(id -> st))
     def rewrite(df: DataFrame): Unit =
       selfDv.map(df.filter).getOrElse(df)
         .join(keys, keyCols, "left_anti")
         .write.mode("overwrite").partitionBy(partitionCols: _*)
         .parquet(s"$warehouseDir/b$nid")
-    val carried = split match {
-      case Some((hit, carry)) if hit.size == hits.size && carry.nonEmpty =>
+    val carried =
+      if (hit.size == hits.size && carry.nonEmpty) {
         rewrite(spark.read.option("basePath", qRoot.toString)
           .parquet(hit.map { case (rel, _) =>
             new org.apache.hadoop.fs.Path(qRoot, rel).toString }: _*))
@@ -3176,17 +2949,17 @@ object WarehouseLoad {
             conf)
         }
         carry.map(_._1).toSet
-      case _ =>
+      } else {
         rewrite(spark.read.parquet(s"$warehouseDir/b$id"))
         Set.empty[String]
-    }
+      }
     // carry the file history forward: the source files stay loaded
     copyHistoryDir(spark, historyDir, id, nid)
     // CARRIED files keep their deletion vectors (same bytes, same row
     // indexes, rel-keyed); rewritten files had theirs applied during
     // the read
-    st.foreach(s0 => carryStats(spark, warehouseDir, historyDir, s0, nid,
-      s0.dv.filter { case (rel, _) => carried(rel) }))
+    carryStats(spark, warehouseDir, historyDir, st, nid,
+      st.dv.filter { case (rel, _) => carried(rel) })
   }
 
   /** Record a carried batch's stats under its rewrite id `nid`: `st`'s
@@ -3201,16 +2974,12 @@ object WarehouseLoad {
       historyDir: String, st: BatchStats, nid: String,
       dv: Map[String, DvVector]): Unit = {
     val newFiles = listBatchFiles(spark, s"$warehouseDir/b$nid")
-    val fz = st.schemaJson.flatMap { j =>
-      try Some(org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[StructType])
-      catch { case scala.util.control.NonFatal(_) => None }
-    }.map(sc => FileZones.read(spark, s"$warehouseDir/b$nid", newFiles, sc))
-      .getOrElse(Map.empty)
     AtomicManifest.write(spark, s"$historyDir/b$nid", ZoneMapFile,
-      encodeZoneMap(st.cols.toSeq.sortBy(_._1), st.rows, st.schemaJson,
-        Some(newFiles), Some(listBatchFiles(spark, s"$historyDir/b$nid")),
-        fz, dv))
+      encodeZoneMap(st.copy(files = newFiles,
+        histFiles = listBatchFiles(spark, s"$historyDir/b$nid"),
+        fileStats = FileZones.read(spark, s"$warehouseDir/b$nid", newFiles,
+          parseSchema(st.schemaJson)),
+        dv = dv)))
   }
 
   /** Commit a rewrite as ONE version (CAS derive over the head at

@@ -39,11 +39,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * partition filters from the after-scan filter set, so an index
   * that ignored them would serve rows from excluded partitions.
   * Construction is via [[ManifestFileIndex.partitioned]], which
-  * returns None on ANY path it cannot parse losslessly — callers
-  * fall back to the listing/discovery scan, so the fast path is
-  * never a correctness dependency. [[ZonePrune]] recognizes the type
-  * and prunes either layout by rebuilding with the surviving roots'
-  * entries — still zero I/O. */
+  * returns None on ANY path it cannot parse losslessly — the caller
+  * refuses the read rather than guess a value. [[ZonePrune]]
+  * recognizes the type and prunes either layout by rebuilding with the
+  * surviving roots' entries — still zero I/O. */
 final class ManifestFileIndex(
     val rootsWithFiles: Seq[(Path, Seq[FileStatus])],
     val partSchema: StructType = new StructType(),
@@ -112,7 +111,7 @@ final class ManifestFileIndex(
 object ManifestFileIndex {
   /** Unescape one hive partition-path value: `%XX` byte escapes only
     * (NOT URLDecoder — hive escaping leaves `+` literal). Returns
-    * None on malformed escapes (fall back to discovery). */
+    * None on malformed escapes (never a guess). */
   private[graft] def unescape(s: String): Option[String] = {
     if (!s.contains('%')) return Some(s)
     val out = new java.io.ByteArrayOutputStream(s.length)
@@ -147,7 +146,7 @@ object ManifestFileIndex {
     * semantics the discovery path applies to a user-specified
     * partition schema. None when any path deviates (segment without
     * `=`, column-sequence mismatch, malformed escape, or a non-null
-    * value the cast rejects): absent is never wrong, only slower. */
+    * value the cast rejects). */
   def partitioned(spark: org.apache.spark.sql.SparkSession,
       rootsWithFiles: Seq[(Path, Seq[(String, FileStatus)])],
       partSchema: StructType): Option[ManifestFileIndex] = {

@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation,
   LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
-  InMemoryFileIndex, LogicalRelation}
+  LogicalRelation}
 import org.apache.spark.sql.types.{ByteType, DataType, DateType, DoubleType,
   FloatType, IntegerType, LongType, ShortType, StringType, TimestampType}
 
@@ -50,12 +50,14 @@ import graft.load.WarehouseLoad.{BatchStats, NumZone, StrZone, Zone}
   * and the row filter itself always remains, so stats can never change
   * an answer, only the roots planned.
   *
-  * Mechanism unchanged from r13: [[WarehouseLoad.readWarehouse]]
-  * registers `warehouseDir -> historyDir` and installs this rule on
+  * Mechanism: [[WarehouseLoad.readWarehouse]] registers
+  * `warehouseDir -> historyDir` and installs this rule on
   * `experimental.extraOptimizations` (runs AFTER the main optimizer
   * fixed point, so predicates are already pushed against their
-  * relations); surviving roots rewrite the relation's file index, an
-  * empty survivor set becomes a zero-row [[LocalRelation]].
+  * relations). Every committed read plans a [[ManifestFileIndex]], so
+  * that is the one scan the rule rewrites: surviving roots (and files)
+  * restrict the index, an empty survivor set becomes a zero-row
+  * [[LocalRelation]]; any other scan passes through untouched.
   *
   * 100 TB shape: the decision cost is one cached manifest read per
   * committed load, zero data I/O; the benefit is whole scan roots
@@ -86,14 +88,17 @@ object ZonePrune extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan = plan transform {
     case f @ Filter(cond, lr: LogicalRelation) =>
       lr.relation match {
-        case fs: HadoopFsRelation => pruneScan(f, cond, lr, fs)
+        case fs: HadoopFsRelation => fs.location match {
+          case m: ManifestFileIndex => pruneScan(f, cond, lr, fs, m)
+          case _ => f
+        }
         case _ => f
       }
   }
 
   private def pruneScan(f: Filter, cond: Expression, lr: LogicalRelation,
-                        fs: HadoopFsRelation): LogicalPlan = {
-    val roots = fs.location.rootPaths
+      fs: HadoopFsRelation, m: ManifestFileIndex): LogicalPlan = {
+    val roots = m.rootPaths
     if (roots.isEmpty) return f
     val parents = roots.map(r => Option(r.getParent).map(_.toString))
     val hist = parents.head.filter(p => parents.forall(_.contains(p)))
@@ -108,55 +113,34 @@ object ZonePrune extends Rule[LogicalPlan] {
         else {
           val spark = fs.sparkSession
           // stats reads run in PARALLEL across roots (driver-side
-          // metadata calls, same shape as liveBatchInfo): sequential
-          // reads were the pruning decision's dominant cost at 10k
-          // commits — ~6 s of one-at-a-time manifest opens for a
-          // decision that is embarrassingly parallel (CommitScale r14)
+          // metadata calls): sequential reads were the pruning
+          // decision's dominant cost at 10k commits — ~6 s of
+          // one-at-a-time manifest opens for a decision that is
+          // embarrassingly parallel (CommitScale r14)
           import scala.jdk.CollectionConverters._
           val verdicts =
             new java.util.concurrent.ConcurrentHashMap[
               org.apache.hadoop.fs.Path, java.lang.Boolean]()
           graft.load.MetaPool.forEach(roots) { r =>
-            val keep = WarehouseLoad.batchStats(spark, h,
-                r.getName.stripPrefix("b")) match {
-              case None => true // no stats: must scan
-              case Some(st) => !provenEmpty(st, cond)
-            }
-            verdicts.put(r, keep)
+            val st = WarehouseLoad.manifest(spark, h,
+              r.getName.stripPrefix("b"))
+            verdicts.put(r, !provenEmpty(st, cond))
           }
           val keep = roots.filter(r => verdicts.get(r).booleanValue())
-          if (keep.isEmpty) LocalRelation(f.output)
-          else fs.location match {
-            // a commit-log-backed index prunes by restriction — still
-            // zero I/O, and it works for BOTH layouts (the partitioned
-            // form re-filters its value groups by surviving files).
-            // Within surviving roots, the FILE-LEVEL tier (r16) then
-            // drops files whose recorded per-file interval proves the
-            // predicate empty — the add-file-stats rung that keeps a
-            // compacted multi-file root skippable after batch-root
-            // pruning went blind.
-            case m: ManifestFileIndex =>
-              val doomed = prunedFiles(spark, h, m, keep, cond)
-              if (keep.size == roots.size && doomed.isEmpty) f
-              else {
-                val m2 = m.retainWhere(keep.toSet, p => !doomed(p))
-                if (m2.rootsWithFiles.isEmpty) LocalRelation(f.output)
-                else Filter(cond,
-                  lr.copy(relation = fs.copy(location = m2)(spark)))
-              }
-            case _ if keep.size == roots.size => f
-            case _ if fs.partitionSchema.isEmpty =>
-              // a listing-based index re-lists the survivors
-              Filter(cond, lr.copy(relation = fs.copy(location =
-                new InMemoryFileIndex(spark, keep, fs.options,
-                  Some(fs.dataSchema)))(spark)))
-            case _ => f // discovery-planned PARTITIONED scans plan one
-                        // relation per root and union
-                        // (WarehouseLoad.readBatchDirs keeps that
-                        // contract next to its union branch), so a
-                        // partitioned non-manifest scan here always
-                        // has exactly one root and keep is
-                        // all-or-nothing
+          // the index prunes by restriction — still zero I/O, and it
+          // works for BOTH layouts (the partitioned form re-filters its
+          // value groups by surviving files). Within surviving roots,
+          // the FILE-LEVEL tier (r16) then drops files whose recorded
+          // per-file interval proves the predicate empty — the
+          // add-file-stats rung that keeps a compacted multi-file root
+          // skippable after batch-root pruning went blind.
+          val doomed = prunedFiles(spark, h, m, keep, cond)
+          if (keep.size == roots.size && doomed.isEmpty) f
+          else {
+            val m2 = m.retainWhere(keep.toSet, p => !doomed(p))
+            if (m2.rootsWithFiles.isEmpty) LocalRelation(f.output)
+            else Filter(cond,
+              lr.copy(relation = fs.copy(location = m2)(spark)))
           }
         }
     }
@@ -180,20 +164,19 @@ object ZonePrune extends Rule[LogicalPlan] {
     val doomed = java.util.concurrent.ConcurrentHashMap
       .newKeySet[org.apache.hadoop.fs.Path]()
     graft.load.MetaPool.forEach(keep) { r =>
-      WarehouseLoad.batchStats(spark, hist, r.getName.stripPrefix("b"))
-        .filter(_.fileStats.nonEmpty).foreach { st =>
-          val rootStr = r.toString
-          m.rootsWithFiles.find(_._1 == r).foreach { case (_, files) =>
-            files.foreach { fst =>
-              val rel = fst.getPath.toString
-                .stripPrefix(rootStr).stripPrefix("/")
-              st.fileStats.get(rel).foreach { fs =>
-                if (provenEmpty(BatchStats(fs.cols, fs.rows), cond))
-                  doomed.add(fst.getPath)
-              }
-            }
+      val st = WarehouseLoad.manifest(spark, hist, r.getName.stripPrefix("b"))
+      val rootStr = r.toString
+      m.rootsWithFiles.find(_._1 == r).foreach { case (_, files) =>
+        files.foreach { fst =>
+          val rel = fst.getPath.toString.stripPrefix(rootStr).stripPrefix("/")
+          st.fileStats.get(rel).foreach { fs =>
+            // a file is proven like a batch: its stats, no lists
+            if (provenEmpty(
+                BatchStats(fs.cols, fs.rows, st.schemaJson, Nil, Nil), cond))
+              doomed.add(fst.getPath)
           }
         }
+      }
     }
     doomed.asScala.toSet
   }

@@ -1000,7 +1000,7 @@ object Load {
     val after = WarehouseLoad.committedBatches(s, hist)
     val oneRoot = after.size == 1
     val st = WarehouseLoad.batchStats(s, hist, after.head).get
-    val nFiles = st.files.get.size
+    val nFiles = st.files.size
     // every fold file carries a recorded o_orderkey envelope
     val statsRecorded = st.fileZones.size == nFiles &&
       st.fileZones.values.forall(_.contains("o_orderkey"))

@@ -31,12 +31,13 @@ import graft.load.WarehouseLoad
   * (Delta's `skipChangeCommits` semantics).
   *
   * Scale shape: `getOffset` is one manifest read; each `getBatch`
-  * plans one parquet scan root per ADDED batch (bounded by the loads
-  * in the window, never table size) and the empty window is a
-  * zero-task `WHERE false` scan. `maxVersionsPerTrigger` bounds the
-  * window itself — a consumer restarting after long downtime drains
-  * its lag as at-most-N-commit micro-batches instead of one giant
-  * all-or-nothing epoch (the Delta `maxFilesPerTrigger` analog).
+  * plans one log-built scan per ADDED batch from its recorded file
+  * list (bounded by the loads in the window, never table size; no
+  * listing) and the empty window is a zero-task `WHERE false` scan.
+  * `maxVersionsPerTrigger` bounds the window itself — a consumer
+  * restarting after long downtime drains its lag as at-most-N-commit
+  * micro-batches instead of one giant all-or-nothing epoch (the Delta
+  * `maxFilesPerTrigger` analog).
   * Vacuum retention must cover consumer lag: a window whose version
   * manifests were pruned fails with an explicit resync message rather
   * than silently skipping data.
@@ -156,10 +157,8 @@ class CommitLogSource(spark: SparkSession, declared: StructType,
     * operator sizes executors in bytes, not commit counts, and commit
     * sizes vary over a table's life (trickle loads vs compacted
     * folds) — the version bound alone cannot hold a memory envelope.
-    * At least one version is always admitted per trigger (progress);
-    * a batch with no recorded size (legacy manifest) conservatively
-    * consumes the whole budget. Composes with `maxVersionsPerTrigger`
-    * (both caps apply). */
+    * At least one version is always admitted per trigger (progress).
+    * Composes with `maxVersionsPerTrigger` (both caps apply). */
   private val maxBytesPerTrigger =
     opt(params, "maxBytesPerTrigger").map { v =>
       val n = v.trim.toLong
@@ -264,12 +263,11 @@ class CommitLogSource(spark: SparkSession, declared: StructType,
     while (!over && v < capped) {
       val prev = batches(v).toSet
       // per-version bytes clamped to cap: keeps the accumulator
-      // overflow-free and makes an unknown-size batch (legacy
-      // manifest) consume exactly one whole budget
+      // overflow-free
       val bytes = math.min(cap,
         batches(v + 1).filterNot(prev)
-          .map(id => WarehouseLoad.batchBytes(spark, historyDir, id)
-            .getOrElse(cap))
+          .map(id => WarehouseLoad.manifest(spark, historyDir, id)
+            .files.map(_._2).sum)
           .foldLeft(0L)((a, b) => math.min(cap, a + math.min(b, cap))))
       if (v == floor || acc + bytes <= cap) { acc += bytes; v += 1 }
       else over = true
@@ -321,36 +319,26 @@ class CommitLogSource(spark: SparkSession, declared: StructType,
     // provider hook never ran in THIS session (a restart path) —
     // effective from the stream's next (re)start.
     graft.plans.ZonePrune.register(spark, warehouseDir, historyDir)
-    val ids = addedBatches(from, to)
-    val live = WarehouseLoad.liveBatchIds(spark, warehouseDir, ids)
-    val base =
-      if (live.nonEmpty)
-        live.map { id =>
-            // LOG-BUILT per-batch scan when the commit recorded its
-            // file list (r16): zero listing/footer I/O per admitted
-            // batch, and the relation is a ManifestFileIndex — so the
-            // per-FILE stats tier prunes files inside the micro-batch
-            // plan exactly as it does for batch reads (st26's root
-            // skip, one granularity down). Discovery fallback for
-            // legacy batches.
-            val rel = WarehouseLoad.manifestGroupRelations(spark,
-                warehouseDir, historyDir, Seq(id)) match {
-              case Some(Some(Seq(r))) => r
-              case _ => spark.read.parquet(s"$warehouseDir/b$id")
-            }
-            rel.withColumn(BatchCol, lit(id))
-          }
-          .reduce(_.unionByName(_, allowMissingColumns = true))
-      else WarehouseLoad.liveBatchIds(spark, warehouseDir,
-          WarehouseLoad.committedBatches(spark, historyDir))
-        .headOption match {
-          // empty window (e.g. a skipped rewrite commit): a zero-task
-          // pruned scan keeps the plan a real (streamable) relation
-          case Some(id) => spark.read.parquet(s"$warehouseDir/b$id")
-            .withColumn(BatchCol, lit(id)).where(lit(false))
-          case None => spark.createDataFrame(
-            java.util.Collections.emptyList[Row](), declared)
-        }
+    // One LOG-BUILT scan per admitted batch that holds files (r16): its
+    // manifest's file list says which batches are live, so nothing is
+    // listed and no footer opened per admitted batch, and the relation
+    // is a ManifestFileIndex — so the per-FILE stats tier prunes files
+    // inside the micro-batch plan exactly as it does for batch reads
+    // (st26's root skip, one granularity down).
+    def batchScan(id: String): Option[DataFrame] =
+      WarehouseLoad.manifestGroupRelations(spark, warehouseDir, historyDir,
+        Seq(id)).map(_.head.withColumn(BatchCol, lit(id)))
+    val base = addedBatches(from, to).flatMap(batchScan)
+      .reduceOption(_.unionByName(_, allowMissingColumns = true))
+      .getOrElse {
+        // empty window (e.g. a skipped rewrite commit): a zero-task
+        // pruned scan keeps the plan a real (streamable) relation
+        WarehouseLoad.committedBatches(spark, historyDir).iterator
+          .flatMap(batchScan).nextOption()
+          .map(_.where(lit(false)))
+          .getOrElse(spark.createDataFrame(
+            java.util.Collections.emptyList[Row](), declared))
+      }
     // conform to the declared schema: case-insensitive resolution (the
     // warehouse CI-match semantic), missing columns as typed nulls
     val byName = base.columns.map(c => c.toLowerCase -> c).toMap

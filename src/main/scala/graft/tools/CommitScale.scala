@@ -11,9 +11,9 @@ import graft.load.WarehouseLoad
   * prove the warehouse layer linear in fixture DATA, but the
   * protocol's own scaling axis is the NUMBER OF COMMITS — manifest
   * lines (the head manifest is O(N), so N commits write O(N²) total
-  * manifest bytes), version files, per-batch roots in
-  * `readWarehouse`'s union, `liveBatchIds`' per-batch listing, the
-  * changes window, vacuum's listing sweep. This main builds a table of
+  * manifest bytes), version files, per-batch roots and manifest
+  * reads in `readWarehouse`'s log-built scan, the changes window,
+  * vacuum's listing sweep. This main builds a table of
   * N tiny commits through the REAL streamed-epoch commit path and
   * times the metadata operations at that commit count, so SCALE.md can
   * carry measured numbers instead of an argued bound.

@@ -3,7 +3,6 @@ package graft.tools
 import scala.collection.mutable
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 import graft.SparkEntry
 
@@ -27,9 +26,7 @@ object JobProfile {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val names = sys.env.getOrElse("SPARK_GRAFT_PROBE", "q84_zone_prune")
       .split(",").toSeq
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+    val spark = graft.GraftSession.builder(s"local[$cpus]", cpus.toInt)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{ExtendedMode, FormattedMode}
+import scala.jdk.CollectionConverters._
 
 /** Physical-plan assertions: the scale posture the Scaladoc claims must
   * actually appear in the plans — pushed-down scan predicates, pruned
@@ -964,7 +965,7 @@ class PlanSpec extends SparkSpec {
     assert(nin.count() == 5)
   }
 
-  test("manifest file index: committed scans + load history plan from the log, zero listing; legacy manifests fall back") {
+  test("manifest file index: committed scans + load history plan from the log, zero listing; a manifest without file lists fails loudly") {
     import java.nio.file.{Files, Paths}
     import graft.load.{AtomicManifest, WarehouseLoad}
     import graft.plans.ManifestFileIndex
@@ -1014,19 +1015,218 @@ class PlanSpec extends SparkSpec {
     assert(lf.select("batch").distinct().count() == 3)
     assert(lf.count() == 3)
 
-    // LEGACY fallback: strip one batch's recorded file lines (a
-    // pre-r14 manifest) — the read falls back to a listing-based scan
-    // with the SAME answer
+    // every commit records its file lists, so a manifest without them
+    // is corruption: strip one batch's recorded file lines and the
+    // read refuses, naming the batch, instead of listing the dir
     val anyId = WarehouseLoad.committedBatches(spark, hist).head
     val txt = AtomicManifest.read(spark, s"$hist/b$anyId", "_ZONEMAP").get
     AtomicManifest.write(spark, s"$hist/b$anyId", "_ZONEMAP",
       txt.linesIterator.filterNot(l =>
         l.startsWith("#f") || l.startsWith("#hf")).mkString("\n"))
-    val fallback = read()
-    assert(locations(fallback).forall(!_.isInstanceOf[ManifestFileIndex]),
-      "a legacy manifest must disable the log-built scan, not break it")
-    assert(fallback.count() == 4)
-    assert(WarehouseLoad.loadedFiles(spark, hist).get.count() == 3)
+    val refused = intercept[IllegalStateException](read())
+    assert(refused.getMessage.contains(s"batch $anyId "), refused.getMessage)
+    intercept[IllegalStateException](WarehouseLoad.loadedFiles(spark, hist))
+  }
+
+  /** The commit-log invariant every writer keeps: each committed
+    * batch's `_ZONEMAP` records its schema and both file lists (the
+    * data list matching the batch dir on disk), and the committed
+    * read plans log-built scans only — no listing, no footer merge. */
+  private def assertManifestInvariant(wh: String, hist: String,
+                                      after: String): Unit = {
+    import graft.load.{AtomicManifest, WarehouseLoad}
+    import graft.plans.ManifestFileIndex
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val ids = WarehouseLoad.committedBatches(spark, hist)
+    assert(ids.nonEmpty, s"after $after: nothing committed")
+    ids.foreach { id =>
+      val lines = AtomicManifest.read(spark, s"$hist/b$id", "_ZONEMAP")
+        .getOrElse(fail(s"after $after: batch $id has no _ZONEMAP"))
+        .linesIterator.toSeq
+      Seq("#s ", "#fc ", "#hfc ").foreach(tag =>
+        assert(lines.exists(_.startsWith(tag)),
+          s"after $after: batch $id records no '$tag' line"))
+      val st = WarehouseLoad.batchStats(spark, hist, id).get
+      val dir = java.nio.file.Paths.get(s"$wh/b$id")
+      val onDisk =
+        if (!java.nio.file.Files.exists(dir)) Set.empty[String]
+        else {
+          val walk = java.nio.file.Files.walk(dir)
+          try walk.iterator().asScala
+            .filter(p => java.nio.file.Files.isRegularFile(p))
+            .map(p => dir.relativize(p).toString)
+            .filterNot(_.split("/").exists(s =>
+              s.startsWith("_") || s.startsWith(".")))
+            .toSet
+          finally walk.close()
+        }
+      assert(st.files.map(_._1).toSet == onDisk,
+        s"after $after: batch $id records ${st.files} but holds $onDisk")
+      assert(st.histFiles.nonEmpty,
+        s"after $after: batch $id records no history file")
+    }
+    WarehouseLoad.readWarehouse(spark, wh, hist).foreach { df =>
+      val locs = df.queryExecution.optimizedPlan.collect {
+        case lr: LogicalRelation if lr.relation.isInstanceOf[HadoopFsRelation] =>
+          lr.relation.asInstanceOf[HadoopFsRelation].location
+      }
+      assert(locs.nonEmpty && locs.forall(_.isInstanceOf[ManifestFileIndex]),
+        s"after $after: the committed read planned $locs")
+    }
+  }
+
+  test("every commit-log writer records its manifest; the committed read plans from it alone") {
+    import java.nio.file.{Files, Paths}
+    import graft.load.WarehouseLoad
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    import spark.implicits._
+    val staging = tmpDir("graft-invstage-")
+    val root = tmpDir("graft-inv-")
+    val (wh, hist) = (s"$root/t", s"$root/h")
+    val target = StructType(Seq(StructField("k", LongType),
+      StructField("v", StringType)))
+    def count() = WarehouseLoad.readWarehouse(spark, wh, hist).get.count()
+    Seq(0, 10, 20).foreach { base =>
+      Files.writeString(Paths.get(staging, s"f$base.json"),
+        (base until base + 10).map(i => s"""{"k": "$i", "v": "s$i"}""")
+          .mkString("", "\n", "\n"))
+      WarehouseLoad.batchIdempotent(spark, staging, target, wh, hist)
+    }
+    assertManifestInvariant(wh, hist, "batchIdempotent")
+    WarehouseLoad.commitStreamedBatch(spark,
+      spark.range(30, 40).select(col("id").as("k"),
+        col("id").cast("string").as("v")), wh, hist, "epoch-0")
+    assertManifestInvariant(wh, hist, "a streamed epoch")
+    assert(WarehouseLoad.mergeCommitted(spark, wh, hist,
+      Seq((5L, "u5"), (99L, "i99")).toDF("k", "v"), Seq("k")) == ((1L, 1L)))
+    assertManifestInvariant(wh, hist, "mergeCommitted")
+    assert(WarehouseLoad.takedownVectorized(spark, wh, hist,
+      Seq(15L).toDF("k"), Seq("k")) == 1L)
+    assertManifestInvariant(wh, hist, "takedownVectorized")
+    assert(WarehouseLoad.takedownCommitted(spark, wh, hist,
+      Seq(25L).toDF("k"), Seq("k")) == 1L)
+    assertManifestInvariant(wh, hist, "takedownCommitted")
+    val v = WarehouseLoad.currentVersion(spark, hist)
+    assert(WarehouseLoad.compactSmall(spark, wh, hist, Long.MaxValue) >= 2)
+    assertManifestInvariant(wh, hist, "compactSmall")
+    WarehouseLoad.commitStreamedBatch(spark,
+      spark.range(40, 50).select(col("id").as("k"),
+        col("id").cast("string").as("v")), wh, hist, "epoch-1")
+    WarehouseLoad.compactZOrdered(spark, wh, hist, "k", "k", numFiles = 2)
+    assertManifestInvariant(wh, hist, "compactZOrdered")
+    WarehouseLoad.commitStreamedBatch(spark,
+      spark.range(50, 55).select(col("id").as("k"),
+        col("id").cast("string").as("v")), wh, hist, "epoch-2")
+    WarehouseLoad.compactCommitted(spark, wh, hist)
+    assertManifestInvariant(wh, hist, "compactCommitted")
+    assert(count() == 54L)
+    WarehouseLoad.restoreWarehouse(spark, wh, hist, v)
+    assertManifestInvariant(wh, hist, "restoreWarehouse")
+    assert(count() == 39L)
+  }
+
+  test("a table with no zone-mappable column records its manifest: compactSmall folds it, a DV takedown carries its files") {
+    // decimal and boolean columns get no min/max stats, yet the batch
+    // still needs its manifest: the committed read, compactSmall's
+    // size and a DV takedown's file match all come from it
+    import java.nio.file.{Files, Paths}
+    import graft.load.WarehouseLoad
+    import org.apache.spark.sql.types.{BooleanType, DecimalType, StructField, StructType}
+    import spark.implicits._
+    val staging = tmpDir("graft-nzstage-")
+    val root = tmpDir("graft-nz-")
+    val (wh, hist) = (s"$root/t", s"$root/h")
+    val target = StructType(Seq(StructField("id", DecimalType(10, 2)),
+      StructField("ok", BooleanType)))
+    Seq(0, 10, 20).foreach { base =>
+      Files.writeString(Paths.get(staging, s"f$base.json"),
+        (base until base + 10).map(i => s"""{"id": "$i.5", "ok": "${i % 2 == 0}"}""")
+          .mkString("", "\n", "\n"))
+      WarehouseLoad.batchIdempotent(spark, staging, target, wh, hist)
+    }
+    assertManifestInvariant(wh, hist, "batchIdempotent (decimal/boolean)")
+    val before = WarehouseLoad.committedBatches(spark, hist)
+    val hidden = WarehouseLoad.takedownVectorized(spark, wh, hist,
+      Seq(BigDecimal("12.50")).toDF("id")
+        .select($"id".cast(DecimalType(10, 2)).as("id")), Seq("id"))
+    assert(hidden == 1L)
+    val rewritten = WarehouseLoad.committedBatches(spark, hist)
+      .filterNot(before.toSet)
+    assert(rewritten.size == 1)
+    val st = WarehouseLoad.batchStats(spark, hist, rewritten.head).get
+    assert(st.dv.valuesIterator.map(_.cardinality).sum == 1L,
+      "the DV takedown must carry the batch's files and hide the row")
+    assertManifestInvariant(wh, hist, "takedownVectorized (decimal/boolean)")
+    assert(WarehouseLoad.compactSmall(spark, wh, hist, Long.MaxValue) == 3)
+    assert(WarehouseLoad.committedBatches(spark, hist).size == 1)
+    assertManifestInvariant(wh, hist, "compactSmall (decimal/boolean)")
+    val df = WarehouseLoad.readWarehouse(spark, wh, hist).get
+    assert(df.count() == 29L)
+    assert(df.filter($"id" === BigDecimal("12.50")).count() == 0L)
+  }
+
+  test("a streamed epoch of binary/array columns records its manifest; a fold of file-less batches records one too") {
+    import graft.load.WarehouseLoad
+    import org.apache.spark.sql.functions.{array, col, lit}
+    val root = tmpDir("graft-bin-")
+    val (wh, hist) = (s"$root/t", s"$root/h")
+    def epoch(from: Long, to: Long, id: String,
+              partitionCols: Seq[String] = Nil): Unit =
+      WarehouseLoad.commitStreamedBatch(spark,
+        spark.range(from, to, 1, 2).select(
+          (Seq(col("id").cast("string").cast("binary").as("b"),
+            array(col("id"), lit(1L)).as("xs")) ++
+            partitionCols.map(c => (col("id") % 2).as(c))): _*),
+        wh, hist, id, partitionCols)
+    // file-less batches: a hive-partitioned write of no rows creates no
+    // partition dir, hence no file
+    epoch(0, 0, "empty-0", Seq("p"))
+    epoch(0, 0, "empty-1", Seq("p"))
+    WarehouseLoad.committedBatches(spark, hist).foreach(id =>
+      assert(WarehouseLoad.batchStats(spark, hist, id).get.files.isEmpty,
+        s"batch $id was meant to hold no file"))
+    WarehouseLoad.compactCommitted(spark, wh, hist)
+    val fold = WarehouseLoad.committedBatches(spark, hist)
+    assert(fold.size == 1 && fold.head.startsWith("compact-"))
+    assertManifestInvariant(wh, hist, "a fold of file-less batches")
+    assert(WarehouseLoad.readWarehouse(spark, wh, hist).isEmpty)
+    epoch(0, 6, "bin-0")
+    assertManifestInvariant(wh, hist, "a binary/array streamed epoch")
+    val df = WarehouseLoad.readWarehouse(spark, wh, hist).get
+    assert(df.count() == 6L)
+    assert(df.schema.fieldNames.toSeq == Seq("b", "xs"))
+  }
+
+  test("the driver-written history file reads the same through Spark's own parquet reader as through the log-built scan") {
+    // the load history is written by the driver (writeHistoryList), not
+    // by Spark, and only the log-built scan reads it — pin the file
+    // against spark.read.parquet: same rows, same nullable file STRING
+    import java.nio.file.{Files, Paths}
+    import graft.load.WarehouseLoad
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    val staging = tmpDir("graft-hdstage-")
+    val root = tmpDir("graft-hd-")
+    val (wh, hist) = (s"$root/t", s"$root/h")
+    Seq("a.json", "b c.json").foreach(n =>
+      Files.writeString(Paths.get(staging, n), """{"k": "1"}""" + "\n"))
+    WarehouseLoad.batchIdempotent(spark, staging,
+      StructType(Seq(StructField("k", LongType))), wh, hist)
+    WarehouseLoad.commitStreamedBatch(spark,
+      spark.range(2, 3).select(col("id").as("k")), wh, hist, "epoch-0")
+    val Seq(loaded, streamed) = WarehouseLoad.committedBatches(spark, hist)
+    val expected = StructType(Seq(StructField("file", StringType, nullable = true)))
+    val logBuilt = WarehouseLoad.loadedFiles(spark, hist).get
+    assert(logBuilt.select("file").schema == expected)
+    def rows(df: DataFrame) = df.collect().map(_.getString(0)).sorted.toSeq
+    Seq(loaded -> 2, streamed -> 0).foreach { case (id, n) =>
+      val sparkRead = spark.read.parquet(s"$hist/b$id")
+      assert(sparkRead.schema == expected, s"batch $id: ${sparkRead.schema}")
+      val fromLog = logBuilt.filter(col("batch") === id).select("file")
+      assert(rows(sparkRead) == rows(fromLog), s"batch $id")
+      assert(rows(sparkRead).size == n, s"batch $id")
+    }
   }
 
   test("additive schema drift keeps the log-planned scan: one ManifestFileIndex, old batches read the new column as null") {
