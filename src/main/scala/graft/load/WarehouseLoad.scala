@@ -1,9 +1,9 @@
 package graft.load
 
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
-import org.apache.spark.sql.types.{ByteType, DataType, DateType, DoubleType,
-  FloatType, IntegerType, LongType, ShortType, StringType, StructField,
-  StructType, TimestampType}
+import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, DateType,
+  DoubleType, FloatType, IntegerType, LongType, MapType, ShortType,
+  StringType, StructField, StructType, TimestampType}
 import graft.schema.SchemaAlign
 
 /** Typed warehouse load — the Snowpipe leg of the reference
@@ -707,6 +707,18 @@ object WarehouseLoad {
     }
   }
 
+  /** `t` with every nested null flag set: array elements, map values
+    * and struct fields all nullable. Writers of one type disagree on
+    * these flags, and the nullable form reads (and casts from) all. */
+  private[graft] def nullableNested(t: DataType): DataType = t match {
+    case ArrayType(e, _) => ArrayType(nullableNested(e), true)
+    case MapType(k, v, _) =>
+      MapType(nullableNested(k), nullableNested(v), true)
+    case StructType(fs) => StructType(fs.map(f =>
+      f.copy(dataType = nullableNested(f.dataType), nullable = true)))
+    case other => other
+  }
+
   /** Conform a set of per-batch recorded schemas to ONE read schema —
     * the evolution-window fix (r15, VERDICT r14 #4): batches written
     * before and after a [[graft.schema.SchemaDrift]] evolve record
@@ -714,9 +726,14 @@ object WarehouseLoad {
     * reader already handles when HANDED the union schema — a file
     * missing a requested nullable column reads it as null — so the
     * merge is: union the fields by name in first-seen order; types
-    * must agree EXACTLY, or with `widening` be Parquet-safe promotions
-    * ([[widenType]]); a field absent from any batch is forced nullable
-    * (the reader fills nulls for it). `Left` names the first field the
+    * must agree EXACTLY up to their nested null flags, or with
+    * `widening` be Parquet-safe promotions ([[widenType]]); a field
+    * absent from any batch is forced nullable (the reader fills nulls
+    * for it). Nested null flags (`containsNull`, `valueContainsNull`,
+    * struct-field `nullable`) differ between writers of the same type —
+    * `array(...)` records non-null elements, a JSON target or a parquet
+    * read records nullable ones — so a disagreement there merges to the
+    * nullable form, which reads both. `Left` names the first field the
     * merge cannot reconcile: (name, type so far, conflicting type). */
   private def mergeRecordedSchemas(parsed: Seq[StructType],
       widening: Boolean): Either[(String, DataType, DataType), StructType] = {
@@ -727,8 +744,10 @@ object WarehouseLoad {
       order.get(f.name) match {
         case None => order(f.name) = f
         case Some(prev) =>
+          val loose = nullableNested(prev.dataType)
           val merged =
             if (prev.dataType == f.dataType) Some(prev.dataType)
+            else if (loose == nullableNested(f.dataType)) Some(loose)
             else if (widening) widenType(prev.dataType, f.dataType)
             else None
           order(f.name) = prev.copy(
@@ -769,14 +788,6 @@ object WarehouseLoad {
     * are `_metadata.row_index` positions — stable because batch files
     * are immutable (a rewrite commits new files and drops the DV). */
   private def dvCondition(spark: SparkSession, warehouseDir: String,
-      historyDir: String, ids: Seq[String]): Option[Column] =
-    dvConditionFromStats(spark, warehouseDir,
-      ids.map(id => id -> manifest(spark, historyDir, id)))
-
-  /** [[dvCondition]] over stats the caller already holds — no
-    * manifest I/O. */
-  private def dvConditionFromStats(spark: SparkSession,
-      warehouseDir: String,
       pairs: Seq[(String, BatchStats)]): Option[Column] = {
     import org.apache.spark.sql.functions.{col, lit, not}
     import org.apache.spark.sql.GraftSqlBridge.{column, expression}
@@ -837,10 +848,21 @@ object WarehouseLoad {
     // deletion vectors apply HERE, per generation relation (r16):
     // every consumer inherits the filter, so a hidden row cannot
     // resurrect. Built from the stats THIS pass already fetched.
-    Some(dvConditionFromStats(spark, warehouseDir, live) match {
+    Some(dvCondition(spark, warehouseDir, live) match {
       case Some(c) => rels.map(_.filter(c))
       case None => rels
     })
+  }
+
+  /** The log-built relation of ONE committed batch over the files `st`
+    * records, its deletion vector applied — what a rewrite reads, so it
+    * sees the batch at its recorded schema and never lists the dir. */
+  private def batchRelation(spark: SparkSession, warehouseDir: String,
+      historyDir: String, id: String, st: BatchStats): DataFrame = {
+    val rel = layoutRelation(spark, warehouseDir,
+      batchLayout(historyDir, id, st), Seq(id -> st)).head
+    dvCondition(spark, warehouseDir, Seq(id -> st))
+      .map(rel.filter).getOrElse(rel)
   }
 
   /** One batch's hive layout: the partition-column sequence every one
@@ -1335,6 +1357,8 @@ object WarehouseLoad {
                               // physically.
                               dv: Map[String, DvVector] =
                                 Map.empty) {
+    /** The batch's recorded data size: its file-list lengths summed. */
+    def bytes: Long = files.map(_._2).sum
     /** Interval-only view of [[fileStats]] (spec/report convenience). */
     def fileZones: Map[String, Map[String, Zone]] =
       fileStats.view.mapValues(_.cols.collect {
@@ -1433,9 +1457,10 @@ object WarehouseLoad {
     *    `#hfc <n>` + `#hf <rel> <len>` (history files) — the records
     *    every commit writes ([[BatchStats]]).
     * The `#`-prefixed tags cannot collide with an encoded column name
-    * (URL-encoding never emits a literal `#`), so old and new readers
-    * parse each other's manifests — unknown lines are ignored, absent
-    * stats read as "must scan". */
+    * (URL-encoding never emits a literal `#`). `#s`, `#fc` and `#hfc`
+    * are required: a manifest missing one, or whose `#f`/`#hf` lines
+    * disagree with their count, is rejected as corrupt. Only stats may
+    * be absent (they read as "must scan"); unknown lines are ignored. */
   private def encodeZoneLine(c: String, z: Zone): String = z match {
     case NumZone(lo, hi) =>
       enc(c) + " " + Math.nextDown(lo) + " " + Math.nextUp(hi)
@@ -2181,7 +2206,7 @@ object WarehouseLoad {
       case ((id, st), i) =>
         (id, i.toLong,
           st.rows.map(java.lang.Long.valueOf).orNull,
-          java.lang.Long.valueOf(st.files.map(_._2).sum),
+          java.lang.Long.valueOf(st.bytes),
           java.lang.Long.valueOf(st.files.size.toLong),
           java.lang.Long.valueOf(st.cols.size.toLong))
     }.toDF("batch", "position", "n_rows", "n_bytes", "n_files",
@@ -2433,7 +2458,7 @@ object WarehouseLoad {
     compactWithFailpoint(spark, warehouseDir, historyDir, minBatches,
       partitionCols, select = ids =>
         ids.zip(manifests(spark, historyDir, ids)).collect {
-          case (id, st) if st.files.map(_._2).sum <= smallBytes => id
+          case (id, st) if st.bytes <= smallBytes => id
         })
 
   /** Salt width for a partitioned fold write: one slice per 512 MB of
@@ -2443,8 +2468,7 @@ object WarehouseLoad {
     * straggler task (r15 review #3). */
   private def foldSlices(spark: SparkSession, historyDir: String,
                          ids: Seq[String]): Int = {
-    val bytes = manifests(spark, historyDir, ids)
-      .map(_.files.map(_._2).sum).sum
+    val bytes = manifests(spark, historyDir, ids).map(_.bytes).sum
     math.max(1L, math.min(64L, bytes / (512L << 20) + 1)).toInt
   }
 
@@ -2479,7 +2503,7 @@ object WarehouseLoad {
     * only: one cached manifest read. */
   def batchBytes(spark: SparkSession, historyDir: String,
                  id: String): Option[Long] =
-    batchStats(spark, historyDir, id).map(_.files.map(_._2).sum)
+    batchStats(spark, historyDir, id).map(_.bytes)
 
   private[graft] def compactWithFailpoint(spark: SparkSession,
       warehouseDir: String, historyDir: String, minBatches: Int = 2,
@@ -2930,19 +2954,17 @@ object WarehouseLoad {
     val (hit, carry) = st.files.partition { case (rel, _) =>
       hits(norm(new org.apache.hadoop.fs.Path(qRoot, rel).toUri.toString))
     }
-    // a DV'd batch's rewrite must apply its own deletion vector —
+    // the batch relation applies the batch's own deletion vector —
     // rewriting the raw files would RESURRECT hidden rows
-    val selfDv = dvConditionFromStats(spark, warehouseDir, Seq(id -> st))
-    def rewrite(df: DataFrame): Unit =
-      selfDv.map(df.filter).getOrElse(df)
+    def rewrite(files: Seq[(String, Long)]): Unit =
+      batchRelation(spark, warehouseDir, historyDir, id,
+          st.copy(files = files))
         .join(keys, keyCols, "left_anti")
         .write.mode("overwrite").partitionBy(partitionCols: _*)
         .parquet(s"$warehouseDir/b$nid")
     val carried =
       if (hit.size == hits.size && carry.nonEmpty) {
-        rewrite(spark.read.option("basePath", qRoot.toString)
-          .parquet(hit.map { case (rel, _) =>
-            new org.apache.hadoop.fs.Path(qRoot, rel).toString }: _*))
+        rewrite(hit)
         carry.foreach { case (rel, _) =>
           carryFile(bfs, new org.apache.hadoop.fs.Path(qRoot, rel),
             new org.apache.hadoop.fs.Path(s"$warehouseDir/b$nid", rel),
@@ -2950,7 +2972,7 @@ object WarehouseLoad {
         }
         carry.map(_._1).toSet
       } else {
-        rewrite(spark.read.parquet(s"$warehouseDir/b$id"))
+        rewrite(st.files)
         Set.empty[String]
       }
     // carry the file history forward: the source files stay loaded
@@ -3287,12 +3309,12 @@ object WarehouseLoad {
           carryBatch(spark, warehouseDir, historyDir, id, nid, mergedDv)
         case None =>
           // REWRITE path: matched rows take the source's non-key
-          // values (cast to the batch's own types) in place, unmatched
+          // values (cast to the batch's own types, nested null flags
+          // set — the source may hold null elements) in place, unmatched
           // pass through. A DV'd batch rewrites through its own
           // deletion vector — raw files would resurrect hidden rows
-          val batchRaw = spark.read.parquet(s"$warehouseDir/b$id")
-          val batchDf = dvCondition(spark, warehouseDir, historyDir,
-            Seq(id)).map(batchRaw.filter).getOrElse(batchRaw)
+          val batchDf = batchRelation(spark, warehouseDir, historyDir,
+            id, manifest(spark, historyDir, id))
           val valCols = batchDf.columns.filterNot(c =>
             keyCols.exists(_.equalsIgnoreCase(c)))
           val srcR = s2.select((keyCols.map(col) :+
@@ -3307,7 +3329,7 @@ object WarehouseLoad {
             .select(batchDf.schema.fields.map { f =>
               if (keyCols.exists(_.equalsIgnoreCase(f.name))) col(f.name)
               else when(col(Marker), col(s"__src_${f.name}")
-                  .cast(f.dataType))
+                  .cast(nullableNested(f.dataType)))
                 .otherwise(col(f.name)).as(f.name)
             }.toSeq: _*)
           // FRESH stats (zone map, dictionaries, per-file intervals):

@@ -110,10 +110,12 @@ object CommitLogSource {
     * or — once the table has a first commit — the current committed
     * relation's schema. Pinned at stream start: columns added by a
     * later SchemaDrift.evolve surface after a restart, the standard
-    * streaming-schema contract. */
+    * streaming-schema contract. Nested null flags are set: a later
+    * batch may record the same type with nullable elements, and only
+    * the nullable form conforms both. */
   def resolveSchema(spark: SparkSession, schema: Option[StructType],
                     params: Map[String, String]): StructType = {
-    val base = schema.getOrElse {
+    val declared = schema.getOrElse {
       WarehouseLoad.readWarehouse(spark,
           required(params, "warehouseDir"), required(params, "historyDir"))
         .map(_.schema)
@@ -121,6 +123,8 @@ object CommitLogSource {
           "cannot infer the commit-log stream schema before the first " +
           "commit — pass .schema(...) explicitly"))
     }
+    val base = StructType(declared.fields.map(f =>
+      f.copy(dataType = WarehouseLoad.nullableNested(f.dataType))))
     if (base.fieldNames.exists(_.equalsIgnoreCase(BatchCol))) base
     else base.add(StructField(BatchCol, StringType, nullable = true))
   }
@@ -266,8 +270,7 @@ class CommitLogSource(spark: SparkSession, declared: StructType,
       // overflow-free
       val bytes = math.min(cap,
         batches(v + 1).filterNot(prev)
-          .map(id => WarehouseLoad.manifest(spark, historyDir, id)
-            .files.map(_._2).sum)
+          .map(id => WarehouseLoad.manifest(spark, historyDir, id).bytes)
           .foldLeft(0L)((a, b) => math.min(cap, a + math.min(b, cap))))
       if (v == floor || acc + bytes <= cap) { acc += bytes; v += 1 }
       else over = true

@@ -462,4 +462,35 @@ class CommitLogStreamSpec extends SparkSpec {
     assert(inferred.fieldNames.last == "_graft_batch")
     assert(inferred.fieldNames.map(_.toLowerCase).contains("customerid"))
   }
+
+  test("an array column whose batches record different null flags streams through") {
+    // array(...) records non-null elements, a JSON target nullable ones;
+    // the stream pinned on the first batch must conform the second
+    import org.apache.spark.sql.functions.{array, col, lit}
+    import org.apache.spark.sql.types.ArrayType
+    val staging = tmpDir("graft-clnnstage-")
+    val wh = tmpDir("graft-clnnwh-") + "/t"
+    val hist = tmpDir("graft-clnnhist-") + "/h"
+    val ckpt = tmpDir("graft-clnnckpt-") + "/cp"
+    WarehouseLoad.commitStreamedBatch(spark,
+      spark.range(0, 5).select(col("id").as("k"),
+        array(col("id"), lit(1L)).as("xs")), wh, hist, "epoch-0")
+    val q = spark.readStream.format(provider)
+      .option("warehouseDir", wh).option("historyDir", hist).load()
+      .writeStream.format("memory").queryName("cl_sink_nn")
+      .option("checkpointLocation", ckpt).outputMode("append").start()
+    try {
+      q.processAllAvailable()
+      writeStaged(staging, "f.json",
+        (5 until 10).map(i => s"""{"k": "$i", "xs": [$i, 2]}"""): _*)
+      WarehouseLoad.batchIdempotent(spark, staging,
+        StructType(Seq(StructField("k", LongType),
+          StructField("xs", ArrayType(LongType)))), wh, hist)
+      q.processAllAvailable()
+      val out = spark.table("cl_sink_nn")
+      assert(out.count() == 10L)
+      assert(out.filter(col("k") === 7L).select("xs").collect()
+        .map(_.getSeq[Long](0)).toSeq == Seq(Seq(7L, 2L)))
+    } finally q.stop()
+  }
 }

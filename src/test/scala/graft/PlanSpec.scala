@@ -1198,6 +1198,48 @@ class PlanSpec extends SparkSpec {
     assert(df.schema.fieldNames.toSeq == Seq("b", "xs"))
   }
 
+  test("batches recording one nested type with different null flags read as one table, through a merge rewrite too") {
+    // array(...) records non-null elements, a JSON target's ArrayType
+    // nullable ones: the same column, so the read must reconcile them
+    import java.nio.file.{Files, Paths}
+    import graft.load.WarehouseLoad
+    import org.apache.spark.sql.functions.{array, col, lit}
+    import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
+    import spark.implicits._
+    val staging = tmpDir("graft-nnstage-")
+    val root = tmpDir("graft-nn-")
+    val (wh, hist) = (s"$root/t", s"$root/h")
+    WarehouseLoad.commitStreamedBatch(spark,
+      spark.range(0, 5).select(col("id").as("k"),
+        array(col("id"), lit(1L)).as("xs")), wh, hist, "epoch-0")
+    Files.writeString(Paths.get(staging, "f.json"),
+      (5 until 10).map(i => s"""{"k": "$i", "xs": [$i, 2]}""")
+        .mkString("", "\n", "\n"))
+    WarehouseLoad.batchIdempotent(spark, staging,
+      StructType(Seq(StructField("k", LongType),
+        StructField("xs", ArrayType(LongType)))), wh, hist)
+    val recorded = WarehouseLoad.committedBatches(spark, hist).map(id =>
+      WarehouseLoad.batchStats(spark, hist, id).get.schemaJson).distinct
+    assert(recorded.size == 2,
+      s"the two writers were meant to record different null flags: $recorded")
+    assertManifestInvariant(wh, hist, "an array epoch, then a JSON array load")
+    def read() = WarehouseLoad.readWarehouse(spark, wh, hist).get
+    assert(read().schema("xs").dataType == ArrayType(LongType, containsNull = true))
+    assert(read().count() == 10L)
+    // the merge's rewrite path reads the hit batch at its recorded
+    // schema and leaves the table readable
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.setLong("graft.dv.maxRows", 0L)
+    try assert(WarehouseLoad.mergeCommitted(spark, wh, hist,
+        Seq((2L, Seq(7L)), (6L, Seq(8L))).toDF("k", "xs"), Seq("k")) == ((2L, 0L)))
+    finally conf.unset("graft.dv.maxRows")
+    assertManifestInvariant(wh, hist, "a merge rewrite")
+    val after = read()
+    assert(after.count() == 10L)
+    assert(after.filter(col("k").isin(2L, 6L)).orderBy("k").select("xs")
+      .as[Seq[Long]].collect().toSeq == Seq(Seq(7L), Seq(8L)))
+  }
+
   test("the driver-written history file reads the same through Spark's own parquet reader as through the log-built scan") {
     // the load history is written by the driver (writeHistoryList), not
     // by Spark, and only the log-built scan reads it — pin the file
