@@ -7,7 +7,7 @@ import org.apache.spark.sql.types.{ByteType, DataType, DateType, DoubleType,
   FloatType, IntegerType, LongType, ShortType, StringType, StructType,
   TimestampType}
 
-import graft.load.WarehouseLoad.{ColStats, FileStats, NumZone, StrZone,
+import graft.load.Manifest.{ColStats, FileStats, NumZone, StrZone,
   Zone}
 
 /** Per-FILE [min, max] column statistics for a just-committed batch —
@@ -24,7 +24,7 @@ import graft.load.WarehouseLoad.{ColStats, FileStats, NumZone, StrZone,
   * The stats come from the parquet FOOTERS the batch's own write just
   * produced: one footer open per written file, WRITE-SIDE ONLY, at
   * commit time (the write job already knows its file list —
-  * [[WarehouseLoad]] records it in the same manifest). Readers never
+  * [[Manifest]] records it in the same manifest). Readers never
   * touch a footer: the manifest is the source of truth, same
   * immutability argument as the batch-level zones. Parquet row-group
   * stats still prune WITHIN surviving files at execution time; this
@@ -36,7 +36,7 @@ import graft.load.WarehouseLoad.{ColStats, FileStats, NumZone, StrZone,
   * INT96 timestamps (no trustworthy footer stats), NaN-polluted
   * float/double stats, strings whose footer stats do not round-trip
   * UTF-8 bytes exactly (a writer-truncated max can decode lossily and
-  * understate the bound), over-[[WarehouseLoad.ZoneStrMax]] strings,
+  * understate the bound), over-[[Manifest.ZoneStrMax]] strings,
   * and any column chunk whose statistics parquet marks absent or
   * untrustworthy. */
 object FileZones {
@@ -133,8 +133,8 @@ object FileZones {
       Some(NumZone(math.min(a1, b1), math.max(a2, b2)))
     case (StrZone(a1, a2), StrZone(b1, b2)) =>
       Some(StrZone(
-        if (WarehouseLoad.utf8Cmp(a1, b1) <= 0) a1 else b1,
-        if (WarehouseLoad.utf8Cmp(a2, b2) >= 0) a2 else b2))
+        if (Manifest.utf8Cmp(a1, b1) <= 0) a1 else b1,
+        if (Manifest.utf8Cmp(a2, b2) >= 0) a2 else b2))
     case _ => None
   }
 
@@ -179,8 +179,8 @@ object FileZones {
           // exact byte round-trip required: a writer-truncated max can
           // end in an incremented byte that is not valid UTF-8 — the
           // lossy decode would UNDERSTATE the bound
-          if (ls.length <= WarehouseLoad.ZoneStrMax &&
-              hs.length <= WarehouseLoad.ZoneStrMax &&
+          if (ls.length <= Manifest.ZoneStrMax &&
+              hs.length <= Manifest.ZoneStrMax &&
               java.util.Arrays.equals(ls.getBytes("UTF-8"), lb) &&
               java.util.Arrays.equals(hs.getBytes("UTF-8"), hb))
             Some(StrZone(ls, hs))

@@ -23,6 +23,19 @@ import graft.schema.SchemaAlign
   *    [[vacuum]], [[restoreWarehouse]] and the streamed epoch commit
   *    ([[commitStreamedBatch]]).
   *
+  * This object holds the public API and the writers. Each on-disk
+  * format and read decision lives in its own module of this package:
+  *  - [[VersionLog]]: the `_versions` log — delta/snapshot version
+  *    manifests, the head probe, the one CAS ([[VersionLog.commitBatches]])
+  *    and the in-flight intent markers;
+  *  - [[Manifest]]: each batch's `_ZONEMAP` record ([[BatchStats]]:
+  *    schema, data and history file lists, zone stats, deletion
+  *    vectors), its cache, and the history-file writer;
+  *  - [[CommittedScan]]: how a committed batch set becomes a relation
+  *    (the log-built scan, schema merge, deletion-vector filter);
+  *  - [[StagedRead]]: how the staging dir becomes the fresh batch
+  *    (listing snapshot, key-set inference, fresh-file read).
+  *
   * The writers share one rewrite skeleton of private steps, each with
   * one implementation: [[taggedRelation]] (the batch-tagged probe),
   * [[dvEligible]] (deletion-vector eligibility), [[writeBatch]] (a
@@ -30,10 +43,9 @@ import graft.schema.SchemaAlign
   * files and stats), [[commitRemap]] (a rewrite's one version) and
   * [[untilConverged]] (re-running a pass a concurrent rewrite beat).
   * Every commit goes through [[commitBatches]], the one CAS, and
-  * every committed batch records its manifest ([[BatchStats]]: schema,
-  * data and history file lists). Every committed read plans from that
-  * manifest alone ([[readBatchDirs]], [[historyFileRelation]]); a
-  * batch without one is corruption and fails the read, naming it.
+  * every committed batch records its manifest. Every committed read
+  * plans from that manifest alone; a batch without one is corruption
+  * and fails the read, naming it.
   *
   * Failure policy: `strict = true` mirrors COPY's default
   * `ON_ERROR` (refuse the batch when any value fails coercion OR fails
@@ -41,6 +53,20 @@ import graft.schema.SchemaAlign
   * `strict = false` mirrors `ON_ERROR = CONTINUE` (nulls through).
   */
 object WarehouseLoad {
+  import CommittedScan._, Manifest._, StagedRead._, VersionLog._
+
+  type Zone = Manifest.Zone
+  type NumZone = Manifest.NumZone
+  val NumZone = Manifest.NumZone
+  type StrZone = Manifest.StrZone
+  val StrZone = Manifest.StrZone
+  type ColStats = Manifest.ColStats
+  val ColStats = Manifest.ColStats
+  type FileStats = Manifest.FileStats
+  val FileStats = Manifest.FileStats
+  type BatchStats = Manifest.BatchStats
+  val BatchStats = Manifest.BatchStats
+
   final class CoercionException(msg: String) extends RuntimeException(msg)
 
   /** Thrown when the load's coverage guard detects that a staged file
@@ -53,9 +79,6 @@ object WarehouseLoad {
 
   private val StrictMarker = "GRAFT_COERCION_FAILURE"
   private val CheckMarker = "GRAFT_CHECK_VIOLATION"
-  private val CorruptCol = "_graft_corrupt_record"
-  private val FileCol = "_graft_file"
-  private val CommitLog = "_COMMITTED"
 
   /** Thrown when a batch violates a declared CHECK constraint — the
     * whole batch is refused BEFORE its commit (nothing becomes
@@ -63,49 +86,6 @@ object WarehouseLoad {
     * abort-batch semantic extended to table constraints. */
   final class CheckViolation(val constraint: String, msg: String)
     extends RuntimeException(msg)
-
-  /** Canonical file-URI spelling, so paths from the independent
-    * producers — `FileStatus.getPath` ("file:/tmp/x") and the
-    * `_metadata.file_path` scan column ("file:///tmp/x") — compare
-    * equal. Two normalizations, applied identically on both sides:
-    * percent-decoding (a filename with a space/%/# character, or a
-    * Spark upgrade changing `_metadata.file_path`'s encoding, must not
-    * silently diverge the spellings — both sides decode to the same raw
-    * form, or both fall back to the raw input when it is not valid
-    * percent-encoding), then the `file:` slash count (only the
-    * authority-less `file:` scheme is ambiguous; schemes with an
-    * authority — hdfs://, s3a:// — already spell the `//` and pass
-    * through untouched). [[loadAtomic]]'s coverage guard backstops the
-    * normalization: a divergence it does NOT reconcile aborts the batch
-    * instead of recording unread files as loaded. */
-  private def norm(p: String): String = {
-    val decoded =
-      try java.net.URLDecoder.decode(p, "UTF-8")
-      catch { case _: IllegalArgumentException => p }
-    decoded.replaceFirst("^file:/+", "file:///")
-  }
-
-  private def normCol(c: Column): Column = {
-    import org.apache.spark.sql.functions.{coalesce, regexp_replace, try_url_decode}
-    regexp_replace(coalesce(try_url_decode(c), c), "^file:/+", "file:///")
-  }
-
-  /** One snapshot listing of the staging dir — data files only (no
-    * `_SUCCESS`/dot files), canonical URIs + lengths, sorted for
-    * determinism. This is the same metadata-only listing Spark's own
-    * file index performs; nothing row-sized ever lands on the driver. */
-  private def listStaged(spark: SparkSession, stagingDir: String):
-      Seq[(String, Long)] = {
-    val p = new org.apache.hadoop.fs.Path(stagingDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(p).toSeq
-      .filter { st =>
-        val n = st.getPath.getName
-        st.isFile && !n.startsWith("_") && !n.startsWith(".")
-      }
-      .map(st => (norm(st.getPath.toUri.toString), st.getLen)).sortBy(_._1)
-  }
-
   /** Strict mode folds the failure check into the load's own scan as an
     * `assert_true` filter guard (throws from the executor on the first
     * bad row) instead of a separate counting pass — one read of the
@@ -143,299 +123,43 @@ object WarehouseLoad {
           "batch refused: at least one row failed coercion to the declared schema")
     }
 
-  /** Schema of the staged JSON *as the files spell it* (original key
-    * casing), all primitives as strings so alignment — not the JSON
-    * sampler — owns type coercion, exactly how COPY treats JSON text
-    * values. A schema'd Spark JSON read matches keys case-sensitively,
-    * so reading with lower-cased target names would null out every
-    * CamelCase key; inferring the real keys and letting [[SchemaAlign]]
-    * resolve them case-insensitively is the COPY semantic.
-    *
-    * THE HOMOGENEITY CONTRACT (stated once, here): every file under
-    * the staging root spells the same key set — a bounded arrival
-    * partition fed by one producer, the Snowpipe stage shape. Under
-    * it, the key set may be pinned from ANY file, which is what lets
-    * the loads infer from a bounded sample of the fresh files
-    * ([[freshSchema]]). This full-root pass is only [[freshSchema]]'s
-    * fallback, for a sample that yields no keys. */
-  private def stagedSchema(spark: SparkSession,
-                           stagingDir: String): StructType =
-    spark.read.option("primitivesAsString", "true").json(stagingDir).schema
-
   // ------------------------------------------------------------------
-  // Idempotent batch load: atomic batch commit + load history
+  // The commit log's public reads: head, versions, time travel, feed
   // ------------------------------------------------------------------
 
-  /** Batch ids committed so far, in commit order — the HEAD version
-    * manifest's batch list. Everything outside this list (a data dir
-    * written by a crashed attempt, a half-staged history snapshot) is
-    * invisible to readers and harmlessly overwritten by the retry. */
+  /** The committed head version (0 before the first commit); see
+    * [[VersionLog.currentVersion]]. */
+  def currentVersion(spark: SparkSession, historyDir: String): Long =
+    VersionLog.currentVersion(spark, historyDir)
+
+  /** Batch ids committed so far, in commit order (the head's list). */
   private[graft] def committedBatches(spark: SparkSession,
                                       historyDir: String): Seq[String] =
-    headBatches(spark, historyDir, currentVersion(spark, historyDir))
+    VersionLog.committedBatches(spark, historyDir)
 
-  /** The batch list of `head`, a head version the caller has just read
-    * — [[versionBatches]] without a second head probe. */
-  private def headBatches(spark: SparkSession, historyDir: String,
-                          head: Long): Seq[String] =
-    if (head == 0) Nil
-    else readVersionList(spark, historyDir, head).getOrElse(
-      throw new IllegalStateException(
-        s"head version $head of $historyDir has no readable manifest — " +
-        "the commit log is corrupt (vacuum never prunes the head)"))
+  /** The batch list committed as `version`; see
+    * [[VersionLog.versionBatches]]. */
+  def versionBatches(spark: SparkSession, historyDir: String,
+                     version: Long): Option[Seq[String]] =
+    VersionLog.versionBatches(spark, historyDir, version)
 
-  // ------------------------------------------------------------------
-  // Versioned commit log: time travel + change feed
-  // ------------------------------------------------------------------
+  /** The newest retained version published at or before `tsMillis`;
+    * see [[VersionLog.versionAt]]. */
+  def versionAt(spark: SparkSession, historyDir: String,
+                tsMillis: Long): Option[Long] =
+    VersionLog.versionAt(spark, historyDir, tsMillis)
 
-  private val VersionsDir = "_versions"
-  private def versionName(v: Long): String = f"v$v%08d"
-
-  /** Marker first line of a DELTA version manifest (r14 — VERDICT r13
-    * #3, the CommitScale-motivated fix): an append commit's version
-    * file records only the appended ids (`+id` lines) instead of the
-    * full batch list, so N append commits write O(N) total manifest
-    * bytes instead of O(N²) — at 10k commits the difference between
-    * ~2 GB and ~30 MB of version log. Rewrites (compaction/takedown —
-    * any derive that is not a pure append) and every
-    * [[snapshotEvery]]-th version still write the FULL list (a
-    * SNAPSHOT — any file not starting with this marker, which is also
-    * every pre-r14 file: the formats coexist in one log), bounding
-    * [[versionBatches]]' reconstruction walk-back to one snapshot plus
-    * at most `snapshotEvery - 1` tiny delta reads. */
-  private val DeltaHeader = "#delta"
-
-  /** Snapshot cadence of the version log — every `k`-th version is a
-    * full batch list even when the commit is a pure append. Hadoop-conf
-    * knob (`graft.commit.snapshotEvery`) so specs can cross snapshot
-    * boundaries cheaply and operators can pin a fixed trade; the
-    * DEFAULT is ADAPTIVE (r16 — the CommitScale-100k find): a fixed
-    * cadence k makes total snapshot bytes O(N²/k), and at N = 100,000
-    * commits the measured log was 597 MB — the quadratic tail
-    * dominating the O(N) deltas a hundredfold. The adaptive cadence
-    * doubles as the head grows (max(64, next-pow2(v/64))), so the
-    * snapshot total stays O(N·64·line) — linear — while walk-back
-    * length stays ≤ cadence tiny delta reads, amortized by the
-    * reconstruction cache. Power-of-two growth keeps every new
-    * cadence's boundaries a subset of old multiples, and the
-    * walk-back needs no cadence knowledge at all — it just walks to
-    * whatever snapshot exists. (Operationally `vacuum` also prunes
-    * version files below retention — this bound is for tables that
-    * keep deep history.) */
-  private[graft] def snapshotEvery(spark: SparkSession, v: Long): Long = {
-    val conf = spark.sparkContext.hadoopConfiguration
-      .getLong("graft.commit.snapshotEvery", 0L)
-    if (conf > 0) conf
-    else {
-      val t = math.max(1L, v / 64)
-      math.max(64L, java.lang.Long.highestOneBit(t) * 2)
-    }
-  }
-
-  /** Reconstructed version lists, keyed by the requested version
-    * FILE's (mtime, length) like [[zoneMapCache]]: version files are
-    * immutable once published (vacuum's cutoff snapshot-ification
-    * replaces one file, changing its state key), but a warehouse
-    * deleted and rebuilt under the same path within one JVM must never
-    * be served the old table's list. One getFileStatus validates a
-    * hit; a miss walks the delta chain. LRU-bounded: entries are
-    * O(batch count) strings, so the cap stays small. */
-  private val VersionListCacheMax = 64
-  private val versionListCache = new java.util.LinkedHashMap[
-      (String, Long, Long, Long), Seq[String]](16, 0.75f, true) {
-    override def removeEldestEntry(
-        e: java.util.Map.Entry[(String, Long, Long, Long),
-                               Seq[String]]): Boolean =
-      size() > VersionListCacheMax
-  }
+  /** Batch `id`'s recorded manifest, `None` when it has none; see
+    * [[Manifest.batchStats]]. */
+  def batchStats(spark: SparkSession, historyDir: String,
+                 id: String): Option[BatchStats] =
+    Manifest.batchStats(spark, historyDir, id)
 
   /** A change feed between two versions cannot be expressed as appends
     * because a batch present in `from` is gone in `to` (compaction or a
     * takedown rewrote the set) — the consumer must resync from a full
     * snapshot ([[readWarehouseAt]]) instead of applying a delta. */
   final class RewriteException(msg: String) extends RuntimeException(msg)
-
-  /** The committed head version (0 before the first commit). Every
-    * commit — load, streamed epoch, compaction, takedown — increments
-    * it by exactly one. The EXCLUSIVE publish of `_versions/vN` is the
-    * commit point; `_COMMITTED` is a lagging HINT written after it, so
-    * the head is the hint plus a forward probe (the probe closes the
-    * crash window between the two writes — a version file, once
-    * published, IS committed; versions are contiguous by construction
-    * because every writer races for exactly head+1).
-    *
-    * STALE-HINT RECOVERY (ADVICE r13): the hint can lag the head by
-    * more than one (crashes in the publish→hint window, out-of-order
-    * hint overwrites by concurrent CAS committers), and [[vacuum]]
-    * prunes version files below its retention cutoff — a probe
-    * starting at a lagging hint would then stop at a pruned version
-    * and misread the head (silently EMPTY in the hint=0 case). Vacuum
-    * refreshes the hint before pruning, and this read backstops it:
-    * when the probe cannot advance AND the hint's own version file is
-    * gone (pruned ⇒ stale), the `_versions` listing is the authority —
-    * jump to its max and re-probe. The common path pays one extra
-    * exists() at most; the listing runs only on the stale-hint path. */
-  def currentVersion(spark: SparkSession, historyDir: String): Long = {
-    // The hint is advisory: concurrent committers overwrite it racily
-    // (on the local ChecksumFs a reader can even catch a torn
-    // data/.crc pair and exhaust the checksum retries), so ANY failure
-    // to read it degrades to "no hint" — the forward probe plus the
-    // stale-hint listing fallback below recover the true head.
-    val hint =
-      (try AtomicManifest.read(spark, historyDir, CommitLog)
-       catch { case scala.util.control.NonFatal(_) => None })
-      .flatMap(_.linesIterator.find(_.startsWith("#v="))
-        .flatMap(_.drop(3).toLongOption))
-      .getOrElse(0L)
-    val vroot = new org.apache.hadoop.fs.Path(s"$historyDir/$VersionsDir")
-    val fs = vroot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def probe(from: Long): Long = {
-      var v = from
-      while (fs.exists(new org.apache.hadoop.fs.Path(vroot,
-          versionName(v + 1)))) v += 1
-      v
-    }
-    val v = probe(hint)
-    val hintStale = v == hint && (hint == 0 ||
-      !fs.exists(new org.apache.hadoop.fs.Path(vroot, versionName(hint))))
-    if (!hintStale) v
-    else {
-      val listed =
-        try fs.listStatus(vroot).iterator.flatMap(st =>
-            st.getPath.getName.stripPrefix("v").toLongOption).maxOption
-        catch { case _: java.io.FileNotFoundException => None }
-      listed.filter(_ > v).map(probe).getOrElse(v)
-    }
-  }
-
-  /** The commit step every batch-set mutation (load, streamed epoch,
-    * compaction, takedown) ends with — OPTIMISTIC CONCURRENCY over the
-    * version log (the Delta/HDFS commit dance, VERDICT r12 #2): derive
-    * the new batch list from the CURRENT head's list, publish it as
-    * `_versions/v(head+1)` with an atomic CREATE-EXCLUSIVE
-    * ([[AtomicManifest.createExclusive]] — the CAS), and on conflict
-    * (another writer claimed that version first) re-read the head,
-    * RE-DERIVE, and retry. The exclusive publish is the COMMIT POINT:
-    * version files are immutable once published, `_COMMITTED` is a
-    * lagging hint ([[currentVersion]] probes past it), and a crash
-    * after the publish is already durable — the retry's `derive` sees
-    * its own batch in the head list and no-ops. Two interleaved
-    * committers therefore BOTH land, versions advancing by one each,
-    * no lost update — the docstring contract is now mechanical.
-    *
-    * Rewrite-vs-rewrite races are arbitrated by the CALLERS' derives
-    * on top of this CAS: a compaction whose inputs vanished ABORTS its
-    * fold ([[compactCommitted]]), a takedown whose probed batches
-    * vanished RE-RUNS over the new snapshot ([[takedownCommitted]]).
-    * Vacuum-vs-writer is arbitrated by intent markers
-    * ([[publishIntent]], r14): an in-flight writer's uncommitted batch
-    * dirs look like orphans to [[vacuum]] (the CAS arbitrates
-    * manifests, not data-dir liveness), so every writer marks its
-    * batch ids in flight before writing a dir and vacuum skips marked
-    * orphans until the marker's TTL expires. */
-  private def commitBatches(spark: SparkSession, historyDir: String,
-      derive: Seq[String] => Seq[String],
-      failpoint: String => Unit = _ => ()): Long = {
-    var attempt = 0
-    while (attempt < 10000) {
-      val head = currentVersion(spark, historyDir)
-      val committed = headBatches(spark, historyDir, head)
-      val batches = derive(committed)
-      if (batches == committed) return head // already committed: no-op
-      require(batches.forall(b =>
-          b.nonEmpty && b != DeltaHeader && !b.contains("\n")),
-        "batch ids must be non-empty single-line strings")
-      val v = head + 1
-      // Pure appends — the N-commit hot path (loads, streamed epochs)
-      // — publish a DELTA manifest; rewrites and every snapshotEvery-th
-      // version publish the full list (see [[DeltaHeader]]).
-      val content =
-        if (v % snapshotEvery(spark, v) == 0 ||
-            !(batches.sizeIs > committed.size) ||
-            !batches.startsWith(committed))
-          batches.mkString("\n")
-        else
-          (DeltaHeader +: batches.drop(committed.size).map("+" + _))
-            .mkString("\n")
-      failpoint("commit-attempt")
-      if (AtomicManifest.createExclusive(spark, s"$historyDir/$VersionsDir",
-          versionName(v), content)) {
-        failpoint("version-written")
-        // The hint is ONLY the head version number — readers resolve
-        // the batch list from the version log itself, and an O(N)-line
-        // hint per commit re-created the O(N²) write volume the delta
-        // log removes. BEST-EFFORT: concurrent committers race their
-        // hint overwrites (on the local ChecksumFs even the .crc
-        // sidecar rename can collide), and the commit is already
-        // durable at the version publish — a lost/failed hint write
-        // only costs the next reader a longer forward probe, so it
-        // must never fail a committed commit.
-        try AtomicManifest.write(spark, historyDir, CommitLog, s"#v=$v")
-        catch { case scala.util.control.NonFatal(_) => () }
-        return v
-      }
-      attempt += 1 // lost the CAS: re-read head, re-derive, retry
-    }
-    throw new IllegalStateException(
-      "commit CAS starved after 10000 attempts — a writer is spinning " +
-      "or the version log is being mutated outside the protocol")
-  }
-
-  /** The batch list committed as `version` — `Some(Nil)` for version 0
-    * (the empty table before the first commit), `None` when the version
-    * is beyond the committed head (never committed) or its manifest was
-    * pruned by [[vacuum]] retention. */
-  def versionBatches(spark: SparkSession, historyDir: String,
-                     version: Long): Option[Seq[String]] =
-    if (version == 0) Some(Nil)
-    else if (version > currentVersion(spark, historyDir)) None
-    else readVersionList(spark, historyDir, version)
-
-  /** Reconstruct `version`'s batch list: walk the delta chain back to
-    * the nearest SNAPSHOT manifest (or v0 = the empty table),
-    * prepending each delta's appends — at most [[snapshotEvery]] tiny
-    * manifest reads, usually one cache hit. `None` when any file in
-    * the chain is gone (pruned by [[vacuum]], whose cutoff
-    * snapshot-ification guarantees every RETAINED version's chain
-    * terminates at or above the cutoff). */
-  private def readVersionList(spark: SparkSession, historyDir: String,
-                              version: Long): Option[Seq[String]] = {
-    val vroot = new org.apache.hadoop.fs.Path(s"$historyDir/$VersionsDir")
-    val fs = vroot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def key(v: Long): Option[(String, Long, Long, Long)] =
-      try {
-        val st = fs.getFileStatus(
-          new org.apache.hadoop.fs.Path(vroot, versionName(v)))
-        Some((historyDir, v, st.getModificationTime, st.getLen))
-      } catch { case _: java.io.FileNotFoundException => None }
-    def cached(v: Long): Option[Seq[String]] = key(v).flatMap(k =>
-      versionListCache.synchronized(Option(versionListCache.get(k))))
-    def store(list: Seq[String]): Option[Seq[String]] = {
-      key(version).foreach(k =>
-        versionListCache.synchronized(versionListCache.put(k, list)))
-      Some(list)
-    }
-    var v = version
-    var suffix = Vector.empty[String] // appends of versions (v, version]
-    while (v > 0) {
-      cached(v) match {
-        case Some(base) =>
-          return if (v == version) Some(base) else store(base ++ suffix)
-        case None =>
-          AtomicManifest.read(spark, s"$historyDir/$VersionsDir",
-              versionName(v)) match {
-            case None => return None // chain pruned by vacuum retention
-            case Some(txt) =>
-              val lines = txt.linesIterator.filter(_.nonEmpty).toVector
-              if (lines.headOption.contains(DeltaHeader)) {
-                suffix = lines.tail.map(_.stripPrefix("+")) ++ suffix
-                v -= 1
-              } else return store(lines ++ suffix)
-          }
-      }
-    }
-    store(suffix) // chain terminated at v0: the empty table
-  }
 
   /** Time travel: the warehouse relation exactly as committed at
     * `version` — the snapshot-isolation read the versioned commit log
@@ -528,35 +252,6 @@ object WarehouseLoad {
     } finally resurrected.foreach(clearIntent(spark, historyDir, _))
   }
 
-  /** The newest RETAINED version published at or before `tsMillis` —
-    * the AS OF TIMESTAMP resolution (Delta's contract: commit-file
-    * timestamps, made MONOTONIC by a running max over the version
-    * sequence, since a filesystem mtime is not ordered by itself and
-    * [[vacuum]]'s cutoff snapshot-ification rewrites one retained file
-    * with a later mtime — under the running max, a timestamp from
-    * before that rewrite resolves to a version below retention and
-    * the read fails loudly, consistent with its data having left the
-    * horizon). ONE `_versions` listing; `None` when no retained
-    * version is old enough. */
-  def versionAt(spark: SparkSession, historyDir: String,
-                tsMillis: Long): Option[Long] = {
-    val vroot = new org.apache.hadoop.fs.Path(s"$historyDir/$VersionsDir")
-    val fs = vroot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val byVersion =
-      (try fs.listStatus(vroot).toSeq
-       catch { case _: java.io.FileNotFoundException => Nil })
-        .flatMap(st => st.getPath.getName.stripPrefix("v").toLongOption
-          .map(_ -> st.getModificationTime))
-        .sortBy(_._1)
-    var cummax = 0L
-    var best = Option.empty[Long]
-    byVersion.foreach { case (v, m) =>
-      cummax = math.max(cummax, m)
-      if (cummax <= tsMillis) best = Some(v)
-    }
-    best
-  }
-
   /** Time travel by TIMESTAMP: [[readWarehouseAt]] at
     * [[versionAt]]'s resolution. Throws when nothing retained is old
     * enough (a timestamp before the first commit, or one whose
@@ -607,41 +302,6 @@ object WarehouseLoad {
       rowIdentity = false)
   }
 
-  private val BatchCol = "_graft_batch"
-  private val FpCol = "_graft_fp"
-  private val RiCol = "_graft_ri"
-
-  /** The committed union over `ids` with every row tagged by its batch
-    * id (`_graft_batch`) — the relation the change feed serves and the
-    * takedown/merge probes join against. With `rowIdentity` each row
-    * also carries its normalized file path (`_graft_fp`) and
-    * `_metadata.row_index` (`_graft_ri`), the identity deletion vectors
-    * hide rows by. ONE probe relation, not one per batch
-    * ([[manifestGroupRelations]]): the batch id comes from
-    * `_metadata.file_path` — a constant-size plan at any load count.
-    * Each layout/schema generation is tagged BEFORE the
-    * cross-generation union: `_metadata` never resolves through a
-    * Union. The union is `allowMissingColumns`: batches straddling a
-    * SchemaDrift.evolve differ by the added nullable columns, which
-    * surface as null on the older rows. `None` when nothing is live. */
-  private def taggedRelation(spark: SparkSession, warehouseDir: String,
-      historyDir: String, ids: Seq[String],
-      rowIdentity: Boolean): Option[DataFrame] = {
-    import org.apache.spark.sql.functions.{col, regexp_extract}
-    val p = new org.apache.hadoop.fs.Path(warehouseDir)
-    val qWh = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .makeQualified(p).toString
-    manifestGroupRelations(spark, warehouseDir, historyDir, ids).map(
-      _.map { r =>
-        val tagged = r.withColumn(BatchCol,
-          regexp_extract(col("_metadata.file_path"),
-            java.util.regex.Pattern.quote(qWh) + "/b([^/]+)/", 1))
-        if (!rowIdentity) tagged
-        else tagged.withColumn(FpCol, normCol(col("_metadata.file_path")))
-          .withColumn(RiCol, col("_metadata.row_index"))
-      }.reduce(_.unionByName(_, allowMissingColumns = true)))
-  }
-
   /** The committed warehouse relation: the union of the committed batch
     * data dirs. One scan root per committed batch — bounded by the
     * number of LOADS, not files (a million-file staging wave is still
@@ -656,337 +316,6 @@ object WarehouseLoad {
                     historyDir: String): Option[DataFrame] =
     readBatchDirs(spark, warehouseDir, historyDir,
       committedBatches(spark, historyDir))
-
-  /** The committed relation over `ids`, built entirely from the commit
-    * log: every batch's manifest records its schema and its file list,
-    * so the scan is a [[graft.plans.ManifestFileIndex]] with zero
-    * filesystem listing and zero footer I/O at plan time (the
-    * Delta/Iceberg move; at 10k commits the listing-based construction
-    * measured ~20 s, CommitScale r14). `None` when no batch in `ids`
-    * holds a file. */
-  private def readBatchDirs(spark: SparkSession, warehouseDir: String,
-                            historyDir: String,
-                            ids: Seq[String]): Option[DataFrame] = {
-    graft.plans.ZonePrune.register(spark, warehouseDir, historyDir)
-    manifestGroupRelations(spark, warehouseDir, historyDir, ids).map(
-      _.reduce(_.unionByName(_, allowMissingColumns = true)))
-  }
-
-  /** The wider of two Parquet-safe-promotable types (r16, VERDICT r15
-    * #3): the integral chain (byte→short→int→long), float→double, and
-    * decimal precision/scale growth — promotions whose Cast is exact,
-    * so conforming an old generation to the widened schema can never
-    * change a value. Everything else (int↔double, string↔anything) is
-    * NOT additive drift. */
-  private def widenType(a: org.apache.spark.sql.types.DataType,
-      b: org.apache.spark.sql.types.DataType)
-      : Option[org.apache.spark.sql.types.DataType] = {
-    import org.apache.spark.sql.types.DecimalType
-    if (a == b) return Some(a)
-    val ints = Seq[org.apache.spark.sql.types.DataType](
-      ByteType, ShortType, IntegerType, LongType)
-    val fps = Seq[org.apache.spark.sql.types.DataType](
-      FloatType, DoubleType)
-    (ints.indexOf(a), ints.indexOf(b)) match {
-      case (i, j) if i >= 0 && j >= 0 => return Some(ints(math.max(i, j)))
-      case _ => ()
-    }
-    (fps.indexOf(a), fps.indexOf(b)) match {
-      case (i, j) if i >= 0 && j >= 0 => return Some(fps(math.max(i, j)))
-      case _ => ()
-    }
-    (a, b) match {
-      case (x: DecimalType, y: DecimalType) =>
-        val scale = math.max(x.scale, y.scale)
-        val intDigits = math.max(x.precision - x.scale,
-          y.precision - y.scale)
-        if (intDigits + scale <= DecimalType.MAX_PRECISION)
-          Some(DecimalType(intDigits + scale, scale))
-        else None
-      case _ => None
-    }
-  }
-
-  /** `t` with every nested null flag set: array elements, map values
-    * and struct fields all nullable. Writers of one type disagree on
-    * these flags, and the nullable form reads (and casts from) all. */
-  private[graft] def nullableNested(t: DataType): DataType = t match {
-    case ArrayType(e, _) => ArrayType(nullableNested(e), true)
-    case MapType(k, v, _) =>
-      MapType(nullableNested(k), nullableNested(v), true)
-    case StructType(fs) => StructType(fs.map(f =>
-      f.copy(dataType = nullableNested(f.dataType), nullable = true)))
-    case other => other
-  }
-
-  /** Conform a set of per-batch recorded schemas to ONE read schema —
-    * the evolution-window fix (r15, VERDICT r14 #4): batches written
-    * before and after a [[graft.schema.SchemaDrift]] evolve record
-    * different schemas. Additive drift is exactly what the parquet
-    * reader already handles when HANDED the union schema — a file
-    * missing a requested nullable column reads it as null — so the
-    * merge is: union the fields by name in first-seen order; types
-    * must agree EXACTLY up to their nested null flags, or with
-    * `widening` be Parquet-safe promotions ([[widenType]]); a field
-    * absent from any batch is forced nullable (the reader fills nulls
-    * for it). Nested null flags (`containsNull`, `valueContainsNull`,
-    * struct-field `nullable`) differ between writers of the same type —
-    * `array(...)` records non-null elements, a JSON target or a parquet
-    * read records nullable ones — so a disagreement there merges to the
-    * nullable form, which reads both. `Left` names the first field the
-    * merge cannot reconcile: (name, type so far, conflicting type). */
-  private def mergeRecordedSchemas(parsed: Seq[StructType],
-      widening: Boolean): Either[(String, DataType, DataType), StructType] = {
-    if (parsed.sizeIs == 1) return Right(parsed.head)
-    val order = scala.collection.mutable.LinkedHashMap
-      .empty[String, StructField]
-    for (sc <- parsed; f <- sc.fields) {
-      order.get(f.name) match {
-        case None => order(f.name) = f
-        case Some(prev) =>
-          val loose = nullableNested(prev.dataType)
-          val merged =
-            if (prev.dataType == f.dataType) Some(prev.dataType)
-            else if (loose == nullableNested(f.dataType)) Some(loose)
-            else if (widening) widenType(prev.dataType, f.dataType)
-            else None
-          order(f.name) = prev.copy(
-            dataType = merged.getOrElse(
-              return Left((f.name, prev.dataType, f.dataType))),
-            nullable = prev.nullable || f.nullable)
-      }
-    }
-    // a field missing from ANY batch reads as null there → nullable
-    val counts = parsed.flatMap(_.fieldNames).groupBy(identity)
-    val merged = order.values.map { f =>
-      if (counts(f.name).sizeIs < parsed.size) f.copy(nullable = true)
-      else f
-    }
-    Right(StructType(merged.toSeq))
-  }
-
-  private def parseSchema(json: String): StructType =
-    DataType.fromJson(json).asInstanceOf[StructType]
-
-  /** A committed batch whose manifest cannot be what a writer recorded. */
-  private def corrupt(historyDir: String, id: String,
-                      what: String): IllegalStateException =
-    new IllegalStateException(
-      s"batch $id of $historyDir: $what — the commit log is corrupt")
-
-  /** The combined deletion-vector filter for `ids` as ONE Column over
-    * the scan's `_metadata` (r16): for every (batch, file, hidden row
-    * index) recorded in the manifests, drop that row. `None` when no
-    * batch carries a DV — the overwhelmingly common case pays one
-    * cached manifest-map lookup per batch and adds NOTHING to the
-    * plan. Conditions are FILE-scoped (`file_path === …`), so applying
-    * the table-wide filter to any sub-relation is harmless — which is
-    * what lets one choke point ([[manifestGroupRelations]]) cover
-    * every committed read: readWarehouse, time travel, change feed,
-    * compaction folds, and the takedown/merge probes all inherit it,
-    * so a hidden row can never resurrect through ANY path. Row indexes
-    * are `_metadata.row_index` positions — stable because batch files
-    * are immutable (a rewrite commits new files and drops the DV). */
-  private def dvCondition(spark: SparkSession, warehouseDir: String,
-      pairs: Seq[(String, BatchStats)]): Option[Column] = {
-    import org.apache.spark.sql.functions.{col, lit, not}
-    import org.apache.spark.sql.GraftSqlBridge.{column, expression}
-    val withDv = pairs.filter(_._2.dv.exists(_._2.nonEmpty))
-    if (withDv.isEmpty) return None
-    val base = new org.apache.hadoop.fs.Path(warehouseDir)
-    val qBase = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .makeQualified(base)
-    val conds = for {
-      (id, st) <- withDv
-      (rel, vec) <- st.dv.toSeq.sortBy(_._1)
-      if vec.nonEmpty
-    } yield {
-      val abs = norm(new org.apache.hadoop.fs.Path(
-        new org.apache.hadoop.fs.Path(qBase, s"b$id"), rel)
-        .toUri.toString)
-      // membership over the RUNS, not the rows (r17): plan size and
-      // eval cost are O(runs) via a codegen'd binary search — the
-      // InSet form capped vectors at plan-sized row counts
-      val (starts, ends) = vec.startsEnds
-      not(normCol(col("_metadata.file_path")) === lit(abs) &&
-        column(graft.functions.InLongRuns(
-          expression(col("_metadata.row_index")), starts, ends)))
-    }
-    conds.reduceOption(_ && _)
-  }
-
-  /** The committed relation over `ids` BEFORE the cross-layout union:
-    * one log-built relation per layout/schema generation, deletion
-    * vectors applied, for BOTH layouts (hive-partitioned batches parse
-    * partition values from the recorded paths and the index evaluates
-    * partition filters itself). Consumers that derive the batch id
-    * from `_metadata.file_path` ([[changes]], the takedown probe) must
-    * tag each relation BEFORE unioning — metadata columns do not
-    * resolve through a Union (r15 review find #1). `None` when no batch
-    * in `ids` holds a file. */
-  private[graft] def manifestGroupRelations(spark: SparkSession,
-      warehouseDir: String, historyDir: String,
-      ids: Seq[String]): Option[Seq[DataFrame]] = {
-    val live = ids.zip(manifests(spark, historyDir, ids))
-      .filter(_._2.files.nonEmpty)
-    if (live.isEmpty) return None
-    // GROUP BY LAYOUT (r15): a table whose life spans a layout change
-    // (flat loads, then hive-partitioned ones — or two partition-col
-    // generations) plans one log-built relation PER layout group and
-    // unions them — bounded by the number of layout GENERATIONS (1–2
-    // in practice), never the batch count. unionByName fills the
-    // partition columns a flat generation lacks with null.
-    val grouped = scala.collection.mutable.LinkedHashMap
-      .empty[Seq[String], Vector[(String, BatchStats)]]
-    for ((id, st) <- live) {
-      val lay = batchLayout(historyDir, id, st)
-      grouped(lay) = grouped.getOrElse(lay, Vector.empty) :+ ((id, st))
-    }
-    val rels = grouped.toSeq.flatMap { case (partNames, batches) =>
-      layoutRelation(spark, warehouseDir, partNames, batches)
-    }
-    // deletion vectors apply HERE, per generation relation (r16):
-    // every consumer inherits the filter, so a hidden row cannot
-    // resurrect. Built from the stats THIS pass already fetched.
-    Some(dvCondition(spark, warehouseDir, live) match {
-      case Some(c) => rels.map(_.filter(c))
-      case None => rels
-    })
-  }
-
-  /** The log-built relation of ONE committed batch over the files `st`
-    * records, its deletion vector applied — what a rewrite reads, so it
-    * sees the batch at its recorded schema and never lists the dir. */
-  private def batchRelation(spark: SparkSession, warehouseDir: String,
-      historyDir: String, id: String, st: BatchStats): DataFrame = {
-    val rel = layoutRelation(spark, warehouseDir,
-      batchLayout(historyDir, id, st), Seq(id -> st)).head
-    dvCondition(spark, warehouseDir, Seq(id -> st))
-      .map(rel.filter).getOrElse(rel)
-  }
-
-  /** One batch's hive layout: the partition-column sequence every one
-    * of its recorded file paths spells (`Nil` = flat). Every writer
-    * records the files of ONE `partitionBy` write, so files that
-    * disagree, or a directory without the `col=` shape, are
-    * corruption. */
-  private def batchLayout(historyDir: String, id: String,
-                          st: BatchStats): Seq[String] = {
-    val seqs = st.files.map { case (rel, _) =>
-      rel.split("/").init.toSeq.map { seg =>
-        val eq = seg.indexOf('=')
-        if (eq <= 0) throw corrupt(historyDir, id,
-          s"recorded file '$rel' sits under a non-partition directory")
-        seg.substring(0, eq)
-      }
-    }.distinct
-    if (seqs.sizeIs == 1) seqs.head
-    else throw corrupt(historyDir, id,
-      s"recorded files disagree on the partition layout: $seqs")
-  }
-
-  /** The log-built scan relation(s) for ONE layout group of live
-    * batches (shared partition-column sequence; `Nil` = flat). Schema
-    * is the group's own merged record ([[mergeRecordedSchemas]] —
-    * additive drift conforms, r15). Returns ONE relation per SCHEMA
-    * GENERATION (r17, ADVICE r16 #1): the exact path yields a single
-    * element, the type-widening path one per recorded schema — each a
-    * projection over a SINGLE scan, never a Union, because every
-    * downstream consumer (the DV filter, the `_graft_batch` taggers)
-    * resolves `_metadata` against these and metadata columns do not
-    * resolve through a Union. The caller unions AFTER filtering /
-    * tagging. An unwidenable retype (string vs long) is refused with a
-    * `SparkException` naming the column and both types: no exact cast
-    * conforms it, and a silently coerced read would be wrong. */
-  private def layoutRelation(spark: SparkSession, warehouseDir: String,
-      partNames: Seq[String],
-      batches: Seq[(String, BatchStats)]): Seq[DataFrame] = {
-    val jsons = batches.map(_._2.schemaJson).distinct
-    val schemas = jsons.map(parseSchema)
-    mergeRecordedSchemas(schemas, widening = false) match {
-      case Right(exact) =>
-        // types agree exactly (possibly additive drift): ONE log-built
-        // relation with the union schema — parquet fills absent
-        // nullable columns with null (the r15 drift-window path)
-        Seq(layoutScan(spark, warehouseDir, partNames, batches, exact))
-      case Left(_) =>
-        // TYPE-WIDENING window (r16, VERDICT r15 #3): Parquet-safe
-        // promotions plan one log-built relation PER recorded schema
-        // generation — each read AT ITS OWN recorded type — cast
-        // exactly to the widened union schema: bounded by
-        // distinct-schema count (1–2 in practice), never batch count.
-        // Zone pruning still fires across the window: Catalyst pushes
-        // the user filter through this cast projection (substituting
-        // and then unwrapping the cast against the literal), so each
-        // generation's branch reaches ZonePrune as a plain Filter over
-        // its ManifestFileIndex (PlanSpec-asserted).
-        val widened = mergeRecordedSchemas(schemas, widening = true) match {
-          case Right(w) => w
-          case Left((name, a, b)) =>
-            throw new org.apache.spark.SparkException(
-              s"committed batches of $warehouseDir record column '$name' " +
-              s"as both ${a.simpleString} and ${b.simpleString}: no exact " +
-              "cast reconciles the two, so the table cannot be read as " +
-              "one relation")
-        }
-        import org.apache.spark.sql.functions.{col, lit}
-        // each generation stays a SEPARATE relation (Project over one
-        // scan) so `_metadata` still resolves on it — the caller
-        // unions after its DV filter / batch tagging (ADVICE r16 #1:
-        // unioning here made merge/takedown throw and a DV'd widened
-        // table unreadable)
-        jsons.zip(schemas).map { case (json, own) =>
-          val rel = layoutScan(spark, warehouseDir, partNames,
-            batches.filter(_._2.schemaJson == json), own)
-          val have = rel.columns.map(c => c.toLowerCase -> c).toMap
-          rel.select(widened.fields.toSeq.map { f =>
-            have.get(f.name.toLowerCase) match {
-              case Some(c) => col(c).cast(f.dataType).as(f.name)
-              case None => lit(null).cast(f.dataType).as(f.name)
-            }
-          }: _*)
-        }
-    }
-  }
-
-  /** One log-built scan over `batches` (shared layout, shared exact
-    * read schema) — the ManifestFileIndex construction shared by the
-    * exact and widened paths of [[layoutRelation]]. */
-  private def layoutScan(spark: SparkSession, warehouseDir: String,
-      partNames: Seq[String], batches: Seq[(String, BatchStats)],
-      schema: StructType): DataFrame = {
-    val base = new org.apache.hadoop.fs.Path(warehouseDir)
-    val qBase = base
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .makeQualified(base)
-    def roots[T](mk: (String, org.apache.hadoop.fs.FileStatus) => T) =
-      batches.map { case (id, st) =>
-        val root = new org.apache.hadoop.fs.Path(qBase, s"b$id")
-        root -> st.files.map { case (rel, len) =>
-          mk(rel, new org.apache.hadoop.fs.FileStatus(
-            len, false, 1, 134217728L, 0L,
-            new org.apache.hadoop.fs.Path(root, rel)))
-        }
-      }
-    if (partNames.isEmpty)
-      return org.apache.spark.sql.graftshim.GraftSqlShims.parquetScan(spark,
-        new graft.plans.ManifestFileIndex(roots((_, st) => st)), schema)
-    val partFields = partNames.map(n =>
-      schema.fields.find(_.name.equalsIgnoreCase(n)).getOrElse(
-        throw new IllegalStateException(s"partition column '$n' of " +
-          s"$warehouseDir is missing from the recorded schema " +
-          s"${schema.simpleString}")))
-    val partSchema = StructType(partFields.map(f =>
-      StructField(f.name, f.dataType, nullable = true)))
-    val dataSchema = StructType(schema.fields.filterNot(f =>
-      partFields.exists(_.name == f.name)))
-    val idx = graft.plans.ManifestFileIndex.partitioned(spark,
-        roots((rel, st) => rel -> st), partSchema)
-      .getOrElse(throw new IllegalStateException(s"a recorded partition " +
-        s"path of $warehouseDir does not parse as ${partSchema.simpleString}"))
-    org.apache.spark.sql.graftshim.GraftSqlShims
-      .parquetScan(spark, idx, dataSchema, partSchema)
-  }
 
   /** The committed load history — one row per loaded source file:
     * (file, batch). `None` before the first commit.
@@ -1007,86 +336,6 @@ object WarehouseLoad {
     historyFileRelation(spark, historyDir, ids).map(rel =>
       rel.withColumn("batch",
         regexp_extract(col("_metadata.file_path"), "/b([^/]+)/[^/]*$", 1)))
-  }
-
-  /** Per-(historyDir, batch) memo of each batch's loaded-file list —
-    * batch history dirs are IMMUTABLE once committed (the commit
-    * protocol's core invariant), so the list can be read once per
-    * batch and reused for every later freshness anti-join (r17: the
-    * per-commit `loadedFiles` collect job + its history-relation plan
-    * construction was ~180 ms of driver wall per commit; a steady
-    * committer now pays one bounded read per batch it did NOT itself
-    * write, and zero for its own — [[loadAtomic]] seeds the memo at
-    * commit time). Bounded by the same listing-sized budget as the
-    * fresh set itself. */
-  private val loadedFilesMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), Seq[String]]()
-
-  private[graft] def seedLoadedFiles(historyDir: String, id: String,
-      files: Seq[String]): Unit =
-    loadedFilesMemo.put((historyDir, id), files)
-
-  /** Ensure the per-batch memo covers `ids` (ONE bounded collect over
-    * only the not-yet-memoized batches), then return their loaded-file
-    * lists concatenated in batch order — the relation
-    * [[historyFileRelation]] would read, already driver-resident. */
-  private def loadedFileLists(spark: SparkSession, historyDir: String,
-      ids: Seq[String]): Seq[String] = {
-    val missing = ids.filter(id =>
-      !loadedFilesMemo.containsKey((historyDir, id)))
-    if (missing.nonEmpty) {
-      import org.apache.spark.sql.functions.{col, regexp_extract}
-      historyFileRelation(spark, historyDir, missing).foreach { rel =>
-        rel.withColumn("batch",
-            regexp_extract(col("_metadata.file_path"), "/b([^/]+)/[^/]*$", 1))
-          .select("batch", "file").collect()
-          .groupBy(_.getString(0))
-          .foreach { case (id, rows) =>
-            loadedFilesMemo.put((historyDir, id),
-              rows.map(_.getString(1)).toSeq)
-          }
-        // a batch with an EMPTY history list (streamed epochs) yields
-        // no rows above — memo it as empty so it is not re-fetched
-        missing.foreach(id =>
-          loadedFilesMemo.putIfAbsent((historyDir, id), Nil))
-      }
-    }
-    ids.flatMap(id =>
-      loadedFilesMemo.getOrDefault((historyDir, id), Nil))
-  }
-
-  /** The loaded-file SET at the current head — the freshness filter of
-    * [[idempotentBatch]], assembled from the per-batch memo with one
-    * collect over ONLY the not-yet-memoized batches. */
-  private def loadedFileSet(spark: SparkSession, historyDir: String):
-      Set[String] =
-    loadedFileLists(spark, historyDir,
-      committedBatches(spark, historyDir)).toSet
-
-  /** One relation over the per-file history dirs of `ids`, planned
-    * from the log like [[readBatchDirs]]: every commit records its
-    * history dir's file list (`#hf` lines) and the history schema is
-    * the protocol's own constant (one nullable `file` string column),
-    * so the scan lists nothing and opens no footer at plan time.
-    * `None` when no batch in `ids` holds a history file. */
-  private def historyFileRelation(spark: SparkSession, historyDir: String,
-      ids: Seq[String]): Option[DataFrame] = {
-    val base = new org.apache.hadoop.fs.Path(historyDir)
-    val qBase = base
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .makeQualified(base)
-    val roots = ids.zip(manifests(spark, historyDir, ids)).collect {
-      case (id, st) if st.histFiles.nonEmpty =>
-        val root = new org.apache.hadoop.fs.Path(qBase, s"b$id")
-        root -> st.histFiles.map { case (rel, len) =>
-          new org.apache.hadoop.fs.FileStatus(len, false, 1, 134217728L, 0L,
-            new org.apache.hadoop.fs.Path(root, rel))
-        }
-    }
-    Option.when(roots.nonEmpty)(
-      org.apache.spark.sql.graftshim.GraftSqlShims.parquetScan(
-        spark, new graft.plans.ManifestFileIndex(roots),
-        StructType(Seq(StructField("file", StringType)))))
   }
 
   /** A merge's idempotence marker as it appears in batch ids. */
@@ -1278,434 +527,6 @@ object WarehouseLoad {
         clearIntent(spark, historyDir, id)
     }
 
-  // ------------------------------------------------------------------
-  // Zone maps: per-batch min/max column stats in the commit metadata
-  // ------------------------------------------------------------------
-
-  private val ZoneMapFile = "_ZONEMAP"
-
-  /** A batch's recorded [min, max] interval for one column. Two forms:
-    * [[NumZone]] (numerics + temporals, double-encoded: numerics
-    * as-is, date = epoch DAYS, timestamp = epoch MILLIS, widened
-    * outward at write so the encoding is always conservative) and
-    * [[StrZone]] (exact string min/max, compared in UTF-8 BINARY order
-    * — the ordering Spark's own min/max on StringType uses — because
-    * the commonest LLM-pipeline predicates are `source = 'web'` /
-    * `lang = 'en'` equality/range probes, VERDICT r12 #4). */
-  sealed trait Zone
-  final case class NumZone(lo: Double, hi: Double) extends Zone
-  final case class StrZone(lo: String, hi: String) extends Zone
-
-  /** A batch's recorded stats for one column, each component optional
-    * and independently conservative:
-    *  - `zone`: the [min, max] interval over non-null values;
-    *  - `dict`: the EXACT distinct non-null value set when the batch
-    *    held at most [[DictMax]] of them (VERDICT r13 #2 — min/max
-    *    intervals cannot prune `source = 'web'` when every batch mixes
-    *    sources; the set can). Strings record their raw value;
-    *    integral columns (r14) record the exact-decimal cast-to-string
-    *    canonical form, matched literal-side by ZonePrune — the
-    *    `shard = 3` / `year IN (…)` probe class. Always a SUPERSET of
-    *    the current values (row-removing rewrites only shrink the true
-    *    set);
-    *  - `nulls`: the null count at write time. Row-removing rewrites
-    *    can only DECREASE it, so the two prune triggers stay sound:
-    *    `nulls == 0` (no row is null — IS NULL proven empty) and
-    *    `nulls == rows` (every row is null — IS NOT NULL and every
-    *    comparison proven empty) are both monotone under removal. */
-  final case class ColStats(zone: Option[Zone], dict: Option[Set[String]],
-                            nulls: Option[Long])
-
-  /** One FILE's recorded stats inside a batch manifest (r16 — the
-    * file-level pruning tier, [[FileZones]]): row count plus per-column
-    * [[ColStats]] (interval + null count; never a dictionary — footers
-    * don't carry one). Same conservatism contract as the batch level:
-    * absent is "must scan", and the prover evaluates a file exactly
-    * like a batch. */
-  final case class FileStats(rows: Option[Long],
-                             cols: Map[String, ColStats])
-
-  /** Everything a batch's `_ZONEMAP` manifest records. Every commit
-    * records three things, and readers rely on them (a committed batch
-    * without them is corruption, see [[manifest]]):
-    *  - `schemaJson`: the SCHEMA the write job produced (`#s` line,
-    *    Spark schema JSON) — the Delta "schema in the log" move, so the
-    *    scan never merges footers;
-    *  - `files`: the batch data dir's files (`#fc`/`#f` lines, relative
-    *    path → length), the log-built scan's file set
-    *    ([[graft.plans.ManifestFileIndex]]); empty when the batch wrote
-    *    no rows;
-    *  - `histFiles`: the batch history dir's files (`#hfc`/`#hf`).
-    * Column stats ([[ColStats]]) and the row count are recorded only
-    * when the write observed them — absent stats read as "must scan". */
-  final case class BatchStats(cols: Map[String, ColStats],
-                              rows: Option[Long],
-                              schemaJson: String,
-                              files: Seq[(String, Long)],
-                              histFiles: Seq[(String, Long)],
-                              // per-FILE stats (r16): rel path →
-                              // [[FileStats]]; an absent (file, col)
-                              // is "must scan"
-                              fileStats: Map[String, FileStats] =
-                                Map.empty,
-                              // DELETION VECTORS (r16; run-length
-                              // encoded r17): rel path → hidden
-                              // `_metadata.row_index` runs
-                              // ([[DvVector]]). Every committed read
-                              // of this batch filters them out;
-                              // compaction materializes the removal
-                              // physically.
-                              dv: Map[String, DvVector] =
-                                Map.empty) {
-    /** The batch's recorded data size: its file-list lengths summed. */
-    def bytes: Long = files.map(_._2).sum
-    /** Interval-only view of [[fileStats]] (spec/report convenience). */
-    def fileZones: Map[String, Map[String, Zone]] =
-      fileStats.view.mapValues(_.cols.collect {
-        case (c, ColStats(Some(z), _, _)) => c -> z
-      }.toMap).toMap
-    def zones: Map[String, Zone] =
-      cols.collect { case (c, ColStats(Some(z), _, _)) => c -> z }
-    /** Is `col` (CI match) recorded as all-null? A predicate comparing
-      * an all-null column to anything is never satisfied. */
-    def allNull(col: String): Boolean =
-      rows.exists(r => colStats(col).exists(_.nulls.contains(r)))
-    def colStats(col: String): Option[ColStats] =
-      cols.collectFirst { case (c, s) if c.equalsIgnoreCase(col) => s }
-  }
-
-  /** Largest distinct-value set a zone manifest records per string
-    * column; beyond it the batch records only the interval. Bounded
-    * BY THE AGGREGATE ([[graft.functions.BoundedDistinct]] clears its
-    * buffer at cap+1), so a billion-NDV column costs O(DictMax) task
-    * memory during the write, never O(NDV). */
-  private val DictMax = 64
-
-  /** UTF-8 binary comparison — matches UTF8String's ordering (unsigned
-    * byte-wise), NOT java.lang.String.compareTo (UTF-16 code units,
-    * which diverges on supplementary-plane characters). */
-  private[graft] def utf8Cmp(a: String, b: String): Int = {
-    val x = a.getBytes("UTF-8"); val y = b.getBytes("UTF-8")
-    var i = 0
-    while (i < x.length && i < y.length) {
-      val c = (x(i) & 0xFF) - (y(i) & 0xFF)
-      if (c != 0) return c
-      i += 1
-    }
-    x.length - y.length
-  }
-
-  /** Does a recorded interval overlap a predicate interval? Type
-    * mismatch (a numeric probe against a string zone, or vice versa)
-    * scans conservatively — stats must never turn a bad probe into a
-    * wrong answer. */
-  private def zoneOverlaps(z: Zone, pred: Zone): Boolean = (z, pred) match {
-    case (NumZone(mn, mx), NumZone(lo, hi)) => !(mx < lo || mn > hi)
-    case (StrZone(mn, mx), StrZone(lo, hi)) =>
-      !(utf8Cmp(mx, lo) < 0 || utf8Cmp(mn, hi) > 0)
-    case _ => true
-  }
-
-  /** Interval union for the compaction merge — `None` on a type
-    * mismatch (a merged map must never understate a range it cannot
-    * represent). */
-  private def zoneUnion(a: Zone, b: Zone): Option[Zone] = (a, b) match {
-    case (NumZone(a1, a2), NumZone(b1, b2)) =>
-      Some(NumZone(math.min(a1, b1), math.max(a2, b2)))
-    case (StrZone(a1, a2), StrZone(b1, b2)) =>
-      Some(StrZone(if (utf8Cmp(a1, b1) <= 0) a1 else b1,
-                   if (utf8Cmp(a2, b2) >= 0) a2 else b2))
-    case _ => None
-  }
-
-  /** Columns that get zone-map stats: numerics + temporals (range
-    * predicates) and strings (equality/range probes on bounded-length
-    * values — over-long values record no interval rather than a
-    * truncated bound that could understate the max). */
-  private def zoneMapCols(schema: StructType): Seq[StructField] =
-    schema.fields.toSeq.filter(_.dataType match {
-      case ByteType | ShortType | IntegerType | LongType | FloatType |
-           DoubleType | DateType | TimestampType | StringType => true
-      case _ => false
-    })
-
-  /** Longest string recorded in a zone map: beyond this, the column's
-    * interval is dropped for the batch (conservative must-scan) —
-    * storing a truncated max would understate the true range, and
-    * padding tricks buy little for manifest bloat. */
-  private[load] val ZoneStrMax = 512
-
-  private def zoneVal(v: Any): Option[Double] = v match {
-    case null => None
-    case n: java.lang.Number => Some(n.doubleValue())
-    case d: java.sql.Date => Some(d.toLocalDate.toEpochDay.toDouble)
-    case t: java.sql.Timestamp => Some(t.getTime.toDouble)
-    case d: java.time.LocalDate => Some(d.toEpochDay.toDouble)
-    case i: java.time.Instant => Some(i.toEpochMilli.toDouble)
-    case _ => None
-  }
-
-  private def enc(s: String): String = java.net.URLEncoder.encode(s, "UTF-8")
-
-  /** Manifest lines, every field URL-encoded (space-free):
-    *  - `<col> <lo> <hi>` — numeric interval (pre-r12 compatible);
-    *  - `S <col> <lo> <hi>` — string interval;
-    *  - `#d <col> <v1> … <vk>` — distinct-value dictionary;
-    *  - `#n <col> <nulls>` — per-column null count;
-    *  - `#c <rows>` — batch row count;
-    *  - `#s <schema json>`, `#fc <n>` + `#f <rel> <len>` (data files),
-    *    `#hfc <n>` + `#hf <rel> <len>` (history files) — the records
-    *    every commit writes ([[BatchStats]]).
-    * The `#`-prefixed tags cannot collide with an encoded column name
-    * (URL-encoding never emits a literal `#`). `#s`, `#fc` and `#hfc`
-    * are required: a manifest missing one, or whose `#f`/`#hf` lines
-    * disagree with their count, is rejected as corrupt. Only stats may
-    * be absent (they read as "must scan"); unknown lines are ignored. */
-  private def encodeZoneLine(c: String, z: Zone): String = z match {
-    case NumZone(lo, hi) =>
-      enc(c) + " " + Math.nextDown(lo) + " " + Math.nextUp(hi)
-    case StrZone(lo, hi) =>
-      "S " + enc(c) + " " + enc(lo) + " " + enc(hi)
-  }
-
-  private def encodeZoneMap(st: BatchStats): String = {
-    def fileLines(tag: String, fs: Seq[(String, Long)]) =
-      s"#${tag}c ${fs.size}" +:
-        fs.map { case (rel, len) => s"#$tag ${enc(rel)} $len" }
-    // per-file stats (r16): `#z <rel> <col> <lo> <hi>` numeric interval
-    // (one-ulp-widened like the batch lines), `#zS` string interval,
-    // `#zc <rel> <rows>` row count, `#zn <rel> <col> <nulls>` null
-    // count — the file-level pruning tier ([[FileZones]])
-    // deletion vectors (r17): `#dvr <rel> <delta-RLE runs>`
-    // ([[DvVector.encode]]) — chunked at 512 runs/line so no line
-    // grows unbounded; a rel's lines are written (and must be read)
-    // in order, each chunk's first gap relative to the previous
-    // chunk's end
-    val dvLines = st.dv.toSeq.sortBy(_._1).flatMap { case (rel, vec) =>
-      vec.encodeChunks(512).map(c => s"#dvr ${enc(rel)} $c")
-    }
-    val fzLines = st.fileStats.toSeq.sortBy(_._1).flatMap { case (rel, fst) =>
-      fst.rows.map(r => s"#zc ${enc(rel)} $r").toSeq ++
-        fst.cols.toSeq.sortBy(_._1).flatMap { case (c, cs) =>
-          cs.zone.map {
-            case NumZone(lo, hi) =>
-              s"#z ${enc(rel)} ${enc(c)} ${Math.nextDown(lo)} ${Math.nextUp(hi)}"
-            case StrZone(lo, hi) =>
-              s"#zS ${enc(rel)} ${enc(c)} ${enc(lo)} ${enc(hi)}"
-          }.toSeq ++
-            cs.nulls.map(n => s"#zn ${enc(rel)} ${enc(c)} $n")
-        }
-    }
-    val lines = st.rows.map(r => s"#c $r").toSeq ++
-      Seq(s"#s ${enc(st.schemaJson)}") ++
-      fileLines("f", st.files) ++ fileLines("hf", st.histFiles) ++
-      dvLines ++ fzLines ++
-      st.cols.toSeq.sortBy(_._1).flatMap { case (c, cs) =>
-        cs.zone.map(encodeZoneLine(c, _)).toSeq ++
-          cs.dict.map(d =>
-            ("#d" +: enc(c) +: d.toSeq.sorted.map(enc)).mkString(" ")) ++
-          cs.nulls.map(n => s"#n ${enc(c)} $n")
-      }
-    lines.mkString("\n")
-  }
-
-  /** Attach the zone-map observation to a batch about to be written:
-    * the batch row count plus per-column min/max + null count (+ the
-    * bounded distinct set for strings) of its zone-mappable columns,
-    * all collected by the write job itself (CollectMetrics — zero extra
-    * scans, bounded memory: the dictionary aggregate clears itself past
-    * [[DictMax]]). */
-  private def observeZones(df: DataFrame):
-      (DataFrame, Observation, Seq[StructField]) = {
-    import org.apache.spark.sql.functions.{col, count, lit, max, min}
-    import org.apache.spark.sql.GraftSqlBridge.{column, expression}
-    val zcols = zoneMapCols(df.schema)
-    val zobs = new Observation()
-    val zaggs = count(lit(1)).as("zrows__") +: zcols.flatMap { f =>
-      val dict = f.dataType match {
-        case StringType => Seq(column(
-          graft.functions.BoundedDistinct(
-            expression(col(f.name)), DictMax).toAggregateExpression())
-          .as(s"zdict__${f.name}"))
-        // integral columns dictionary too (r14): `shard = 3` /
-        // `year IN (…)` probes on low-NDV ints are as common as the
-        // string class and intervals cannot prune them when batches
-        // mix values. Canonical form = Spark's own integral→string
-        // cast (exact decimal), matched literal-side by ZonePrune.
-        case ByteType | ShortType | IntegerType | LongType =>
-          Seq(column(
-            graft.functions.BoundedDistinct(
-              expression(col(f.name).cast(StringType)), DictMax)
-              .toAggregateExpression())
-            .as(s"zdict__${f.name}"))
-        case _ => Nil
-      }
-      Seq(
-        min(col(f.name)).as(s"zmin__${f.name}"),
-        max(col(f.name)).as(s"zmax__${f.name}"),
-        count(col(f.name)).as(s"znn__${f.name}")) ++ dict
-    }
-    (df.observe(zobs, zaggs.head, zaggs.tail: _*), zobs, zcols)
-  }
-
-  /** One recursive listing of a just-written batch dir — the WRITER's
-    * own files, recorded into the manifest so readers never have to
-    * list again ([[graft.plans.ManifestFileIndex]]). `(relative path,
-    * length)` per real file; `_`/`.`-prefixed names (markers,
-    * sidecars) are skipped at every level. */
-  private def listBatchFiles(spark: SparkSession,
-      dir: String): Seq[(String, Long)] = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val base = fs.makeQualified(p).toString
-    val out = Seq.newBuilder[(String, Long)]
-    try {
-      val it = fs.listFiles(p, true)
-      while (it.hasNext) {
-        val st = it.next()
-        val full = st.getPath.toString
-        val rel = full.stripPrefix(base).stripPrefix("/")
-        if (st.isFile && rel.nonEmpty &&
-            !rel.split("/").exists(seg =>
-              seg.startsWith("_") || seg.startsWith(".")))
-          out += rel -> st.getLen
-      }
-    } catch { case _: java.io.FileNotFoundException => () }
-    out.result()
-  }
-
-  /** Write a batch's history snapshot — its one `file` string column —
-    * DIRECTLY from the driver as a single parquet file, replacing a
-    * Spark write job + its plan construction per commit (r18, guide
-    * §1.2(1): the list is already driver-resident at every call site,
-    * and the job it replaces was measured at ~60–90 ms plus ~50–75 ms
-    * of planning gap per commit — pure fixed cost at any scale, since
-    * the snapshot is listing-sized metadata, never data). The file is
-    * bit-compatible with the write it replaces: same dir layout, same
-    * parquet schema (`optional binary file (STRING)` = the nullable
-    * `file` StringType column Spark's own writer produced), snappy
-    * codec. The log-built [[historyFileRelation]] is its only reader
-    * (it hands the scan that schema instead of reading the footer), so
-    * a PlanSpec differential pins the file against Spark's own
-    * `spark.read.parquet`: same rows, same nullable `file STRING`
-    * schema. An EMPTY list writes a zero-row file with the schema in
-    * the footer (the streamed-epoch shape). */
-  private def writeHistoryList(spark: SparkSession, dir: String,
-      files: Seq[String]): Unit = {
-    import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-    val conf = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(conf)
-    // mode("overwrite") semantics: a retry of the same logical batch
-    // replaces its own orphaned snapshot
-    if (fs.exists(p)) fs.delete(p, true)
-    fs.mkdirs(p)
-    val schema = Types.buildMessage()
-      .addField(Types.optional(PrimitiveTypeName.BINARY)
-        .as(LogicalTypeAnnotation.stringType()).named("file"))
-      .named("spark_schema")
-    val part = new org.apache.hadoop.fs.Path(p,
-      s"part-00000-${java.util.UUID.randomUUID()}.snappy.parquet")
-    val writer = org.apache.parquet.hadoop.example.ExampleParquetWriter
-      .builder(org.apache.parquet.hadoop.util.HadoopOutputFile
-        .fromPath(part, conf))
-      .withConf(conf)
-      .withType(schema)
-      .withCompressionCodec(
-        org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
-      .build()
-    try {
-      val gf =
-        new org.apache.parquet.example.data.simple.SimpleGroupFactory(schema)
-      files.foreach { name =>
-        val g = gf.newGroup(); g.add("file", name); writer.write(g)
-      }
-    } finally writer.close()
-  }
-
-  /** Carry a batch's IMMUTABLE history dir to a rewrite's new id from
-    * the driver — hard-link/copy each data file (the [[carryFile]]
-    * mechanism), replacing the `spark.read.parquet(old).write(new)`
-    * pair of Spark jobs per hit batch (r18; measured ~90–250 ms of
-    * job + planning gap per carried batch). Content is byte-identical
-    * by construction — strictly stronger than the row-copy it
-    * replaces. */
-  private def copyHistoryDir(spark: SparkSession, historyDir: String,
-      id: String, nid: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val src = new org.apache.hadoop.fs.Path(s"$historyDir/b$id")
-    val fs = src.getFileSystem(conf)
-    val dst = new org.apache.hadoop.fs.Path(s"$historyDir/b$nid")
-    if (fs.exists(dst)) fs.delete(dst, true)
-    fs.mkdirs(dst)
-    listBatchFiles(spark, s"$historyDir/b$id").foreach { case (rel, _) =>
-      carryFile(fs, new org.apache.hadoop.fs.Path(src, rel),
-        new org.apache.hadoop.fs.Path(dst, rel), conf)
-    }
-    // the carried dir's loaded-file list is its source's — seed the
-    // memo so the NEXT load's freshness check never re-collects it
-    Option(loadedFilesMemo.get((historyDir, id)))
-      .foreach(seedLoadedFiles(historyDir, nid, _))
-  }
-
-  /** Persist an [[observeZones]] result (after its write job ran) as
-    * batch `id`'s `_ZONEMAP` manifest, with the schema, both just-written
-    * file lists and per-FILE stats (r16: a footer read of the batch's own
-    * new files, write-side only — the file-level pruning tier readers get
-    * for free from the manifest). All-null columns record no interval
-    * (their null count still prunes IS NOT NULL and every comparison);
-    * over-cap dictionaries and over-long strings record no dict/interval
-    * respectively — absent is always "must scan". */
-  private def writeZoneMap(spark: SparkSession, warehouseDir: String,
-      historyDir: String, id: String, o: Observation,
-      zcols: Seq[StructField], schema: StructType): Unit = {
-    val rows = o.get("zrows__").asInstanceOf[Long]
-    val entries = zcols.flatMap { f =>
-      val zone =
-        (f.dataType, o.get(s"zmin__${f.name}"), o.get(s"zmax__${f.name}")) match {
-          case (StringType, lo: String, hi: String)
-              if lo.length <= ZoneStrMax && hi.length <= ZoneStrMax =>
-            Some(StrZone(lo, hi))
-          case (StringType, _, _) => None // null or over-long
-          case (dt, loAny, hiAny) =>
-            // Timestamp values truncate to whole milliseconds in the
-            // double encoding (getTime floors sub-ms precision),
-            // which a one-ulp widening cannot cover — pad temporal
-            // intervals a full millisecond outward so the recorded
-            // range never understates the true one (the superset
-            // contract).
-            val pad = dt match {
-              case TimestampType => 1.0
-              case _ => 0.0
-            }
-            for {
-              lo <- zoneVal(loAny)
-              hi <- zoneVal(hiAny)
-            } yield NumZone(lo - pad, hi + pad)
-        }
-      val dict = f.dataType match {
-        case StringType | ByteType | ShortType | IntegerType | LongType =>
-          Option(o.get(s"zdict__${f.name}"))
-            .map(_.asInstanceOf[Seq[String]].toSet)
-            .filter(d => d.nonEmpty && d.forall(_.length <= ZoneStrMax))
-        case _ => None
-      }
-      val nulls = o.get(s"znn__${f.name}") match {
-        case nn: java.lang.Long => Some(rows - nn.longValue())
-        case _ => None
-      }
-      val st = ColStats(zone, dict, nulls)
-      if (st.zone.isEmpty && st.dict.isEmpty && st.nulls.isEmpty) None
-      else Some(f.name -> st)
-    }
-    val dataFiles = listBatchFiles(spark, s"$warehouseDir/b$id")
-    AtomicManifest.write(spark, s"$historyDir/b$id", ZoneMapFile,
-      encodeZoneMap(BatchStats(entries.toMap, Some(rows), schema.json,
-        dataFiles, listBatchFiles(spark, s"$historyDir/b$id"),
-        FileZones.read(spark, s"$warehouseDir/b$id", dataFiles, schema))))
-  }
-
   /** Write `df` as batch `id` with FRESH stats — the shared write of
     * every writer that produces new rows (load, streamed epoch, merge's
     * rewrites and appends). The in-flight marker goes out BEFORE any
@@ -1774,220 +595,9 @@ object WarehouseLoad {
     clearIntent(spark, historyDir, id)
   }
 
-  /** The batch's zone map — per-column [min, max] intervals recorded by
-    * the load's OWN write job (a CollectMetrics observation — zero
-    * extra scans). `None` when `id` has no manifest (no committed batch
-    * does); an absent interval reads as must-scan, so stats are an
-    * optimization, never a correctness dependency. Intervals stay
-    * valid forever: batch dirs are
-    * immutable, and row-removing rewrites only ever SHRINK the true
-    * range.
-    *
-    * Cached keyed by the manifest file's (mtime, length), like the
-    * parquet footer caches: batch ids are content-derived for file
-    * loads but NOT for sink-epoch / compaction ids, so a warehouse
-    * deleted and rebuilt under the same path within one JVM (the
-    * test/bench pattern) must never be served a stale interval — a
-    * stale range that understates the new one would make pruning drop
-    * batches with matching rows, a correctness hazard (ADVICE r12).
-    * One getFileStatus per lookup buys the validation; the manifest
-    * READ (open + parse) is still amortized to once per (file state).
-    * LRU-bounded so a long-lived driver over a many-load table never
-    * grows without bound (VERDICT r12 #4). Absence is NOT cached — a
-    * mapless answer may be the read racing the commit. */
-  // Sized past the batch count the protocol is measured at (100k
-  // commits, CommitScale r16): an LRU smaller than the table's batch
-  // count thrashes on every pruning decision — the r16 100k run
-  // measured readWarehouse construction at ~2.5x over linear mostly
-  // from repeated manifest re-parses under a 32k cache. Bounded BY
-  // APPROXIMATE BYTES, not entry count (r17, ADVICE r16 #3): a plain
-  // manifest entry is ~1 KB but a DV'd or file-rich batch retains
-  // far more, and a count bound let the stated ~128 MB ceiling blow
-  // out by orders of magnitude on a driver touching many DV'd
-  // batches. 128 MB ≈ 128k plain entries — the same 100k-commit
-  // working set as before — while a handful of heavy entries now
-  // evict proportionally sooner. (Operationally a 100k-root table is
-  // past due for compaction anyway — the measured fold brings it
-  // back to 3 roots and millisecond plans.)
-  private val ZoneCacheMaxBytes = 134217728L // 128 MB
-  private var zoneCacheBytes = 0L
-  /** Approximate retained heap of one cached [[BatchStats]]: a ~1 KB
-    * base (column stats, schema JSON, file list lines) plus the parts
-    * that actually scale — per-file stats entries and DV runs. */
-  private def statsWeight(st: BatchStats): Long =
-    1024L +
-      st.files.size.toLong * 96L +
-      st.fileStats.valuesIterator
-        .map(f => 128L + f.cols.size.toLong * 128L).sum +
-      st.dv.valuesIterator.map(v => 64L + v.runCount.toLong * 48L).sum
-  private val zoneMapCache = new java.util.LinkedHashMap[
-      (String, String, Long, Long), BatchStats](64, 0.75f, true)
-  /** Insert under the byte bound; call holding the cache monitor. */
-  private def zoneCachePut(key: (String, String, Long, Long),
-                           st: BatchStats): Unit = {
-    val prev = zoneMapCache.put(key, st)
-    zoneCacheBytes += statsWeight(st)
-    if (prev != null) zoneCacheBytes -= statsWeight(prev)
-    val it = zoneMapCache.entrySet().iterator()
-    while (zoneCacheBytes > ZoneCacheMaxBytes && it.hasNext) {
-      val e = it.next()
-      if (e.getKey != key) { // never evict what we just inserted
-        zoneCacheBytes -= statsWeight(e.getValue)
-        it.remove()
-      }
-    }
-  }
-
-  /** The batch's full recorded manifest — schema, file lists,
-    * intervals, dictionaries, null counts, row count. Same cache and
-    * conservatism contract as [[zoneMap]] (which is a view over this).
-    * `None` when `id` has no manifest; a manifest without its schema
-    * or file lists throws. */
-  def batchStats(spark: SparkSession, historyDir: String,
-                 id: String): Option[BatchStats] = {
-    val p = new org.apache.hadoop.fs.Path(s"$historyDir/b$id", ZoneMapFile)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val st =
-      try Some(fs.getFileStatus(p))
-      catch { case _: java.io.FileNotFoundException => None }
-    st.flatMap { stat =>
-      val key = (historyDir, id, stat.getModificationTime, stat.getLen)
-      zoneMapCache.synchronized(Option(zoneMapCache.get(key))).orElse {
-        val m = readZoneMap(spark, historyDir, id)
-        m.foreach(v => zoneMapCache.synchronized(zoneCachePut(key, v)))
-        m
-      }
-    }
-  }
-
   def zoneMap(spark: SparkSession, historyDir: String,
               id: String): Option[Map[String, Zone]] =
     batchStats(spark, historyDir, id).map(_.zones)
-
-  /** The manifest of COMMITTED batch `id` — every commit writes one
-    * ([[BatchStats]]), so its absence is corruption and fails loudly,
-    * naming the batch, the way [[headBatches]] fails on a missing head
-    * manifest. */
-  private[graft] def manifest(spark: SparkSession, historyDir: String,
-                              id: String): BatchStats =
-    batchStats(spark, historyDir, id).getOrElse(
-      throw corrupt(historyDir, id, "it has no _ZONEMAP manifest"))
-
-  /** [[manifest]] for each of `ids`, in order, fetched in PARALLEL
-    * (driver-side metadata calls: a 10k-batch walk spent ~20 s reading
-    * manifests one at a time, CommitScale r14). */
-  private def manifests(spark: SparkSession, historyDir: String,
-                        ids: Seq[String]): Seq[BatchStats] = {
-    val fetched =
-      new java.util.concurrent.ConcurrentHashMap[String, BatchStats]()
-    MetaPool.forEach(ids)(id =>
-      fetched.put(id, manifest(spark, historyDir, id)))
-    ids.map(fetched.get)
-  }
-
-  private def dec(s: String): String = java.net.URLDecoder.decode(s, "UTF-8")
-
-  private def readZoneMap(spark: SparkSession, historyDir: String,
-      id: String): Option[BatchStats] =
-    AtomicManifest.read(spark, s"$historyDir/b$id", ZoneMapFile).map { txt =>
-      var rows = Option.empty[Long]
-      var schema = Option.empty[String]
-      // file lists: the `#fc`/`#hfc` line records the list's length, so
-      // a manifest that lost file lines is caught, not read as fewer
-      // files (an empty recorded list is meaningful — the batch wrote
-      // no parts)
-      var filesCount = Option.empty[Int]; var histCount = Option.empty[Int]
-      val files = Seq.newBuilder[(String, Long)]
-      val hist = Seq.newBuilder[(String, Long)]
-      val zones = Map.newBuilder[String, Zone]
-      val dicts = Map.newBuilder[String, Set[String]]
-      val nulls = Map.newBuilder[String, Long]
-      val fzZones = scala.collection.mutable.LinkedHashMap
-        .empty[(String, String), Zone]
-      val fzNulls = scala.collection.mutable.LinkedHashMap
-        .empty[(String, String), Long]
-      val fzRows = scala.collection.mutable.LinkedHashMap
-        .empty[String, Long]
-      // rel → (runs so far, running exclusive end for the delta-RLE
-      // chunks)
-      val dvs = scala.collection.mutable.LinkedHashMap
-        .empty[String, (Vector[(Long, Long)], Long)]
-      txt.linesIterator.foreach { line =>
-        line.split(" ") match {
-          case Array("#c", r) => rows = r.toLongOption
-          case Array("#s", s) => schema = Some(dec(s))
-          case Array("#fc", n) => filesCount = n.toIntOption
-          case Array("#hfc", n) => histCount = n.toIntOption
-          case Array("#f", rel, len) =>
-            len.toLongOption.foreach(l => files += dec(rel) -> l)
-          case Array("#hf", rel, len) =>
-            len.toLongOption.foreach(l => hist += dec(rel) -> l)
-          case Array("#z", rel, c, lo, hi) =>
-            (lo.toDoubleOption, hi.toDoubleOption) match {
-              case (Some(l), Some(h)) =>
-                fzZones((dec(rel), dec(c))) = NumZone(l, h)
-              case _ => ()
-            }
-          case Array("#zS", rel, c, lo, hi) =>
-            fzZones((dec(rel), dec(c))) = StrZone(dec(lo), dec(hi))
-          case Array("#zc", rel, r) =>
-            r.toLongOption.foreach(v => fzRows(dec(rel)) = v)
-          case Array("#dvr", rel, chunk) =>
-            val r = dec(rel)
-            val (have, prevEnd) = dvs.getOrElse(r, (Vector.empty, 0L))
-            val (runs, newEnd) =
-              DvVector.decodeInto(chunk, prevEnd, first = have.isEmpty)
-            dvs(r) = (have ++ runs, newEnd)
-          case Array("#zn", rel, c, n) =>
-            n.toLongOption.foreach(v => fzNulls((dec(rel), dec(c))) = v)
-          case Array("#n", c, n) =>
-            n.toLongOption.foreach(v => nulls += dec(c) -> v)
-          case Array("#d", c, vs @ _*) =>
-            dicts += dec(c) -> vs.map(dec).toSet
-          case Array("S", c, lo, hi) =>
-            zones += dec(c) -> StrZone(dec(lo), dec(hi))
-          case Array(c, lo, hi) =>
-            (lo.toDoubleOption, hi.toDoubleOption) match {
-              case (Some(l), Some(h)) => zones += dec(c) -> NumZone(l, h)
-              case _ => ()
-            }
-          case _ => () // unknown line: future stat, ignore
-        }
-      }
-      val (zm, dm, nm) = (zones.result(), dicts.result(), nulls.result())
-      val cols = (zm.keySet ++ dm.keySet ++ nm.keySet).iterator.map { c =>
-        c -> ColStats(zm.get(c), dm.get(c), nm.get(c))
-      }.toMap
-      val fzRels = (fzZones.keysIterator.map(_._1) ++
-        fzNulls.keysIterator.map(_._1) ++ fzRows.keysIterator)
-        .toSeq.distinct
-      val fileStats = fzRels.map { rel =>
-        val fcols = (fzZones.keysIterator.collect {
-            case (r, c) if r == rel => c
-          } ++ fzNulls.keysIterator.collect {
-            case (r, c) if r == rel => c
-          }).toSeq.distinct.map { c =>
-          c -> ColStats(fzZones.get((rel, c)), None,
-            fzNulls.get((rel, c)))
-        }.toMap
-        rel -> FileStats(fzRows.get(rel), fcols)
-      }.toMap
-      val dvMap = dvs.map { case (r, (runs, _)) =>
-        r -> DvVector.fromRuns(runs)
-      }.toMap
-      def recorded(what: String, count: Option[Int],
-                   list: Seq[(String, Long)]): Seq[(String, Long)] =
-        if (count.contains(list.size)) list
-        else throw corrupt(historyDir, id,
-          s"its manifest records ${list.size} $what line(s) against a " +
-          s"count of ${count.getOrElse("none")}")
-      BatchStats(cols, rows,
-        schema.getOrElse(throw corrupt(historyDir, id,
-          "its manifest records no schema")),
-        recorded("data file", filesCount, files.result()),
-        recorded("history file", histCount, hist.result()),
-        fileStats, dvMap)
-    }
 
   /** Committed batch ids whose zone interval for `column` overlaps the
     * predicate interval — plus every batch with no recorded interval
@@ -2031,47 +641,6 @@ object WarehouseLoad {
       hi: String): Option[DataFrame] =
     readBatchDirs(spark, warehouseDir, historyDir,
       prunedBatchIds(spark, historyDir, column, StrZone(lo, hi)))
-
-  // ------------------------------------------------------------------
-  // In-flight intent markers: vacuum-vs-writer safety
-  // ------------------------------------------------------------------
-
-  private val IntentsDir = "_intents"
-
-  /** TTL under which an intent marker protects its batch dirs from
-    * [[vacuum]]. Hadoop-conf knob (`graft.vacuum.intentTtlMs`) so
-    * operators can match it to their longest write; past it an
-    * abandoned attempt's dirs become reclaimable garbage — the same
-    * bounded-abandonment trade every lakehouse vacuum makes. */
-  private def intentTtlMs(spark: SparkSession): Long =
-    spark.sparkContext.hadoopConfiguration
-      .getLong("graft.vacuum.intentTtlMs", 24L * 3600 * 1000)
-
-  /** Publish (or refresh — a crashed attempt's retry reuses its
-    * deterministic id) the in-flight marker for batch `id`: written
-    * BEFORE the batch's data/history dirs, cleared after the commit.
-    * The window it closes (VERDICT r13 carried it as an operational
-    * contract): a [[vacuum]] running between a writer's dir writes and
-    * its version commit sees uncommitted dirs that look exactly like
-    * crashed-attempt orphans — deleting them would let the commit land
-    * pointing at vanished data. The marker makes liveness explicit:
-    * vacuum skips any orphan whose intent is younger than
-    * [[intentTtlMs]], so the single-writer scheduling discipline is
-    * now mechanism. */
-  private def publishIntent(spark: SparkSession, historyDir: String,
-                            id: String): Unit =
-    AtomicManifest.write(spark, s"$historyDir/$IntentsDir", s"i$id",
-      s"${System.currentTimeMillis()} ${ProcessHandle.current.pid}")
-
-  /** Best-effort: a marker that outlives its commit only costs vacuum
-    * one TTL of patience on the (already-committed, kept) batch. */
-  private def clearIntent(spark: SparkSession, historyDir: String,
-                          id: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$historyDir/$IntentsDir", s"i$id")
-    try p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(p, false)
-    catch { case scala.util.control.NonFatal(_) => () }
-  }
 
   // ------------------------------------------------------------------
   // CHECK constraints: declared once, enforced by every load's own job
@@ -2617,49 +1186,6 @@ object WarehouseLoad {
     if (aborted) None else Some(selected.size)
   }
 
-  /** The folded batch's manifest. Its column stats are the per-column
-    * union of its inputs' (a column's stat only survives if EVERY input
-    * recorded it — a missing interval/dict/count means an unknown range,
-    * and a merged map must never understate one): intervals union,
-    * dicts union (dropped past [[DictMax]]), null counts and row counts
-    * add — metadata-only, no scan. Its schema is the fold relation's
-    * own (`foldSchema` — exact even when the inputs straddle a
-    * SchemaDrift evolution), or, for a fold whose inputs wrote no
-    * files, the newest input's recorded one; its file lists and
-    * per-FILE stats are the fold's own (r16: a Z-ordered fold gives
-    * every file a tight envelope on both dims, and recording it keeps
-    * range predicates pruning k-of-n FILES after batch-root pruning
-    * went to 1 root). */
-  private def mergeZoneMaps(spark: SparkSession, warehouseDir: String,
-      historyDir: String, inputs: Seq[String], id: String,
-      foldSchema: Option[StructType]): Unit = {
-    val stats = manifests(spark, historyDir, inputs)
-    val rows =
-      if (stats.forall(_.rows.isDefined)) Some(stats.flatMap(_.rows).sum)
-      else None
-    val shared = stats.map(_.cols.keySet).reduce(_ intersect _)
-    val merged = shared.toSeq.flatMap { c =>
-      val cs = stats.map(_.cols(c))
-      val zone = cs.map(_.zone)
-        .reduce((a, b) => a.zip(b).flatMap { case (x, y) => zoneUnion(x, y) })
-      val dict = cs.map(_.dict)
-        .reduce((a, b) => a.zip(b).map { case (x, y) => x ++ y })
-        .filter(_.size <= DictMax)
-      val nulls =
-        if (cs.forall(_.nulls.isDefined)) Some(cs.flatMap(_.nulls).sum)
-        else None
-      val st = ColStats(zone, dict, nulls)
-      if (st.zone.isEmpty && st.dict.isEmpty && st.nulls.isEmpty) None
-      else Some(c -> st)
-    }
-    val schema = foldSchema.getOrElse(parseSchema(stats.last.schemaJson))
-    val foldFiles = listBatchFiles(spark, s"$warehouseDir/b$id")
-    AtomicManifest.write(spark, s"$historyDir/b$id", ZoneMapFile,
-      encodeZoneMap(BatchStats(merged.toMap, rows, schema.json, foldFiles,
-        listBatchFiles(spark, s"$historyDir/b$id"),
-        FileZones.read(spark, s"$warehouseDir/b$id", foldFiles, schema))))
-  }
-
   /** Delete-by-key on the committed batch warehouse — the
     * right-to-be-forgotten mutation. Batch-granular: ONE probe job
     * (union of committed batch scans, broadcast semi-join on the
@@ -2774,32 +1300,6 @@ object WarehouseLoad {
       s"$what cannot converge after 20 passes: its input batches keep " +
       "being rewritten underneath it — retire the racing rewriter and " +
       s"re-run ($progress)")
-  }
-
-  /** Carry one immutable file into a rewritten batch dir WITHOUT
-    * decoding it (r16, VERDICT r15 #4 — file-granular takedown): a
-    * hard link where the store supports one (local fs — zero bytes
-    * moved, the carried file IS the old inode, so byte-identity is
-    * structural), a raw FS copy otherwise (object stores: wire this to
-    * the server-side copy; still no scan/decode/shuffle — the win over
-    * rewriting is the whole read-decode-encode pipeline, not just
-    * I/O). The new dir was just (re)created by a mode=overwrite write,
-    * so a retry never collides with a prior attempt's carry. */
-  private def carryFile(fs: org.apache.hadoop.fs.FileSystem,
-      src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path,
-      conf: org.apache.hadoop.conf.Configuration): Unit = {
-    fs.mkdirs(dst.getParent)
-    if (Option(fs.getUri.getScheme).forall(_ == "file")) {
-      try {
-        java.nio.file.Files.deleteIfExists(
-          java.nio.file.Paths.get(dst.toUri.getPath))
-        java.nio.file.Files.createLink(
-          java.nio.file.Paths.get(dst.toUri.getPath),
-          java.nio.file.Paths.get(src.toUri.getPath))
-        return
-      } catch { case _: java.io.IOException => () } // cross-device etc.
-    }
-    org.apache.hadoop.fs.FileUtil.copy(fs, src, fs, dst, false, true, conf)
   }
 
   /** One takedown pass; `(rowsRemoved, converged)` — `converged=false`
@@ -2982,26 +1482,6 @@ object WarehouseLoad {
     // the read
     carryStats(spark, warehouseDir, historyDir, st, nid,
       st.dv.filter { case (rel, _) => carried(rel) })
-  }
-
-  /** Record a carried batch's stats under its rewrite id `nid`: `st`'s
-    * column stats, row count and schema unchanged — removing or hiding
-    * rows only SHRINKS the true range, value set and null count, so
-    * every carried stat remains a conservative superset (the prune
-    * triggers — interval/dict membership, nulls==0, nulls==rows — are
-    * all monotone under row removal; see [[ColStats]]) — with both file
-    * lists re-listed from the new dirs, per-file zones read from the new
-    * files' footers (r16), and deletion vector `dv`. */
-  private def carryStats(spark: SparkSession, warehouseDir: String,
-      historyDir: String, st: BatchStats, nid: String,
-      dv: Map[String, DvVector]): Unit = {
-    val newFiles = listBatchFiles(spark, s"$warehouseDir/b$nid")
-    AtomicManifest.write(spark, s"$historyDir/b$nid", ZoneMapFile,
-      encodeZoneMap(st.copy(files = newFiles,
-        histFiles = listBatchFiles(spark, s"$historyDir/b$nid"),
-        fileStats = FileZones.read(spark, s"$warehouseDir/b$nid", newFiles,
-          parseSchema(st.schemaJson)),
-        dv = dv)))
   }
 
   /** Commit a rewrite as ONE version (CAS derive over the head at
@@ -3368,11 +1848,6 @@ object WarehouseLoad {
       vanished.isEmpty)
   }
 
-  /** How many fresh files the idempotent leg samples to pin the staged
-    * key set. Under the homogeneity contract (see [[stagedSchema]])
-    * one would do; a handful tolerates a stray short file. */
-  private val SchemaSampleFiles = 8
-
   /** Split-size tuning for a SMALL batch's load job (r17, guide §2.5
     * input parallelism): Spark's split planner floors each split at
     * `spark.sql.files.openCostInBytes` (4 MB default), so a trickle
@@ -3411,191 +1886,6 @@ object WarehouseLoad {
         oldOpen.fold(spark.conf.unset(OpenKey))(v =>
           spark.conf.set(OpenKey, v))
       }
-    }
-  }
-
-  /** Fresh sets at or below this size plan as a direct path-list read;
-    * above it, the constant-size single-root + broadcast-semi-join
-    * shape (see [[idempotentBatch]]). */
-  private val FreshPathPlanMax = 64
-
-  /** The staged key-set schema for an idempotent load, inferred from a
-    * BOUNDED sample of the FRESH files (VERDICT r12 #6) instead of a
-    * full-root inference pass — previously the default load paid a
-    * second data-sized read per batch just to learn key spellings the
-    * homogeneity contract already pins. The sample paths are a
-    * metadata decision (≤ [[SchemaSampleFiles]] driver-side strings),
-    * not the data plan: the batch read remains one single-root scan.
-    * Fresh-scoped is also the CORRECT scope under schema drift: the
-    * keys of the batch being loaded, not of already-loaded stragglers
-    * sharing the root. Falls back to the full-root pass when the
-    * sample cannot be read (no non-empty fresh file, or a path
-    * spelling the sample read rejects). */
-  private def freshSchema(spark: SparkSession, stagingDir: String,
-      freshFiles: Seq[(String, Long)]): StructType = {
-    val sample = freshFiles.filter(_._2 > 0)
-      .take(SchemaSampleFiles).map(_._1)
-    if (sample.isEmpty) stagedSchema(spark, stagingDir)
-    else {
-      val inferred = inferFlatSchema(spark, sample).getOrElse {
-        try spark.read.option("primitivesAsString", "true")
-          .json(sample: _*).schema
-        catch { // e.g. a normalized spelling the reader won't resolve
-          case _: org.apache.spark.sql.AnalysisException => StructType(Nil)
-        }
-      }
-      // all-blank sample (keyless) is as useless as an empty one
-      if (inferred.isEmpty) stagedSchema(spark, stagingDir) else inferred
-    }
-  }
-
-  /** Driver-side schema inference for the COMMON staged shape — one
-    * flat JSON object of primitive values per line — replicating
-    * EXACTLY what `spark.read.option("primitivesAsString",
-    * "true").json(sample)` infers for that shape: the union of the
-    * field names across lines, every field nullable StringType
-    * (primitives-as-string maps string/number/boolean/null alike to
-    * string), sorted by name (Spark's inference canonicalizes struct
-    * fields alphabetically). Removes the per-commit inference JOB +
-    * its plan construction (r18, guide §1.2(1) — measured ~50–160 ms
-    * of job time plus ~50–100 ms of gap per commit; the sample is ≤
-    * [[SchemaSampleFiles]] small files, driver-metadata-sized by the
-    * same argument as the fresh listing itself).
-    *
-    * Returns None — fall back to the distributed inference job — the
-    * moment ANYTHING outside that shape appears: a nested object or
-    * array value, a top-level non-object, a malformed line (Spark
-    * would add the corrupt-record column), a duplicate key inside one
-    * object, trailing content after the object, an oversized sample
-    * (> 8 MB total — past that the distributed job is the right tool),
-    * or any read/parse error. Absent is never wrong, only slower —
-    * the fallback is the exact code path this replaces.
-    * [[SchemaAlignSpec]] pins equality against Spark's own inference
-    * for the covered shapes and the fallback triggers. */
-  private[graft] def inferFlatSchema(spark: SparkSession,
-      sample: Seq[String]): Option[StructType] = {
-    import com.fasterxml.jackson.core.{JsonFactory, JsonToken}
-    val MaxSampleBytes = 8L * 1024 * 1024
-    val conf = spark.sparkContext.hadoopConfiguration
-    val names = scala.collection.mutable.TreeSet.empty[String]
-    var bytes = 0L
-    val factory = new JsonFactory()
-    try {
-      sample.foreach { file =>
-        val p = new org.apache.hadoop.fs.Path(file)
-        val fs = p.getFileSystem(conf)
-        val len = fs.getFileStatus(p).getLen
-        if (bytes + len > MaxSampleBytes) return None
-        bytes += len
-        val buf = new Array[Byte](len.toInt)
-        val in = fs.open(p)
-        try in.readFully(0L, buf) finally in.close()
-        val text =
-          new String(buf, java.nio.charset.StandardCharsets.UTF_8)
-        text.linesIterator.foreach { line =>
-          // whitespace-only lines are skipped by Spark's reader (not
-          // even corrupt records)
-          if (line.exists(!_.isWhitespace)) {
-            val parser = factory.createParser(line)
-            try {
-              if (parser.nextToken() != JsonToken.START_OBJECT) return None
-              val seen = scala.collection.mutable.HashSet.empty[String]
-              var tok = parser.nextToken()
-              while (tok == JsonToken.FIELD_NAME) {
-                val name = parser.currentName()
-                if (!seen.add(name)) return None // duplicate key
-                parser.nextToken() match {
-                  case JsonToken.VALUE_STRING | JsonToken.VALUE_NUMBER_INT |
-                       JsonToken.VALUE_NUMBER_FLOAT | JsonToken.VALUE_TRUE |
-                       JsonToken.VALUE_FALSE | JsonToken.VALUE_NULL =>
-                    names += name
-                  case _ => return None // nested / non-primitive
-                }
-                tok = parser.nextToken()
-              }
-              if (tok != JsonToken.END_OBJECT) return None
-              if (parser.nextToken() != null) return None // trailing junk
-            } finally parser.close()
-          }
-        }
-      }
-      Some(StructType(names.toSeq.map(n =>
-        StructField(n, StringType, nullable = true))))
-    } catch { case scala.util.control.NonFatal(_) => None }
-  }
-
-  /** The idempotent load's two relations — (fresh-file set
-    * `(file, len)`, their rows with the `_graft_file` provenance
-    * column) — or None when nothing new is staged. Package-visible so
-    * PlanSpec can assert the constant-size-plan contract directly. */
-  private[graft] def idempotentBatch(spark: SparkSession, stagingDir: String,
-      historyDir: String): Option[(Seq[(String, Long)], DataFrame)] = {
-    val staged = listStaged(spark, stagingDir)
-    if (staged.isEmpty) return None
-    import spark.implicits._
-    import org.apache.spark.sql.functions.{broadcast, col}
-    // The anti-join against history runs as ONE collect-to-driver job
-    // over the manifest-planned history relation (r17): the staged
-    // listing is ALREADY a driver-resident Seq (fs.listStatus above),
-    // so the fresh set is driver-bounded by construction — collecting
-    // the loaded-file set adds no asymptotic driver memory, and it
-    // replaces the former four metadata jobs per commit
-    // (localCheckpoint + isEmpty + agg-head + sample-head: measured
-    // ~250 ms of job+gap wall per commit at local[32]) with one.
-    // The DATA scan below keeps the constant-size-plan contract
-    // unchanged: single-root scan + broadcast semi-join, no path list.
-    // History stores the ALREADY-normalized spelling (freshFiles is
-    // written from this very listing) — do NOT re-normalize it:
-    // percent-decoding is not idempotent, so a second decode of a name
-    // whose decoded form still contains %HH would diverge from the
-    // staged side and silently reload the file (duplicate rows) on
-    // every run.
-    val loaded = loadedFileSet(spark, historyDir)
-    val fresh = staged.filterNot { case (f, _) => loaded(f) }
-    if (fresh.isEmpty) None
-    else {
-      // The corrupt-record column rides along so STRICT loads abort on
-      // malformed lines (COPY's default ON_ERROR aborts on parse
-      // errors, and a permissive read would load the line as an
-      // all-null row that passes the cast check vacuously); permissive
-      // loads keep the null-through contract. [[align]] drops it.
-      val schema = freshSchema(spark, stagingDir, fresh)
-      require(!schema.fieldNames.contains(CorruptCol),
-        s"staged data may not carry a '$CorruptCol' column")
-      val reader = spark.read
-        .schema(schema.add(CorruptCol, StringType))
-        .option("columnNameOfCorruptRecord", CorruptCol)
-      // Scale-adaptive scan shape (r17): a SMALL fresh set reads its
-      // paths directly — no staging-root listing, no broadcast-build
-      // job for the semi-join (~130 ms of fixed wall per commit, and
-      // at warehouse scale it skips re-scanning already-loaded files
-      // sharing the root). A WIDE wave keeps the constant-size-plan
-      // contract: ONE single-root scan + broadcast semi-join on
-      // `_metadata.file_path`, no path list in the plan (the
-      // million-file wave plans like a two-file one — PlanSpec pins
-      // it). Both shapes observe the same FileCol, so the coverage
-      // guard is unchanged.
-      // a decoded URI goes back through path-pattern resolution on a
-      // direct read, so glob metacharacters or a literal %HH in a name
-      // would mis-resolve — those (rare) names take the semi-join form,
-      // which matches _metadata paths and never re-resolves
-      def pathSafe = fresh.forall(f =>
-        !f._1.exists(c => "*?[]{}%".indexOf(c.toInt) >= 0))
-      val data =
-        if (fresh.sizeIs <= FreshPathPlanMax && pathSafe) {
-          // rename-in-flight safety: paths were just listed; a file
-          // vanishing between listing and read fails the job loudly
-          // (ignoreMissingFiles stays false), same as the semi-join
-          // form observing a missing hash and aborting.
-          reader.json(fresh.map(_._1): _*)
-            .withColumn(FileCol, normCol(col("_metadata.file_path")))
-        } else {
-          reader.json(stagingDir)
-            .withColumn(FileCol, normCol(col("_metadata.file_path")))
-            .join(broadcast(fresh.map(_._1).toDF(FileCol)),
-              Seq(FileCol), "left_semi")
-        }
-      Some((fresh, data))
     }
   }
 

@@ -13,8 +13,8 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
 import org.apache.spark.sql.types.{ByteType, DataType, DateType, DoubleType,
   FloatType, IntegerType, LongType, ShortType, StringType, TimestampType}
 
-import graft.load.WarehouseLoad
-import graft.load.WarehouseLoad.{BatchStats, NumZone, StrZone, Zone}
+import graft.load.Manifest
+import graft.load.Manifest.{BatchStats, NumZone, StrZone, Zone}
 
 /** Zone-map batch skipping wired INTO THE OPTIMIZER (VERDICT r12 #3):
   * a plain `readWarehouse(...).filter(col("x") <= v)` drops every
@@ -122,7 +122,7 @@ object ZonePrune extends Rule[LogicalPlan] {
             new java.util.concurrent.ConcurrentHashMap[
               org.apache.hadoop.fs.Path, java.lang.Boolean]()
           graft.load.MetaPool.forEach(roots) { r =>
-            val st = WarehouseLoad.manifest(spark, h,
+            val st = Manifest.manifest(spark, h,
               r.getName.stripPrefix("b"))
             verdicts.put(r, !provenEmpty(st, cond))
           }
@@ -147,7 +147,7 @@ object ZonePrune extends Rule[LogicalPlan] {
   }
 
   /** FILES inside `keep` roots whose recorded per-file stats
-    * ([[WarehouseLoad.BatchStats.fileStats]] — footer stats captured
+    * ([[Manifest.BatchStats.fileStats]] — footer stats captured
     * once, write-side: intervals, null counts, row counts) prove
     * `cond` empty. The proof runs through the SAME prover as the
     * batch tier — a file is just a smaller stats row — so intervals
@@ -164,7 +164,7 @@ object ZonePrune extends Rule[LogicalPlan] {
     val doomed = java.util.concurrent.ConcurrentHashMap
       .newKeySet[org.apache.hadoop.fs.Path]()
     graft.load.MetaPool.forEach(keep) { r =>
-      val st = WarehouseLoad.manifest(spark, hist, r.getName.stripPrefix("b"))
+      val st = Manifest.manifest(spark, hist, r.getName.stripPrefix("b"))
       val rootStr = r.toString
       m.rootsWithFiles.find(_._1 == r).foreach { case (_, files) =>
         files.foreach { fst =>
@@ -439,9 +439,9 @@ object ZonePrune extends Rule[LogicalPlan] {
         lo.forall { case Left(l) => mx >= l; case Right(_) => true } &&
         hi.forall { case Left(h) => mn <= h; case Right(_) => true }
       case StrZone(mn, mx) =>
-        lo.forall { case Right(l) => WarehouseLoad.utf8Cmp(mx, l) >= 0
+        lo.forall { case Right(l) => Manifest.utf8Cmp(mx, l) >= 0
                      case Left(_) => true } &&
-        hi.forall { case Right(h) => WarehouseLoad.utf8Cmp(mn, h) <= 0
+        hi.forall { case Right(h) => Manifest.utf8Cmp(mn, h) <= 0
                      case Left(_) => true }
     }
 }

@@ -124,7 +124,7 @@ object CommitLogSource {
           "commit — pass .schema(...) explicitly"))
     }
     val base = StructType(declared.fields.map(f =>
-      f.copy(dataType = WarehouseLoad.nullableNested(f.dataType))))
+      f.copy(dataType = graft.load.CommittedScan.nullableNested(f.dataType))))
     if (base.fieldNames.exists(_.equalsIgnoreCase(BatchCol))) base
     else base.add(StructField(BatchCol, StringType, nullable = true))
   }
@@ -270,7 +270,7 @@ class CommitLogSource(spark: SparkSession, declared: StructType,
       // overflow-free
       val bytes = math.min(cap,
         batches(v + 1).filterNot(prev)
-          .map(id => WarehouseLoad.manifest(spark, historyDir, id).bytes)
+          .map(id => graft.load.Manifest.manifest(spark, historyDir, id).bytes)
           .foldLeft(0L)((a, b) => math.min(cap, a + math.min(b, cap))))
       if (v == floor || acc + bytes <= cap) { acc += bytes; v += 1 }
       else over = true
@@ -329,7 +329,7 @@ class CommitLogSource(spark: SparkSession, declared: StructType,
     // inside the micro-batch plan exactly as it does for batch reads
     // (st26's root skip, one granularity down).
     def batchScan(id: String): Option[DataFrame] =
-      WarehouseLoad.manifestGroupRelations(spark, warehouseDir, historyDir,
+      graft.load.CommittedScan.manifestGroupRelations(spark, warehouseDir, historyDir,
         Seq(id)).map(_.head.withColumn(BatchCol, lit(id)))
     val base = addedBatches(from, to).flatMap(batchScan)
       .reduceOption(_.unionByName(_, allowMissingColumns = true))

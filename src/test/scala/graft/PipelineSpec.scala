@@ -270,7 +270,7 @@ class PipelineSpec extends SparkSpec {
         s"""{"CustomerID": "$i", "FirstName": "n$i"}""" + "\n")
     }
     val Some((_, data)) =
-      graft.load.WarehouseLoad.idempotentBatch(spark, staging, hist)
+      graft.load.StagedRead.idempotentBatch(spark, staging, hist)
     val roots = data.queryExecution.sparkPlan.collect {
       case f: org.apache.spark.sql.execution.FileSourceScanExec =>
         f.relation.location.rootPaths.length
@@ -1328,7 +1328,7 @@ class PipelineSpec extends SparkSpec {
     // fixed cadence 64 made total snapshot bytes O(N²/64): 6.1 MB at
     // 10k commits but 597 MB at 100k (measured r16). The adaptive
     // default doubles with the head, keeping the total O(N).
-    def c(v: Long) = WarehouseLoad.snapshotEvery(spark, v)
+    def c(v: Long) = graft.load.VersionLog.snapshotEvery(spark, v)
     assert(c(1) == 64 && c(100) == 64 && c(4095) == 64)
     assert(c(8192) == 256)
     assert(c(100000) == 2048)

@@ -156,28 +156,28 @@ class SchemaAlignSpec extends SparkSpec {
         |{"id": "2", "alpha": null}
         |""".stripMargin)
     val b = write("b.json", """{"beta": 1.5e3, "id": "3"}""")
-    val got = WarehouseLoad.inferFlatSchema(spark, Seq(a, b))
+    val got = graft.load.StagedRead.inferFlatSchema(spark, Seq(a, b))
     assert(got.isDefined, "flat sample must infer driver-side")
     assert(got.get == sparkInfer(Seq(a, b)),
       s"driver inference diverged: ${got.get} vs ${sparkInfer(Seq(a, b))}")
     // fallback triggers: each must return None (the Spark job is the
     // exact semantics for these, so absent is never wrong)
     val nested = write("nested.json", """{"id": "1", "o": {"x": 1}}""")
-    assert(WarehouseLoad.inferFlatSchema(spark, Seq(nested)).isEmpty)
+    assert(graft.load.StagedRead.inferFlatSchema(spark, Seq(nested)).isEmpty)
     val arr = write("arr.json", """{"id": "1", "xs": [1, 2]}""")
-    assert(WarehouseLoad.inferFlatSchema(spark, Seq(arr)).isEmpty)
+    assert(graft.load.StagedRead.inferFlatSchema(spark, Seq(arr)).isEmpty)
     val topArr = write("topArr.json", """[{"id": "1"}]""")
-    assert(WarehouseLoad.inferFlatSchema(spark, Seq(topArr)).isEmpty)
+    assert(graft.load.StagedRead.inferFlatSchema(spark, Seq(topArr)).isEmpty)
     val bad = write("bad.json", """{"id": "1", "name": "tru""")
-    assert(WarehouseLoad.inferFlatSchema(spark, Seq(bad)).isEmpty)
+    assert(graft.load.StagedRead.inferFlatSchema(spark, Seq(bad)).isEmpty)
     val dup = write("dup.json", """{"id": "1", "id": "2"}""")
-    assert(WarehouseLoad.inferFlatSchema(spark, Seq(dup)).isEmpty)
+    assert(graft.load.StagedRead.inferFlatSchema(spark, Seq(dup)).isEmpty)
     val trail = write("trail.json", """{"id": "1"} {"id": "2"}""")
-    assert(WarehouseLoad.inferFlatSchema(spark, Seq(trail)).isEmpty)
+    assert(graft.load.StagedRead.inferFlatSchema(spark, Seq(trail)).isEmpty)
     // all-empty-object sample: both sides infer the empty struct (the
     // caller's stagedSchema fallback handles it identically)
     val empty = write("empty.json", "{}\n{}\n")
-    assert(WarehouseLoad.inferFlatSchema(spark, Seq(empty))
+    assert(graft.load.StagedRead.inferFlatSchema(spark, Seq(empty))
       .contains(StructType(Nil)))
     assert(sparkInfer(Seq(empty)) == StructType(Nil))
   }
