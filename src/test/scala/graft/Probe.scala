@@ -3,7 +3,8 @@ package graft
 /** Dev-only micro-probe: time one registered query N times in a warm
   * session (SPARK_GRAFT_PROBE=name[,name...], SPARK_GRAFT_SF_DIR,
   * SPARK_GRAFT_PROBE_N). Bench's min-of-two can hide warm-path
-  * regressions; this prints every iteration. */
+  * regressions; this prints every iteration. Dev-only, so it lives in
+  * test scope: `sbt "Test/runMain graft.Probe"`. */
 object Probe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")

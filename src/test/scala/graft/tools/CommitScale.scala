@@ -18,7 +18,8 @@ import graft.load.WarehouseLoad
   * times the metadata operations at that commit count, so SCALE.md can
   * carry measured numbers instead of an argued bound.
   *
-  * Usage: runMain graft.tools.CommitScale [nCommits] [rowsPerCommit]
+  * Usage: sbt "Test/runMain graft.tools.CommitScale [nCommits]
+  * [rowsPerCommit] [par] [bulkRows] [partitioned]"
   * Prints one `metric=...` line per measurement (paste into SCALE.md).
   */
 object CommitScale {

@@ -18,7 +18,7 @@ import graft.SparkEntry
   * cost, not a guess (guide §1.1, §7.3).
   *
   * Usage: SPARK_GRAFT_PROBE=q84_zone_prune SPARK_GRAFT_SF_DIR=... \
-  *   SPARK_GRAFT_CPUS=32 sbt "runMain graft.tools.JobProfile"
+  *   SPARK_GRAFT_CPUS=32 sbt "Test/runMain graft.tools.JobProfile"
   */
 object JobProfile {
   def main(args: Array[String]): Unit = {
