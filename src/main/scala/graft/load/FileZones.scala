@@ -49,7 +49,7 @@ object FileZones {
   def read(spark: SparkSession, dir: String, files: Seq[(String, Long)],
            schema: StructType): Map[String, FileStats] = {
     val wanted: Map[String, DataType] = schema.fields.iterator.collect {
-      case f if zoneable(f.dataType) => f.name -> f.dataType
+      case f if Manifest.zoneable(f.dataType) => f.name -> f.dataType
     }.toMap
     if (wanted.isEmpty || files.isEmpty) return Map.empty
     val conf = spark.sparkContext.hadoopConfiguration
@@ -63,12 +63,6 @@ object FileZones {
       st.filter(_.cols.nonEmpty).foreach(out.put(rel, _))
     }
     out.asScala.toMap
-  }
-
-  private def zoneable(dt: DataType): Boolean = dt match {
-    case ByteType | ShortType | IntegerType | LongType | FloatType |
-         DoubleType | DateType | TimestampType | StringType => true
-    case _ => false
   }
 
   private def fileStats(conf: Configuration, p: Path,
@@ -108,7 +102,7 @@ object FileZones {
                     case Some(z) =>
                       zones.get(name) match {
                         case None => zones(name) = z
-                        case Some(prev) => union(prev, z) match {
+                        case Some(prev) => Manifest.zoneUnion(prev, z) match {
                           case Some(u) => zones(name) = u
                           case None => zoneBad += name
                         }
@@ -126,16 +120,6 @@ object FileZones {
       }.toMap
       FileStats(Some(rows), cols)
     } finally reader.close()
-  }
-
-  private def union(a: Zone, b: Zone): Option[Zone] = (a, b) match {
-    case (NumZone(a1, a2), NumZone(b1, b2)) =>
-      Some(NumZone(math.min(a1, b1), math.max(a2, b2)))
-    case (StrZone(a1, a2), StrZone(b1, b2)) =>
-      Some(StrZone(
-        if (Manifest.utf8Cmp(a1, b1) <= 0) a1 else b1,
-        if (Manifest.utf8Cmp(a2, b2) >= 0) a2 else b2))
-    case _ => None
   }
 
   /** One column chunk's stats as a Zone in the manifest encoding

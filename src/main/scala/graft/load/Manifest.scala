@@ -189,8 +189,12 @@ object Manifest {
   /** UTF-8 binary comparison — matches UTF8String's ordering (unsigned
     * byte-wise), NOT java.lang.String.compareTo (UTF-16 code units,
     * which diverges on supplementary-plane characters). */
-  private[graft] def utf8Cmp(a: String, b: String): Int = {
-    val x = a.getBytes("UTF-8"); val y = b.getBytes("UTF-8")
+  private[graft] def utf8Cmp(a: String, b: String): Int =
+    utf8Cmp(a.getBytes("UTF-8"), b.getBytes("UTF-8"))
+
+  /** [[utf8Cmp]] over raw bytes, which need not be valid UTF-8 (a
+    * prefix's binary-order upper bound). */
+  private[graft] def utf8Cmp(x: Array[Byte], y: Array[Byte]): Int = {
     var i = 0
     while (i < x.length && i < y.length) {
       val c = (x(i) & 0xFF) - (y(i) & 0xFF)
@@ -200,21 +204,11 @@ object Manifest {
     x.length - y.length
   }
 
-  /** Does a recorded interval overlap a predicate interval? Type
-    * mismatch (a numeric probe against a string zone, or vice versa)
-    * scans conservatively — stats must never turn a bad probe into a
-    * wrong answer. */
-  private[load] def zoneOverlaps(z: Zone, pred: Zone): Boolean = (z, pred) match {
-    case (NumZone(mn, mx), NumZone(lo, hi)) => !(mx < lo || mn > hi)
-    case (StrZone(mn, mx), StrZone(lo, hi)) =>
-      !(utf8Cmp(mx, lo) < 0 || utf8Cmp(mn, hi) > 0)
-    case _ => true
-  }
-
   /** Interval union for the compaction merge — `None` on a type
     * mismatch (a merged map must never understate a range it cannot
-    * represent). */
-  private def zoneUnion(a: Zone, b: Zone): Option[Zone] = (a, b) match {
+    * represent). Also the per-file union across row groups
+    * ([[FileZones]]). */
+  private[load] def zoneUnion(a: Zone, b: Zone): Option[Zone] = (a, b) match {
     case (NumZone(a1, a2), NumZone(b1, b2)) =>
       Some(NumZone(math.min(a1, b1), math.max(a2, b2)))
     case (StrZone(a1, a2), StrZone(b1, b2)) =>
@@ -228,11 +222,14 @@ object Manifest {
     * values — over-long values record no interval rather than a
     * truncated bound that could understate the max). */
   private def zoneMapCols(schema: StructType): Seq[StructField] =
-    schema.fields.toSeq.filter(_.dataType match {
-      case ByteType | ShortType | IntegerType | LongType | FloatType |
-           DoubleType | DateType | TimestampType | StringType => true
-      case _ => false
-    })
+    schema.fields.toSeq.filter(f => zoneable(f.dataType))
+
+  /** Can the zone encoding express a column of type `dt`? */
+  private[load] def zoneable(dt: DataType): Boolean = dt match {
+    case ByteType | ShortType | IntegerType | LongType | FloatType |
+         DoubleType | DateType | TimestampType | StringType => true
+    case _ => false
+  }
 
   /** Longest string recorded in a zone map: beyond this, the column's
     * interval is dropped for the batch (conservative must-scan) —
@@ -577,7 +574,7 @@ object Manifest {
 
   /** The batch's full recorded manifest — schema, file lists,
     * intervals, dictionaries, null counts, row count. Same cache and
-    * conservatism contract as [[zoneMap]] (which is a view over this).
+    * conservatism contract as the zone intervals above.
     * `None` when `id` has no manifest; a manifest without its schema
     * or file lists throws. */
   private[load] def batchStats(spark: SparkSession, historyDir: String,

@@ -310,8 +310,7 @@ object WarehouseLoad {
     *
     * The relation is ZONE-PRUNE-AWARE: reading registers the table
     * with [[graft.plans.ZonePrune]], so a plain `.filter` over this
-    * DataFrame drops non-overlapping batch roots at OPTIMIZATION time
-    * — no manual [[readWarehouseBetween]] call needed. */
+    * DataFrame drops non-overlapping batch roots at OPTIMIZATION time. */
   def readWarehouse(spark: SparkSession, warehouseDir: String,
                     historyDir: String): Option[DataFrame] =
     readBatchDirs(spark, warehouseDir, historyDir,
@@ -411,21 +410,40 @@ object WarehouseLoad {
                       target: StructType, warehouseDir: String,
                       historyDir: String, strict: Boolean = false,
                       partitionCols: Seq[String] = Nil): Unit =
-    loadAtomic(spark, stagingDir, target, warehouseDir, historyDir, strict,
-      partitionCols = partitionCols)
+    loadAtomic(spark, stagingDir, target, warehouseDir, historyDir,
+      if (strict) Strict else Permissive, partitionCols = partitionCols)
 
-  /** [[batchIdempotent]] with a crash-injection seam: `failpoint` runs
-    * after the data write ("data-written") and after the history
-    * snapshot ("history-written"), BEFORE the manifest repoint — specs
-    * throw from it to prove a crash between the phases re-runs to the
-    * exact committed state with zero duplicate rows. */
+  /** What a load does with a row that fails coercion to the declared
+    * schema or does not parse at all — COPY's `ON_ERROR`: [[Strict]]
+    * refuses the whole batch (the default, ABORT_STATEMENT),
+    * [[Permissive]] loads the failed values as nulls (CONTINUE), and
+    * [[Quarantine]] loads only the clean rows and routes every failed
+    * row whole to the error table under `errorDir` (CONTINUE plus the
+    * error table, [[batchQuarantine]]). */
+  private[graft] sealed trait OnError
+  private[graft] case object Strict extends OnError
+  private[graft] case object Permissive extends OnError
+  private[graft] final case class Quarantine(errorDir: String)
+    extends OnError
+
+  /** Fresh batches up to this size parse their JSON once for the
+    * quarantine split (a local checkpoint both halves read); larger
+    * ones parse twice rather than hold the parse in storage. */
+  private val QuarantineParseOnceBytes = 1L << 30
+
+  /** [[batchIdempotent]] with a failure policy and a crash-injection
+    * seam: `failpoint` runs after the data write ("data-written") and
+    * after the history snapshot ("history-written"), BEFORE the
+    * manifest repoint — specs throw from it to prove a crash between
+    * the phases re-runs to the exact committed state with zero
+    * duplicate rows. */
   private[graft] def loadAtomic(spark: SparkSession, stagingDir: String,
       target: StructType, warehouseDir: String, historyDir: String,
-      strict: Boolean = false,
+      onError: OnError = Permissive,
       failpoint: String => Unit = _ => (),
-      partitionCols: Seq[String] = Nil): Unit =
+      partitionCols: Seq[String] = Nil): Unit = {
     idempotentBatch(spark, stagingDir, historyDir).foreach {
-      case (freshFiles, data) =>
+      case (freshFiles, fresh) =>
         import org.apache.spark.sql.functions.{col, collect_set, xxhash64}
         // Deterministic batch id: an order-independent combine of the
         // fresh set's path hashes under two independent seeds — stable
@@ -473,6 +491,14 @@ object WarehouseLoad {
         // empty files legitimately contribute no rows and are exempt
         val expect = freshFiles.collect { case (f, len) if len > 0 => h1(f) }
           .toSet
+        val freshBytes = freshFiles.map(_._2).sum
+        val data = onError match {
+          case Quarantine(_) if freshBytes <= QuarantineParseOnceBytes =>
+            fresh.localCheckpoint()
+          case _ => fresh
+        }
+        // observed BELOW the quarantine split: a file whose every row
+        // fails still contributed rows
         val obs = new Observation()
         val observed = data.observe(obs,
           collect_set(xxhash64(col(FileCol))).as("seen"))
@@ -512,10 +538,16 @@ object WarehouseLoad {
         // under every batch root before a byte is read — at warehouse
         // scale the difference between 1/n-th of the table and all of
         // it. Compaction/takedown preserve the layout.
+        val rows = onError match {
+          case Quarantine(errorDir) =>
+            writeErrors(spark, observed, target, s"$errorDir/$PendingDir/b$id")
+            quarantineClean(observed, target)
+          case _ => observed
+        }
         writeBatch(spark, warehouseDir, historyDir, id,
-          align(observed, target, strict), partitionCols,
+          align(rows, target, onError == Strict), partitionCols,
           writeHistoryList(spark, s"$historyDir/b$id", freshFiles.map(_._1)),
-          splitBytes = freshFiles.map(_._2).sum,
+          splitBytes = freshBytes,
           dataWritten = coverageGuard())
         failpoint("history-written")
         // derive against the head AT COMMIT TIME (a concurrent writer
@@ -526,6 +558,14 @@ object WarehouseLoad {
         seedLoadedFiles(historyDir, id, freshFiles.map(_._1))
         clearIntent(spark, historyDir, id)
     }
+    // also when nothing was fresh: a re-run publishes the errors of a
+    // batch that committed before a crash could publish them
+    onError match {
+      case Quarantine(errorDir) =>
+        publishErrors(spark, historyDir, errorDir)
+      case _ => ()
+    }
+  }
 
   /** Write `df` as batch `id` with FRESH stats — the shared write of
     * every writer that produces new rows (load, streamed epoch, merge's
@@ -594,53 +634,6 @@ object WarehouseLoad {
       cur => if (cur.contains(id)) cur else cur :+ id)
     clearIntent(spark, historyDir, id)
   }
-
-  def zoneMap(spark: SparkSession, historyDir: String,
-              id: String): Option[Map[String, Zone]] =
-    batchStats(spark, historyDir, id).map(_.zones)
-
-  /** Committed batch ids whose zone interval for `column` overlaps the
-    * predicate interval — plus every batch with no recorded interval
-    * (scan conservatively). Metadata only: one manifest read per
-    * batch, bounded by the load count. */
-  private[graft] def prunedBatchIds(spark: SparkSession, historyDir: String,
-      column: String, pred: Zone): Seq[String] =
-    committedBatches(spark, historyDir).filter { id =>
-      zoneMap(spark, historyDir, id)
-        .flatMap(_.collectFirst {
-          case (c, iv) if c.equalsIgnoreCase(column) => iv
-        })
-        .forall(zoneOverlaps(_, pred))
-    }
-
-  private[graft] def prunedBatchIds(spark: SparkSession, historyDir: String,
-      column: String, lo: Double, hi: Double): Seq[String] =
-    prunedBatchIds(spark, historyDir, column, NumZone(lo, hi))
-
-  /** Zone-map batch skipping — the Snowflake micro-partition-pruning
-    * analog at BATCH granularity: the committed relation restricted to
-    * batches whose recorded [min, max] for `column` overlaps
-    * `[lo, hi]`. Returns a SUPERSET of the matching rows (the caller
-    * applies its row predicate as usual; parquet footer stats then
-    * prune row groups inside the surviving roots) — skipping happens
-    * before a single byte or footer of a non-overlapping batch is
-    * touched, and before its scan root enters the plan at all. Bounds
-    * use the zone encoding (numerics as-is, date = epoch days,
-    * timestamp = epoch millis). `None` when every batch prunes. */
-  def readWarehouseBetween(spark: SparkSession, warehouseDir: String,
-      historyDir: String, column: String, lo: Double,
-      hi: Double): Option[DataFrame] =
-    readBatchDirs(spark, warehouseDir, historyDir,
-      prunedBatchIds(spark, historyDir, column, NumZone(lo, hi)))
-
-  /** [[readWarehouseBetween]] for STRING intervals (UTF-8 binary
-    * order, both bounds inclusive) — `source = 'web'` probes pass
-    * `lo = hi`. Same superset contract. */
-  def readWarehouseBetween(spark: SparkSession, warehouseDir: String,
-      historyDir: String, column: String, lo: String,
-      hi: String): Option[DataFrame] =
-    readBatchDirs(spark, warehouseDir, historyDir,
-      prunedBatchIds(spark, historyDir, column, StrZone(lo, hi)))
 
   // ------------------------------------------------------------------
   // CHECK constraints: declared once, enforced by every load's own job
@@ -1894,103 +1887,104 @@ object WarehouseLoad {
   // ------------------------------------------------------------------
 
   /** Dead-letter load — the Snowpipe `ON_ERROR = CONTINUE` +
-    * error-table pattern, completing the failure-policy family (strict
-    * = abort-batch mirrors COPY's default; permissive = null-through;
-    * this = quarantine): rows with at least one coercion failure are
-    * routed WHOLE to an error table — original values preserved as the
-    * JSON text they arrived as, plus the source file and the list of
-    * failing columns (COPY validation's rejected-record reason) — and
-    * only clean rows align and load. Nothing is silently nulled and
-    * nothing aborts; the error table is the replay queue after a
-    * schema fix.
+    * error-table pattern, the third failure policy of the one
+    * idempotent load ([[Quarantine]]; strict = abort-batch mirrors
+    * COPY's default, permissive = null-through). Rows with at least one
+    * coercion failure are routed WHOLE to an error table — original
+    * values preserved as the JSON text they arrived as, plus the source
+    * file and the list of failing columns (COPY validation's
+    * rejected-record reason) — and only clean rows align and load.
+    * Nothing is silently nulled and nothing aborts; the error table is
+    * the replay queue after a schema fix.
     *
-    * Two failure classes are quarantined, never silently nulled:
-    * coercion failures (a parsed value that won't cast to the DDL type,
-    * `failed_columns` naming the culprits) and MALFORMED JSON lines —
-    * the read carries a corrupt-record column, and a row that failed to
-    * parse at all is routed whole (the raw line as `raw_record`, reason
-    * `_corrupt_record`), matching Snowflake's error table recording
-    * parse failures under `ON_ERROR = CONTINUE`. Without this, a
-    * half-written JSON line would parse to all-nulls, pass the
-    * cast-failure check vacuously, and LOAD as a null row.
+    * Two failure classes are quarantined: coercion failures (a parsed
+    * value that won't cast to the DDL type, `failed_columns` naming
+    * the culprits) and MALFORMED JSON lines (the raw line as
+    * `raw_record`, reason `_corrupt_record`), matching Snowflake's error
+    * table recording parse failures under `ON_ERROR = CONTINUE`.
     *
-    * The file list is snapshotted ONCE and drives both passes, so a
-    * file landing mid-load is either fully processed (clean rows
-    * loaded, dirty rows quarantined) or fully deferred to the next
-    * batch — never split, which an independent per-pass directory scan
-    * would allow (clean rows loaded by pass 2 of a file pass 1 never
-    * saw, its dirty rows lost). Like the idempotent leg, the snapshot
-    * is enforced by a SINGLE-ROOT scan + broadcast semi-join on
-    * `_metadata.file_path` — no path list in the plan, constant-size
-    * at any staging file count (the prior vararg-path form put every
-    * path in the driver's plan).
-    *
-    * Cost shape: two narrow scans of the staged batch (diagnose+spill,
-    * then align+load) — the same validate-then-load I/O COPY pays; both
-    * passes are pure codegen'd projections with a row filter plus a
-    * broadcast semi-join (no shuffle), so the split parallelizes with
-    * file splits at any batch size. */
+    * Clean rows commit exactly like [[batchIdempotent]]'s: the fresh
+    * files only, with their load history, in the one CAS, under the
+    * CHECK constraints and with zone maps. Error rows are exactly-once
+    * too: they are written under `quarantineDir/_pending/b<id>` (hidden
+    * from a `spark.read.parquet(quarantineDir)`), keyed by the batch's
+    * deterministic id so a crashed attempt's retry overwrites them, and
+    * moved up into `quarantineDir` once the batch is committed — by
+    * this load, or by the next one after a crash. */
   def batchQuarantine(spark: SparkSession, stagingDir: String,
                       target: StructType, warehouseDir: String,
-                      quarantineDir: String): Unit =
-    quarantineRelation(spark, stagingDir).foreach { case (raw0, fields) =>
-      import org.apache.spark.sql.functions.{array, col, lit, not, struct, to_json, when}
-      // Parse the batch ONCE when it fits the cache budget (r17): the
-      // diagnose and load passes below are both projections of the
-      // same parsed rows, and JSON parsing dominates both scans —
-      // materializing the parse (spill-safe localCheckpoint) halves
-      // the batch's CPU. Over-budget batches keep the two-scan shape:
-      // the cache would thrash storage for a parse it can stream.
-      val cacheBudget = spark.sparkContext.hadoopConfiguration
-        .getLong("graft.quarantine.cacheBytes", 1L << 30)
-      val raw =
-        if (listStaged(spark, stagingDir).map(_._2).sum <= cacheBudget)
-          raw0.localCheckpoint()
-        else raw0
-      val malformed = col(CorruptCol).isNotNull
-      val fail = SchemaAlign.castFailure(raw, target)
-      raw.filter(malformed || fail)
-        .select(
-          col(FileCol).as("source_file"),
-          when(malformed, col(CorruptCol))
-            .otherwise(to_json(struct(fields.map(col): _*)))
-            .as("raw_record"),
-          when(malformed, array(lit("_corrupt_record")))
-            .otherwise(SchemaAlign.failedColumns(raw, target))
-            .as("failed_columns"))
-        .write.mode("append").parquet(quarantineDir)
-      SchemaAlign(raw.filter(not(malformed) && not(fail)), target)
-        .write.mode("append").parquet(warehouseDir)
-    }
+                      historyDir: String, quarantineDir: String): Unit =
+    loadAtomic(spark, stagingDir, target, warehouseDir, historyDir,
+      Quarantine(quarantineDir))
 
-  /** The quarantine load's staged relation — (rows with `_graft_file`
-    * provenance + corrupt-record column, original field names) — or
-    * None when nothing is staged. Package-visible so PlanSpec can
-    * assert the constant-size-plan contract directly. */
-  private[graft] def quarantineRelation(spark: SparkSession,
-      stagingDir: String): Option[(DataFrame, Seq[String])] = {
-    val staged = listStaged(spark, stagingDir)
-    if (staged.isEmpty) return None
-    import spark.implicits._
-    import org.apache.spark.sql.functions.{broadcast, col}
-    val snapshot = staged.toDF("file", "len").localCheckpoint()
-    // Bounded-sample inference (r17): the quarantine leg held the last
-    // full-root `stagedSchema` pass on a load path — one whole extra
-    // JSON parse of the batch per load just to learn key spellings the
-    // homogeneity contract (see [[stagedSchema]]) already pins from
-    // any file. Same [[freshSchema]] policy the idempotent leg adopted
-    // in r12: ≤ SchemaSampleFiles files read for inference, the
-    // diagnose and load passes unchanged.
-    val schema = freshSchema(spark, stagingDir, staged)
-    require(!schema.fieldNames.contains(CorruptCol),
-      s"staged data may not carry a '$CorruptCol' column")
-    val raw = spark.read
-      .schema(schema.add(CorruptCol, StringType))
-      .option("columnNameOfCorruptRecord", CorruptCol)
-      .json(stagingDir)
-      .withColumn(FileCol, normCol(col("_metadata.file_path")))
-      .join(broadcast(snapshot.select(col("file").as(FileCol))),
-        Seq(FileCol), "left_semi")
-    Some((raw, schema.fieldNames.toIndexedSeq))
+  /** Where a quarantine load stages a batch's error rows until the
+    * batch commits; `_`-prefixed, so parquet readers skip it. */
+  private val PendingDir = "_pending"
+
+  private def failed(raw: DataFrame, target: StructType): (Column, Column) =
+    (org.apache.spark.sql.functions.col(CorruptCol).isNotNull,
+      SchemaAlign.castFailure(raw, target))
+
+  /** Write the rows of `raw` that fail to parse or to coerce to
+    * `target` as error records under `dir`; no rows leave no dir. */
+  private def writeErrors(spark: SparkSession, raw: DataFrame,
+      target: StructType, dir: String): Unit = {
+    import org.apache.spark.sql.functions.{array, col, count, lit, struct,
+      to_json, when}
+    val (malformed, fail) = failed(raw, target)
+    val fields = raw.columns.filterNot(c => c == CorruptCol || c == FileCol)
+    val eobs = new Observation()
+    raw.filter(malformed || fail)
+      .select(
+        col(FileCol).as("source_file"),
+        when(malformed, col(CorruptCol))
+          .otherwise(to_json(struct(fields.map(col): _*)))
+          .as("raw_record"),
+        when(malformed, array(lit("_corrupt_record")))
+          .otherwise(SchemaAlign.failedColumns(raw, target))
+          .as("failed_columns"))
+      .observe(eobs, count(lit(1)).as("n"))
+      .write.mode("overwrite").parquet(dir)
+    if (eobs.get("n").asInstanceOf[Long] == 0L) {
+      val p = new org.apache.hadoop.fs.Path(dir)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    }
+  }
+
+  /** The rows of `raw` that parse and coerce to `target`. */
+  private def quarantineClean(raw: DataFrame, target: StructType): DataFrame = {
+    import org.apache.spark.sql.functions.not
+    val (malformed, fail) = failed(raw, target)
+    raw.filter(not(malformed) && not(fail))
+  }
+
+  /** Make the pending error rows of every COMMITTED batch visible:
+    * move each data file of `errorDir/_pending/b<id>` up into
+    * `errorDir`, then drop the emptied dir. Each move is atomic and a
+    * moved file is gone from the pending dir, so a publish cut short
+    * finishes on the next run without a second copy. A pending dir
+    * whose batch never committed stays hidden; its retry (same fresh
+    * set, same id) overwrites it. */
+  private def publishErrors(spark: SparkSession, historyDir: String,
+      errorDir: String): Unit = {
+    val pending = new org.apache.hadoop.fs.Path(errorDir, PendingDir)
+    val fs = pending.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val staged =
+      try fs.listStatus(pending).toSeq.filter(_.isDirectory)
+      catch { case _: java.io.FileNotFoundException => Nil }
+    if (staged.nonEmpty) {
+      val committed = committedBatches(spark, historyDir).map("b" + _).toSet
+      staged.filter(st => committed(st.getPath.getName)).foreach { st =>
+        fs.listStatus(st.getPath).foreach { f =>
+          val name = f.getPath.getName
+          val dst = new org.apache.hadoop.fs.Path(errorDir, name)
+          if (f.isFile && !name.startsWith("_") && !name.startsWith(".") &&
+              !fs.rename(f.getPath, dst) && !fs.exists(dst))
+            throw new java.io.IOException(
+              s"cannot publish quarantined rows ${f.getPath} to $dst")
+        }
+        fs.delete(st.getPath, true)
+      }
+    }
   }
 }

@@ -21,7 +21,7 @@ import graft.load.Manifest.{BatchStats, NumZone, StrZone, Zone}
   * committed batch root whose recorded stats PROVE the predicate can
   * match no row of the batch — before a byte, footer, or scan TASK of
   * the pruned batch enters the physical plan. This closes the gap
-  * where skipping was only the opt-in `readWarehouseBetween` API and a
+  * where skipping was only an opt-in range API and a
   * plain WHERE scanned every root; it also composes arbitrarily with
   * the predicate's boolean structure (the reference's warehouse prunes
   * micro-partitions from arbitrary WHERE clauses the same way,
@@ -382,7 +382,7 @@ object ZonePrune extends Rule[LogicalPlan] {
             cs.zone match {
               case Some(StrZone(mn, mx)) =>
                 val pb = p.getBytes("UTF-8")
-                if (cmpBytes(mx.getBytes("UTF-8"), pb) < 0) true
+                if (Manifest.utf8Cmp(mx.getBytes("UTF-8"), pb) < 0) true
                 else {
                   var i = pb.length - 1
                   while (i >= 0 && pb(i) == -1) i -= 1
@@ -390,23 +390,13 @@ object ZonePrune extends Rule[LogicalPlan] {
                   else {
                     val ub = java.util.Arrays.copyOf(pb, i + 1)
                     ub(i) = (ub(i) + 1).toByte
-                    cmpBytes(mn.getBytes("UTF-8"), ub) >= 0
+                    Manifest.utf8Cmp(mn.getBytes("UTF-8"), ub) >= 0
                   }
                 }
               case _ => false
             }
         }
     }
-  }
-
-  private def cmpBytes(x: Array[Byte], y: Array[Byte]): Int = {
-    var i = 0
-    while (i < x.length && i < y.length) {
-      val c = (x(i) & 0xFF) - (y(i) & 0xFF)
-      if (c != 0) return c
-      i += 1
-    }
-    x.length - y.length
   }
 
   /** A literal as a zone-encoded bound. Timestamps pad a millisecond

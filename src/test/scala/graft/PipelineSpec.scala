@@ -415,19 +415,28 @@ class PipelineSpec extends SparkSpec {
       """{"id": "101", "region": "b"}""")
     load("f3.json", """{"id": "1000", "region": "c"}""")
 
-    def pruned(lo: Double, hi: Double) =
-      WarehouseLoad.prunedBatchIds(spark, hist, "id", lo, hi)
-    assert(pruned(90, 200).size == 1, "exactly the middle batch overlaps")
-    assert(pruned(0, 5000).size == 3)
-    assert(pruned(5000, 9000).isEmpty)
-    assert(WarehouseLoad.readWarehouseBetween(
-      spark, wh, hist, "id", 5000, 9000).isEmpty)
+    // batch roots the planner keeps for a predicate over the committed
+    // relation (ZonePrune drops the roots whose stats prove it empty)
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+      LogicalRelation}
+    def roots(df: org.apache.spark.sql.DataFrame): Int =
+      df.queryExecution.optimizedPlan.collect {
+        case lr: LogicalRelation => lr.relation match {
+          case fs: HadoopFsRelation => fs.location.rootPaths.size
+          case _ => 0
+        }
+      }.sum
+    def read() = WarehouseLoad.readWarehouse(spark, wh, hist).get
+    def between(lo: Long, hi: Long) = read().filter(col("id").between(lo, hi))
+    def pruned(lo: Long, hi: Long) = roots(between(lo, hi))
+    assert(pruned(90, 200) == 1, "exactly the middle batch overlaps")
+    assert(pruned(0, 5000) == 3)
+    assert(pruned(5000, 9000) == 0)
+    assert(between(5000, 9000).count() == 0)
     // the pruned relation is a SUPERSET contract: with the row filter
     // applied it equals the full-relation answer
-    import org.apache.spark.sql.functions.col
-    val viaZone = WarehouseLoad.readWarehouseBetween(
-        spark, wh, hist, "id", 90, 200).get
-      .filter(col("id").between(90, 200))
+    val viaZone = between(90, 200)
       .select("id").collect().map(_.getLong(0)).sorted.toSeq
     assert(viaZone == Seq(100L, 101L))
 
@@ -436,33 +445,28 @@ class PipelineSpec extends SparkSpec {
     import spark.implicits._
     assert(WarehouseLoad.takedownCommitted(spark, wh, hist,
       Seq(100L).toDF("id"), Seq("id")) == 1L)
-    assert(pruned(90, 200).size == 1,
+    assert(pruned(90, 200) == 1,
       "the rewritten batch must keep its zone map")
-    assert(WarehouseLoad.readWarehouseBetween(
-        spark, wh, hist, "id", 90, 200).get
-      .filter(col("id").between(90, 200))
+    assert(between(90, 200)
       .select("id").collect().map(_.getLong(0)).toSeq == Seq(101L))
 
     // string zone maps (UTF-8 binary order): region intervals are
     // [a,a] / [b,b] / [c,c] per batch — an equality probe prunes to
     // exactly its batch, a range spans its overlaps
     def prunedStr(lo: String, hi: String) =
-      WarehouseLoad.prunedBatchIds(spark, hist, "region",
-        WarehouseLoad.StrZone(lo, hi))
-    assert(prunedStr("b", "b").size == 1,
+      roots(read().filter(col("region") >= lo && col("region") <= hi))
+    assert(prunedStr("b", "b") == 1,
       "string equality probe must prune to the containing batch")
-    assert(prunedStr("a", "b").size == 2)
-    assert(prunedStr("x", "z").isEmpty)
-    assert(WarehouseLoad.readWarehouseBetween(
-        spark, wh, hist, "region", "b", "b").get
-      .filter(col("region") === "b")
+    assert(prunedStr("a", "b") == 2)
+    assert(prunedStr("x", "z") == 0)
+    assert(read().filter(col("region") === "b")
       .select("id").collect().map(_.getLong(0)).toSeq == Seq(101L))
 
     // compaction merges the input maps (interval union — numeric AND
     // string forms)
     WarehouseLoad.compactCommitted(spark, wh, hist)
     val cid = WarehouseLoad.committedBatches(spark, hist).head
-    val merged = WarehouseLoad.zoneMap(spark, hist, cid)
+    val merged = WarehouseLoad.batchStats(spark, hist, cid).map(_.zones)
     assert(merged.exists(_.contains("id")),
       s"compacted batch must carry a merged zone map, got $merged")
     val WarehouseLoad.NumZone(lo, hi) = merged.get("id")
@@ -470,7 +474,7 @@ class PipelineSpec extends SparkSpec {
     val WarehouseLoad.StrZone(slo, shi) = merged.get("region")
     assert(slo == "a" && shi == "c",
       s"merged string interval must be the union, got [$slo, $shi]")
-    assert(pruned(5000, 9000).isEmpty)
+    assert(pruned(5000, 9000) == 0)
     // a batch WITHOUT an interval for the probed column scans
     // conservatively: this batch has no 'id' column at all, so range
     // pruning on 'id' must include it
@@ -480,10 +484,10 @@ class PipelineSpec extends SparkSpec {
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("region",
           org.apache.spark.sql.types.StringType))), wh, hist)
-    assert(pruned(5000, 9000).size == 1,
+    assert(pruned(5000, 9000) == 1,
       "a batch with no interval for the column must be scanned, not skipped")
     // …while its string interval still prunes on the column it HAS
-    assert(prunedStr("z", "z").size == 1)
+    assert(prunedStr("z", "z") == 1)
   }
 
   test("schema-evolved batches read, feed, and takedown as one relation") {
@@ -1650,41 +1654,116 @@ class PipelineSpec extends SparkSpec {
     assert(ids(WarehouseLoad.readWarehouse(spark, wh, hist).get) == Seq(1L, 3L))
   }
 
+  /** Rows of the quarantine error table under `quar`: every parquet
+    * file outside the `_`-hidden pending area. */
+  private def quarantined(quar: String): Long = {
+    val root = Paths.get(quar)
+    val files =
+      if (!Files.exists(root)) Nil
+      else {
+        val s = Files.walk(root)
+        try s.iterator().asScala.toList.filter { p =>
+          p.getFileName.toString.endsWith(".parquet") &&
+            !root.relativize(p).iterator().asScala.exists(
+              _.toString.startsWith("_"))
+        } finally s.close()
+      }
+    if (files.isEmpty) 0L
+    else spark.read.parquet(files.map(_.toString): _*).count()
+  }
+
   test("quarantine load plans constant-size over a multi-thousand-file stage") {
     // The r12 mirror of the idempotent case (VERDICT r11 #2): the
-    // quarantine leg's snapshot contract must also be a single-root
-    // scan + broadcast semi-join — no vararg path list in the plan.
+    // quarantine leg reads the staged files through the idempotent
+    // load's fresh-set relation, whose snapshot contract must be a
+    // single-root scan + broadcast semi-join — no vararg path list in
+    // the plan.
     val staging = tmpDir("graft-bigquarstage-")
     (0 until 2000).foreach { i =>
       Files.writeString(Paths.get(staging, f"f$i%04d.json"),
         s"""{"CustomerID": "$i", "FirstName": "n$i"}""" + "\n")
     }
-    val Some((raw, _)) =
-      graft.load.WarehouseLoad.quarantineRelation(spark, staging)
+    val wh = tmpDir("graft-bigquarwh-") + "/t"
+    val hist = tmpDir("graft-bigquarhist-") + "/h"
+    val quar = tmpDir("graft-bigquarerr-") + "/q"
+    val Some((_, raw)) =
+      graft.load.StagedRead.idempotentBatch(spark, staging, hist)
     val roots = raw.queryExecution.sparkPlan.collect {
       case f: org.apache.spark.sql.execution.FileSourceScanExec =>
         f.relation.location.rootPaths.length
     }
     assert(roots == Seq(1),
       s"expected one single-root staging scan, got roots=$roots")
-    val wh = tmpDir("graft-bigquarwh-") + "/t"
-    val quar = tmpDir("graft-bigquarerr-") + "/q"
     graft.load.WarehouseLoad.batchQuarantine(spark, staging,
-      Schemas.customers, wh, quar)
-    assert(spark.read.parquet(wh).count() == 2000)
-    // clean batch: the error-table write ran but emitted no rows (an
-    // empty Spark write leaves no data parts, only markers)
-    val quarParts =
-      if (!Files.exists(Paths.get(quar))) Nil
-      else {
-        val s = Files.list(Paths.get(quar))
-        try s.iterator().asScala.toList.filter(
-          _.getFileName.toString.endsWith(".parquet"))
-        finally s.close()
+      Schemas.customers, wh, hist, quar)
+    assert(graft.load.WarehouseLoad.readWarehouse(spark, wh, hist).get
+      .count() == 2000)
+    // clean batch: the error table holds no row
+    assert(quarantined(quar) == 0L, "clean batch quarantined rows")
+  }
+
+  test("quarantine load is exactly-once: re-runs add nothing, a crash at " +
+      "any failpoint re-runs to one copy of every clean and error row") {
+    import graft.load.WarehouseLoad
+    class Boom extends RuntimeException("injected crash")
+    val target = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("id",
+        org.apache.spark.sql.types.LongType),
+      org.apache.spark.sql.types.StructField("name",
+        org.apache.spark.sql.types.StringType)))
+    Seq("data-written", "history-written", "commit-attempt",
+        "version-written").foreach { fp =>
+      val staging = tmpDir("graft-quarx-stage-")
+      val wh = tmpDir("graft-quarx-wh-") + "/t"
+      val hist = tmpDir("graft-quarx-hist-") + "/h"
+      val quar = tmpDir("graft-quarx-err-") + "/q"
+      Files.writeString(Paths.get(staging, "a.json"),
+        """{"ID": "1", "Name": "good"}""" + "\n" +
+        """{"ID": "oops", "Name": "bad-id"}""" + "\n")
+      // every row of this file fails: it still counts as covered
+      Files.writeString(Paths.get(staging, "b.json"),
+        """{"ID": "x", "Name": "bad"}""" + "\n" +
+        """{"ID": "2", "Name": "trunc""" + "\n")
+      def clean() = WarehouseLoad.readWarehouse(spark, wh, hist)
+        .map(_.select("id").collect().map(_.getLong(0)).sorted.toSeq)
+        .getOrElse(Nil)
+      intercept[Boom] {
+        WarehouseLoad.loadAtomic(spark, staging, target, wh, hist,
+          WarehouseLoad.Quarantine(quar),
+          failpoint = at => if (at == fp) throw new Boom)
       }
-    assert(quarParts.isEmpty ||
-      spark.read.parquet(quar).count() == 0,
-      s"clean batch quarantined rows: $quarParts")
+      if (fp != "version-written")
+        assert(clean().isEmpty && quarantined(quar) == 0L,
+          s"crash at $fp made rows visible before the commit")
+      WarehouseLoad.batchQuarantine(spark, staging, target, wh, hist, quar)
+      assert(clean() == Seq(1L), s"after a crash at $fp")
+      assert(quarantined(quar) == 3L, s"after a crash at $fp")
+      // a re-run over the same staging adds no clean and no error row
+      WarehouseLoad.batchQuarantine(spark, staging, target, wh, hist, quar)
+      assert(clean() == Seq(1L) && quarantined(quar) == 3L,
+        s"re-run after a crash at $fp")
+      assert(WarehouseLoad.currentVersion(spark, hist) == 1)
+    }
+    // a crashed attempt whose staging gains a file before the retry:
+    // the retry commits a different batch id, and the crashed
+    // attempt's error rows never become visible
+    val staging = tmpDir("graft-quarg-stage-")
+    val wh = tmpDir("graft-quarg-wh-") + "/t"
+    val hist = tmpDir("graft-quarg-hist-") + "/h"
+    val quar = tmpDir("graft-quarg-err-") + "/q"
+    Files.writeString(Paths.get(staging, "a.json"),
+      """{"ID": "1", "Name": "good"}""" + "\n" +
+      """{"ID": "oops", "Name": "bad-id"}""" + "\n")
+    intercept[Boom] {
+      WarehouseLoad.loadAtomic(spark, staging, target, wh, hist,
+        WarehouseLoad.Quarantine(quar),
+        failpoint = at => if (at == "history-written") throw new Boom)
+    }
+    Files.writeString(Paths.get(staging, "c.json"),
+      """{"ID": "y", "Name": "bad"}""" + "\n")
+    WarehouseLoad.batchQuarantine(spark, staging, target, wh, hist, quar)
+    assert(WarehouseLoad.readWarehouse(spark, wh, hist).get.count() == 1L)
+    assert(quarantined(quar) == 2L)
   }
 
   test("strict load refuses files with coercion failures") {

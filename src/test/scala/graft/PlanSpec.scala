@@ -759,8 +759,13 @@ class PlanSpec extends SparkSpec {
     assert(none.count() == 0)
     // conservative: a non-literal predicate prunes nothing
     assert(roots(read().filter(col("id") >= col("id") - 1)) == 3)
-    // and the manual API agrees with the planner's decision
-    assert(WarehouseLoad.prunedBatchIds(spark, hist, "id", 90, 200).size == 1)
+    // and the recorded intervals agree with the planner's decision
+    assert(WarehouseLoad.committedBatches(spark, hist).count { id =>
+      WarehouseLoad.batchStats(spark, hist, id).get.zones.get("id").forall {
+        case WarehouseLoad.NumZone(lo, hi) => hi >= 90 && lo <= 200
+        case _ => true
+      }
+    } == 1)
   }
 
   test("zone-prune r16: per-file stats drop FILES inside surviving batch roots") {

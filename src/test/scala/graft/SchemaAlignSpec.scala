@@ -81,6 +81,7 @@ class SchemaAlignSpec extends SparkSpec {
     import graft.load.WarehouseLoad
     val staging = tmpDir("graft-quar-stage-")
     val wh = tmpDir("graft-quar-wh-") + "/t"
+    val hist = tmpDir("graft-quar-hist-") + "/h"
     val quar = tmpDir("graft-quar-err-") + "/q"
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$staging/a.json"),
@@ -91,9 +92,9 @@ class SchemaAlignSpec extends SparkSpec {
       java.nio.file.Paths.get(s"$staging/b.json"),
       """{"ID": "2", "Flag": "nope", "Name": "bad-flag", "TS": "2005-08-01 00:00:00"}
         |""".stripMargin)
-    WarehouseLoad.batchQuarantine(spark, staging, target, wh, quar)
+    WarehouseLoad.batchQuarantine(spark, staging, target, wh, hist, quar)
     // clean row loaded, typed
-    val loaded = spark.read.parquet(wh).collect()
+    val loaded = WarehouseLoad.readWarehouse(spark, wh, hist).get.collect()
     assert(loaded.length == 1 && loaded.head.getLong(0) == 1L,
       s"expected exactly the clean row: ${loaded.toSeq}")
     // both dirty rows quarantined WHOLE with provenance + diagnosis
@@ -117,14 +118,15 @@ class SchemaAlignSpec extends SparkSpec {
     import graft.load.WarehouseLoad
     val staging = tmpDir("graft-quarmal-stage-")
     val wh = tmpDir("graft-quarmal-wh-") + "/t"
+    val hist = tmpDir("graft-quarmal-hist-") + "/h"
     val quar = tmpDir("graft-quarmal-err-") + "/q"
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$staging/a.json"),
       """{"ID": "1", "Flag": "true", "Name": "good", "TS": "2005-08-01 00:00:00"}
         |{"ID": "2", "Flag": "false", "Name": "trunc
         |""".stripMargin)
-    WarehouseLoad.batchQuarantine(spark, staging, target, wh, quar)
-    val loaded = spark.read.parquet(wh).collect()
+    WarehouseLoad.batchQuarantine(spark, staging, target, wh, hist, quar)
+    val loaded = WarehouseLoad.readWarehouse(spark, wh, hist).get.collect()
     assert(loaded.length == 1 && loaded.head.getLong(0) == 1L,
       s"malformed line leaked into the warehouse: ${loaded.toSeq}")
     val q = spark.read.parquet(quar).collect()
