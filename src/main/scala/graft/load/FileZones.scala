@@ -118,7 +118,7 @@ object FileZones {
       val cols = (zones.keySet ++ nulls.keySet).iterator.map { c =>
         c -> ColStats(zones.get(c), None, nulls.get(c))
       }.toMap
-      FileStats(Some(rows), cols)
+      FileStats(rows, cols)
     } finally reader.close()
   }
 

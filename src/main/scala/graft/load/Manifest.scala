@@ -122,17 +122,21 @@ object Manifest {
                             nulls: Option[Long])
 
   /** One FILE's recorded stats inside a batch manifest (r16 — the
-    * file-level pruning tier, [[FileZones]]): row count plus per-column
-    * [[ColStats]] (interval + null count; never a dictionary — footers
-    * don't carry one). Same conservatism contract as the batch level:
-    * absent is "must scan", and the prover evaluates a file exactly
-    * like a batch. */
-  final case class FileStats(rows: Option[Long],
+    * file-level pruning tier, [[FileZones]]): its exact row count (from
+    * the footer; required) plus per-column [[ColStats]] (interval + null
+    * count; never a dictionary — footers don't carry one). Same
+    * conservatism contract as the batch level: an absent column stat is
+    * "must scan", and the prover evaluates a file exactly like a
+    * batch. */
+  final case class FileStats(rows: Long,
                              cols: Map[String, ColStats])
 
   /** Everything a batch's `_ZONEMAP` manifest records. Every commit
-    * records three things, and readers rely on them (a committed batch
+    * records four things, and readers rely on them (a committed batch
     * without them is corruption, see [[manifest]]):
+    *  - `rows`: the row count the batch's write recorded (`#c` line) —
+    *    at write time, so a deletion vector or a carried takedown can
+    *    leave fewer live rows;
     *  - `schemaJson`: the SCHEMA the write job produced (`#s` line,
     *    Spark schema JSON) — the Delta "schema in the log" move, so the
     *    scan never merges footers;
@@ -141,10 +145,10 @@ object Manifest {
     *    ([[graft.plans.ManifestFileIndex]]); empty when the batch wrote
     *    no rows;
     *  - `histFiles`: the batch history dir's files (`#hfc`/`#hf`).
-    * Column stats ([[ColStats]]) and the row count are recorded only
-    * when the write observed them — absent stats read as "must scan". */
+    * Column stats ([[ColStats]]) are recorded only when the write
+    * observed them — absent stats read as "must scan". */
   final case class BatchStats(cols: Map[String, ColStats],
-                              rows: Option[Long],
+                              rows: Long,
                               schemaJson: String,
                               files: Seq[(String, Long)],
                               histFiles: Seq[(String, Long)],
@@ -174,7 +178,7 @@ object Manifest {
     /** Is `col` (CI match) recorded as all-null? A predicate comparing
       * an all-null column to anything is never satisfied. */
     def allNull(col: String): Boolean =
-      rows.exists(r => colStats(col).exists(_.nulls.contains(r)))
+      colStats(col).exists(_.nulls.contains(rows))
     def colStats(col: String): Option[ColStats] =
       cols.collectFirst { case (c, s) if c.equalsIgnoreCase(col) => s }
   }
@@ -259,10 +263,12 @@ object Manifest {
     *    `#hfc <n>` + `#hf <rel> <len>` (history files) — the records
     *    every commit writes ([[BatchStats]]).
     * The `#`-prefixed tags cannot collide with an encoded column name
-    * (URL-encoding never emits a literal `#`). `#s`, `#fc` and `#hfc`
-    * are required: a manifest missing one, or whose `#f`/`#hf` lines
-    * disagree with their count, is rejected as corrupt. Only stats may
-    * be absent (they read as "must scan"); unknown lines are ignored. */
+    * (URL-encoding never emits a literal `#`). `#c`, `#s`, `#fc` and
+    * `#hfc` are required, and so is a `#zc` row count for every file
+    * with per-file stats: a manifest missing one, or whose `#f`/`#hf`
+    * lines disagree with their count, is rejected as corrupt. Only
+    * stats may be absent (they read as "must scan"); unknown lines are
+    * ignored. */
   private def encodeZoneLine(c: String, z: Zone): String = z match {
     case NumZone(lo, hi) =>
       enc(c) + " " + Math.nextDown(lo) + " " + Math.nextUp(hi)
@@ -287,7 +293,7 @@ object Manifest {
       vec.encodeChunks(512).map(c => s"#dvr ${enc(rel)} $c")
     }
     val fzLines = st.fileStats.toSeq.sortBy(_._1).flatMap { case (rel, fst) =>
-      fst.rows.map(r => s"#zc ${enc(rel)} $r").toSeq ++
+      s"#zc ${enc(rel)} ${fst.rows}" +:
         fst.cols.toSeq.sortBy(_._1).flatMap { case (c, cs) =>
           cs.zone.map {
             case NumZone(lo, hi) =>
@@ -298,8 +304,7 @@ object Manifest {
             cs.nulls.map(n => s"#zn ${enc(rel)} ${enc(c)} $n")
         }
     }
-    val lines = st.rows.map(r => s"#c $r").toSeq ++
-      Seq(s"#s ${enc(st.schemaJson)}") ++
+    val lines = Seq(s"#c ${st.rows}", s"#s ${enc(st.schemaJson)}") ++
       fileLines("f", st.files) ++ fileLines("hf", st.histFiles) ++
       dvLines ++ fzLines ++
       st.cols.toSeq.sortBy(_._1).flatMap { case (c, cs) =>
@@ -501,9 +506,21 @@ object Manifest {
       if (st.zone.isEmpty && st.dict.isEmpty && st.nulls.isEmpty) None
       else Some(f.name -> st)
     }
-    val dataFiles = listBatchFiles(spark, s"$warehouseDir/b$id")
+    val written = listBatchFiles(spark, s"$warehouseDir/b$id")
+    // a flat write of no rows still leaves Spark's one zero-row part:
+    // drop it, so the batch commits no file and adds no scan root
+    val dataFiles =
+      if (rows > 0) written
+      else {
+        val dir = new org.apache.hadoop.fs.Path(s"$warehouseDir/b$id")
+        val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        written.foreach { case (rel, _) =>
+          fs.delete(new org.apache.hadoop.fs.Path(dir, rel), false)
+        }
+        Nil
+      }
     AtomicManifest.write(spark, s"$historyDir/b$id", ZoneMapFile,
-      encodeZoneMap(BatchStats(entries.toMap, Some(rows), schema.json,
+      encodeZoneMap(BatchStats(entries.toMap, rows, schema.json,
         dataFiles, listBatchFiles(spark, s"$historyDir/b$id"),
         FileZones.read(spark, s"$warehouseDir/b$id", dataFiles, schema))))
   }
@@ -700,7 +717,9 @@ object Manifest {
           c -> ColStats(fzZones.get((rel, c)), None,
             fzNulls.get((rel, c)))
         }.toMap
-        rel -> FileStats(fzRows.get(rel), fcols)
+        rel -> FileStats(fzRows.getOrElse(rel, throw corrupt(historyDir, id,
+          s"its manifest records stats for file '$rel' but no row count")),
+          fcols)
       }.toMap
       val dvMap = dvs.map { case (r, (runs, _)) =>
         r -> DvVector.fromRuns(runs)
@@ -711,7 +730,9 @@ object Manifest {
         else throw corrupt(historyDir, id,
           s"its manifest records ${list.size} $what line(s) against a " +
           s"count of ${count.getOrElse("none")}")
-      BatchStats(cols, rows,
+      BatchStats(cols,
+        rows.getOrElse(throw corrupt(historyDir, id,
+          "its manifest records no row count")),
         schema.getOrElse(throw corrupt(historyDir, id,
           "its manifest records no schema")),
         recorded("data file", filesCount, files.result()),
@@ -736,9 +757,7 @@ object Manifest {
       historyDir: String, inputs: Seq[String], id: String,
       foldSchema: Option[StructType]): Unit = {
     val stats = manifests(spark, historyDir, inputs)
-    val rows =
-      if (stats.forall(_.rows.isDefined)) Some(stats.flatMap(_.rows).sum)
-      else None
+    val rows = stats.map(_.rows).sum
     val shared = stats.map(_.cols.keySet).reduce(_ intersect _)
     val merged = shared.toSeq.flatMap { c =>
       val cs = stats.map(_.cols(c))

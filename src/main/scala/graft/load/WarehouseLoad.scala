@@ -735,31 +735,30 @@ object WarehouseLoad {
   def tableHistory(spark: SparkSession, historyDir: String): DataFrame = {
     import spark.implicits._
     val head = currentVersion(spark, historyDir)
-    val rows = (1L to head).flatMap { v =>
-      readVersionList(spark, historyDir, v).map { cur =>
-        readVersionList(spark, historyDir, v - 1) match {
-          case Some(prev) =>
-            val p = prev.toSet
-            val added = cur.count(!p(_))
-            val removed = prev.count(!cur.toSet(_))
-            val kind = if (removed > 0) "rewrite" else "append"
-            (v, kind, added.toLong, removed.toLong, cur.size.toLong)
-          case None => (v, "unknown", -1L, -1L, cur.size.toLong)
-        }
+    // each version list read once, diffed against its predecessor's
+    val lists = (0L to head).map(v => v -> readVersionList(spark, historyDir, v))
+    val rows = lists.sliding(2).collect {
+      case Seq((_, prevOpt), (v, Some(cur))) => prevOpt match {
+        case Some(prev) =>
+          val p = prev.toSet
+          val added = cur.count(!p(_))
+          val removed = prev.count(!cur.toSet(_))
+          val kind = if (removed > 0) "rewrite" else "append"
+          (v, kind, added.toLong, removed.toLong, cur.size.toLong)
+        case None => (v, "unknown", -1L, -1L, cur.size.toLong)
       }
-    }
+    }.toSeq
     rows.toDF("version", "kind", "n_added", "n_removed", "n_batches")
   }
 
   /** One row per batch in the committed HEAD — the DESCRIBE DETAIL
     * analog at batch granularity, from the recorded manifests alone
     * (cached metadata, no listing, no scan): `(batch, position,
-    * n_rows, n_bytes, n_files, n_stat_cols)`. `n_rows` is null where
-    * the write observed no row count — absent stats read as unknown,
-    * never guessed. `n_rows` is the AT-WRITE count each manifest records:
-    * a takedown-rewritten batch carries its map forward, so the
-    * figure can overstate the live count (the same superset contract
-    * the pruning stats rely on) — count the relation for exactness. */
+    * n_rows, n_bytes, n_files, n_stat_cols)`. `n_rows` is the AT-WRITE
+    * count every manifest records: a takedown-rewritten or DV'd batch
+    * carries it forward, so the figure can overstate the live count
+    * (the same superset contract the pruning stats rely on) — count
+    * the relation for exactness. */
   def describeWarehouse(spark: SparkSession,
                         historyDir: String): DataFrame = {
     import spark.implicits._
@@ -767,7 +766,7 @@ object WarehouseLoad {
     ids.zip(manifests(spark, historyDir, ids)).zipWithIndex.map {
       case ((id, st), i) =>
         (id, i.toLong,
-          st.rows.map(java.lang.Long.valueOf).orNull,
+          java.lang.Long.valueOf(st.rows),
           java.lang.Long.valueOf(st.bytes),
           java.lang.Long.valueOf(st.files.size.toLong),
           java.lang.Long.valueOf(st.cols.size.toLong))

@@ -1020,6 +1020,18 @@ class PlanSpec extends SparkSpec {
     assert(lf.select("batch").distinct().count() == 3)
     assert(lf.count() == 3)
 
+    // every commit records its row count, so a manifest without one
+    // is corruption too: the read refuses, naming the batch
+    val counted = WarehouseLoad.committedBatches(spark, hist)(1)
+    val countedTxt =
+      AtomicManifest.read(spark, s"$hist/b$counted", "_ZONEMAP").get
+    AtomicManifest.write(spark, s"$hist/b$counted", "_ZONEMAP",
+      countedTxt.linesIterator.filterNot(_.startsWith("#c ")).mkString("\n"))
+    val uncounted = intercept[IllegalStateException](read())
+    assert(uncounted.getMessage.contains(s"batch $counted "),
+      uncounted.getMessage)
+    AtomicManifest.write(spark, s"$hist/b$counted", "_ZONEMAP", countedTxt)
+
     // every commit records its file lists, so a manifest without them
     // is corruption: strip one batch's recorded file lines and the
     // read refuses, naming the batch, instead of listing the dir
@@ -1201,6 +1213,43 @@ class PlanSpec extends SparkSpec {
     val df = WarehouseLoad.readWarehouse(spark, wh, hist).get
     assert(df.count() == 6L)
     assert(df.schema.fieldNames.toSeq == Seq("b", "xs"))
+  }
+
+  test("a write of no rows commits no data file: an empty flat epoch, and a CDC merge that tombstones every row of a batch") {
+    import graft.load.WarehouseLoad
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    val root = tmpDir("graft-nofile-")
+    val (wh, hist) = (s"$root/t", s"$root/h")
+    def epoch(from: Long, to: Long, id: String): Unit =
+      WarehouseLoad.commitStreamedBatch(spark,
+        spark.range(from, to).select(col("id").as("k"),
+          col("id").cast("string").as("v")), wh, hist, id)
+    def stats(id: String) = WarehouseLoad.batchStats(spark, hist, id).get
+    epoch(0, 0, "empty-0")
+    assert(stats("empty-0").files.isEmpty && stats("empty-0").rows == 0L,
+      s"an empty epoch committed ${stats("empty-0").files}")
+    assertManifestInvariant(wh, hist, "an empty flat epoch")
+    epoch(0, 3, "rows-1")
+    epoch(10, 12, "rows-2")
+    // the rewrite path (deletion vectors off) rewrites a batch whose
+    // every row is tombstoned as a batch of no rows
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.setLong("graft.dv.maxRows", 0L)
+    try {
+      val src = Seq((0L, "x", "D"), (1L, "x", "D"), (2L, "x", "D"))
+        .toDF("k", "v", "op")
+      assert(WarehouseLoad.mergeCdc(spark, wh, hist, src, Seq("k"),
+        "op = 'D'") == ((0L, 0L, 3L)))
+    } finally conf.unset("graft.dv.maxRows")
+    val rewritten = WarehouseLoad.committedBatches(spark, hist)
+      .filterNot(Set("empty-0", "rows-2"))
+    assert(rewritten.size == 1 && rewritten.head != "rows-1")
+    assert(stats(rewritten.head).files.isEmpty,
+      s"the tombstoned batch committed ${stats(rewritten.head).files}")
+    assertManifestInvariant(wh, hist, "a merge that tombstones a batch")
+    assert(WarehouseLoad.readWarehouse(spark, wh, hist).get
+      .select("k").as[Long].collect().sorted.toSeq == Seq(10L, 11L))
   }
 
   test("batches recording one nested type with different null flags read as one table, through a merge rewrite too") {
