@@ -1,10 +1,9 @@
 package graft.load
 
-import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
-import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, DateType,
-  DoubleType, FloatType, IntegerType, LongType, MapType, ShortType,
-  StringType, StructField, StructType, TimestampType}
-import graft.schema.SchemaAlign
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, DoubleType,
+  FloatType, IntegerType, LongType, MapType, ShortType, StringType,
+  StructField, StructType}
 
 /** How a set of committed batches becomes one relation, planned from
   * their manifests alone: batches grouped by hive layout and schema
@@ -404,7 +403,8 @@ object CommittedScan {
     * from the log like [[readBatchDirs]]: every commit records its
     * history dir's file list (`#hf` lines) and the history schema is
     * the protocol's own constant (one nullable `file` string column),
-    * so the scan lists nothing and opens no footer at plan time.
+    * so the scan lists nothing and opens no footer at plan time. Each
+    * row also carries its `batch` id, from `_metadata.file_path`.
     * `None` when no batch in `ids` holds a history file. */
   private[load] def historyFileRelation(spark: SparkSession, historyDir: String,
       ids: Seq[String]): Option[DataFrame] = {
@@ -420,9 +420,12 @@ object CommittedScan {
             new org.apache.hadoop.fs.Path(root, rel))
         }
     }
+    import org.apache.spark.sql.functions.{col, regexp_extract}
     Option.when(roots.nonEmpty)(
       org.apache.spark.sql.graftshim.GraftSqlShims.parquetScan(
         spark, new graft.plans.ManifestFileIndex(roots),
-        StructType(Seq(StructField("file", StringType)))))
+        StructType(Seq(StructField("file", StringType))))
+        .withColumn("batch", regexp_extract(col("_metadata.file_path"),
+          "/b([^/]+)/[^/]*$", 1)))
   }
 }

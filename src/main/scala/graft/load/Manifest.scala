@@ -1,10 +1,9 @@
 package graft.load
 
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
-import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, DateType,
-  DoubleType, FloatType, IntegerType, LongType, MapType, ShortType,
-  StringType, StructField, StructType, TimestampType}
-import graft.schema.SchemaAlign
+import org.apache.spark.sql.types.{ByteType, DataType, DateType, DoubleType,
+  FloatType, IntegerType, LongType, ShortType, StringType, StructField,
+  StructType, TimestampType}
 
 /** Each committed batch's `_ZONEMAP` manifest: what the batch's write
   * recorded about itself ([[BatchStats]] — schema, data and history
@@ -55,11 +54,8 @@ object Manifest {
     val missing = ids.filter(id =>
       !loadedFilesMemo.containsKey((historyDir, id)))
     if (missing.nonEmpty) {
-      import org.apache.spark.sql.functions.{col, regexp_extract}
       historyFileRelation(spark, historyDir, missing).foreach { rel =>
-        rel.withColumn("batch",
-            regexp_extract(col("_metadata.file_path"), "/b([^/]+)/[^/]*$", 1))
-          .select("batch", "file").collect()
+        rel.select("batch", "file").collect()
           .groupBy(_.getString(0))
           .foreach { case (id, rows) =>
             loadedFilesMemo.put((historyDir, id),

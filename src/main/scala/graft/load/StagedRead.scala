@@ -1,10 +1,7 @@
 package graft.load
 
-import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
-import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, DateType,
-  DoubleType, FloatType, IntegerType, LongType, MapType, ShortType,
-  StringType, StructField, StructType, TimestampType}
-import graft.schema.SchemaAlign
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** The staging side of a load — COPY's source: one snapshot listing
   * of the staging dir ([[listStaged]]), the staged key set inferred

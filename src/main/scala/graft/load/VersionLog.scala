@@ -1,10 +1,6 @@
 package graft.load
 
-import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
-import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, DateType,
-  DoubleType, FloatType, IntegerType, LongType, MapType, ShortType,
-  StringType, StructField, StructType, TimestampType}
-import graft.schema.SchemaAlign
+import org.apache.spark.sql.SparkSession
 
 /** The `_versions` commit log of a warehouse table: one immutable
   * version file per commit, each the table's batch list (a SNAPSHOT) or

@@ -1,9 +1,8 @@
 package graft.load
 
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
-import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, DateType,
-  DoubleType, FloatType, IntegerType, LongType, MapType, ShortType,
-  StringType, StructField, StructType, TimestampType}
+import org.apache.spark.sql.types.{IntegerType, StringType, StructField,
+  StructType}
 import graft.schema.SchemaAlign
 
 /** Typed warehouse load — the Snowpipe leg of the reference
@@ -127,8 +126,7 @@ object WarehouseLoad {
   // The commit log's public reads: head, versions, time travel, feed
   // ------------------------------------------------------------------
 
-  /** The committed head version (0 before the first commit); see
-    * [[VersionLog.currentVersion]]. */
+  /** The committed head version; see [[VersionLog.currentVersion]]. */
   def currentVersion(spark: SparkSession, historyDir: String): Long =
     VersionLog.currentVersion(spark, historyDir)
 
@@ -137,20 +135,17 @@ object WarehouseLoad {
                                       historyDir: String): Seq[String] =
     VersionLog.committedBatches(spark, historyDir)
 
-  /** The batch list committed as `version`; see
-    * [[VersionLog.versionBatches]]. */
+  /** `version`'s batch list; see [[VersionLog.versionBatches]]. */
   def versionBatches(spark: SparkSession, historyDir: String,
                      version: Long): Option[Seq[String]] =
     VersionLog.versionBatches(spark, historyDir, version)
 
-  /** The newest retained version published at or before `tsMillis`;
-    * see [[VersionLog.versionAt]]. */
+  /** The version current at `tsMillis`; see [[VersionLog.versionAt]]. */
   def versionAt(spark: SparkSession, historyDir: String,
                 tsMillis: Long): Option[Long] =
     VersionLog.versionAt(spark, historyDir, tsMillis)
 
-  /** Batch `id`'s recorded manifest, `None` when it has none; see
-    * [[Manifest.batchStats]]. */
+  /** Batch `id`'s recorded manifest; see [[Manifest.batchStats]]. */
   def batchStats(spark: SparkSession, historyDir: String,
                  id: String): Option[BatchStats] =
     Manifest.batchStats(spark, historyDir, id)
@@ -329,13 +324,9 @@ object WarehouseLoad {
     * (parallelized) file-index pass; the anti-join consumer never
     * noticed the difference, the cliff is gone (re-measured ~1 s). */
   def loadedFiles(spark: SparkSession, historyDir: String):
-      Option[DataFrame] = {
-    import org.apache.spark.sql.functions.{col, regexp_extract}
-    val ids = committedBatches(spark, historyDir)
-    historyFileRelation(spark, historyDir, ids).map(rel =>
-      rel.withColumn("batch",
-        regexp_extract(col("_metadata.file_path"), "/b([^/]+)/[^/]*$", 1)))
-  }
+      Option[DataFrame] =
+    historyFileRelation(spark, historyDir,
+      committedBatches(spark, historyDir))
 
   /** A merge's idempotence marker as it appears in batch ids. */
   private val MergeTag = "mg[0-9a-f]{32}".r
@@ -541,7 +532,8 @@ object WarehouseLoad {
         val rows = onError match {
           case Quarantine(errorDir) =>
             writeErrors(spark, observed, target, s"$errorDir/$PendingDir/b$id")
-            quarantineClean(observed, target)
+            val (malformed, fail) = failed(observed, target)
+            observed.filter(!malformed && !fail)
           case _ => observed
         }
         writeBatch(spark, warehouseDir, historyDir, id,
@@ -1948,13 +1940,6 @@ object WarehouseLoad {
       val p = new org.apache.hadoop.fs.Path(dir)
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
     }
-  }
-
-  /** The rows of `raw` that parse and coerce to `target`. */
-  private def quarantineClean(raw: DataFrame, target: StructType): DataFrame = {
-    import org.apache.spark.sql.functions.not
-    val (malformed, fail) = failed(raw, target)
-    raw.filter(not(malformed) && not(fail))
   }
 
   /** Make the pending error rows of every COMMITTED batch visible:
