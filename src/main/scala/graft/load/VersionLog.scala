@@ -278,6 +278,29 @@ object VersionLog {
     store(suffix) // chain terminated at v0: the empty table
   }
 
+  /** The ids among `ids` that some RETAINED version commits — the
+    * head's list or any older one's, down to [[vacuum]]'s retention
+    * horizon, so a batch a later compaction or takedown folded out of
+    * the head still counts. Walks the version FILES newest first and
+    * stops once every id is found: an id in a version's list sits in
+    * that file or, for a delta, in an older file of its chain, and
+    * every retained chain ends at a retained snapshot. */
+  private[load] def retainedCommits(spark: SparkSession, historyDir: String,
+                                    ids: Set[String]): Set[String] = {
+    var found = Set.empty[String]
+    var v = currentVersion(spark, historyDir)
+    var more = true
+    while (more && v > 0 && found.size < ids.size)
+      AtomicManifest.read(spark, s"$historyDir/$VersionsDir",
+          versionName(v)) match {
+        case None => more = false // pruned: below the retention horizon
+        case Some(txt) =>
+          found ++= txt.linesIterator.map(_.stripPrefix("+")).filter(ids)
+          v -= 1
+      }
+    found
+  }
+
   /** The newest RETAINED version published at or before `tsMillis` —
     * the AS OF TIMESTAMP resolution (Delta's contract: commit-file
     * timestamps, made MONOTONIC by a running max over the version
@@ -337,6 +360,17 @@ object VersionLog {
                                   id: String): Unit =
     AtomicManifest.write(spark, s"$historyDir/$IntentsDir", s"i$id",
       s"${System.currentTimeMillis()} ${ProcessHandle.current.pid}")
+
+  /** Whether batch `id`'s in-flight marker exists and is younger than
+    * [[intentTtlMs]] — a writer that may still commit it. */
+  private[load] def intentLive(spark: SparkSession, historyDir: String,
+                               id: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(s"$historyDir/$IntentsDir", s"i$id")
+    try System.currentTimeMillis() - p.getFileSystem(
+        spark.sparkContext.hadoopConfiguration).getFileStatus(p)
+        .getModificationTime <= intentTtlMs(spark)
+    catch { case _: java.io.FileNotFoundException => false }
+  }
 
   /** Best-effort: a marker that outlives its commit only costs vacuum
     * one TTL of patience on the (already-committed, kept) batch. */

@@ -1,6 +1,6 @@
 package graft.load
 
-import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.types.{IntegerType, StringType, StructField,
   StructType}
 import graft.schema.SchemaAlign
@@ -33,7 +33,9 @@ import graft.schema.SchemaAlign
   *  - [[CommittedScan]]: how a committed batch set becomes a relation
   *    (the log-built scan, schema merge, deletion-vector filter);
   *  - [[StagedRead]]: how the staging dir becomes the fresh batch
-  *    (listing snapshot, key-set inference, fresh-file read).
+  *    (listing snapshot, key-set inference, fresh-file read);
+  *  - [[ErrorTable]]: a quarantine load's error rows — their pending
+  *    area and their publish once the batch commits.
   *
   * The writers share one rewrite skeleton of private steps, each with
   * one implementation: [[taggedRelation]] (the batch-tagged probe),
@@ -52,7 +54,8 @@ import graft.schema.SchemaAlign
   * `strict = false` mirrors `ON_ERROR = CONTINUE` (nulls through).
   */
 object WarehouseLoad {
-  import CommittedScan._, Manifest._, StagedRead._, VersionLog._
+  import CommittedScan._, ErrorTable._, Manifest._, StagedRead._,
+    VersionLog._
 
   type Zone = Manifest.Zone
   type NumZone = Manifest.NumZone
@@ -531,6 +534,9 @@ object WarehouseLoad {
         // it. Compaction/takedown preserve the layout.
         val rows = onError match {
           case Quarantine(errorDir) =>
+            // the marker precedes the pending dir, as it precedes every
+            // batch dir: a sweep that sees the dir sees the marker too
+            publishIntent(spark, historyDir, id)
             writeErrors(spark, observed, target, s"$errorDir/$PendingDir/b$id")
             val (malformed, fail) = failed(observed, target)
             observed.filter(!malformed && !fail)
@@ -547,6 +553,14 @@ object WarehouseLoad {
         // means this very batch committed (idempotent replay) — no-op
         commitBatches(spark, historyDir,
           cur => if (cur.contains(id)) cur else cur :+ id, failpoint)
+        // committed: publish this batch's errors whatever the head
+        // holds by now (a concurrent compaction may already have
+        // folded the batch into a new id)
+        onError match {
+          case Quarantine(errorDir) =>
+            publishPending(spark, errorDir, s"b$id")
+          case _ => ()
+        }
         seedLoadedFiles(historyDir, id, freshFiles.map(_._1))
         clearIntent(spark, historyDir, id)
     }
@@ -554,7 +568,7 @@ object WarehouseLoad {
     // batch that committed before a crash could publish them
     onError match {
       case Quarantine(errorDir) =>
-        publishErrors(spark, historyDir, errorDir)
+        sweepPending(spark, historyDir, errorDir)
       case _ => ()
     }
   }
@@ -918,11 +932,7 @@ object WarehouseLoad {
     // resurrects", the same narrow instant every check-then-act GC
     // carries without a store-level fence.
     def inflightNow(dirName: String): Boolean =
-      try {
-        val st = ifs.getFileStatus(new org.apache.hadoop.fs.Path(
-          intentRoot, "i" + dirName.stripPrefix("b")))
-        System.currentTimeMillis() - st.getModificationTime <= ttl
-      } catch { case _: java.io.FileNotFoundException => false }
+      intentLive(spark, historyDir, dirName.stripPrefix("b"))
     val removed = candidates.map { case (fs, sts) =>
       val doomed = sts.filter(st => !inflight(st.getPath.getName)
         && !keep2(st.getPath.getName))
@@ -1901,74 +1911,12 @@ object WarehouseLoad {
     * from a `spark.read.parquet(quarantineDir)`), keyed by the batch's
     * deterministic id so a crashed attempt's retry overwrites them, and
     * moved up into `quarantineDir` once the batch is committed — by
-    * this load, or by the next one after a crash. */
+    * this load, or by the next one after a crash. A crashed attempt's
+    * dir that no retry will commit is deleted once its intent marker
+    * expires. */
   def batchQuarantine(spark: SparkSession, stagingDir: String,
                       target: StructType, warehouseDir: String,
                       historyDir: String, quarantineDir: String): Unit =
     loadAtomic(spark, stagingDir, target, warehouseDir, historyDir,
       Quarantine(quarantineDir))
-
-  /** Where a quarantine load stages a batch's error rows until the
-    * batch commits; `_`-prefixed, so parquet readers skip it. */
-  private val PendingDir = "_pending"
-
-  private def failed(raw: DataFrame, target: StructType): (Column, Column) =
-    (org.apache.spark.sql.functions.col(CorruptCol).isNotNull,
-      SchemaAlign.castFailure(raw, target))
-
-  /** Write the rows of `raw` that fail to parse or to coerce to
-    * `target` as error records under `dir`; no rows leave no dir. */
-  private def writeErrors(spark: SparkSession, raw: DataFrame,
-      target: StructType, dir: String): Unit = {
-    import org.apache.spark.sql.functions.{array, col, count, lit, struct,
-      to_json, when}
-    val (malformed, fail) = failed(raw, target)
-    val fields = raw.columns.filterNot(c => c == CorruptCol || c == FileCol)
-    val eobs = new Observation()
-    raw.filter(malformed || fail)
-      .select(
-        col(FileCol).as("source_file"),
-        when(malformed, col(CorruptCol))
-          .otherwise(to_json(struct(fields.map(col): _*)))
-          .as("raw_record"),
-        when(malformed, array(lit("_corrupt_record")))
-          .otherwise(SchemaAlign.failedColumns(raw, target))
-          .as("failed_columns"))
-      .observe(eobs, count(lit(1)).as("n"))
-      .write.mode("overwrite").parquet(dir)
-    if (eobs.get("n").asInstanceOf[Long] == 0L) {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-    }
-  }
-
-  /** Make the pending error rows of every COMMITTED batch visible:
-    * move each data file of `errorDir/_pending/b<id>` up into
-    * `errorDir`, then drop the emptied dir. Each move is atomic and a
-    * moved file is gone from the pending dir, so a publish cut short
-    * finishes on the next run without a second copy. A pending dir
-    * whose batch never committed stays hidden; its retry (same fresh
-    * set, same id) overwrites it. */
-  private def publishErrors(spark: SparkSession, historyDir: String,
-      errorDir: String): Unit = {
-    val pending = new org.apache.hadoop.fs.Path(errorDir, PendingDir)
-    val fs = pending.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staged =
-      try fs.listStatus(pending).toSeq.filter(_.isDirectory)
-      catch { case _: java.io.FileNotFoundException => Nil }
-    if (staged.nonEmpty) {
-      val committed = committedBatches(spark, historyDir).map("b" + _).toSet
-      staged.filter(st => committed(st.getPath.getName)).foreach { st =>
-        fs.listStatus(st.getPath).foreach { f =>
-          val name = f.getPath.getName
-          val dst = new org.apache.hadoop.fs.Path(errorDir, name)
-          if (f.isFile && !name.startsWith("_") && !name.startsWith(".") &&
-              !fs.rename(f.getPath, dst) && !fs.exists(dst))
-            throw new java.io.IOException(
-              s"cannot publish quarantined rows ${f.getPath} to $dst")
-        }
-        fs.delete(st.getPath, true)
-      }
-    }
-  }
 }

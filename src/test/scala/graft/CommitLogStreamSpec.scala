@@ -208,14 +208,8 @@ class CommitLogStreamSpec extends SparkSpec {
     // non-overlapping epoch batch
     val probe = WarehouseLoad.readWarehouse(spark, wh, hist).get
       .filter(org.apache.spark.sql.functions.col("id").between(40, 60))
-    val planned = probe.queryExecution.optimizedPlan.collect {
-      case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        lr.relation match {
-          case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-            fs.location.rootPaths.map(_.getName)
-          case _ => Nil
-        }
-    }.flatten
+    val planned =
+      fsRelations(probe).flatMap(_.location.rootPaths.map(_.getName))
     assert(planned == Seq("bs1-1"))
     // the DEFAULT sinkId is lineage-scoped (derived from the
     // checkpoint path): a new query with a fresh checkpoint must not

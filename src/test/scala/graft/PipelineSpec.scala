@@ -418,15 +418,6 @@ class PipelineSpec extends SparkSpec {
     // batch roots the planner keeps for a predicate over the committed
     // relation (ZonePrune drops the roots whose stats prove it empty)
     import org.apache.spark.sql.functions.col
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
-      LogicalRelation}
-    def roots(df: org.apache.spark.sql.DataFrame): Int =
-      df.queryExecution.optimizedPlan.collect {
-        case lr: LogicalRelation => lr.relation match {
-          case fs: HadoopFsRelation => fs.location.rootPaths.size
-          case _ => 0
-        }
-      }.sum
     def read() = WarehouseLoad.readWarehouse(spark, wh, hist).get
     def between(lo: Long, hi: Long) = read().filter(col("id").between(lo, hi))
     def pruned(lo: Long, hi: Long) = roots(between(lo, hi))
@@ -1672,6 +1663,17 @@ class PipelineSpec extends SparkSpec {
     else spark.read.parquet(files.map(_.toString): _*).count()
   }
 
+  /** Batch dirs still hidden under the quarantine pending area. */
+  private def pendingDirs(quar: String): Seq[String] = {
+    val root = Paths.get(quar, "_pending")
+    if (!Files.exists(root)) Nil
+    else {
+      val s = Files.list(root)
+      try s.iterator().asScala.map(_.getFileName.toString).toList
+      finally s.close()
+    }
+  }
+
   test("quarantine load plans constant-size over a multi-thousand-file stage") {
     // The r12 mirror of the idempotent case (VERDICT r11 #2): the
     // quarantine leg reads the staged files through the idempotent
@@ -1743,17 +1745,51 @@ class PipelineSpec extends SparkSpec {
       assert(clean() == Seq(1L) && quarantined(quar) == 3L,
         s"re-run after a crash at $fp")
       assert(WarehouseLoad.currentVersion(spark, hist) == 1)
+      assert(pendingDirs(quar).isEmpty, s"pending left after a crash at $fp")
+    }
+    def oneBatch(tag: String): (String, String, String, String) = {
+      val staging = tmpDir(s"graft-quar$tag-stage-")
+      Files.writeString(Paths.get(staging, "a.json"),
+        """{"ID": "1", "Name": "good"}""" + "\n" +
+        """{"ID": "oops", "Name": "bad-id"}""" + "\n")
+      (staging, tmpDir(s"graft-quar$tag-wh-") + "/t",
+        tmpDir(s"graft-quar$tag-hist-") + "/h",
+        tmpDir(s"graft-quar$tag-err-") + "/q")
+    }
+    // a compaction that folds the batch out of the head between its
+    // commit and its publish: in the same load (a concurrent writer),
+    // and between a crash after the commit and the re-run
+    {
+      val (staging, wh, hist, quar) = oneBatch("c")
+      WarehouseLoad.loadAtomic(spark, staging, target, wh, hist,
+        WarehouseLoad.Quarantine(quar),
+        failpoint = at => if (at == "version-written")
+          WarehouseLoad.compactCommitted(spark, wh, hist, minBatches = 1))
+      assert(WarehouseLoad.committedBatches(spark, hist).forall(
+        _.startsWith("compact-")))
+      assert(quarantined(quar) == 1L && pendingDirs(quar).isEmpty,
+        "a concurrent compaction stranded the error rows")
+    }
+    {
+      val (staging, wh, hist, quar) = oneBatch("r")
+      intercept[Boom] {
+        WarehouseLoad.loadAtomic(spark, staging, target, wh, hist,
+          WarehouseLoad.Quarantine(quar),
+          failpoint = at => if (at == "version-written") throw new Boom)
+      }
+      WarehouseLoad.compactCommitted(spark, wh, hist, minBatches = 1)
+      assert(WarehouseLoad.committedBatches(spark, hist).forall(
+        _.startsWith("compact-")))
+      WarehouseLoad.batchQuarantine(spark, staging, target, wh, hist, quar)
+      assert(WarehouseLoad.readWarehouse(spark, wh, hist).get.count() == 1L)
+      assert(quarantined(quar) == 1L && pendingDirs(quar).isEmpty,
+        "a compaction after the crash stranded the error rows")
     }
     // a crashed attempt whose staging gains a file before the retry:
-    // the retry commits a different batch id, and the crashed
-    // attempt's error rows never become visible
-    val staging = tmpDir("graft-quarg-stage-")
-    val wh = tmpDir("graft-quarg-wh-") + "/t"
-    val hist = tmpDir("graft-quarg-hist-") + "/h"
-    val quar = tmpDir("graft-quarg-err-") + "/q"
-    Files.writeString(Paths.get(staging, "a.json"),
-      """{"ID": "1", "Name": "good"}""" + "\n" +
-      """{"ID": "oops", "Name": "bad-id"}""" + "\n")
+    // the retry commits a different batch id, the crashed attempt's
+    // error rows never become visible, and its pending dir goes once
+    // its intent marker expires
+    val (staging, wh, hist, quar) = oneBatch("g")
     intercept[Boom] {
       WarehouseLoad.loadAtomic(spark, staging, target, wh, hist,
         WarehouseLoad.Quarantine(quar),
@@ -1764,6 +1800,13 @@ class PipelineSpec extends SparkSpec {
     WarehouseLoad.batchQuarantine(spark, staging, target, wh, hist, quar)
     assert(WarehouseLoad.readWarehouse(spark, wh, hist).get.count() == 1L)
     assert(quarantined(quar) == 2L)
+    assert(pendingDirs(quar).size == 1, "a live marker's dir was swept")
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.setLong("graft.vacuum.intentTtlMs", -1L)
+    try WarehouseLoad.batchQuarantine(spark, staging, target, wh, hist, quar)
+    finally conf.unset("graft.vacuum.intentTtlMs")
+    assert(quarantined(quar) == 2L && pendingDirs(quar).isEmpty,
+      "the crashed attempt's orphaned error rows were not reclaimed")
   }
 
   test("strict load refuses files with coercion failures") {

@@ -708,7 +708,6 @@ class PlanSpec extends SparkSpec {
     import java.nio.file.{Files, Paths}
     import graft.load.WarehouseLoad
     import org.apache.spark.sql.functions.col
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
     val staging = tmpDir("graft-zprstage-")
     val wh = tmpDir("graft-zprwh-") + "/t"
     val hist = tmpDir("graft-zprhist-") + "/h"
@@ -728,13 +727,6 @@ class PlanSpec extends SparkSpec {
       """{"id": "101", "region": "b"}""")
     load("f3.json", """{"id": "1000", "region": "c"}""")
     def read() = WarehouseLoad.readWarehouse(spark, wh, hist).get
-    def roots(df: org.apache.spark.sql.DataFrame): Int =
-      df.queryExecution.optimizedPlan.collect {
-        case lr: LogicalRelation => lr.relation match {
-          case fs: HadoopFsRelation => fs.location.rootPaths.size
-          case _ => 0
-        }
-      }.sum
 
     // baseline: no predicate plans every committed root
     assert(roots(read()) == 3)
@@ -856,7 +848,6 @@ class PlanSpec extends SparkSpec {
     import java.nio.file.{Files, Paths}
     import graft.load.WarehouseLoad
     import org.apache.spark.sql.functions.col
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
     val staging = tmpDir("graft-zdstage-")
     val wh = tmpDir("graft-zdwh-") + "/t"
     val hist = tmpDir("graft-zdhist-") + "/h"
@@ -886,13 +877,6 @@ class PlanSpec extends SparkSpec {
       """{"id": "20", "src": "books"}""",
       """{"id": "21", "src": "wiki", "note": "w"}""")
     def read() = WarehouseLoad.readWarehouse(spark, wh, hist).get
-    def roots(df: org.apache.spark.sql.DataFrame): Int =
-      df.queryExecution.optimizedPlan.collect {
-        case lr: LogicalRelation => lr.relation match {
-          case fs: HadoopFsRelation => fs.location.rootPaths.size
-          case _ => 0
-        }
-      }.sum
 
     assert(roots(read()) == 3)
     // dictionary: every interval ['arxiv'..'zlib']-ish spans 'web',
@@ -1645,7 +1629,6 @@ class PlanSpec extends SparkSpec {
     import graft.load.WarehouseLoad
     import graft.plans.ManifestFileIndex
     import org.apache.spark.sql.functions.col
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
     val staging = tmpDir("graft-zpstage-")
     val wh = tmpDir("graft-zpwh-") + "/t"
     val hist = tmpDir("graft-zphist-") + "/h"
@@ -1666,23 +1649,20 @@ class PlanSpec extends SparkSpec {
       """{"id": "101", "region": "c"}""")
     load("f3.json", """{"id": "1000", "region": "c"}""")
     def read() = WarehouseLoad.readWarehouse(spark, wh, hist).get
-    def roots(df: org.apache.spark.sql.DataFrame): Int =
-      df.queryExecution.optimizedPlan.collect {
-        case lr: LogicalRelation => lr.relation match {
-          case fs: HadoopFsRelation =>
-            assert(fs.partitionSchema.nonEmpty,
-              "batches must have planned as hive-partitioned roots")
-            assert(fs.location.isInstanceOf[ManifestFileIndex],
-              "a partitioned committed table must plan from the log, " +
-              s"not discovery: ${fs.location.getClass}")
-            fs.location.rootPaths.size
-          case _ => 0
-        }
-      }.sum
-    assert(roots(read()) == 3)
+    def partitionedRoots(df: DataFrame): Int = {
+      fsRelations(df).foreach { fs =>
+        assert(fs.partitionSchema.nonEmpty,
+          "batches must have planned as hive-partitioned roots")
+        assert(fs.location.isInstanceOf[ManifestFileIndex],
+          "a partitioned committed table must plan from the log, " +
+          s"not discovery: ${fs.location.getClass}")
+      }
+      roots(df)
+    }
+    assert(partitionedRoots(read()) == 3)
     // a DATA-column interval prunes whole batch roots out of the union
     val mid = read().filter(col("id") >= 90 && col("id") <= 200)
-    assert(roots(mid) == 1,
+    assert(partitionedRoots(mid) == 1,
       s"partitioned roots must zone-prune per union child:\n" +
       s"${mid.queryExecution.optimizedPlan}")
     assert(mid.select("id").collect().map(_.getLong(0)).sorted.toSeq ==

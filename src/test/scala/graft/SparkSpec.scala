@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+  LogicalRelation}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session base: one local SparkSession per suite (lazy). */
@@ -17,6 +19,17 @@ trait SparkSpec extends AnyFunSuite {
     d.toFile.deleteOnExit()
     d.toString
   }
+
+  /** The file relations `df`'s optimized plan scans. */
+  def fsRelations(df: DataFrame): Seq[HadoopFsRelation] =
+    df.queryExecution.optimizedPlan.collect {
+      case lr: LogicalRelation => lr.relation
+    }.collect { case fs: HadoopFsRelation => fs }
+
+  /** How many roots those relations plan — for a committed table, the
+    * batch roots zone pruning kept. */
+  def roots(df: DataFrame): Int =
+    fsRelations(df).map(_.location.rootPaths.size).sum
 
   val sf0001 = "/root/testdata/sf0.001"
 }
