@@ -474,11 +474,7 @@ object WarehouseLoad {
         def clobbersHistory(i: String): Boolean = {
           val p = new org.apache.hadoop.fs.Path(s"$historyDir/b$i")
           p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            .exists(p) && {
-            val head = currentVersion(spark, historyDir)
-            (1L to head).exists(v =>
-              readVersionList(spark, historyDir, v).exists(_.contains(i)))
-          }
+            .exists(p) && retainedCommits(spark, historyDir, Set(i)).nonEmpty
         }
         while (committed.contains(id) || clobbersHistory(id))
           id += "x" // hash-collision / history-clobber backstop
