@@ -9,10 +9,11 @@ import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, DoubleType,
   * their manifests alone: batches grouped by hive layout and schema
   * generation, each group a [[graft.plans.ManifestFileIndex]] scan at
   * its merged recorded schema ([[mergeRecordedSchemas]]), deletion
-  * vectors applied as one file-scoped filter ([[dvCondition]]), and
-  * the batch-tagged probe the rewrites join against
-  * ([[taggedRelation]]). No committed read lists a batch dir or opens
-  * a footer at plan time. */
+  * vectors applied as one path-indexed predicate per relation
+  * ([[dvCondition]]: a file's vector is looked up once per file, not
+  * once per row per DV'd file), and the batch-tagged probe the
+  * rewrites join against ([[taggedRelation]]). No committed read lists
+  * a batch dir or opens a footer at plan time. */
 object CommittedScan {
   import Manifest._
 
@@ -30,7 +31,7 @@ object CommittedScan {
     * through untouched). [[loadAtomic]]'s coverage guard backstops the
     * normalization: a divergence it does NOT reconcile aborts the batch
     * instead of recording unread files as loaded. */
-  private[load] def norm(p: String): String = {
+  private[graft] def norm(p: String): String = {
     val decoded =
       try java.net.URLDecoder.decode(p, "UTF-8")
       catch { case _: IllegalArgumentException => p }
@@ -185,45 +186,46 @@ object CommittedScan {
     Right(StructType(merged.toSeq))
   }
 
-  /** The combined deletion-vector filter for `ids` as ONE Column over
-    * the scan's `_metadata` (r16): for every (batch, file, hidden row
-    * index) recorded in the manifests, drop that row. `None` when no
+  /** The deletion-vector filter for `pairs` as ONE predicate over the
+    * scan's `_metadata`: `NOT graft_dv_hidden(file_path, row_index)`
+    * ([[graft.functions.DvHidden]]), carrying every DV'd file's hidden
+    * runs keyed by its [[norm]]alized absolute path. `None` when no
     * batch carries a DV — the overwhelmingly common case pays one
     * cached manifest-map lookup per batch and adds NOTHING to the
-    * plan. Conditions are FILE-scoped (`file_path === …`), so applying
-    * the table-wide filter to any sub-relation is harmless — which is
-    * what lets one choke point ([[manifestGroupRelations]]) cover
-    * every committed read: readWarehouse, time travel, change feed,
+    * plan. The index is FILE-keyed, so applying the table-wide filter
+    * to any sub-relation is harmless — which is what lets one choke
+    * point ([[manifestGroupRelations]], [[batchRelation]]) cover every
+    * committed read: readWarehouse, time travel, change feed,
     * compaction folds, and the takedown/merge probes all inherit it,
     * so a hidden row can never resurrect through ANY path. Row indexes
     * are `_metadata.row_index` positions — stable because batch files
-    * are immutable (a rewrite commits new files and drops the DV). */
+    * are immutable (a rewrite commits new files and drops the DV). A
+    * scanned row pays one path compare and one binary search over its
+    * file's runs, whatever the DV'd file count; the path normalizes
+    * once per file. */
   private def dvCondition(spark: SparkSession, warehouseDir: String,
       pairs: Seq[(String, BatchStats)]): Option[Column] = {
-    import org.apache.spark.sql.functions.{col, lit, not}
+    import org.apache.spark.sql.functions.{col, not}
     import org.apache.spark.sql.GraftSqlBridge.{column, expression}
     val withDv = pairs.filter(_._2.dv.exists(_._2.nonEmpty))
     if (withDv.isEmpty) return None
     val base = new org.apache.hadoop.fs.Path(warehouseDir)
     val qBase = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .makeQualified(base)
-    val conds = for {
+    val vectors = for {
       (id, st) <- withDv
-      (rel, vec) <- st.dv.toSeq.sortBy(_._1)
+      (rel, vec) <- st.dv.toSeq
       if vec.nonEmpty
-    } yield {
-      val abs = norm(new org.apache.hadoop.fs.Path(
-        new org.apache.hadoop.fs.Path(qBase, s"b$id"), rel)
-        .toUri.toString)
-      // membership over the RUNS, not the rows (r17): plan size and
-      // eval cost are O(runs) via a codegen'd binary search — the
-      // InSet form capped vectors at plan-sized row counts
-      val (starts, ends) = vec.startsEnds
-      not(normCol(col("_metadata.file_path")) === lit(abs) &&
-        column(graft.functions.InLongRuns(
-          expression(col("_metadata.row_index")), starts, ends)))
-    }
-    conds.reduceOption(_ && _)
+    } yield norm(new org.apache.hadoop.fs.Path(
+      new org.apache.hadoop.fs.Path(qBase, s"b$id"), rel)
+      .toUri.toString) -> vec
+    // two files whose paths normalize alike share one entry holding
+    // both vectors: keeping only one would let the other's rows show
+    val index = vectors.groupMapReduce(_._1)(_._2)(_ merge _)
+      .map { case (p, vec) => p -> vec.startsEnds }
+    Some(not(column(graft.functions.DvHidden(
+      expression(col("_metadata.file_path")),
+      expression(col("_metadata.row_index")), index))))
   }
 
   /** The committed relation over `ids` BEFORE the cross-layout union:

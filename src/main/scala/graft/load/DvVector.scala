@@ -10,8 +10,8 @@ package graft.load
   * (a user's rows sit together in a sorted/Z-ordered file), so runs
   * compress them to near nothing: memory, manifest bytes and plan
   * size are all O(runs), never O(rows). The plan-side membership test
-  * is [[graft.functions.InLongRuns]] — binary search over the run
-  * starts, whole-stage-codegen'd.
+  * is [[graft.functions.DvHidden]] — one lookup of the row's file, then
+  * a binary search over that file's run starts.
   *
   * Runs are `(start, len)`, sorted by start, non-overlapping,
   * non-adjacent (merge normalizes). Delta manifest encoding
@@ -58,7 +58,7 @@ final case class DvVector(runs: Vector[(Long, Long)]) {
     runs.flatMap { case (s, l) => s until (s + l) }
 
   /** The run starts / exclusive ends as primitive arrays — the shape
-    * [[graft.functions.InLongRuns]] carries into the plan. */
+    * [[graft.functions.DvHidden]] carries into the plan. */
   def startsEnds: (Array[Long], Array[Long]) = {
     val st = new Array[Long](runs.length)
     val en = new Array[Long](runs.length)

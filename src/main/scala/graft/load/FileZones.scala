@@ -41,17 +41,18 @@ import graft.load.Manifest.{ColStats, FileStats, NumZone, StrZone,
   * untrustworthy. */
 object FileZones {
 
-  /** Read per-file zones for `files` (manifest-relative paths) under
-    * `dir`, keeping only columns of `schema` the zone encoding can
-    * express. Footers open in parallel (driver-side metadata I/O,
-    * bounded by THIS batch's file count). A file that cannot be read
-    * records nothing — absent is never wrong, only unprunable. */
+  /** Read every footer of `files` (manifest-relative paths) under
+    * `dir`: each file's row count and its zones over the columns of
+    * `schema` the zone encoding can express (possibly none). Footers
+    * open in parallel (driver-side metadata I/O, bounded by THIS
+    * batch's file count). A file that cannot be read records nothing —
+    * absent is never wrong, only unprunable. */
   def read(spark: SparkSession, dir: String, files: Seq[(String, Long)],
            schema: StructType): Map[String, FileStats] = {
     val wanted: Map[String, DataType] = schema.fields.iterator.collect {
       case f if Manifest.zoneable(f.dataType) => f.name -> f.dataType
     }.toMap
-    if (wanted.isEmpty || files.isEmpty) return Map.empty
+    if (files.isEmpty) return Map.empty
     val conf = spark.sparkContext.hadoopConfiguration
     import scala.jdk.CollectionConverters._
     val out =
@@ -60,7 +61,7 @@ object FileZones {
       val st =
         try Some(fileStats(conf, new Path(dir, rel), wanted))
         catch { case scala.util.control.NonFatal(_) => None }
-      st.filter(_.cols.nonEmpty).foreach(out.put(rel, _))
+      st.foreach(out.put(rel, _))
     }
     out.asScala.toMap
   }

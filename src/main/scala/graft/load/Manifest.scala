@@ -502,23 +502,34 @@ object Manifest {
       if (st.zone.isEmpty && st.dict.isEmpty && st.nulls.isEmpty) None
       else Some(f.name -> st)
     }
-    val written = listBatchFiles(spark, s"$warehouseDir/b$id")
-    // a flat write of no rows still leaves Spark's one zero-row part:
-    // drop it, so the batch commits no file and adds no scan root
-    val dataFiles =
-      if (rows > 0) written
-      else {
-        val dir = new org.apache.hadoop.fs.Path(s"$warehouseDir/b$id")
-        val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        written.foreach { case (rel, _) =>
-          fs.delete(new org.apache.hadoop.fs.Path(dir, rel), false)
-        }
-        Nil
-      }
+    val (dataFiles, fileStats) = rowFiles(spark, s"$warehouseDir/b$id",
+      schema)
     AtomicManifest.write(spark, s"$historyDir/b$id", ZoneMapFile,
       encodeZoneMap(BatchStats(entries.toMap, rows, schema.json,
-        dataFiles, listBatchFiles(spark, s"$historyDir/b$id"),
-        FileZones.read(spark, s"$warehouseDir/b$id", dataFiles, schema))))
+        dataFiles, listBatchFiles(spark, s"$historyDir/b$id"), fileStats)))
+  }
+
+  /** The data files a write or carry just left in `dir`, with the
+    * per-file stats their footers give ([[FileZones]]) — every file
+    * whose footer holds no row deleted and left out. Spark writes a
+    * zero-row part for a write of no rows (and for an empty first
+    * task), so a load, a takedown rewrite or a fold that removes every
+    * row would otherwise commit a file and a scan root until the next
+    * fold. A footer that cannot be read keeps its file. */
+  private def rowFiles(spark: SparkSession, dir: String,
+      schema: StructType): (Seq[(String, Long)], Map[String, FileStats]) = {
+    val written = listBatchFiles(spark, dir)
+    val footers = FileZones.read(spark, dir, written, schema)
+    val empty = written.map(_._1).filter(footers.get(_).exists(_.rows == 0L))
+      .toSet
+    if (empty.nonEmpty) {
+      val d = new org.apache.hadoop.fs.Path(dir)
+      val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      empty.foreach(rel =>
+        fs.delete(new org.apache.hadoop.fs.Path(d, rel), false))
+    }
+    (written.filterNot { case (rel, _) => empty(rel) },
+      footers.filter { case (rel, st) => st.cols.nonEmpty && !empty(rel) })
   }
 
   /** The batch's zone map — per-column [min, max] intervals recorded by
@@ -770,11 +781,11 @@ object Manifest {
       else Some(c -> st)
     }
     val schema = foldSchema.getOrElse(parseSchema(stats.last.schemaJson))
-    val foldFiles = listBatchFiles(spark, s"$warehouseDir/b$id")
+    val (foldFiles, fileStats) = rowFiles(spark, s"$warehouseDir/b$id",
+      schema)
     AtomicManifest.write(spark, s"$historyDir/b$id", ZoneMapFile,
       encodeZoneMap(BatchStats(merged.toMap, rows, schema.json, foldFiles,
-        listBatchFiles(spark, s"$historyDir/b$id"),
-        FileZones.read(spark, s"$warehouseDir/b$id", foldFiles, schema))))
+        listBatchFiles(spark, s"$historyDir/b$id"), fileStats)))
   }
 
   /** Carry one immutable file into a rewritten batch dir WITHOUT
@@ -814,12 +825,11 @@ object Manifest {
   private[load] def carryStats(spark: SparkSession, warehouseDir: String,
       historyDir: String, st: BatchStats, nid: String,
       dv: Map[String, DvVector]): Unit = {
-    val newFiles = listBatchFiles(spark, s"$warehouseDir/b$nid")
+    val (newFiles, fileStats) = rowFiles(spark, s"$warehouseDir/b$nid",
+      parseSchema(st.schemaJson))
     AtomicManifest.write(spark, s"$historyDir/b$nid", ZoneMapFile,
       encodeZoneMap(st.copy(files = newFiles,
         histFiles = listBatchFiles(spark, s"$historyDir/b$nid"),
-        fileStats = FileZones.read(spark, s"$warehouseDir/b$nid", newFiles,
-          parseSchema(st.schemaJson)),
-        dv = dv)))
+        fileStats = fileStats, dv = dv)))
   }
 }
