@@ -88,6 +88,20 @@ final class DvCursor(index: Map[String, (Array[Long], Array[Long])]) {
 }
 
 object DvHidden {
+  /** How many of a file's first `rows` row indexes the runs hide — the
+    * rows [[DvHidden]] removes from a file of `rows` rows. */
+  def hiddenBelow(starts: Array[Long], ends: Array[Long],
+                  rows: Long): Long = {
+    var n = 0L
+    var i = 0
+    while (i < starts.length) {
+      n += math.max(0L, math.min(ends(i), rows) - math.max(starts(i), 0L))
+      i += 1
+    }
+    n
+  }
+
+
   /** Binary search: any i with starts(i) <= v < ends(i)? */
   def containsRun(starts: Array[Long], ends: Array[Long],
                   v: Long): Boolean = {

@@ -17,30 +17,54 @@ import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, DoubleType,
 object CommittedScan {
   import Manifest._
 
-  /** Canonical file-URI spelling, so paths from the independent
-    * producers — `FileStatus.getPath` ("file:/tmp/x") and the
-    * `_metadata.file_path` scan column ("file:///tmp/x") — compare
-    * equal. Two normalizations, applied identically on both sides:
-    * percent-decoding (a filename with a space/%/# character, or a
-    * Spark upgrade changing `_metadata.file_path`'s encoding, must not
-    * silently diverge the spellings — both sides decode to the same raw
-    * form, or both fall back to the raw input when it is not valid
-    * percent-encoding), then the `file:` slash count (only the
-    * authority-less `file:` scheme is ambiguous; schemes with an
-    * authority — hdfs://, s3a:// — already spell the `//` and pass
-    * through untouched). [[loadAtomic]]'s coverage guard backstops the
-    * normalization: a divergence it does NOT reconcile aborts the batch
-    * instead of recording unread files as loaded. */
-  private[graft] def norm(p: String): String = {
+  /** Canonical file-URI spelling of a committed data file, so paths
+    * from the independent producers — `FileStatus.getPath`
+    * ("file:/tmp/x") and the `_metadata.file_path` scan column
+    * ("file:///tmp/x") — compare equal: the identity deletion vectors
+    * key by ([[graft.functions.DvHidden]]'s index, the probes'
+    * `_graft_fp`, the takedown/merge hit maps). Two normalizations,
+    * applied identically on both sides: percent-decoding (a filename
+    * with a space/%/# character, or a Spark upgrade changing
+    * `_metadata.file_path`'s encoding, must not silently diverge the
+    * spellings — both sides decode to the same raw form, or both fall
+    * back to the raw input when it is not valid percent-encoding),
+    * then the `file:` slash count (only the authority-less `file:`
+    * scheme is ambiguous; schemes with an authority — hdfs://, s3a://
+    * — already spell the `//` and pass through untouched). A literal
+    * `+` stays a `+`: the decode is URL FORM decoding, which would
+    * read it as a space and give hive dirs `p=a b` and `p=a+b` one
+    * identity, so `+` is escaped to `%2B` first. */
+  private[graft] def norm(p: String): String =
+    decodePath(p.replace("+", "%2B"), p)
+
+  private[load] def normCol(c: Column): Column = {
+    import org.apache.spark.sql.functions.regexp_replace
+    decodePathCol(regexp_replace(c, "\\+", "%2B"), c)
+  }
+
+  /** The load history's spelling of a STAGED file: [[norm]] without
+    * the `+` escape, so a `+` in a staged name decodes to a space.
+    * Every committed load recorded its files in this spelling, and
+    * [[StagedRead]] matches the staging listing against it — changing
+    * it would reload every already-loaded file with a `+` in its
+    * name. [[loadAtomic]]'s coverage guard backstops the
+    * normalization: a divergence it does NOT reconcile aborts the
+    * batch instead of recording unread files as loaded. */
+  private[load] def stagedNorm(p: String): String = decodePath(p, p)
+
+  private[load] def stagedNormCol(c: Column): Column = decodePathCol(c, c)
+
+  private def decodePath(encoded: String, raw: String): String = {
     val decoded =
-      try java.net.URLDecoder.decode(p, "UTF-8")
-      catch { case _: IllegalArgumentException => p }
+      try java.net.URLDecoder.decode(encoded, "UTF-8")
+      catch { case _: IllegalArgumentException => raw }
     decoded.replaceFirst("^file:/+", "file:///")
   }
 
-  private[load] def normCol(c: Column): Column = {
+  private def decodePathCol(encoded: Column, raw: Column): Column = {
     import org.apache.spark.sql.functions.{coalesce, regexp_replace, try_url_decode}
-    regexp_replace(coalesce(try_url_decode(c), c), "^file:/+", "file:///")
+    regexp_replace(coalesce(try_url_decode(encoded), raw), "^file:/+",
+      "file:///")
   }
 
   private[load] val BatchCol = "_graft_batch"
@@ -364,7 +388,9 @@ object CommittedScan {
 
   /** One log-built scan over `batches` (shared layout, shared exact
     * read schema) — the ManifestFileIndex construction shared by the
-    * exact and widened paths of [[layoutRelation]]. */
+    * exact and widened paths of [[layoutRelation]]. The index carries
+    * every file's recorded row count, for
+    * [[graft.plans.MetadataOnlyCount]]. */
   private def layoutScan(spark: SparkSession, warehouseDir: String,
       partNames: Seq[String], batches: Seq[(String, BatchStats)],
       schema: StructType): DataFrame = {
@@ -372,18 +398,24 @@ object CommittedScan {
     val qBase = base
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
       .makeQualified(base)
-    def roots[T](mk: (String, org.apache.hadoop.fs.FileStatus) => T) =
-      batches.map { case (id, st) =>
-        val root = new org.apache.hadoop.fs.Path(qBase, s"b$id")
-        root -> st.files.map { case (rel, len) =>
-          mk(rel, new org.apache.hadoop.fs.FileStatus(
-            len, false, 1, 134217728L, 0L,
-            new org.apache.hadoop.fs.Path(root, rel)))
-        }
-      }
+    // per batch: its root and (relative path, status) per recorded file
+    val rooted = batches.map { case (id, st) =>
+      val root = new org.apache.hadoop.fs.Path(qBase, s"b$id")
+      (root, st, st.files.map { case (rel, len) =>
+        rel -> new org.apache.hadoop.fs.FileStatus(len, false, 1, 134217728L,
+          0L, new org.apache.hadoop.fs.Path(root, rel))
+      })
+    }
+    val fileRows = (for {
+      (_, st, files) <- rooted
+      (rel, f) <- files
+      fs <- st.fileStats.get(rel)
+    } yield f.getPath -> fs.rows).toMap
     if (partNames.isEmpty)
       return org.apache.spark.sql.graftshim.GraftSqlShims.parquetScan(spark,
-        new graft.plans.ManifestFileIndex(roots((_, st) => st)), schema)
+        new graft.plans.ManifestFileIndex(
+          rooted.map { case (root, _, files) => root -> files.map(_._2) },
+          fileRows = fileRows), schema)
     val partFields = partNames.map(n =>
       schema.fields.find(_.name.equalsIgnoreCase(n)).getOrElse(
         throw new IllegalStateException(s"partition column '$n' of " +
@@ -394,7 +426,8 @@ object CommittedScan {
     val dataSchema = StructType(schema.fields.filterNot(f =>
       partFields.exists(_.name == f.name)))
     val idx = graft.plans.ManifestFileIndex.partitioned(spark,
-        roots((rel, st) => rel -> st), partSchema)
+        rooted.map { case (root, _, files) => root -> files }, partSchema,
+        fileRows)
       .getOrElse(throw new IllegalStateException(s"a recorded partition " +
         s"path of $warehouseDir does not parse as ${partSchema.simpleString}"))
     org.apache.spark.sql.graftshim.GraftSqlShims

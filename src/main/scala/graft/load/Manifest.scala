@@ -164,6 +164,19 @@ object Manifest {
                                 Map.empty) {
     /** The batch's recorded data size: its file-list lengths summed. */
     def bytes: Long = files.map(_._2).sum
+    /** The batch's exact live row count: every file's recorded footer
+      * row count less the rows its deletion vector hides. `None` when a
+      * file has no recorded count (a manifest written before every
+      * writer recorded one for each file). */
+    def liveRows: Option[Long] =
+      Option.when(files.forall { case (rel, _) => fileStats.contains(rel) })(
+        files.iterator.map { case (rel, _) =>
+          val n = fileStats(rel).rows
+          n - dv.get(rel).fold(0L) { v =>
+            val (starts, ends) = v.startsEnds
+            graft.functions.DvHidden.hiddenBelow(starts, ends, n)
+          }
+        }.sum)
     /** Interval-only view of [[fileStats]] (spec/report convenience). */
     def fileZones: Map[String, Map[String, Zone]] =
       fileStats.view.mapValues(_.cols.collect {
@@ -515,7 +528,11 @@ object Manifest {
     * zero-row part for a write of no rows (and for an empty first
     * task), so a load, a takedown rewrite or a fold that removes every
     * row would otherwise commit a file and a scan root until the next
-    * fold. A footer that cannot be read keeps its file. */
+    * fold. Every readable footer records its file's exact row count
+    * (`#zc`), with or without zoneable columns: a relation's live rows
+    * are then Σ file rows − Σ deletion-vector cardinality
+    * ([[BatchStats.liveRows]], [[graft.plans.MetadataOnlyCount]]). A
+    * footer that cannot be read keeps its file and records nothing. */
   private def rowFiles(spark: SparkSession, dir: String,
       schema: StructType): (Seq[(String, Long)], Map[String, FileStats]) = {
     val written = listBatchFiles(spark, dir)
@@ -529,7 +546,7 @@ object Manifest {
         fs.delete(new org.apache.hadoop.fs.Path(d, rel), false))
     }
     (written.filterNot { case (rel, _) => empty(rel) },
-      footers.filter { case (rel, st) => st.cols.nonEmpty && !empty(rel) })
+      footers.filter { case (rel, _) => !empty(rel) })
   }
 
   /** The batch's zone map — per-column [min, max] intervals recorded by

@@ -509,7 +509,7 @@ object WarehouseLoad {
             val missingDf = missing.toSeq.toDF("h")
             val nonBlank = spark.read.text(stagingDir)
               .withColumn("h",
-                xxhash64(normCol(col("_metadata.file_path"))))
+                xxhash64(stagedNormCol(col("_metadata.file_path"))))
               .join(org.apache.spark.sql.functions.broadcast(missingDf),
                 Seq("h"), "left_semi")
               .filter(trim(col("value")) =!= "")
@@ -756,11 +756,13 @@ object WarehouseLoad {
   /** One row per batch in the committed HEAD — the DESCRIBE DETAIL
     * analog at batch granularity, from the recorded manifests alone
     * (cached metadata, no listing, no scan): `(batch, position,
-    * n_rows, n_bytes, n_files, n_stat_cols)`. `n_rows` is the AT-WRITE
-    * count every manifest records: a takedown-rewritten or DV'd batch
-    * carries it forward, so the figure can overstate the live count
-    * (the same superset contract the pruning stats rely on) — count
-    * the relation for exactness. */
+    * n_rows, n_bytes, n_files, n_stat_cols)`. `n_rows` is the batch's
+    * exact live row count: its files' recorded footer row counts less
+    * the rows its deletion vector hides ([[BatchStats.liveRows]]), so
+    * the column sums to the head relation's count. A batch whose
+    * manifest predates per-file row counts for every file reports its
+    * at-write count instead, which a carried deletion vector can
+    * overstate. */
   def describeWarehouse(spark: SparkSession,
                         historyDir: String): DataFrame = {
     import spark.implicits._
@@ -768,7 +770,7 @@ object WarehouseLoad {
     ids.zip(manifests(spark, historyDir, ids)).zipWithIndex.map {
       case ((id, st), i) =>
         (id, i.toLong,
-          java.lang.Long.valueOf(st.rows),
+          java.lang.Long.valueOf(st.liveRows.getOrElse(st.rows)),
           java.lang.Long.valueOf(st.bytes),
           java.lang.Long.valueOf(st.files.size.toLong),
           java.lang.Long.valueOf(st.cols.size.toLong))

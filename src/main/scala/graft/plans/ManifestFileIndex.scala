@@ -42,12 +42,21 @@ import org.apache.spark.unsafe.types.UTF8String
   * returns None on ANY path it cannot parse losslessly — the caller
   * refuses the read rather than guess a value. [[ZonePrune]]
   * recognizes the type and prunes either layout by rebuilding with the
-  * surviving roots' entries — still zero I/O. */
+  * surviving roots' entries — still zero I/O.
+  *
+  * ROW COUNTS: `fileRows` carries each file's exact footer row count as
+  * the manifest records it (`#zc`), so [[MetadataOnlyCount]] answers an
+  * unfiltered `count(*)` over this index as Σ file rows − Σ hidden rows
+  * without a scan. A file without a recorded count (a manifest written
+  * before every writer recorded one) leaves [[liveRows]] `None`, and
+  * the count scans. */
 final class ManifestFileIndex(
     val rootsWithFiles: Seq[(Path, Seq[FileStatus])],
     val partSchema: StructType = new StructType(),
     // (partition-values row, files) groups; Nil for unpartitioned
-    val partGroups: Seq[(InternalRow, Seq[FileStatus])] = Nil)
+    val partGroups: Seq[(InternalRow, Seq[FileStatus])] = Nil,
+    // file path → recorded row count; may name files beyond this index
+    val fileRows: Map[Path, Long] = Map.empty)
   extends FileIndex {
 
   override val rootPaths: Seq[Path] = rootsWithFiles.map(_._1)
@@ -84,6 +93,22 @@ final class ManifestFileIndex(
 
   override def partitionSchema: StructType = partSchema
 
+  /** The rows a full scan of this index returns: each file's recorded
+    * count less the rows `hidden(path, rows)` says its deletion vector
+    * hides. `None` when any file has no recorded count. */
+  def liveRows(hidden: (Path, Long) => Long): Option[Long] = {
+    var n = 0L
+    val it = all.iterator
+    while (it.hasNext) {
+      val p = it.next().getPath
+      fileRows.get(p) match {
+        case Some(r) => n += r - hidden(p, r)
+        case None => return None
+      }
+    }
+    Some(n)
+  }
+
   /** The index restricted to `keep` roots — [[ZonePrune]]'s rewrite,
     * still metadata-only. Partition groups re-filter by file root
     * membership (a group can span roots: same partition value written
@@ -104,7 +129,8 @@ final class ManifestFileIndex(
     new ManifestFileIndex(kept, partSchema,
       partGroups
         .map { case (v, fs) => (v, fs.filter(keptFiles)) }
-        .filter(_._2.nonEmpty))
+        .filter(_._2.nonEmpty),
+      fileRows)
   }
 }
 
@@ -149,7 +175,8 @@ object ManifestFileIndex {
     * value the cast rejects). */
   def partitioned(spark: org.apache.spark.sql.SparkSession,
       rootsWithFiles: Seq[(Path, Seq[(String, FileStatus)])],
-      partSchema: StructType): Option[ManifestFileIndex] = {
+      partSchema: StructType,
+      fileRows: Map[Path, Long]): Option[ManifestFileIndex] = {
     val tz = Some(spark.sessionState.conf.sessionLocalTimeZone)
     val names = partSchema.fieldNames
     val groups = scala.collection.mutable.LinkedHashMap
@@ -187,6 +214,6 @@ object ManifestFileIndex {
       plain += root -> sts.result()
     }
     Some(new ManifestFileIndex(plain.result(), partSchema,
-      groups.values.toSeq))
+      groups.values.toSeq, fileRows))
   }
 }

@@ -57,7 +57,11 @@ import graft.load.Manifest.{BatchStats, NumZone, StrZone, Zone}
   * relations). Every committed read plans a [[ManifestFileIndex]], so
   * that is the one scan the rule rewrites: surviving roots (and files)
   * restrict the index, an empty survivor set becomes a zero-row
-  * [[LocalRelation]]; any other scan passes through untouched.
+  * [[LocalRelation]]; any other scan passes through untouched. The
+  * same registration installs [[MetadataOnlyCount]], which answers an
+  * UNFILTERED `count(*)` over those scans from the recorded per-file
+  * row counts — the other half of planning a committed read from the
+  * log.
   *
   * 100 TB shape: the decision cost is one cached manifest read per
   * committed load, zero data I/O; the benefit is whole scan roots
@@ -79,10 +83,10 @@ object ZonePrune extends Rule[LogicalPlan] {
     val q = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .makeQualified(p).toString
     registry.put(q, historyDir)
-    if (!spark.experimental.extraOptimizations.contains(ZonePrune)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ ZonePrune
-    }
+    val have = spark.experimental.extraOptimizations
+    val missing = Seq(ZonePrune, MetadataOnlyCount).filterNot(have.contains)
+    if (missing.nonEmpty)
+      spark.experimental.extraOptimizations = have ++ missing
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan transform {

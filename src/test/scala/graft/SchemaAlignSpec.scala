@@ -183,4 +183,53 @@ class SchemaAlignSpec extends SparkSpec {
       .contains(StructType(Nil)))
     assert(sparkInfer(Seq(empty)) == StructType(Nil))
   }
+
+  test("driver-side flat inference matches Spark's across line endings " +
+      "and past 8 MB, and falls back over its bound") {
+    import graft.load.StagedRead
+    val dir = tmpDir("graft-inferflat2-")
+    def write(name: String, text: String): String = {
+      val p = java.nio.file.Paths.get(s"$dir/$name")
+      java.nio.file.Files.writeString(p, text)
+      p.toUri.toString
+    }
+    def sparkInfer(files: Seq[String]) =
+      spark.read.option("primitivesAsString", "true").json(files: _*).schema
+    def same(files: Seq[String], what: String): Unit = {
+      val got = StagedRead.inferFlatSchema(spark, files)
+      assert(got.contains(sparkInfer(files)),
+        s"$what: driver $got vs Spark ${sparkInfer(files)}")
+    }
+    val crlf = write("crlf.json",
+      "{\"id\": \"1\", \"b\": 2}\r\n\r\n{\"c\": null}\r\n")
+    same(Seq(crlf), "CRLF")
+    val cr = write("cr.json",
+      "{\"id\": \"1\", \"zz\": true}\r{\"d\": 1.5}\r\r{\"e\": \"x\"}")
+    same(Seq(cr), "lone CR")
+    same(Seq(crlf, cr), "CRLF and lone CR together")
+
+    // a sample past the former 8 MB bound, over two files
+    val line = (0 until 12).map(i => s"\"k$i\": \"${"v" * 6}\"")
+    val big = (0 until 2).map { f =>
+      val sb = new StringBuilder
+      var n = 0
+      while (sb.length < 4400000) {
+        sb ++= line.take(4 + n % 9).mkString("{", ", ", "}") += '\n'
+        n += 1
+      }
+      write(s"big$f.json", sb.toString)
+    }
+    assert(big.map(f => new java.io.File(new java.net.URI(f)).length).sum >
+      8L * 1024 * 1024)
+    same(big, "a sample over 8 MB")
+
+    // a sample whose total is over the bound: None before the second
+    // file is read (a sparse file, so nothing that size is written)
+    val sparse = new java.io.File(s"$dir/sparse.json")
+    val raf = new java.io.RandomAccessFile(sparse, "rw")
+    try raf.setLength(StagedRead.MaxInferBytes - 10) finally raf.close()
+    assert(new java.io.File(new java.net.URI(crlf)).length > 10)
+    assert(StagedRead.inferFlatSchema(spark, Seq(crlf, sparse.toURI.toString))
+      .isEmpty)
+  }
 }
