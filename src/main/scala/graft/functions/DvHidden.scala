@@ -88,19 +88,29 @@ final class DvCursor(index: Map[String, (Array[Long], Array[Long])]) {
 }
 
 object DvHidden {
-  /** How many of a file's first `rows` row indexes the runs hide — the
-    * rows [[DvHidden]] removes from a file of `rows` rows. */
-  def hiddenBelow(starts: Array[Long], ends: Array[Long],
-                  rows: Long): Long = {
+  /** The rows a full scan of `files` returns: each file's recorded
+    * footer row count (`rows`) less the rows its deletion-vector runs
+    * (`runs`) hide — what [[DvHidden]] leaves of each file. `None` when
+    * any file has no recorded count. The one live-row arithmetic:
+    * `describeWarehouse` and [[graft.plans.MetadataOnlyCount]] both
+    * count through it. */
+  def liveRows[F](files: Iterator[F], rows: F => Option[Long],
+      runs: F => Option[(Array[Long], Array[Long])]): Option[Long] = {
     var n = 0L
-    var i = 0
-    while (i < starts.length) {
-      n += math.max(0L, math.min(ends(i), rows) - math.max(starts(i), 0L))
-      i += 1
+    while (files.hasNext) {
+      val f = files.next()
+      val r = rows(f).getOrElse(return None)
+      n += r
+      runs(f).foreach { case (starts, ends) =>
+        var i = 0
+        while (i < starts.length) {
+          n -= math.max(0L, math.min(ends(i), r) - math.max(starts(i), 0L))
+          i += 1
+        }
+      }
     }
-    n
+    Some(n)
   }
-
 
   /** Binary search: any i with starts(i) <= v < ends(i)? */
   def containsRun(starts: Array[Long], ends: Array[Long],

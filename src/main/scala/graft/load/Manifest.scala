@@ -169,14 +169,8 @@ object Manifest {
       * file has no recorded count (a manifest written before every
       * writer recorded one for each file). */
     def liveRows: Option[Long] =
-      Option.when(files.forall { case (rel, _) => fileStats.contains(rel) })(
-        files.iterator.map { case (rel, _) =>
-          val n = fileStats(rel).rows
-          n - dv.get(rel).fold(0L) { v =>
-            val (starts, ends) = v.startsEnds
-            graft.functions.DvHidden.hiddenBelow(starts, ends, n)
-          }
-        }.sum)
+      graft.functions.DvHidden.liveRows[String](files.iterator.map(_._1),
+        fileStats.get(_).map(_.rows), dv.get(_).map(_.startsEnds))
     /** Interval-only view of [[fileStats]] (spec/report convenience). */
     def fileZones: Map[String, Map[String, Zone]] =
       fileStats.view.mapValues(_.cols.collect {

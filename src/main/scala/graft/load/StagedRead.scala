@@ -229,10 +229,12 @@ object StagedRead {
       // guard is unchanged.
       // a decoded URI goes back through path-pattern resolution on a
       // direct read, so glob metacharacters or a literal %HH in a name
-      // would mis-resolve — those (rare) names take the semi-join form,
-      // which matches _metadata paths and never re-resolves
+      // would mis-resolve, and a space may be a `+` the decode read as
+      // one (the load-history spelling) — those (rare) names take the
+      // semi-join form, which matches _metadata paths and never
+      // re-resolves
       def pathSafe = fresh.forall(f =>
-        !f._1.exists(c => "*?[]{}%".indexOf(c.toInt) >= 0))
+        !f._1.exists(c => "*?[]{}% ".indexOf(c.toInt) >= 0))
       val data =
         if (fresh.sizeIs <= FreshPathPlanMax && pathSafe) {
           // rename-in-flight safety: paths were just listed; a file

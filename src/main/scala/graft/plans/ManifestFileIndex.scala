@@ -93,21 +93,13 @@ final class ManifestFileIndex(
 
   override def partitionSchema: StructType = partSchema
 
-  /** The rows a full scan of this index returns: each file's recorded
-    * count less the rows `hidden(path, rows)` says its deletion vector
-    * hides. `None` when any file has no recorded count. */
-  def liveRows(hidden: (Path, Long) => Long): Option[Long] = {
-    var n = 0L
-    val it = all.iterator
-    while (it.hasNext) {
-      val p = it.next().getPath
-      fileRows.get(p) match {
-        case Some(r) => n += r - hidden(p, r)
-        case None => return None
-      }
-    }
-    Some(n)
-  }
+  /** The rows a full scan of this index returns, given each file's
+    * deletion-vector runs ([[graft.functions.DvHidden.liveRows]]).
+    * `None` when any file has no recorded count. */
+  def liveRows(runs: Path => Option[(Array[Long], Array[Long])])
+      : Option[Long] =
+    graft.functions.DvHidden.liveRows[Path](all.iterator.map(_.getPath),
+      fileRows.get, runs)
 
   /** The index restricted to `keep` roots — [[ZonePrune]]'s rewrite,
     * still metadata-only. Partition groups re-filter by file root

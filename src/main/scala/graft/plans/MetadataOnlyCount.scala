@@ -73,10 +73,8 @@ object MetadataOnlyCount extends Rule[LogicalPlan] {
         liveRows(c, Some(d.index))
       case lr: LogicalRelation if !lr.isStreaming => lr.relation match {
         case fs: HadoopFsRelation => fs.location match {
-          case m: ManifestFileIndex => m.liveRows { (path, rows) =>
-            dv.flatMap(_.get(CommittedScan.norm(path.toUri.toString)))
-              .fold(0L) { case (s, e) => DvHidden.hiddenBelow(s, e, rows) }
-          }
+          case m: ManifestFileIndex => m.liveRows(path =>
+            dv.flatMap(_.get(CommittedScan.norm(path.toUri.toString))))
           case _ => None
         }
         case _ => None

@@ -235,7 +235,7 @@ object Load {
         .agg(count(lit(1)).as("n"), sum("o_orderkey").as("sk")).head()
       val delta =
         try WarehouseLoad.changes(s, wh, hist, v - 1, v)
-          .map(_.count()).getOrElse(0L)
+          .map(_.rdd.count()).getOrElse(0L)
         catch { case _: WarehouseLoad.RewriteException => -1L }
       (v.toInt, snap.getLong(0), snap.getLong(1),
         WarehouseLoad.versionBatches(s, hist, v).get.size, delta)
@@ -300,7 +300,10 @@ object Load {
 
     val keys = Tables.orders(s, d).filter(col("o_orderkey") % 7 === 0)
       .select(col("o_orderkey"))
-    val nBefore = WarehouseLoad.readWarehouseAt(s, wh, hist, 2).get.count()
+    // `.rdd.count()` reads the files: a plain count() of a committed
+    // table is answered from the manifests alone (MetadataOnlyCount)
+    val nBefore = WarehouseLoad.readWarehouseAt(s, wh, hist, 2).get
+      .rdd.count()
     val nRemoved = WarehouseLoad.takedownCommitted(s, wh, hist,
       keys, Seq("o_orderkey"))                                  // v3
     val after = WarehouseLoad.readWarehouse(s, wh, hist).get
@@ -929,7 +932,9 @@ object Load {
     val restored = WarehouseLoad.readWarehouse(s, wh, hist).get
       .agg(count(lit(1)).as("n"), sum("o_orderkey").as("sk")).head()
     // the undone v2 still time-travels (restore never rewrites history)
-    val atV2 = WarehouseLoad.readWarehouseAt(s, wh, hist, 2).get.count()
+    // (`.rdd.count()` reads the files; a plain count() would not)
+    val atV2 = WarehouseLoad.readWarehouseAt(s, wh, hist, 2).get
+      .rdd.count()
     // a feed spanning the restore is a rewrite — it must refuse
     val feedRefused =
       try { WarehouseLoad.changes(s, wh, hist, 2, 3); false }
@@ -1133,7 +1138,7 @@ object Load {
       sum("o_custkey").as("sc")).head()
     // pre-merge snapshot intact (updates never rewrite history)
     val nAtPre = WarehouseLoad.readWarehouseAt(s, wh, hist, preHead)
-      .get.count()
+      .get.rdd.count()
     val feedRefused =
       try { WarehouseLoad.changes(s, wh, hist, preHead, head); false }
       catch { case _: WarehouseLoad.RewriteException => true }
@@ -1320,7 +1325,7 @@ object Load {
     val agg = rel.agg(count(lit(1)).as("n"),
       sum("o_orderkey").as("sk")).head()
     val nAtPre = WarehouseLoad.readWarehouseAt(s, wh, hist, preHead)
-      .get.count()
+      .get.rdd.count()
     val head = WarehouseLoad.currentVersion(s, hist)
     val feedRefused =
       try { WarehouseLoad.changes(s, wh, hist, preHead, head); false }
@@ -1451,7 +1456,7 @@ object Load {
     val agg = rel.agg(count(lit(1)).as("n"),
       sum("o_custkey").as("sc")).head()
     val nAtPre = WarehouseLoad.readWarehouseAt(s, wh, hist, preHead)
-      .get.count()
+      .get.rdd.count()
     val feedRefused =
       try { WarehouseLoad.changes(s, wh, hist, preHead, head); false }
       catch { case _: WarehouseLoad.RewriteException => true }
@@ -1599,7 +1604,8 @@ object Load {
     WarehouseLoad.takedownCommitted(s, wh, hist,              // v4
       Seq(victim).toDF("o_orderkey"), Seq("o_orderkey"))
 
-    val headRows = WarehouseLoad.readWarehouse(s, wh, hist).get.count()
+    val headRows = WarehouseLoad.readWarehouse(s, wh, hist).get
+      .rdd.count()
     val detail = WarehouseLoad.describeWarehouse(s, hist).collect()
     val bytesKnown = detail.nonEmpty &&
       detail.forall(r => !r.isNullAt(r.fieldIndex("n_bytes")) &&
@@ -1672,7 +1678,7 @@ object Load {
       catch { case v: WarehouseLoad.CheckViolation => v.constraint }
     val headAfterRefusal = WarehouseLoad.currentVersion(s, hist)
     val rowsAfterRefusal = WarehouseLoad.readWarehouse(s, wh, hist).get
-      .count()
+      .rdd.count()
 
     // the feed is fixed upstream: withdraw the bad file, load the wave
     val fs = new org.apache.hadoop.fs.Path(staging)

@@ -294,4 +294,26 @@ class DeletionVectorSpec extends SparkSpec {
     assert(WarehouseLoad.currentVersion(spark, shist) == v)
     assert(WarehouseLoad.readWarehouse(spark, swh, shist).get.count() == 70L)
   }
+
+  test("a staged file with + in its name loads from a small fresh set") {
+    val staging = tmpDir("graft-plus1s-")
+    Seq("x+y.json" -> 1, "z.json" -> 2).foreach { case (name, k) =>
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(staging, name),
+        s"{\"k\": \"$k\"}\n")
+    }
+    val wh = tmpDir("graft-plus1w-") + "/t"
+    val hist = tmpDir("graft-plus1h-") + "/h"
+    val target = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("k",
+        org.apache.spark.sql.types.LongType)))
+    WarehouseLoad.batchIdempotent(spark, staging, target, wh, hist)
+    val read = WarehouseLoad.readWarehouse(spark, wh, hist).get
+    assert(read.select("k").as[Long].collect().toSeq.sorted == Seq(1L, 2L))
+    val files = WarehouseLoad.loadedFiles(spark, hist).get
+      .select("file").as[String].collect().toSeq
+    assert(files.exists(_.endsWith("/x y.json")), files)
+    val v = WarehouseLoad.currentVersion(spark, hist)
+    WarehouseLoad.batchIdempotent(spark, staging, target, wh, hist)
+    assert(WarehouseLoad.currentVersion(spark, hist) == v)
+  }
 }
